@@ -9,15 +9,10 @@ import graft.expressions.{FloatVectorDot, GifFramePixels, GzipInflate, GzipMembe
 /** SparkSessionExtensions entry point: registers graft's native
   * expressions as SQL functions so `spark.sql` users (and the registered
   * `.sql`-file queries of [[graft.core.QueryRegistry]]) can call them
-  * without the Scala DSL:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
-  * spark.sql("SELECT vec_dot(a.embedding, b.embedding) FROM ...")
-  * }}}
+  * without the Scala DSL, plus the two threshold optimizer rules and the
+  * native as-of join strategy. [[GraftSession.local]] installs it once, at
+  * session construction; `newSession()` clones inherit it. Other hosts can
+  * set `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -25,6 +20,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.OptimizeLevenshteinThreshold)
     ext.injectOptimizerRule(_ => graft.plans.OptimizeJaroWinklerThreshold)
+    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }
 
@@ -51,7 +47,7 @@ object GraftExtensions {
     }
   }
 
-  private val functions: Seq[(
+  private[graft] val functions: Seq[(
       FunctionIdentifier,
       ExpressionInfo,
       Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
@@ -166,23 +162,4 @@ object GraftExtensions {
         GzipMembers(children(0), intLit(children(1), "maxMembers"),
           intLit(children(2), "maxBytesEach"))
       }))
-
-  /** Same registrations applied to an already-running session (extensions
-    * are consumed only at session construction). The optimizer rule rides
-    * `experimentalMethods.extraOptimizations`, the supported hook for
-    * post-construction rule injection; adding it twice is harmless (the
-    * rewrite is idempotent) but avoided anyway.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    functions.foreach { case (id, info, builder) =>
-      org.apache.spark.sql.graft.bridge.registerFunction(spark, id.funcName, info, builder)
-    }
-    val em = spark.experimental
-    if (!em.extraOptimizations.contains(graft.plans.OptimizeLevenshteinThreshold))
-      em.extraOptimizations =
-        em.extraOptimizations :+ graft.plans.OptimizeLevenshteinThreshold
-    if (!em.extraOptimizations.contains(graft.plans.OptimizeJaroWinklerThreshold))
-      em.extraOptimizations =
-        em.extraOptimizations :+ graft.plans.OptimizeJaroWinklerThreshold
-  }
 }

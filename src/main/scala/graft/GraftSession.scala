@@ -2,45 +2,36 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's tuned defaults.
+/** The engine's one session factory: every entry point, test and benchmark
+  * runs the session built here, and nothing changes it mid-run.
   *
   * Local-mode testing uses `local[N]`, but every knob here is chosen for the
-  * 1000-executor / 100 TB target: AQE on (runtime re-plan, skew-join
-  * splitting, partition coalescing), broadcast threshold generous enough that
-  * dimension tables (region/nation/descriptor lookups — see SURVEY.md §2.3 J3)
-  * never shuffle, UTC session time for oracle parity.
+  * 1000-executor / 100 TB target: AQE is on by Spark's default (runtime
+  * re-plan, skew-join splitting, partition coalescing), the broadcast
+  * threshold is generous enough that dimension tables (region/nation/
+  * descriptor lookups — see SURVEY.md §2.3 J3) never shuffle, and session
+  * time is UTC for oracle parity. [[GraftExtensions]] installs the SQL
+  * functions, optimizer rules and planner strategy at construction, and
+  * `nanosAsLong` lets [[Tables.load]] read int64-NANOS event timestamps.
   */
 object GraftSession {
 
-  /** Number of local cores; the driver exports SPARK_GRAFT_CPUS. */
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Number of local cores: SPARK_GRAFT_CPUS, else every available one. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
-  def builder(appName: String = "graft"): SparkSession.Builder = {
-    val b = SparkSession
-      .builder()
+  /** The local session (created once per JVM, reused after). */
+  def local(appName: String = "graft"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
       .appName(appName)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    // Deployment-tuning knobs, env-gated so the driver's bench runs the
-    // defaults unchanged (the r18 A/B harness for guide §2.3/§3.1 —
-    // numbers in OPTIMIZATION_r18.md; production values justified there):
-    //  SPARK_GRAFT_SHUFFLE_CODEC  spark.io.compression.codec (default lz4)
-    //  SPARK_GRAFT_PREFER_SMJ     spark.sql.join.preferSortMergeJoin
-    sys.env.get("SPARK_GRAFT_SHUFFLE_CODEC")
-      .foreach(c => b.config("spark.io.compression.codec", c))
-    sys.env.get("SPARK_GRAFT_PREFER_SMJ")
-      .foreach(v => b.config("spark.sql.join.preferSortMergeJoin", v))
-    b
-  }
-
-  /** Local session for tests / benchmarks. */
-  def local(appName: String = "graft"): SparkSession = {
-    val spark = builder(appName).master(s"local[$cpus]").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

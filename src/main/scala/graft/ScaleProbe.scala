@@ -1,24 +1,20 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only weak-scaling probe (NOT part of the driver contract):
   * times operator families UNCAPPED over the natural documents table
   * of a given sf dir — the source of PERF.md's weak-scaling rows.
-  * `runMain graft.ScaleProbe <sfDir> <probe> [reps]`.
+  * `runMain graft.ScaleProbe <sfDir> <probe> [reps]`; those rows ran with
+  * `SPARK_GRAFT_CPUS=32`.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val probe = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "48g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scaleprobe")
     val docs = Tables.load(spark, sfDir, "documents").localCheckpoint(true)
     println(s"[probe] $probe over ${docs.count()} docs @ $sfDir")
 

@@ -165,14 +165,7 @@ object SyncApp {
     require(args.length >= 1,
       "usage: graft.SyncApp <application.properties path>")
     val cfg = loadProperties(Paths.get(args(0)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-sync")
     try {
       val (transport, tokens) = wire(cfg)
       val s = run(spark, cfg, transport, tokens)

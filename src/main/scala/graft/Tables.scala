@@ -27,15 +27,15 @@ object Tables {
       // of them to a session-zone TimestampType so downstream event-time code
       // (`unix_micros`, watermarks, range predicates) sees ONE type:
       //  - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; the legacy
-      //    flag surfaces raw int64 nanos, converted with integer `div` (nanos
-      //    since epoch exceed double's 53-bit mantissa).
+      //    nanosAsLong flag (set by GraftSession) surfaces raw int64 nanos,
+      //    converted with integer `div` (nanos since epoch exceed double's
+      //    53-bit mantissa).
       //  - timestamp[us] isAdjustedToUTC=false → TIMESTAMP_NTZ: cast to
       //    TimestampType. Lossless under the session's fixed UTC zone
       //    (GraftSession sets spark.sql.session.timeZone=UTC): the wall-clock
       //    fields are reinterpreted as UTC instants, byte-identical
       //    epoch-micros to what DuckDB reads from the same file.
       //  - timestamp[us] UTC-adjusted → already TimestampType: passthrough.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       normalizeEventTs(spark.read.parquet(path(sfDir, name)))
     } else spark.read.parquet(path(sfDir, name))
 

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.bridge
 
 /** The native as-of join — SURVEY §7.2 preference order (c): a custom
-  * LogicalPlan node, a SparkStrategy, and a physical SparkPlan, wired
-  * into a session via `experimental.extraStrategies`. Same semantics as
+  * LogicalPlan node, a SparkStrategy, and a physical SparkPlan, injected
+  * into every session by [[graft.GraftExtensions]]. Same semantics as
   * the union+window composition ([[graft.operators.AsOfJoin.leftAsOf]]):
   * each left row gets the LATEST right row of its key with
   * `right.ts <= left.ts`, or nulls.
@@ -134,11 +134,10 @@ case class AsOfJoinExec(
   }
 }
 
-/** DataFrame-facing entry. Registers the strategy on the session (once)
-  * and builds the logical node from resolved attributes. Left and right
-  * column NAMES must be disjoint (rename before joining) so the output
-  * is unambiguous; null-keyed/null-ts right rows are pre-filtered (they
-  * can never be a match).
+/** DataFrame-facing entry: builds the logical node from resolved
+  * attributes. Left and right column NAMES must be disjoint (rename
+  * before joining) so the output is unambiguous; null-keyed/null-ts right
+  * rows are pre-filtered (they can never be a match).
   */
 object AsOfJoinNative {
 
@@ -152,7 +151,6 @@ object AsOfJoinNative {
     val overlap = left.columns.toSet.intersect(right.columns.toSet)
     require(overlap.isEmpty, s"rename overlapping columns before the join: $overlap")
     val spark = left.sparkSession
-    bridge.addStrategy(spark, AsOfJoinStrategy)
     val lp = bridge.analyzed(left)
     val rp = bridge.analyzed(
       right.where(col(rightKeyCol).isNotNull && col(rightTsCol).isNotNull))

@@ -56,7 +56,6 @@ object RegistryQueries extends QueryGroup {
       |ORDER BY name_a, name_b""".stripMargin
 
   private val qR2 = Q("q_r2_levenshtein_rule", fuzzySql) { (s, dir) =>
-    graft.GraftExtensions.register(s)
     Tables.load(s, dir, "part").createOrReplaceTempView("part")
     val df = s.sql(fuzzySql)
     val rewritten = df.queryExecution.optimizedPlan.collect {
@@ -99,7 +98,6 @@ object RegistryQueries extends QueryGroup {
   private val qR3 = Q(
     "q_r3_jaro_winkler_rule",
     jwSql("jaro_winkler_similarity")) { (s, dir) =>
-    graft.GraftExtensions.register(s)
     Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
     val df = s.sql(jwSql("jaro_winkler", strType = "STRING"))
     val guards = df.queryExecution.optimizedPlan.collect {

@@ -42,7 +42,6 @@ object EventStreams {
     * session-zone TimestampType so watermarks/`unix_micros` analyze.
     */
   def readEventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // schema discovered from the batch reader (driver-side, tiny footer read)
     val batchSchema = spark.read.parquet(Tables.path(sfDir, "events")).schema
     // FileStreamSource wants a directory: stream the sf dir with a glob

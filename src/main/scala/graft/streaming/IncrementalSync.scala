@@ -46,11 +46,11 @@ object IncrementalSync {
     *     a deterministic total order — so a key that flipped into the
     *     segment is never upserted from its new row and then deleted from
     *     its stale one.
-    *   - CHANGE-SET-BOUND WORK: the detail tables are semi-join-pruned to
-    *     the batch's keys (orders on custkey, then lineitem on the
-    *     surviving orderkeys) BEFORE the two collect aggregations, so a
-    *     1-row change batch aggregates a handful of detail rows, not the
-    *     corpus.
+    *   - CHANGE-SET-BOUND WORK: [[EntityAssembly.assembleFrom]]
+    *     semi-join-prunes the detail tables to the batch's keys (orders on
+    *     custkey, then lineitem on the surviving orderkeys) BEFORE the two
+    *     collect aggregations, so a 1-row change batch aggregates a
+    *     handful of detail rows, not the corpus.
     */
   def applyBatch(
       spark: SparkSession,
@@ -63,20 +63,12 @@ object IncrementalSync {
     val collapsed = graft.operators.Dedup
       .lastRowWinsTotal(batch, Seq("c_custkey"), versionCols)
     val inSeg = collapsed.filter(col("c_mktsegment") === EntityAssembly.segment)
-    val keys = inSeg.select(col("c_custkey")).distinct()
-    val orders = Tables.load(spark, sfDir, "orders")
-    val ordersDelta = orders
-      .join(keys, orders("o_custkey") === keys("c_custkey"), "left_semi")
-    val lineitem = Tables.load(spark, sfDir, "lineitem")
-    val lineitemDelta = lineitem
-      .join(ordersDelta.select("o_orderkey"),
-        lineitem("l_orderkey") === col("o_orderkey"), "left_semi")
     val entities = EntityAssembly.toJsonPayload(
       EntityAssembly.assembleFrom(
         inSeg,
         Tables.load(spark, sfDir, "nation"),
-        ordersDelta,
-        lineitemDelta))
+        Tables.load(spark, sfDir, "orders"),
+        Tables.load(spark, sfDir, "lineitem")))
     val up = RestSink.upsert(entities, transport, tokens, entityPath)
     val gone = collapsed
       .filter(col("c_mktsegment") =!= EntityAssembly.segment)

@@ -25,15 +25,6 @@ object bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Register an extra planner strategy on a running session (idempotent). */
-  def addStrategy(
-      spark: org.apache.spark.sql.SparkSession,
-      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(strategy))
-      cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ strategy
-  }
-
   /** The analyzed logical plan behind a DataFrame. */
   def analyzed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
@@ -76,18 +67,6 @@ object bridge {
     */
   def waitUntilListenerBusEmpty(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
-
-  /** Register a SQL function on an ALREADY-RUNNING session (extensions are
-    * only consumed at session construction; the function registry itself
-    * is private[sql]).
-    */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      new org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
 
   /** JSON-text → InternalRow parser for a fixed schema (the machinery
     * behind `from_json`; JacksonParser and JSONOptions are private[sql]).

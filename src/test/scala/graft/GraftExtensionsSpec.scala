@@ -3,7 +3,6 @@ package graft
 class GraftExtensionsSpec extends SparkSpec {
 
   test("vec_dot is callable from SQL after runtime registration") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b").createOrReplaceTempView("v")
     try {
@@ -16,7 +15,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("nfc_normalize / utf8_decode_lenient are callable from SQL") {
-    GraftExtensions.register(spark)
     val nfc = spark.sql(
       s"SELECT nfc_normalize('e${"\u0301"}clair') AS s")
       .collect()(0).getString(0)
@@ -28,7 +26,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("gzip_inflate / gzip_members are callable from SQL") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     def gz(payload: Array[Byte]): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
@@ -52,14 +49,14 @@ class GraftExtensionsSpec extends SparkSpec {
     } finally spark.sql("DROP VIEW IF EXISTS gzv")
   }
 
-  test("registration is idempotent and registry-visible") {
-    GraftExtensions.register(spark)
-    GraftExtensions.register(spark) // createOrReplace semantics: no throw
-    assert(spark.catalog.functionExists("vec_dot"))
+  test("every graft function is registry-visible on a fresh session") {
+    val fresh = spark.newSession()
+    GraftExtensions.functions.foreach { case (id, _, _) =>
+      assert(fresh.catalog.functionExists(id.funcName), id.funcName)
+    }
   }
 
   test("zlib_inflate / png_pixels / gif_pixels are callable from SQL") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val raw = "the decode kernels ride the SQL surface too".getBytes("UTF-8")
     val z = {
@@ -99,7 +96,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("levenshtein threshold rule rewrites all four orientations, exactly") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val words = Seq("abcd", "abce", "abef", "xyz", null)
     words.map(Tuple1(_)).toDF("w").createOrReplaceTempView("__lev_words")
@@ -141,7 +137,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("SQL minhash_signature and hyperplane_signature equal the DSL forms") {
-    GraftExtensions.register(spark)
     Tables.load(spark, sf(), "documents").orderBy("doc_id").limit(50).createOrReplaceTempView("__docs_ext")
     val sqlSig = spark.sql(
       """SELECT minhash_signature(split(lower(trim(text)), '\\s+'), 16) AS s
@@ -166,7 +161,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("jaro_winkler threshold rule injects the guard exactly once, soundly") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     // lengths 2..12: the 0.93 guard (ratio >= 0.65) genuinely rejects
     // mismatched pairs; 'z'-typos of each name are genuine matches
@@ -219,7 +213,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("jaro_winkler guard measures UTF-16 units: non-BMP pairs survive") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     // 20 U+1F600 (40 UTF-16 units, 20 code points) vs the same + 13 ASCII
     // chars (53 units, 33 code points): jw = 0.9509... >= 0.95, but a guard

@@ -3,20 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM across the forked test
-  * run; getOrCreate reuses it).
+/** Shared local session for all suites: the engine's own factory session
+  * (one JVM across the forked test run; getOrCreate reuses it). A suite
+  * that needs other settings runs on a `spark.newSession()` clone.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local("graft-test")
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 }

@@ -43,7 +43,6 @@ class BlocklistSpec extends SparkSpec {
   }
 
   test("multi_match is callable from SQL and rejects non-literal patterns") {
-    graft.GraftExtensions.register(spark)
     val rows = spark.sql(
       "SELECT multi_match('a fast agg here', array('fast agg', 'zzz', 'agg')) AS m")
       .as[Seq[Int]].head()

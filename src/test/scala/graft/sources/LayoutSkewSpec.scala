@@ -29,17 +29,17 @@ class LayoutSkewSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange; unbucketed do not") {
-    val spark2 = spark
-    import spark2.implicits._
-    val cust = Tables.load(spark, sf(), "customer").select("c_custkey", "c_name")
-    val ord = Tables.load(spark, sf(), "orders").select("o_custkey", "o_orderkey")
+    // AQE off for a deterministic plan-shape assertion, on a clone so the
+    // shared session keeps its settings
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val cust = Tables.load(s, sf(), "customer").select("c_custkey", "c_name")
+    val ord = Tables.load(s, sf(), "orders").select("o_custkey", "o_orderkey")
     Layout.writeBucketed(cust, "b_cust", Seq("c_custkey"), 8)
     Layout.writeBucketed(ord.withColumnRenamed("o_custkey", "c_custkey"), "b_ord", Seq("c_custkey"), 8)
     try {
-      // AQE off for a deterministic plan-shape assertion
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val bucketed = spark.table("b_cust").join(spark.table("b_ord"), "c_custkey")
+      val bucketed = s.table("b_cust").join(s.table("b_ord"), "c_custkey")
       val unbucketed = cust.join(
         ord.withColumnRenamed("o_custkey", "c_custkey"), "c_custkey")
       assert(!Layout.hasShuffle(bucketed), "bucketed join must elide the exchange")
@@ -47,47 +47,35 @@ class LayoutSkewSpec extends SparkSpec {
       // and the bucketed join returns the same rows
       assert(bucketed.count() === unbucketed.count())
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      Layout.dropTable(spark, "b_cust")
-      Layout.dropTable(spark, "b_ord")
+      Layout.dropTable(s, "b_cust")
+      Layout.dropTable(s, "b_ord")
     }
   }
 
   test("AQE splits a skewed sort-merge join partition (runtime re-plan path)") {
-    val spark2 = spark
-    import spark2.implicits._
     // salting (Skew.saltedInnerJoin) is the write-side answer; this pins
     // the RUNTIME answer the session enables: AQE's OptimizeSkewedJoin.
-    // Thresholds are lowered so the test corpus trips them.
-    val prev = Map(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> spark.conf
-        .get("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"),
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> spark.conf
-        .get("spark.sql.adaptive.advisoryPartitionSizeInBytes"),
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> spark.conf
-        .get("spark.sql.adaptive.skewJoin.skewedPartitionFactor"),
-      "spark.sql.autoBroadcastJoinThreshold" -> spark.conf
-        .get("spark.sql.autoBroadcastJoinThreshold"))
-    try {
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "20KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "10KB")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val left = ((1 to 60000).map(_ => 1L) ++ (1 to 600).map(_.toLong + 1))
-        .toDF("k").withColumn("pad", lpad(col("k").cast("string"), 32, "x"))
-      val right = (1L to 700L).toDF("rk")
-        .withColumn("rpad", lpad(col("rk").cast("string"), 32, "y"))
-      // keep the wide pad columns in the output — column pruning would
-      // otherwise shrink the hot partition below the skew threshold
-      val joined = left.join(right, $"k" === $"rk")
-      // execute THIS frame (count() would plan its own query) so the
-      // adaptive plan finalizes before inspection
-      assert(joined.collect().length === 60600)
-      val finalPlan = joined.queryExecution.executedPlan.toString
-      assert(finalPlan.contains("skew=true"),
-        s"AQE must mark the hot partition's join as skew-split:\n$finalPlan")
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    // Thresholds are lowered so the test corpus trips them, on a clone so
+    // the shared session keeps its settings.
+    val s = spark.newSession()
+    import s.implicits._
+    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "20KB")
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "10KB")
+    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val left = ((1 to 60000).map(_ => 1L) ++ (1 to 600).map(_.toLong + 1))
+      .toDF("k").withColumn("pad", lpad(col("k").cast("string"), 32, "x"))
+    val right = (1L to 700L).toDF("rk")
+      .withColumn("rpad", lpad(col("rk").cast("string"), 32, "y"))
+    // keep the wide pad columns in the output — column pruning would
+    // otherwise shrink the hot partition below the skew threshold
+    val joined = left.join(right, $"k" === $"rk")
+    // execute THIS frame (count() would plan its own query) so the
+    // adaptive plan finalizes before inspection
+    assert(joined.collect().length === 60600)
+    val finalPlan = joined.queryExecution.executedPlan.toString
+    assert(finalPlan.contains("skew=true"),
+      s"AQE must mark the hot partition's join as skew-split:\n$finalPlan")
   }
 
   test("zone-map manifest skipping never loses rows and strictly prunes") {
