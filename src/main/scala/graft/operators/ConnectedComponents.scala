@@ -32,14 +32,11 @@ import org.apache.spark.sql.functions._
   *     rounds converge; kept as the cross-check reference (specs assert
   *     equality with the star scheme).
   *
-  * Both converge via an EXACT one-aggregate test instead of a join-probe:
-  * every per-round transform is per-row non-increasing in its monotone
-  * stat (edge endpoint-sum / label sum) and never grows the row count, so
-  * (count, sum) unchanged ⟺ the frame is unchanged. One tiny action per
-  * round over the just-checkpointed frame — no second join, no `isEmpty`
-  * job. Each round `localCheckpoint`s: iterative plans otherwise nest the
-  * whole history into one exponentially deep lineage that re-executes
-  * every prior round per action.
+  * Both run on the [[FixedPoint]] loop with an EXACT one-aggregate
+  * convergence signal instead of a join-probe: every per-round transform
+  * is per-row non-increasing in its monotone stat (edge endpoint-sum /
+  * label sum) and never grows the row count, so (count, sum) unchanged
+  * ⟺ the frame is unchanged.
   */
 object ConnectedComponents {
 
@@ -72,16 +69,16 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** (count, endpoint-sum) of an edge frame — the exact convergence stat:
-    * both star ops map each edge to at most one edge of no larger
-    * endpoint-sum, so equality of both values ⟺ identical edge sets.
-    * DECIMAL sum: exact and overflow-free at any id range / edge count.
+  /** (row count, exact sum of `cols`) — the convergence signal of both
+    * schemes. DECIMAL sum: exact and overflow-free at any id range /
+    * row count.
     */
-  private def edgeStats(edges: DataFrame): (Long, java.math.BigDecimal) = {
-    val r = edges.agg(
+  private def countAndSum(df: DataFrame, cols: String*): (Long, java.math.BigInteger) = {
+    val r = df.agg(
       count(lit(1)),
-      sum(col("u").cast("decimal(38,0)") + col("v").cast("decimal(38,0)"))).head()
-    (r.getLong(0), if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
+      sum(cols.map(col(_).cast("decimal(38,0)")).reduce(_ + _))).head()
+    (r.getLong(0),
+      if (r.isNullAt(1)) java.math.BigInteger.ZERO else r.getDecimal(1).toBigInteger)
   }
 
   /** Component labels for every vertex appearing in `pairs` (columns
@@ -89,46 +86,31 @@ object ConnectedComponents {
     * `(id, cluster)` where `cluster` is the minimum vertex id in the
     * component. Polylog rounds in the largest component size — the scale
     * path for arbitrary (incl. long-chain) graphs.
+    *
+    * The returned frame is pinned; long-running callers (streaming
+    * landing zones) free it with `bridge.freeLocalCheckpoint` once
+    * superseded.
     */
   def alternatingStar(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    var cur = pairs
+    val edges = pairs
       .select(
         greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(true)
-    var stats = edgeStats(cur)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(cur)).localCheckpoint(true)
-      val nextStats = edgeStats(next)
-      converged = nextStats._1 == stats._1 && nextStats._2.compareTo(stats._2) == 0
-      // free the superseded round's checkpoint blocks NOW — waiting for
-      // driver GC holds every round's edge frame in executor storage
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(cur)
-      cur = next
-      stats = nextStats
-      iter += 1
-    }
-    if (!converged) {
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(cur)
-      throw new IllegalArgumentException(
-        s"connected components did not converge in $maxIter alternating rounds")
-    }
-    // fixpoint is a union of stars (child, root): label children by their
-    // root and every root by itself. The labels MATERIALIZE here (pinned
-    // via localCheckpoint) so the fixpoint edge frame can be freed NOW
-    // instead of leaking executor storage until driver GC — the returned
-    // frame is pinned; long-running callers (streaming landing zones)
-    // free it with bridge.freeLocalCheckpoint once superseded.
-    val labels = cur.select(col("u").as("id"), col("v").as("cluster"))
-      .union(cur.select(col("v").as("id"), col("v").as("cluster")))
-      .distinct()
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(cur)
-    labels
+    // both star ops map each edge to at most one edge of no larger
+    // endpoint-sum, so equal (count, endpoint-sum) ⟺ identical edge sets
+    FixedPoint.run[(Long, java.math.BigInteger)](
+      "ConnectedComponents.alternatingStar", edges, maxIter,
+      step = (cur, _) => smallStar(largeStar(cur)),
+      signal = (cur, _) => countAndSum(cur, "u", "v"),
+      converged = (last, stats) => last.contains(stats),
+      pinInit = true,
+      // the fixpoint is a union of stars (child, root): label children
+      // by their root and every root by itself
+      finish = Some(cur => cur.select(col("u").as("id"), col("v").as("cluster"))
+        .union(cur.select(col("v").as("id"), col("v").as("cluster")))
+        .distinct()))
   }
 
   /** Component labels via min-label propagation — rounds = graph
@@ -140,41 +122,25 @@ object ConnectedComponents {
     val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
       .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
     edges.cache()
-    try {
-      var labels = edges.select(col("u").as("id")).distinct()
-        .withColumn("cluster", col("id"))
-        .localCheckpoint(true)
-      // labels are per-vertex non-increasing and the vertex set is fixed,
-      // so an unchanged label SUM (one aggregate, no join probe) is an
-      // exact convergence test
-      def labelSum(df: DataFrame): java.math.BigDecimal = {
-        val r = df.agg(sum(col("cluster").cast("decimal(38,0)"))).head()
-        if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-      }
-      var prevSum = labelSum(labels)
-      var converged = pairs.isEmpty // no edges: nothing to propagate
-      var iter = 0
-      while (!converged && iter < maxIter) {
-        val nbrMin = edges
-          .join(labels, edges("v") === labels("id"))
-          .groupBy(col("u")).agg(min(col("cluster")).as("__nbr"))
-        val next = labels
-          .join(nbrMin, labels("id") === nbrMin("u"), "left")
-          .select(labels("id"),
-            least(col("cluster"), coalesce(col("__nbr"), col("cluster"))).as("cluster"))
-          .localCheckpoint(true)
-        val nextSum = labelSum(next)
-        converged = nextSum.compareTo(prevSum) == 0
-        org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(labels)
-        labels = next
-        prevSum = nextSum
-        iter += 1
-      }
-      require(converged,
-        s"connected components did not converge in $maxIter rounds — " +
-          "graph diameter exceeds the bound; raise maxIter or use alternatingStar")
-      labels
-    } finally edges.unpersist()
+    try FixedPoint.run[(Long, java.math.BigInteger)](
+        "ConnectedComponents.minLabelPropagation",
+        edges.select(col("u").as("id")).distinct().withColumn("cluster", col("id")),
+        maxIter,
+        step = (labels, _) => {
+          val nbrMin = edges
+            .join(labels, edges("v") === labels("id"))
+            .groupBy(col("u")).agg(min(col("cluster")).as("__nbr"))
+          labels
+            .join(nbrMin, labels("id") === nbrMin("u"), "left")
+            .select(labels("id"),
+              least(col("cluster"), coalesce(col("__nbr"), col("cluster"))).as("cluster"))
+        },
+        signal = (labels, _) => countAndSum(labels, "cluster"),
+        // labels are per-vertex non-increasing over a fixed vertex set,
+        // so an unchanged sum is exact; no vertices, nothing to propagate
+        converged = (last, stats) => stats._1 == 0L || last.contains(stats),
+        pinInit = true)
+    finally edges.unpersist()
   }
 
   /** Cluster assignment for a whole corpus: docs that appear in `pairs`

@@ -43,11 +43,10 @@ object Hits {
     */
   def run(
       edges: DataFrame,
-      iterations: Int,
-      materializeEdges: Boolean = true): DataFrame = {
+      iterations: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     import org.apache.spark.sql.graft.bridge
-    val e = if (materializeEdges) edges.localCheckpoint(true) else edges
+    val e = edges.localCheckpoint(true)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
@@ -88,7 +87,7 @@ object Hits {
     // the returned frame is materialized: release every internal pin
     pinned.foreach(bridge.freeLocalCheckpoint)
     bridge.freeLocalCheckpoint(nodes)
-    if (materializeEdges) bridge.freeLocalCheckpoint(e)
+    bridge.freeLocalCheckpoint(e)
     out
   }
 

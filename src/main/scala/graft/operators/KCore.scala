@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graft.bridge
-
 /** k-core decomposition (Seidman 1983) of an undirected edge list: the
   * maximal subgraph in which every node has degree >= k *within the
   * subgraph*. The standard "dense kernel" extractor — spam/bot rings in
@@ -24,20 +22,18 @@ import org.apache.spark.sql.graft.bridge
   * the fixpoint — extra rounds cannot change a converged result, which
   * is exactly what makes a fixed-round SQL unroll a sound oracle for
   * the run-to-fixpoint engine: the gate passes `maxRounds` = the
-  * oracle's unroll depth with `requireConvergence = true`, so a graph
-  * that needs MORE rounds than the oracle replays fails loudly in the
-  * engine instead of silently hash-mismatching.
+  * oracle's unroll depth, so a graph that needs MORE rounds than the
+  * oracle replays fails loudly in the engine instead of silently
+  * hash-mismatching.
   *
   * Shape at scale: per round ONE hash aggregate over the surviving
   * edges (degree) + two node-keyed semi-joins (endpoint survival) — all
-  * keyed on the node id, so AQE coalesces as the frame shrinks. Every
-  * round `localCheckpoint`s the shrunk edge frame and frees the
-  * superseded one (the BFS/ConnectedComponents discipline): lineage
-  * stays flat across rounds and superseded executor blocks are
-  * released eagerly. The termination test reads the count of the
-  * just-checkpointed frame — no extra job. Real-world graphs converge
-  * in a handful of rounds (each round must delete at least one node to
-  * continue, and deletions cascade in waves, not one at a time).
+  * keyed on the node id, so AQE coalesces as the frame shrinks. The
+  * round loop is [[FixedPoint]]'s; its signal is the surviving edge
+  * count, and the peel has converged when a round removes nothing or
+  * nothing is left. Real-world graphs converge in a handful of rounds
+  * (each round must delete at least one node to continue, and deletions
+  * cascade in waves, not one at a time).
   *
   * Determinism: pure set arithmetic on integer keys — no floats, no
   * visit order, no tie-breaks. The k-core is unique (union of all
@@ -52,52 +48,33 @@ object KCore {
     * count 2 toward its node's degree after symmetrization). Nodes
     * whose core membership fails are absent. Empty result = no k-core.
     *
-    * @param maxRounds peel-round cap; with `requireConvergence` this is
-    *   the contract that a fixed-depth oracle unroll replays the same
-    *   fixpoint — the run throws instead of returning an
-    *   under-peeled frame.
+    * @param maxRounds peel-round cap: the contract that a fixed-depth
+    *   oracle unroll replays the same fixpoint — the run throws instead
+    *   of returning an under-peeled frame.
     */
   def coreNodes(
       edges: DataFrame,
       aCol: String,
       bCol: String,
       k: Int,
-      maxRounds: Int = 30,
-      requireConvergence: Boolean = true): DataFrame = {
+      maxRounds: Int = 30): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val sym = edges.select(col(aCol).as("s"), col(bCol).as("d"))
       .unionByName(edges.select(col(bCol).as("s"), col(aCol).as("d")))
-    var cur = sym.localCheckpoint(true)
-    var curEdges = cur.count()
-    var converged = curEdges == 0L
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
-      val keep = cur.groupBy(col("s")).agg(count(lit(1)).as("__deg"))
-        .where(col("__deg") >= k)
-        .select(col("s").as("node"))
-      val next = cur
-        .join(keep, cur("s") === keep("node"), "left_semi")
-        .join(keep, cur("d") === keep("node"), "left_semi")
-        .localCheckpoint(true)
-      val nextEdges = next.count()
-      bridge.freeLocalCheckpoint(cur)
-      cur = next
-      converged = nextEdges == curEdges || nextEdges == 0L
-      curEdges = nextEdges
-    }
-    if (!converged && requireConvergence) {
-      bridge.freeLocalCheckpoint(cur)
-      throw new IllegalStateException(
-        s"k-core peel did not converge within $maxRounds rounds — " +
-          "raise maxRounds (and the oracle's unroll depth with it)")
-    }
-    val out = cur.groupBy(col("s").as("node"))
-      .agg(count(lit(1)).cast("int").as("core_degree"))
-    // Pin the result before releasing the checkpointed frame it reads.
-    val pinned = out.localCheckpoint(true)
-    bridge.freeLocalCheckpoint(cur)
-    pinned
+    FixedPoint.run[Long]("KCore", sym, maxRounds,
+      step = (cur, _) => {
+        val keep = cur.groupBy(col("s")).agg(count(lit(1)).as("__deg"))
+          .where(col("__deg") >= k)
+          .select(col("s").as("node"))
+        cur
+          .join(keep, cur("s") === keep("node"), "left_semi")
+          .join(keep, cur("d") === keep("node"), "left_semi")
+      },
+      signal = (cur, _) => cur.count(),
+      converged = (last, edgeCount) => edgeCount == 0L || last.contains(edgeCount),
+      pinInit = true,
+      finish = Some(_.groupBy(col("s").as("node"))
+        .agg(count(lit(1)).cast("int").as("core_degree"))))
   }
 }

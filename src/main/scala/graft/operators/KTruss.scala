@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graft.bridge
-
 /** k-truss decomposition (Cohen 2008) of an undirected edge list: the
   * maximal subgraph in which every EDGE participates in at least k−2
   * triangles within the subgraph. The edge-analog of [[KCore]] and the
@@ -24,14 +22,14 @@ import org.apache.spark.sql.graft.bridge
   * triangle, drops edges under k−2, and repeats. Peeling is monotone
   * and idempotent at the fixpoint — the same contract that makes a
   * fixed-depth oracle unroll sound for the run-to-fixpoint engine
-  * ([[KCore]]'s `requireConvergence` discipline, applied verbatim).
+  * (the [[KCore]] contract, applied verbatim).
   *
   * Shape at scale: per round one self-join on the oriented edge frame
   * (wedges) + one edge-keyed semi-join (closure) + one hash aggregate
   * (support) + one semi-join (survival). Wedge cost is the q_g13
   * lesson — quadratic in degree — so gates run on density-controlled
-  * slices; every round localCheckpoints the shrunk frame and frees the
-  * superseded one, keeping lineage flat.
+  * slices. The round loop is [[FixedPoint]]'s, with the surviving edge
+  * count as its signal.
   *
   * Determinism: pure integer set arithmetic; the k-truss is unique, so
   * engine and oracle cannot legitimately disagree.
@@ -48,98 +46,53 @@ object KTruss {
       aCol: String,
       bCol: String,
       k: Int,
-      maxRounds: Int = 20,
-      requireConvergence: Boolean = true): DataFrame = {
+      maxRounds: Int = 20): DataFrame = {
     require(k >= 3, "k must be >= 3 (k-2 >= 1 triangle per edge)")
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val minSupport = (k - 2).toLong
-
     val canon = edges.select(
       least(col(aCol), col(bCol)).as("a"),
       greatest(col(aCol), col(bCol)).as("b"))
-    var cur = canon.localCheckpoint(true)
-    var curEdges = cur.count()
-    var converged = curEdges == 0L
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
-      // orient each canonical edge from its lower-forward-degree
-      // endpoint (degree-ordered, ties by id) — the Triangles shape
-      val deg = cur.select(col("a").as("n"))
-        .unionByName(cur.select(col("b").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("dg"))
-      val withDeg = cur
-        .join(deg.withColumnRenamed("n", "a").withColumnRenamed("dg", "da"), "a")
-        .join(deg.withColumnRenamed("n", "b").withColumnRenamed("dg", "db"), "b")
-      val oriented = withDeg.select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("a"))
-          .otherwise(col("b")).as("u"),
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("v")).localCheckpoint(true)
-      // wedges at u: (u,v),(u,w) → closed iff edge {v,w} survives
-      val wedges = oriented.select(col("u"), col("v"))
-        .join(oriented.select(col("u"), col("v").as("w")), Seq("u"))
-        .filter(col("v") < col("w"))
-      val tris = wedges.join(
-        cur.select(col("a").as("v"), col("b").as("w")),
-        Seq("v", "w"), "left_semi")
-      // each triangle {u,v,w} supports its three canonical edges
-      def ce(x: String, y: String) = struct(
-        least(col(x), col(y)).as("a"), greatest(col(x), col(y)).as("b"))
-      val support = tris.select(ce("u", "v").as("e"))
-        .unionByName(tris.select(ce("u", "w").as("e")))
-        .unionByName(tris.select(ce("v", "w").as("e")))
-        .groupBy(col("e.a").as("a"), col("e.b").as("b"))
-        .agg(count(lit(1)).as("support"))
-      val next = cur
-        .join(support.filter(col("support") >= minSupport)
-          .select("a", "b"), Seq("a", "b"), "left_semi")
-        .localCheckpoint(true)
-      val nextEdges = next.count()
-      bridge.freeLocalCheckpoint(oriented)
-      bridge.freeLocalCheckpoint(cur)
-      cur = next
-      converged = nextEdges == curEdges || nextEdges == 0L
-      curEdges = nextEdges
-    }
-    if (!converged && requireConvergence) {
-      bridge.freeLocalCheckpoint(cur)
-      throw new IllegalStateException(
-        s"k-truss peel did not converge within $maxRounds rounds — " +
-          "raise maxRounds (and the oracle's unroll depth with it)")
-    }
-    // final support over the converged frame (empty frame → empty out)
+    FixedPoint.run[Long]("KTruss", canon, maxRounds,
+      step = (cur, _) => cur.join(
+        support(cur).where(col("support") >= minSupport).select("a", "b"),
+        Seq("a", "b"), "left_semi"),
+      signal = (cur, _) => cur.count(),
+      converged = (last, edgeCount) => edgeCount == 0L || last.contains(edgeCount),
+      pinInit = true,
+      finish = Some(cur => cur.join(support(cur), Seq("a", "b"))))
+  }
+
+  /** `(a, b, support)`: the triangles of `cur` (canonical a < b edges)
+    * each edge sits in; edges in no triangle are absent.
+    */
+  private def support(cur: DataFrame): DataFrame = {
+    // orient each canonical edge from its lower-forward-degree
+    // endpoint (degree-ordered, ties by id) — the Triangles shape
     val deg = cur.select(col("a").as("n"))
       .unionByName(cur.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("dg"))
     val withDeg = cur
       .join(deg.withColumnRenamed("n", "a").withColumnRenamed("dg", "da"), "a")
       .join(deg.withColumnRenamed("n", "b").withColumnRenamed("dg", "db"), "b")
+    val lowFirst = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
     val oriented = withDeg.select(
-      when(col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b")), col("a"))
-        .otherwise(col("b")).as("u"),
-      when(col("da") < col("db") ||
-        (col("da") === col("db") && col("a") < col("b")), col("b"))
-        .otherwise(col("a")).as("v"))
+      when(lowFirst, col("a")).otherwise(col("b")).as("u"),
+      when(lowFirst, col("b")).otherwise(col("a")).as("v"))
+    // wedges at u: (u,v),(u,w) → closed iff edge {v,w} survives
     val wedges = oriented.select(col("u"), col("v"))
       .join(oriented.select(col("u"), col("v").as("w")), Seq("u"))
       .filter(col("v") < col("w"))
     val tris = wedges.join(
       cur.select(col("a").as("v"), col("b").as("w")),
       Seq("v", "w"), "left_semi")
+    // each triangle {u,v,w} supports its three canonical edges
     def ce(x: String, y: String) = struct(
       least(col(x), col(y)).as("a"), greatest(col(x), col(y)).as("b"))
-    val support = tris.select(ce("u", "v").as("e"))
+    tris.select(ce("u", "v").as("e"))
       .unionByName(tris.select(ce("u", "w").as("e")))
       .unionByName(tris.select(ce("v", "w").as("e")))
       .groupBy(col("e.a").as("a"), col("e.b").as("b"))
-      .agg(count(lit(1)).cast("bigint").as("support"))
-    val out = cur.join(support, Seq("a", "b"), "inner")
-    val pinned = out.localCheckpoint(true)
-    bridge.freeLocalCheckpoint(cur)
-    pinned
+      .agg(count(lit(1)).as("support"))
   }
 }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * [[ConnectedComponents]] and [[PageRank]]. The driver loop only
   * builds the plan. The edge frame is localCheckpoint'ed once and freed
   * after the result is pinned; labels checkpoint every 10 rounds with
-  * the superseded block freed ([[Bfs]] discipline).
+  * the superseded block freed.
   *
   * Determinism across engines: the argmax compares (count, label) with
   * count descending and label ascending — all-integer comparisons, no
@@ -62,7 +62,6 @@ object LabelPropagation {
       srcCol: String,
       dstCol: String,
       iterations: Int,
-      materializeEdges: Boolean = true,
       assumeCanonical: Boolean = false): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     import org.apache.spark.sql.graft.bridge
@@ -79,9 +78,9 @@ object LabelPropagation {
     // labels side as the build side since |V| << |E|), so the
     // checkpointed edge frame is never re-shuffled per round — measured:
     // an explicit pre-repartition(nbr) added an exchange and cost 30%.
-    val und0 = canon.select(col("a").as("node"), col("b").as("nbr"))
+    val und = canon.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(canon.select(col("b").as("node"), col("a").as("nbr")))
-    val und = if (materializeEdges) und0.localCheckpoint(true) else und0
+      .localCheckpoint(true)
 
     var labels = und.select(col("node")).distinct()
       .select(col("node"), col("node").as("label"))
@@ -98,12 +97,10 @@ object LabelPropagation {
         labels = next
       }
     }
-    val out0 = labels.select(col("node"), col("label").as("community"))
-    if (materializeEdges) {
-      val out = out0.localCheckpoint(true)
-      bridge.freeLocalCheckpoint(und)
-      if (labelsCkpt != null) bridge.freeLocalCheckpoint(labelsCkpt)
-      out
-    } else out0
+    val out = labels.select(col("node"), col("label").as("community"))
+      .localCheckpoint(true)
+    bridge.freeLocalCheckpoint(und)
+    if (labelsCkpt != null) bridge.freeLocalCheckpoint(labelsCkpt)
+    out
   }
 }

@@ -21,20 +21,18 @@ object PageRank {
   /** `edges`: (src, dst, weight). Nodes are the union of endpoints.
     * Output: node, rank (ranks sum to 1).
     *
-    * `materializeEdges` (default on) local-checkpoints the edge frame
-    * before iterating: every iteration's lineage re-executes the edge
-    * derivation otherwise (a 4-way join upstream runs `iterations`
-    * times — measured 3× cost on the trade-graph gate). The aggregated
-    * edge frame is |V|²-bounded, far smaller than its inputs; turn it
-    * off only when edges are already a cheap scan.
+    * The edge frame is local-checkpointed before iterating: every
+    * iteration's lineage re-executes the edge derivation otherwise (a
+    * 4-way join upstream runs `iterations` times — measured 3× cost on
+    * the trade-graph gate). The aggregated edge frame is |V|²-bounded,
+    * far smaller than its inputs.
     */
   def run(
       edges: DataFrame,
       iterations: Int,
-      damping: Double = 0.85,
-      materializeEdges: Boolean = true): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iterations >= 0, "iterations must be non-negative")
-    val e = if (materializeEdges) edges.localCheckpoint(true) else edges
+    val e = edges.localCheckpoint(true)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
@@ -76,16 +74,14 @@ object PageRank {
         rank = next
       }
     }
-    if (materializeEdges) {
-      // The returned plan must not depend on the freed blocks: pin the
-      // final ranks, then release the edge frame and any superseded
-      // intermediate (Bfs.scala discipline — blocks otherwise live until
-      // a driver GC happens to run, ADVICE r7).
-      val out = rank.localCheckpoint(true)
-      bridge.freeLocalCheckpoint(e)
-      if (rankCkpt != null && (rankCkpt ne out)) bridge.freeLocalCheckpoint(rankCkpt)
-      out
-    } else rank
+    // The returned plan must not depend on the freed blocks: pin the
+    // final ranks, then release the edge frame and any superseded
+    // intermediate (blocks otherwise live until a driver GC happens to
+    // run, ADVICE r7).
+    val out = rank.localCheckpoint(true)
+    bridge.freeLocalCheckpoint(e)
+    if (rankCkpt != null && (rankCkpt ne out)) bridge.freeLocalCheckpoint(rankCkpt)
+    out
   }
 
   /** Personalized PageRank: teleport (and dangling) mass returns to the
@@ -101,11 +97,10 @@ object PageRank {
       edges: DataFrame,
       seeds: Seq[Long],
       iterations: Int,
-      damping: Double = 0.85,
-      materializeEdges: Boolean = true): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iterations >= 0, "iterations must be non-negative")
     require(seeds.nonEmpty, "need at least one seed node")
-    val e = if (materializeEdges) edges.localCheckpoint(true) else edges
+    val e = edges.localCheckpoint(true)
     // Union the seeds into the node frame: a seed with no incident edges
     // would otherwise vanish from `nodes`, silently dropping its
     // 1/|seeds| teleport share and breaking the ranks-sum-to-1 contract.
@@ -149,11 +144,9 @@ object PageRank {
         rank = next
       }
     }
-    if (materializeEdges) {
-      val out = rank.localCheckpoint(true)
-      bridge.freeLocalCheckpoint(e)
-      if (rankCkpt != null && (rankCkpt ne out)) bridge.freeLocalCheckpoint(rankCkpt)
-      out
-    } else rank
+    val out = rank.localCheckpoint(true)
+    bridge.freeLocalCheckpoint(e)
+    if (rankCkpt != null && (rankCkpt ne out)) bridge.freeLocalCheckpoint(rankCkpt)
+    out
   }
 }

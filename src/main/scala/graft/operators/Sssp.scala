@@ -26,37 +26,21 @@ import org.apache.spark.sql.graft.bridge
   * idempotent at the fixpoint, so a fixed-depth SQL unroll of the
   * NON-delta form is a sound oracle for the run-to-fixpoint engine —
   * the [[KCore]] contract: the gate passes `maxRounds` >= the oracle's
-  * unroll depth with `requireConvergence = true`, and a graph needing
-  * more rounds fails loudly instead of silently hash-mismatching.
+  * unroll depth, and a graph needing more rounds fails loudly instead
+  * of silently hash-mismatching.
   *
   * Shape at scale: per round ONE join of the (symmetrized,
-  * persisted-once) edge frame against the improved-node
-  * frontier — broadcast by default, the [[Bfs]] discipline, so the edge
-  * frame never re-shuffles after its one-time materialization — then a
-  * FULL-OUTER merge of the candidate frame into the distance frame that
-  * carries an `improved` flag per row. Rounds = length (in hops) of the
-  * longest shortest weighted path, which exceeds the BFS diameter when
-  * many cheap hops beat one expensive one; small-world graphs still
-  * finish in tens of rounds.
-  *
-  * One ACTION per round (r18): the merged frame lazily localCheckpoints
-  * and the improved-row count that drives termination is the very job
-  * that materializes it — the previous shape paid three driver actions
-  * per round (improved-set checkpoint, isEmpty probe, grown-map
-  * checkpoint; 215 jobs for a 19-round run), pure scheduling floor at
-  * any scale. Superseded rounds free as soon as their successor lands.
-  * The checkpoint (vs persist) choice is deliberate: both alternatives
-  * that keep lineage were measured and LOST — chained raw plans double
-  * the printed tree per round (driver OOM in AQE's plan-string render),
-  * and a persisted-RDD chain grows every subsequent job's stage DAG
-  * (profiled: 44-stage jobs by round 19, +60% wall).
-  *
-  * Memory contract: each round broadcasts the improved-node frontier
-  * (and nothing else), bounded by the widest relaxation wave. For
-  * adversarial graphs whose waves rival the node count, set
-  * `broadcastFrontier = false` to fall back to a shuffled join.
-  * Duplicate edge rows are tolerated (the min-fold absorbs them), so no
-  * dedup pass is spent on the edge list.
+  * pinned-once) edge frame against the improved-node frontier,
+  * broadcast so the edge frame never re-shuffles after its one-time
+  * materialization, then a FULL-OUTER merge of the candidate frame into
+  * the distance frame that carries an `__imp` (improved) flag per row;
+  * the improved-row count is the round's [[FixedPoint]] signal. Rounds
+  * = length (in hops) of the longest shortest weighted path, which
+  * exceeds the BFS diameter when many cheap hops beat one expensive
+  * one; small-world graphs still finish in tens of rounds. Each round
+  * broadcasts the improved-node frontier and nothing else, bounded by
+  * the widest relaxation wave. Duplicate edge rows are tolerated (the
+  * min-fold absorbs them), so no dedup pass is spent on the edge list.
   *
   * Determinism: distances are exact integer sums folded by `min` — no
   * floats, no visit order, no tie-breaks (two equal-cost routes yield
@@ -73,10 +57,9 @@ object Sssp {
     * integer sums keep the result bit-exact across engines. `source`
     * need not appear in the edge list (it then maps to itself alone).
     *
-    * @param maxRounds relaxation-round cap; with `requireConvergence`
-    *   this is the contract that a fixed-depth oracle unroll replays
-    *   the same fixpoint — the run throws instead of returning
-    *   under-relaxed distances.
+    * @param maxRounds relaxation-round cap: the contract that a
+    *   fixed-depth oracle unroll replays the same fixpoint — the run
+    *   throws instead of returning under-relaxed distances.
     */
   def distances(
       edges: DataFrame,
@@ -84,9 +67,7 @@ object Sssp {
       bCol: String,
       weightCol: String,
       source: Long,
-      maxRounds: Int = 30,
-      requireConvergence: Boolean = true,
-      broadcastFrontier: Boolean = true): DataFrame = {
+      maxRounds: Int = 30): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -97,56 +78,27 @@ object Sssp {
       .localCheckpoint(true) // probed every round (raw-row blocks: the
     // persisted-InMemoryRelation variant pays a columnar decode per
     // round-read); safe to free at the end because every round's frame
-    // is itself checkpointed, so the returned map never re-derives e.
-    var dist = Seq((source, 0L)).toDF("node", "dist")
-    var frontier = dist
-    // the round before last frees once its successor is materialized
-    var current: DataFrame = null
-    var previous: DataFrame = null
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      round += 1
-      val f = if (broadcastFrontier) broadcast(frontier) else frontier
-      // best candidate distance per node reachable from the frontier ...
-      val cand = e.join(f, f("node") === e("s"))
-        .select(col("d").as("node"), (col("dist") + col("w")).as("__cd"))
-        .groupBy("node").agg(min("__cd").as("__cd"))
-      // ... merged map: fold candidates that beat (or first reach) the
-      // known map, flagging the improved rows — the flag count is the
-      // convergence signal AND the materializing action (one job).
-      // LAZY localCheckpoint: truncates plan AND RDD lineage per round
-      // (chained raw plans double the printed tree per round and OOM'd
-      // the driver in AQE's plan-string render; a persisted-RDD chain
-      // kept lineage but grew every job's stage DAG — profiled jobs with
-      // 44 stages and +60% wall), while the count right after is the one
-      // job that materializes it — no separate checkpoint job. The FT
-      // trade is explicit: blocks live on executors between rounds, the
-      // r17 posture; see q_m8 for the persist-based boundary used where
-      // a frame is consumed once.
-      val imp = col("__cd").isNotNull && (col("dist").isNull || col("__cd") < col("dist"))
-      val merged = dist.join(cand, Seq("node"), "full_outer")
-        .select(
-          col("node"),
-          when(imp, col("__cd")).otherwise(col("dist")).as("dist"),
-          imp.as("__imp"))
-        .localCheckpoint(false)
-      val improvedCount = merged.where(col("__imp")).count()
-      converged = improvedCount == 0L
-      if (previous != null) bridge.freeLocalCheckpoint(previous)
-      previous = current
-      current = merged
-      dist = merged.select(col("node"), col("dist"))
-      frontier = merged.where(col("__imp")).select(col("node"), col("dist"))
-    }
-    bridge.freeLocalCheckpoint(e)
-    if (previous != null) bridge.freeLocalCheckpoint(previous)
-    if (!converged && requireConvergence) {
-      if (current != null) bridge.freeLocalCheckpoint(current)
-      throw new IllegalStateException(
-        s"Bellman-Ford did not converge within $maxRounds rounds — " +
-          "raise maxRounds (and the oracle's unroll depth with it)")
-    }
-    dist
+    // is itself pinned, so the returned map never re-derives e.
+    val imp = col("__cd").isNotNull && (col("dist").isNull || col("__cd") < col("dist"))
+    try FixedPoint.run[Long]("Sssp", Seq((source, 0L, true)).toDF("node", "dist", "__imp"),
+        maxRounds,
+        step = (cur, _) => {
+          val f = broadcast(cur.where(col("__imp")).select(col("node"), col("dist")))
+          // best candidate distance per node reachable from the frontier
+          val cand = e.join(f, f("node") === e("s"))
+            .select(col("d").as("node"), (col("dist") + col("w")).as("__cd"))
+            .groupBy("node").agg(min("__cd").as("__cd"))
+          // fold candidates that beat (or first reach) the known map,
+          // flagging the improved rows: the next frontier
+          cur.select(col("node"), col("dist")).join(cand, Seq("node"), "full_outer")
+            .select(
+              col("node"),
+              when(imp, col("__cd")).otherwise(col("dist")).as("dist"),
+              imp.as("__imp"))
+        },
+        signal = (cur, _) => cur.where(col("__imp")).count(),
+        converged = (_, improved) => improved == 0L)
+      .select(col("node"), col("dist"))
+    finally bridge.freeLocalCheckpoint(e)
   }
 }

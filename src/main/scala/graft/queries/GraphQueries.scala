@@ -346,9 +346,9 @@ object GraphQueries extends QueryGroup {
   // through 3 shrinking rounds, removing 241 of 2000 nodes). The oracle
   // unrolls 5 peel rounds as chained CTEs — peeling is idempotent at
   // the fixpoint, so an unroll depth >= convergence replays the engine's
-  // run-to-fixpoint result exactly, and the engine's maxRounds=6 +
-  // requireConvergence contract throws (rather than hash-mismatching)
-  // if the corpus ever needs more rounds than the oracle replays.
+  // run-to-fixpoint result exactly, and the engine's maxRounds=6 cap
+  // throws (rather than hash-mismatching) if the corpus ever needs more
+  // rounds than the oracle replays.
   private val kcoreRounds = (1 to 5).map { r =>
     s"""k$r AS (SELECT s FROM e${r - 1} GROUP BY s HAVING count(*) >= 6),
        |e$r AS (SELECT e.s, e.d FROM e${r - 1} e
@@ -465,9 +465,9 @@ object GraphQueries extends QueryGroup {
   // count, so path costs are exact integer sums folded by min — the
   // k-core zero-float discipline. The oracle unrolls 20 min-fold rounds
   // (>= the 17/19 needed at sf0.01/sf0.1); relaxation is idempotent at
-  // the fixpoint, and the engine's maxRounds=24 + requireConvergence
-  // contract throws (rather than hash-mismatching) if the corpus ever
-  // needs more rounds than the oracle replays.
+  // the fixpoint, and the engine's maxRounds=24 cap throws (rather than
+  // hash-mismatching) if the corpus ever needs more rounds than the
+  // oracle replays.
   // AS MATERIALIZED on the per-round CTEs is load-bearing: each round
   // references the previous one TWICE (carry + relax), so the default
   // inlining would expand the 20-round chain into a 2^20-leaf plan.
@@ -1611,7 +1611,7 @@ object GraphQueries extends QueryGroup {
   // oracle unrolls 5 generated rounds (the graph converges in <= 3
   // changing rounds at every SF — probed — and peeling is idempotent at
   // the fixpoint, the q_g8/KCore unroll-soundness contract) and the
-  // engine passes maxRounds=5 with requireConvergence, so a slice that
+  // engine passes maxRounds=5, whose cap throws, so a slice that
   // suddenly needed more rounds fails loudly instead of hash-drifting.
   private val qG27: Q = {
     def roundCte(r: Int): String =

@@ -5,9 +5,8 @@ import graft.SparkSpec
 class KCoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def run(edges: Seq[(Long, Long)], k: Int, maxRounds: Int = 30,
-      requireConvergence: Boolean = true) =
-    KCore.coreNodes(edges.toDF("a", "b"), "a", "b", k, maxRounds, requireConvergence)
+  private def run(edges: Seq[(Long, Long)], k: Int, maxRounds: Int = 30) =
+    KCore.coreNodes(edges.toDF("a", "b"), "a", "b", k, maxRounds)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
 
   private val k4PlusPendant =
@@ -39,12 +38,9 @@ class KCoreSpec extends SparkSpec {
     assert(run(bowtie, k = 2, maxRounds = 2) === run(bowtie, k = 2, maxRounds = 20))
   }
 
-  test("unconverged peel under requireConvergence throws; without it, under-peels") {
+  test("unconverged peel throws at the round cap") {
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
     val e = intercept[IllegalStateException] { run(path, k = 2, maxRounds = 1) }
     assert(e.getMessage.contains("did not converge"))
-    // one round only strips the endpoint nodes' edges; inner chain remains
-    val underPeeled = run(path, k = 2, maxRounds = 1, requireConvergence = false)
-    assert(underPeeled === Map(2L -> 1, 3L -> 2, 4L -> 1))
   }
 }

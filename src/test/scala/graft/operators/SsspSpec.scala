@@ -5,13 +5,8 @@ import graft.SparkSpec
 class SsspSpec extends SparkSpec {
   import spark.implicits._
 
-  private def run(
-      edges: Seq[(Long, Long, Long)],
-      src: Long,
-      cap: Int = 30,
-      requireConvergence: Boolean = true) =
-    Sssp.distances(edges.toDF("a", "b", "w"), "a", "b", "w", src,
-      maxRounds = cap, requireConvergence = requireConvergence)
+  private def run(edges: Seq[(Long, Long, Long)], src: Long, cap: Int = 30) =
+    Sssp.distances(edges.toDF("a", "b", "w"), "a", "b", "w", src, maxRounds = cap)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("many cheap hops beat one expensive edge; orientation irrelevant") {
@@ -39,11 +34,9 @@ class SsspSpec extends SparkSpec {
     assert(got === Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 1L))
   }
 
-  test("requireConvergence throws on an under-relaxed cap; false returns partial") {
+  test("an under-relaxed cap throws") {
     val chain = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L))
     val ex = intercept[IllegalStateException](run(chain, src = 1L, cap = 2))
     assert(ex.getMessage.contains("did not converge"))
-    val partial = run(chain, src = 1L, cap = 2, requireConvergence = false)
-    assert(partial === Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
   }
 }
