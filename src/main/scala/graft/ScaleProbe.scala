@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import RunScope.Pinning
+
 /** Dev-only weak-scaling probe (NOT part of the driver contract):
   * times operator families UNCAPPED over the natural documents table
   * of a given sf dir — the source of PERF.md's weak-scaling rows.
@@ -15,7 +17,7 @@ object ScaleProbe {
     val probe = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = GraftSession.local("graft-scaleprobe")
-    val docs = Tables.load(spark, sfDir, "documents").localCheckpoint(true)
+    val docs = Tables.load(spark, sfDir, "documents").pin()
     println(s"[probe] $probe over ${docs.count()} docs @ $sfDir")
 
     def run(tag: String)(df: => DataFrame): Unit = {
@@ -36,7 +38,7 @@ object ScaleProbe {
               "charset=UTF-8\r\nContent-Length: "),
             length(coalesce(col("text"), lit(""))).cast("string"),
             lit("\r\n\r\n"), coalesce(col("text"), lit(""))).as("msg"))
-          .localCheckpoint(true)
+          .pin()
         run("HttpMessage.responses")(
           graft.operators.HttpMessage.responses(msgs, "doc_id", "msg"))
       case "charset" =>
@@ -64,17 +66,16 @@ object ScaleProbe {
             (col("doc_id") % 997).cast("string"),
             lit(".example.net/private/"), col("doc_id").cast("string"),
             lit("</loc></url></urlset>")).as("body"))
-          .localCheckpoint(true)
+          .pin()
         val robots = sm.select(col("host")).distinct()
           .select(col("host"),
             lit("User-agent: *\nDisallow: /private/\n").as("robots"))
-          .localCheckpoint(true)
+          .pin()
         run("Sitemap.governedFrontier")(
           graft.operators.Sitemap.governedFrontier(
             sm, "host", "url", "body", robots, "host", "robots", "bot"))
       case "tar" =>
-        val out = java.nio.file.Files
-          .createTempDirectory("probe_tar").toString
+        val out = RunScope.scratchDir("probe_tar")
         (1 to reps).foreach { r =>
           val t0 = System.nanoTime()
           graft.operators.ShardExport.writeTar(
@@ -113,7 +114,7 @@ object ScaleProbe {
             lit("'>2</a><a href=../u/"), col("doc_id").cast("string"),
             lit(">3</a><a href=\"?p=2\">4</a><a href=\"#t\">5</a>"),
             lit("<a href=\"//cdn.example.org/l.js\">6</a>")).as("html"))
-          .localCheckpoint(true)
+          .pin()
         run("LinkExtract.outlinks")(
           graft.operators.LinkExtract.outlinks(
             pages, "doc_id", "url", "html"))
@@ -129,7 +130,7 @@ object ScaleProbe {
             lit("\"><meta property=\"og:title\" content=\"OG "),
             col("doc_id").cast("string"),
             lit("\"></head></html>")).as("html"))
-          .localCheckpoint(true)
+          .pin()
         run("HtmlMeta.meta")(
           graft.operators.HtmlMeta.meta(pages, "doc_id", "html"))
       case "canon" =>
@@ -144,7 +145,7 @@ object ScaleProbe {
           when(col("doc_id") % 5 === 0, lit("<p>target</p>"))
             .otherwise(concat(lit("<link rel=\"canonical\" href=\""),
               tgt, lit("\">"))).as("html"))
-          .localCheckpoint(true)
+          .pin()
         run("CanonicalDedup.collapse")(
           graft.operators.CanonicalDedup.collapse(
             pages, "doc_id", "url", "html"))
@@ -155,9 +156,9 @@ object ScaleProbe {
           concat(lit("https://h"), (col("doc_id") % 997).cast("string"),
             lit(".example.net/p/"), col("doc_id").cast("string"))
             .as("url"))
-          .localCheckpoint(true)
+          .pin()
         val delays = frontier.select(col("host")).distinct()
-          .select(col("host"), lit(2L).as("delay")).localCheckpoint(true)
+          .select(col("host"), lit(2L).as("delay")).pin()
         run("CrawlSchedule.schedule")(
           graft.operators.CrawlSchedule.schedule(
             frontier, "host", "url", delays, "host", "delay", 1))
@@ -174,7 +175,7 @@ object ScaleProbe {
             lit(null).cast("string").as("location")))).as("cap"))
           .select(col("cap.url").as("url"), col("cap.status").as("status"),
             col("cap.location").as("location"))
-          .localCheckpoint(true)
+          .pin()
         run("Redirects.finalTargets")(
           graft.operators.Redirects.finalTargets(
             caps, "url", "status", "location", 5))
@@ -185,9 +186,8 @@ object ScaleProbe {
             .as("url"),
           lit("2024-06-01T00:00:00Z").as("date"),
           substring(coalesce(col("text"), lit("")), 1, 4000).as("payload"))
-          .localCheckpoint(true)
-        val out = java.nio.file.Files
-          .createTempDirectory("probe_warc").toString
+          .pin()
+        val out = RunScope.scratchDir("probe_warc")
         (1 to reps).foreach { r =>
           val t0 = System.nanoTime()
           graft.operators.WarcExport.write(
@@ -200,7 +200,7 @@ object ScaleProbe {
           concat(lit("https://WWW.Site"), (col("doc_id") % 997).cast("string"),
             lit(".Example.org:443/P/"), col("doc_id").cast("string"),
             lit("?b=2&a=1#frag")).as("url"))
-          .localCheckpoint(true)
+          .pin()
         run("Surt.surtKey")(
           urls.select(graft.operators.Surt.surtKey(col("url")).as("k")))
       case "unigram-apply" =>

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graft.bridge
+import graft.RunScope
+import graft.RunScope.Pinning
 
 /** Pivot-sampled betweenness centrality (Brandes 2001's dependency
   * accumulation, over the pivot subset of Brandes & Pich 2007) — the
@@ -38,7 +39,6 @@ object Betweenness {
   /** The shared multi-source forward pass: canonical edge frame, its
     * undirected view, the node set, and one `(pivot, node, sigma)` frame
     * per BFS level (index = distance), all pivots advancing together.
-    * Every returned frame that is checkpointed belongs to the caller.
     */
   private def forwardLevels(
       edges: DataFrame,
@@ -47,7 +47,8 @@ object Betweenness {
       numPivots: Int,
       maxDepth: Int,
       assumeCanonical: Boolean)
-      : (DataFrame, DataFrame, DataFrame, scala.collection.mutable.ArrayBuffer[DataFrame]) = {
+      : (DataFrame, DataFrame, DataFrame, scala.collection.mutable.ArrayBuffer[DataFrame]) =
+      RunScope.scope("Betweenness.forwardLevels") {
     require(numPivots >= 1, "need at least one pivot")
     require(maxDepth >= 1 && maxDepth <= 12,
       "maxDepth in [1, 12] (levels are materialized frames)")
@@ -60,7 +61,7 @@ object Betweenness {
           least(col(srcCol), col(dstCol)).cast("bigint").as("a"),
           greatest(col(srcCol), col(dstCol)).cast("bigint").as("b"))
         .distinct())
-        .localCheckpoint(true)
+        .pin()
     val und = canon.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(canon.select(col("b").as("node"), col("a").as("nbr")))
     val nodes = und.select(col("node")).distinct()
@@ -73,9 +74,9 @@ object Betweenness {
 
     // FORWARD: levels(ℓ) = (pivot, node, sigma) at distance ℓ
     val level0 = pivots.select(col("pivot"), col("pivot").as("node"),
-      lit(1L).as("sigma")).localCheckpoint(true)
+      lit(1L).as("sigma")).pin()
     val levels = scala.collection.mutable.ArrayBuffer(level0)
-    var seen = level0.select(col("pivot"), col("node")).localCheckpoint(true)
+    var seen = level0.select(col("pivot"), col("node")).pin()
     var l = 0
     var exhausted = false
     while (l < maxDepth && !exhausted) {
@@ -85,20 +86,17 @@ object Betweenness {
         .agg(sum(col("sigma")).cast("bigint").as("sigma"))
       val next = expanded
         .join(seen, Seq("pivot", "node"), "left_anti")
-        .localCheckpoint(true)
-      if (next.isEmpty) {
-        bridge.freeLocalCheckpoint(next)
-        exhausted = true
-      } else {
+        .pin()
+      if (next.isEmpty) exhausted = true
+      else {
         levels += next
         val s2 = seen.unionByName(next.select(col("pivot"), col("node")))
-          .localCheckpoint(true)
-        bridge.freeLocalCheckpoint(seen)
+          .pin()
+        RunScope.free(seen)
         seen = s2
         l += 1
       }
     }
-    bridge.freeLocalCheckpoint(seen)
     (canon, und, nodes, levels)
   }
 
@@ -116,7 +114,8 @@ object Betweenness {
       dstCol: String,
       numPivots: Int,
       maxDepth: Int,
-      assumeCanonical: Boolean = false): DataFrame = {
+      assumeCanonical: Boolean = false): DataFrame =
+      RunScope.scope("Betweenness.harmonicCentrality") {
     val (canon, _, nodes, levels) = forwardLevels(
       edges, srcCol, dstCol, numPivots, maxDepth, assumeCanonical)
     val zeroD = lit(0).cast("decimal(28,12)")
@@ -128,15 +127,12 @@ object Betweenness {
           round(lit(1.0) / lit(lev.toDouble), 12)
             .cast("decimal(28,12)").as("__h"))
       }.reduceLeft(_ unionByName _)
-    val out = nodes
+    nodes
       .join(terms.groupBy(col("node")).agg(sum(col("__h")).as("__hc")),
         Seq("node"), "left")
       .select(col("node"),
         round(coalesce(col("__hc"), zeroD).cast("double"), 6).as("harmonic"))
-      .localCheckpoint(true)
-    levels.foreach(bridge.freeLocalCheckpoint(_))
-    bridge.freeLocalCheckpoint(canon)
-    out
+      .pin()
   }
 
   /** Per-pivot ECCENTRICITY and reach (and with them the classic
@@ -156,7 +152,8 @@ object Betweenness {
       dstCol: String,
       numPivots: Int,
       maxDepth: Int,
-      assumeCanonical: Boolean = false): DataFrame = {
+      assumeCanonical: Boolean = false): DataFrame =
+      RunScope.scope("Betweenness.pivotEccentricity") {
     val (canon, _, _, levels) = forwardLevels(
       edges, srcCol, dstCol, numPivots, maxDepth, assumeCanonical)
     val tagged = levels.zipWithIndex.map { case (f, lev) =>
@@ -166,15 +163,12 @@ object Betweenness {
       .agg(
         max(col("__lev")).cast("bigint").as("eccentricity"),
         count(lit(1)).cast("bigint").as("n_reached"))
-    val out = perPivot
+    perPivot
       .crossJoin(broadcast(
         perPivot.agg(max(col("eccentricity")).cast("bigint").as("diameter_lb"))))
       .select(col("pivot"), col("eccentricity"), col("n_reached"),
         col("diameter_lb"))
-      .localCheckpoint(true)
-    levels.foreach(bridge.freeLocalCheckpoint(_))
-    bridge.freeLocalCheckpoint(canon)
-    out
+      .pin()
   }
 
   def pivotBetweenness(
@@ -183,7 +177,8 @@ object Betweenness {
       dstCol: String,
       numPivots: Int,
       maxDepth: Int,
-      assumeCanonical: Boolean = false): DataFrame = {
+      assumeCanonical: Boolean = false): DataFrame =
+      RunScope.scope("Betweenness.pivotBetweenness") {
     val (canon, und, nodes, levels) = forwardLevels(
       edges, srcCol, dstCol, numPivots, maxDepth, assumeCanonical)
     val deepest = levels.length - 1
@@ -193,12 +188,12 @@ object Betweenness {
     val zeroD = lit(0).cast("decimal(28,12)")
     var delta = levels(deepest)
       .select(col("pivot"), col("node"), col("sigma"), zeroD.as("delta"))
-      .localCheckpoint(true)
+      .pin()
     // running Σ δ per (node) over all pivots and levels ≥ 1 — built as
-    // we go so superseded per-level delta frames can be freed
+    // we go so superseded per-level delta frames free
     var acc = (if (deepest >= 1) delta.select(col("node"), col("delta"))
       else delta.select(col("node"), col("delta")).limit(0))
-      .localCheckpoint(true)
+      .pin()
     var lev = deepest - 1
     while (lev >= 0) {
       val succ = levels(lev)
@@ -218,28 +213,23 @@ object Betweenness {
           Seq("pivot", "node"), "left")
         .select(col("pivot"), col("node"), col("sigma"),
           coalesce(col("delta"), zeroD).as("delta"))
-        .localCheckpoint(true)
-      bridge.freeLocalCheckpoint(delta)
+        .pin()
+      RunScope.free(delta)
       delta = nextDelta
       if (lev >= 1) {
         val a2 = acc.unionByName(delta.select(col("node"), col("delta")))
-          .localCheckpoint(true)
-        bridge.freeLocalCheckpoint(acc)
+          .pin()
+        RunScope.free(acc)
         acc = a2
       }
       lev -= 1
     }
-    bridge.freeLocalCheckpoint(delta)
 
-    val out = nodes
+    nodes
       .join(acc.groupBy(col("node"))
         .agg(sum(col("delta")).as("__bc")), Seq("node"), "left")
       .select(col("node"),
         round(coalesce(col("__bc"), zeroD).cast("double"), 6).as("betweenness"))
-      .localCheckpoint(true)
-    bridge.freeLocalCheckpoint(acc)
-    levels.foreach(bridge.freeLocalCheckpoint(_))
-    bridge.freeLocalCheckpoint(canon)
-    out
+      .pin()
   }
 }

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graft.bridge
+import graft.RunScope
+import graft.RunScope.Pinning
 
 /** Single-source BFS hop distances over an undirected edge list — the
   * k-hop-neighborhood primitive (blast radius of a poisoned document
@@ -42,14 +43,14 @@ object Bfs {
       aCol: String,
       bCol: String,
       source: Long,
-      maxHops: Int = 30): DataFrame = {
+      maxHops: Int = 30): DataFrame = RunScope.scope("Bfs.hops") {
     require(maxHops >= 0, "maxHops must be >= 0")
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col(aCol).as("s"), col(bCol).as("d"))
       .unionByName(edges.select(col(bCol).as("s"), col(aCol).as("d")))
-      .localCheckpoint(true) // probed every round; don't re-derive
-    try FixedPoint.run[Long]("Bfs", Seq((source, 0)).toDF("node", "hops"), maxHops,
+      .pin() // probed every round; don't re-derive
+    FixedPoint.run[Long]("Bfs", Seq((source, 0)).toDF("node", "hops"), maxHops,
         step = (visited, hop) => {
           val f = broadcast(visited.where(col("hops") === hop - 1))
           visited.unionByName(e.join(f, f("node") === e("s"))
@@ -60,6 +61,5 @@ object Bfs {
         signal = (visited, hop) => visited.where(col("hops") === hop).count(),
         converged = (_, reached) => reached == 0L,
         throwAtCap = false)
-    finally bridge.freeLocalCheckpoint(e)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 
+import graft.RunScope.Pinning
 import graft.expressions.BloomMightContainLong
 
 /** Bloom-pruned equi-join: build a Bloom filter over the (already
@@ -33,7 +34,7 @@ object BloomJoin {
     *                        bits scale linearly). Pass it at scale: with a
     *                        size the dim subtree is evaluated exactly once
     *                        before the join (the sketch build). When
-    *                        omitted, the dim slice is `localCheckpoint`ed
+    *                        omitted, the dim slice is pinned
     *                        and counted from the materialized blocks, so
     *                        the sizing pass re-reads the checkpoint, not
     *                        the source — still one source evaluation, at
@@ -52,7 +53,7 @@ object BloomJoin {
     val (dimSide, expected) =
       if (expectedDimKeys > 0) (dim, expectedDimKeys)
       else {
-        val pinned = dim.localCheckpoint(true)
+        val pinned = dim.pin()
         (pinned, math.max(pinned.count(), 1L))
       }
     val bf = dimSide.stat.bloomFilter(dimKey, expected, fpp)

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.bridge
 
+
+import graft.RunScope
+import graft.RunScope.Pinning
 import graft.functions.TextAnalysis
 
 /** Byte-pair-encoding tokenizer TRAINING (Sennrich et al. 2016) made
@@ -28,7 +30,7 @@ import graft.functions.TextAnalysis
   * TakeOrderedAndProject for the argmax prefix (the driver-artifact
   * discipline — merges ship back as plan LITERALS, never a join), and
   * two (word, pos) equi-joins to apply them. The symbol frame is
-  * localCheckpoint'ed (and freed) each round — the PageRank/CC iterative
+  * pinned (and freed) each round — the PageRank/CC iterative
   * discipline — so lineage stays flat across rounds.
   * [[learnMergesBatched]] amortizes the driver round-trip over up to
   * `batchSize` provably-non-interacting merges per round — the path a
@@ -41,12 +43,11 @@ object Bpe {
     * @return (round, left, right, pair_count), round 1-based; fewer rows
     *         than `rounds` only when the corpus runs out of pairs.
     */
-  def learnMerges(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
+  def learnMerges(docs: DataFrame, textCol: String, rounds: Int): DataFrame =
+      RunScope.scope("Bpe.learnMerges") {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (merges, syms) = train(docs, textCol, rounds)
-    bridge.freeLocalCheckpoint(syms)
-    merges.toDF("round", "merge_left", "merge_right", "pair_count")
+    train(docs, textCol, rounds)._1.toDF("round", "merge_left", "merge_right", "pair_count")
   }
 
   /** BATCHED merge learning — the production-vocabulary path: the
@@ -84,12 +85,12 @@ object Bpe {
     *         round-trip that produced it.
     */
   def learnMergesBatched(
-      docs: DataFrame, textCol: String, totalMerges: Int, batchSize: Int): DataFrame = {
+      docs: DataFrame, textCol: String, totalMerges: Int, batchSize: Int): DataFrame =
+      RunScope.scope("Bpe.learnMergesBatched") {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (merges, syms) = trainBatched(docs, textCol, totalMerges, batchSize)
-    bridge.freeLocalCheckpoint(syms)
-    merges.toDF("round", "batch_round", "merge_left", "merge_right", "pair_count")
+    trainBatched(docs, textCol, totalMerges, batchSize)._1
+      .toDF("round", "batch_round", "merge_left", "merge_right", "pair_count")
   }
 
   /** Corpus tokenization summary AFTER the learned merges — the
@@ -99,7 +100,8 @@ object Bpe {
     * exact integer sums over the vocabulary frame until the two final
     * divisions.
     */
-  def compressionStats(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
+  def compressionStats(docs: DataFrame, textCol: String, rounds: Int): DataFrame =
+      RunScope.scope("Bpe.compressionStats") {
     val spark = docs.sparkSession
     import spark.implicits._
     val (merges, syms) = train(docs, textCol, rounds)
@@ -112,8 +114,7 @@ object Bpe {
         sum(col("wc") * col("n_syms")).cast("long").as("total_tokens"))
       .crossJoin(broadcast(
         syms.agg(count_distinct(col("sym")).cast("long").as("vocab_symbols"))))
-      .head() // bounded: the one-row summary — frees the checkpoint below
-    bridge.freeLocalCheckpoint(syms)
+      .head() // bounded: the one-row summary
     Seq((merges.size, row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3)))
       .toDF("n_merges", "total_words", "total_chars", "total_tokens", "vocab_symbols")
       .select(col("*"),
@@ -280,7 +281,7 @@ object Bpe {
         posexplode(transform(sequence(lit(1), length(col("w"))),
           i => col("w").substr(i, lit(1)))).as(Seq("__p", "sym")))
       .select(col("w"), col("wc"), (col("__p") + 1).as("pos"), col("sym"))
-      .localCheckpoint(true)
+      .pin()
 
     val byPos = Window.partitionBy("w").orderBy("pos")
     val merges = Seq.newBuilder[(Int, Int, String, String, Long)]
@@ -365,8 +366,8 @@ object Bpe {
               .otherwise(col("sym")).as("sym"))
           .withColumn("__np", row_number().over(byPos))
           .select(col("w"), col("wc"), col("__np").as("pos"), col("sym"))
-        val next = applied.localCheckpoint(true)
-        bridge.freeLocalCheckpoint(syms)
+        val next = applied.pin()
+        RunScope.free(syms)
         syms = next
         seqRound += kept.size
         batchRound += 1

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** Connected components over a near-duplicate pair graph — the transitive
   * step that turns pairwise matches into duplicate CLUSTERS.
   *
@@ -86,10 +89,7 @@ object ConnectedComponents {
     * `(id, cluster)` where `cluster` is the minimum vertex id in the
     * component. Polylog rounds in the largest component size — the scale
     * path for arbitrary (incl. long-chain) graphs.
-    *
-    * The returned frame is pinned; long-running callers (streaming
-    * landing zones) free it with `bridge.freeLocalCheckpoint` once
-    * superseded.
+    * The returned frame is pinned.
     */
   def alternatingStar(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     val edges = pairs
@@ -117,12 +117,13 @@ object ConnectedComponents {
     * diameter; the simple reference implementation the specs cross-check
     * [[alternatingStar]] against.
     */
-  def minLabelPropagation(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def minLabelPropagation(pairs: DataFrame, maxIter: Int = 20): DataFrame =
+      RunScope.scope("ConnectedComponents.minLabelPropagation") {
     // symmetric edge list; self-loops are harmless (min with itself)
     val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
       .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-    edges.cache()
-    try FixedPoint.run[(Long, java.math.BigInteger)](
+      .pin(RunScope.Persist)
+    FixedPoint.run[(Long, java.math.BigInteger)](
         "ConnectedComponents.minLabelPropagation",
         edges.select(col("u").as("id")).distinct().withColumn("cluster", col("id")),
         maxIter,
@@ -140,7 +141,6 @@ object ConnectedComponents {
         // so an unchanged sum is exact; no vertices, nothing to propagate
         converged = (last, stats) => stats._1 == 0L || last.contains(stats),
         pinInit = true)
-    finally edges.unpersist()
   }
 
   /** Cluster assignment for a whole corpus: docs that appear in `pairs`
@@ -172,14 +172,15 @@ object ConnectedComponents {
     *                 unseen nodes
     * @return (`id`, `cluster`) covering labeled ∪ batch nodes
     */
-  def appendEdges(labeling: DataFrame, newPairs: DataFrame): DataFrame = {
+  def appendEdges(labeling: DataFrame, newPairs: DataFrame): DataFrame =
+      RunScope.scope("ConnectedComponents.appendEdges") {
     val lab = labeling.select(col("id"), col("cluster"))
     val ends = newPairs
       .select(explode(array(col("id_a"), col("id_b"))).as("id"))
       .distinct()
     val endComp = ends.join(lab, Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("comp"))
-      .localCheckpoint(true) // batch-sized; read three times, freed below
+      .pin() // batch-sized; read three times
     val contracted = newPairs
       .join(endComp.select(col("id").as("id_a"), col("comp").as("__ca")), Seq("id_a"))
       .join(endComp.select(col("id").as("id_b"), col("comp").as("__cb")), Seq("id_b"))
@@ -190,21 +191,15 @@ object ConnectedComponents {
       .select(col("id").as("cluster"), col("cluster").as("__new"))
     val newNodes = endComp.join(lab, Seq("id"), "left_anti")
       .select(col("id"), col("comp").as("cluster"))
-    // materialize the folded labeling INSIDE the operator so every
-    // internal checkpoint (endComp, the contracted-closure stars) frees
-    // deterministically before return — a long-running landing zone calls
-    // this once per micro-batch, and un-freed batch-sized frames would
-    // accumulate in executor storage for the feed's lifetime. The caller
-    // was materializing the fold anyway (it becomes the next round's
-    // input), so this moves that residency, it does not add one; the
-    // returned frame is pinned and the caller frees it when superseded.
-    val folded = lab.unionByName(newNodes)
+    // pin the folded labeling INSIDE the operator so endComp and the
+    // contracted-closure stars free before return — a long-running
+    // landing zone calls this once per micro-batch. The caller was
+    // materializing the fold anyway (it becomes the next round's input),
+    // so this moves that residency, it does not add one.
+    lab.unionByName(newNodes)
       .join(clusterMap, Seq("cluster"), "left")
       .select(col("id"), coalesce(col("__new"), col("cluster")).as("cluster"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(endComp)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(stars)
-    folded
+      .pin()
   }
 
   def assignClusters(

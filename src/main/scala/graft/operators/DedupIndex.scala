@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
 import graft.functions.{Hashing, TextAnalysis}
 
 /** Persisted MinHash-LSH dedup index — the near-dup analog of
@@ -146,10 +148,10 @@ object DedupIndex {
       k: Int = 3,
       numPerm: Int = 64,
       bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
+      threshold: Double = 0.8): DataFrame = RunScope.scope("DedupIndex.writeAndPairs") {
     require(numPerm % bands == 0, "numPerm must be divisible by bands")
-    val sh = shingled(docs, idCol, textCol, k).localCheckpoint(true)
-    val bd = banded(sh, numPerm, bands).localCheckpoint(true)
+    val sh = shingled(docs, idCol, textCol, k).pin()
+    val bd = banded(sh, numPerm, bands).pin()
     val bA = bd.toDF("id_a", "band", "key")
     val bB = bd.toDF("id_b", "band2", "key2")
     val cand = bA
@@ -163,11 +165,9 @@ object DedupIndex {
       .withColumn("jaccard", Hashing.jaccard(col("__sha"), col("__shb")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-      .localCheckpoint(true)
+      .pin()
     sh.write.mode("overwrite").parquet(shinglesPath(path))
     bd.write.mode("overwrite").partitionBy("band").parquet(bandsPath(path))
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(sh)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(bd)
     pairs
   }
 
@@ -176,8 +176,7 @@ object DedupIndex {
     * the same frames append into the index — the per-micro-batch shape
     * of the streaming dedup pipeline, where calling probe and append
     * separately would tokenize and MinHash every batch twice. Returns
-    * the PINNED pair frame (valid after this call's internal frames are
-    * freed).
+    * the PINNED pair frame.
     */
   def probeAndAppend(
       spark: SparkSession,
@@ -188,16 +187,13 @@ object DedupIndex {
       k: Int = 3,
       numPerm: Int = 64,
       bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
+      threshold: Double = 0.8): DataFrame = RunScope.scope("DedupIndex.probeAndAppend") {
     require(numPerm % bands == 0, "numPerm must be divisible by bands")
-    val newSh = shingled(newDocs, idCol, textCol, k).localCheckpoint(true)
-    val newBands = banded(newSh, numPerm, bands).localCheckpoint(true)
-    val pairs = probeFrom(spark, path, newSh, newBands, threshold)
-      .localCheckpoint(true)
+    val newSh = shingled(newDocs, idCol, textCol, k).pin()
+    val newBands = banded(newSh, numPerm, bands).pin()
+    val pairs = probeFrom(spark, path, newSh, newBands, threshold).pin()
     newSh.write.mode("append").parquet(shinglesPath(path))
     newBands.write.mode("append").partitionBy("band").parquet(bandsPath(path))
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(newSh)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(newBands)
     pairs
   }
 }

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** End-to-end entity resolution: fuzzy-blocked candidate pairs →
   * Fellegi–Sunter-style additive log-odds scoring → threshold →
   * transitive closure into entity ids. This is the reference's actual
@@ -263,7 +266,7 @@ object EntityResolution {
       iterations: Int,
       lambda0: Double,
       m0: Double,
-      u0: Double): DataFrame = {
+      u0: Double): DataFrame = RunScope.scope("EntityResolution.emFit") {
     require(iterations >= 1 && iterations <= 10,
       "iterations must be in [1, 10] (rounds are plan-unrolled)")
     require(fieldCols.size <= 10, "pattern frame is 2^(k+1) — cap fields at 10")
@@ -272,7 +275,7 @@ object EntityResolution {
       .select(gammaCols(fieldCols): _*)
       .groupBy(gammaNames.map(g => col(s"g_$g")): _*)
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+      .pin()
 
     val spark = candidates.sparkSession
     var params = spark.range(1).select(
@@ -316,10 +319,9 @@ object EntityResolution {
               (col(s"__swg_$g").cast("double") / col("__sw").cast("double")).as(s"m_$g"),
               (col(s"__sug_$g").cast("double") / col("__su").cast("double")).as(s"u_$g")))): _*)
     }
-    // materialize the ≤2^(k+1)-row result, then free the pattern pin —
-    // a returned plan over the checkpoint would leak its blocks for the
-    // session (the r10 appendEdges lesson)
-    val out = patterns.crossJoin(broadcast(params))
+    // pin the ≤2^(k+1)-row result so the pattern pin frees: a returned
+    // plan over it would keep its blocks
+    patterns.crossJoin(broadcast(params))
       .select(
         (gammaNames.map(g => col(s"g_$g")) :+ col("cnt") :+
           round(posterior, 6).as("w") :+
@@ -327,9 +329,7 @@ object EntityResolution {
           gammaNames.flatMap(g => Seq(
             round(col(s"m_$g"), 6).as(s"m_$g"),
             round(col(s"u_$g"), 6).as(s"u_$g"))): _*)
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(patterns)
-    out
+      .pin()
   }
 
   /** END-TO-END entity resolution with EM-FITTED weights — the actual
@@ -375,23 +375,19 @@ object EntityResolution {
       m0: Double = 0.9,
       u0: Double = 0.1,
       blockCol: Option[String] = None,
-      segmentBlocking: Boolean = true): DataFrame = {
+      segmentBlocking: Boolean = true): DataFrame =
+      RunScope.scope("EntityResolution.resolveWithEmWeights") {
     val matched = emMatchedPairs(
       records, idCol, nameCol, fieldCols, maxNameDist, minPosterior,
       iterations, lambda0, m0, u0, blockCol, segmentBlocking)
-    // alternatingStar materializes its rounds eagerly, so the matched
-    // pair pin can be released as soon as clustering returns
-    val out = ConnectedComponents.assignClusters(records, idCol, matched)
+    ConnectedComponents.assignClusters(records, idCol, matched)
       .withColumnRenamed("cluster_id", "entity_id")
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(matched)
-    out
   }
 
   /** [[resolveWithEmWeights]]'s matched-pair frame `(id_a < id_b)` —
     * exposed so callers that need a DIFFERENT clustering policy (e.g.
     * [[graft.plans.SyncRun]]'s richest-record representative pick) can
-    * consume the same fit → threshold evidence. Returned MATERIALIZED;
-    * the caller owns the pin (`bridge.freeLocalCheckpoint` when done).
+    * consume the same fit → threshold evidence. Returned pinned.
     */
   def emMatchedPairs(
       records: DataFrame,
@@ -405,7 +401,8 @@ object EntityResolution {
       m0: Double = 0.9,
       u0: Double = 0.1,
       blockCol: Option[String] = None,
-      segmentBlocking: Boolean = true): DataFrame = {
+      segmentBlocking: Boolean = true): DataFrame =
+      RunScope.scope("EntityResolution.emMatchedPairs") {
     require(minPosterior > 0 && minPosterior < 1,
       s"minPosterior must be in (0, 1), got $minPosterior")
     blockCol.foreach { bf =>
@@ -414,7 +411,7 @@ object EntityResolution {
     }
     val candidates = candidateFrame(
       records, idCol, nameCol, fieldCols, maxNameDist, None, segmentBlocking)
-      .localCheckpoint(true)
+      .pin()
     val fitted = emFit(candidates, fieldCols, iterations, lambda0, m0, u0)
     val gammaNames = "name" +: fieldCols
 
@@ -448,16 +445,13 @@ object EntityResolution {
           (col(s"${bf}_a2") === col(s"${bf}_b2")).as("__same_block")).toSeq ++
         gammaCols(fieldCols)
     val pairGamma = candidates.select(pairCols: _*)
-    val matched = pairGamma
+    pairGamma
       .join(broadcast(fitted.select((keyCols.map(col) :+ col("w")): _*)),
         keyCols, "inner")
       .where(col("w") >= minPosterior &&
         blockCol.map(_ => col("__same_block")).getOrElse(lit(true)))
       .select("id_a", "id_b")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(candidates)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(fitted)
-    matched
+      .pin()
   }
 
   /** The blocked candidate-pair frame shared by the scoring variants:

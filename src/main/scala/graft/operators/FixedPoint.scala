@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-import org.apache.spark.sql.graft.bridge
+import graft.RunScope
 
 /** The driver-side fixed-point loop of every iterate-to-convergence
   * operator ([[Sssp]], [[Bfs]], [[KCore]], [[KTruss]],
@@ -23,12 +23,11 @@ import org.apache.spark.sql.graft.bridge
   * cannot be recomputed.
   *
   * Every job the loop runs carries the description
-  * `"<name> round <n>"` (`"<name> init"` / `"<name> result"` around it);
-  * the caller's description is restored afterwards. The job group is
-  * left alone: harnesses attribute jobs by group id.
-  *
-  * Pins: on return only the returned frame's pin is live; when a step,
-  * the signal, `finish` or the cap throws, every pin made here is freed.
+  * `"<name> round <n>"` (`"<name> init"` / `"<name> result"` around it,
+  * `"<name> pin <k>"` for `finish`'s pin); the caller's description is
+  * restored afterwards. The job group is left alone: harnesses attribute
+  * jobs by group id. The loop runs in a [[graft.RunScope]] named `name`,
+  * which owns every pin made here.
   */
 private[graft] object FixedPoint {
 
@@ -60,40 +59,26 @@ private[graft] object FixedPoint {
       finish: Option[DataFrame => DataFrame] = None): DataFrame = {
     val sc = init.sparkSession.sparkContext
     val callerDescription = sc.getLocalProperty("spark.job.description")
-    var pins = List.empty[DataFrame] // made here and not yet freed
-    def pin(df: DataFrame): DataFrame = {
-      val p = df.localCheckpoint(false)
-      pins ::= p
-      p
-    }
-    var result: DataFrame = null
-    try {
+    try RunScope.scope(name) {
       sc.setJobDescription(s"$name init")
-      var state = if (pinInit) pin(init) else init
+      var state = if (pinInit) RunScope.pin(init, RunScope.Lazy) else init
       var last = if (pinInit) Some(signal(state, 0)) else None
       var done = last.exists(converged(None, _))
       var round = 0
       while (!done && round < maxRounds) {
         round += 1
         sc.setJobDescription(s"$name round $round")
-        val next = pin(step(state, round))
+        val next = RunScope.pin(step(state, round), RunScope.Lazy)
         val s = signal(next, round)
         done = converged(last, s)
-        if (pins.exists(_ eq state)) {
-          bridge.freeLocalCheckpoint(state)
-          pins = pins.filterNot(_ eq state)
-        }
+        if (pinInit || round > 1) RunScope.free(state)
         state = next
         last = Some(s)
       }
       if (!done && throwAtCap)
         throw new IllegalStateException(s"$name did not converge within $maxRounds rounds")
       sc.setJobDescription(s"$name result")
-      result = finish.fold(state)(_(state).localCheckpoint(true))
-      result
-    } finally {
-      pins.filterNot(_ eq result).foreach(bridge.freeLocalCheckpoint)
-      sc.setJobDescription(callerDescription)
-    }
+      finish.fold(state)(f => RunScope.pin(f(state)))
+    } finally sc.setJobDescription(callerDescription)
   }
 }

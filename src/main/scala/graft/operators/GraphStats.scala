@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** One-pass structural graph statistics that need no iteration — the
   * cheap companions to [[Triangles]]/[[PageRank]]: is the graph
   * hub-attached or hub-avoiding (degree assortativity, Newman 2002),
@@ -29,20 +32,19 @@ object GraphStats {
   def degreeAssortativity(
       edges: DataFrame,
       srcCol: String,
-      dstCol: String): DataFrame = {
-    import org.apache.spark.sql.graft.bridge
+      dstCol: String): DataFrame = RunScope.scope("GraphStats.degreeAssortativity") {
     // The canonical edge frame feeds the degree union (×2), two decorate
     // joins, and both orientations of the moments input — six consumers.
-    // Checkpoint it ONCE so the (possibly expensive) upstream edge
-    // derivation never re-runs per consumer; free after the one-row
-    // result is pinned (the [[KCore]]/[[Triangles]] discipline).
+    // Pin it ONCE so the (possibly expensive) upstream edge derivation
+    // never re-runs per consumer; the one-row result is pinned too (the
+    // [[KCore]]/[[Triangles]] discipline).
     val canon = edges
       .filter(col(srcCol) =!= col(dstCol))
       .select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .distinct()
-      .localCheckpoint(true)
+      .pin()
     val deg = canon.select(col("a").as("n")).unionAll(canon.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val decorated = canon
@@ -52,7 +54,7 @@ object GraphStats {
     val pairs = decorated.select(col("da").cast("double").as("x"), col("db").cast("double").as("y"))
       .unionAll(decorated.select(col("db").cast("double").as("x"), col("da").cast("double").as("y")))
     val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
-    val out = pairs
+    pairs
       .agg(
         (count(lit(1)) / 2).cast("bigint").as("n_edges"),
         covar_samp(col("x"), col("y")).as("__cov"),
@@ -64,9 +66,7 @@ object GraphStats {
         col("n_edges"),
         when(col("__vx") > 0 && col("__vy") > 0,
           col("__cov") / sqrt(col("__vx") * col("__vy"))).as("assortativity"))
-      .localCheckpoint(true)
-    bridge.freeLocalCheckpoint(canon)
-    out
+      .pin()
   }
 
   /** Newman modularity of a node partition (Newman & Girvan 2004): the
@@ -106,12 +106,10 @@ object GraphStats {
       labels: DataFrame,
       nodeCol: String,
       labelCol: String,
-      assumeCanonical: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.graft.bridge
+      assumeCanonical: Boolean = false): DataFrame = RunScope.scope("GraphStats.modularity") {
     // Same consumer fan-out as [[degreeAssortativity]]: the canonical
     // edge frame feeds the decorate joins, the degree union (×2), and
-    // the edge aggregate — checkpoint once, free after the one-row
-    // result is pinned.
+    // the edge aggregate — pinned once, as is the one-row result.
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       else edges
@@ -120,7 +118,7 @@ object GraphStats {
           least(col(srcCol), col(dstCol)).as("a"),
           greatest(col(srcCol), col(dstCol)).as("b"))
         .distinct()
-        .localCheckpoint(true)
+        .pin()
     val lab = labels.select(col(nodeCol).as("__n"), col(labelCol).as("__l"))
     val decorated = canon
       .join(lab.select(col("__n").as("a"), col("__l").as("__la")), Seq("a"))
@@ -138,7 +136,7 @@ object GraphStats {
         sum(col("__nc")).cast("bigint").as("n_nodes"),
         count(lit(1)).cast("bigint").as("n_communities"),
         sum(col("__dc") * col("__dc")).cast("bigint").as("sum_deg_sq"))
-    val out = edgeAgg
+    edgeAgg
       .crossJoin(broadcast(commAgg))
       .select(
         col("n_nodes"), col("n_edges"), col("n_communities"),
@@ -146,8 +144,6 @@ object GraphStats {
         (col("intra_edges").cast("double") / col("n_edges") -
           col("sum_deg_sq").cast("double") /
             (lit(4.0) * col("n_edges") * col("n_edges"))).as("modularity"))
-      .localCheckpoint(true)
-    if (!assumeCanonical) bridge.freeLocalCheckpoint(canon)
-    out
+      .pin()
   }
 }

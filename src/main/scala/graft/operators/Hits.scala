@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** Weighted HITS (Kleinberg 1999, "Authoritative sources in a
   * hyperlinked environment") with fixed iteration count and L1
   * normalization — the hub/authority complement to [[PageRank]]: in a
@@ -43,14 +46,13 @@ object Hits {
     */
   def run(
       edges: DataFrame,
-      iterations: Int): DataFrame = {
+      iterations: Int): DataFrame = RunScope.scope("Hits.run") {
     require(iterations >= 1, "iterations must be >= 1")
-    import org.apache.spark.sql.graft.bridge
-    val e = edges.localCheckpoint(true)
+    val e = edges.pin()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .localCheckpoint(true)
+      .pin()
     val nn = nodes.agg(count(lit(1)).cast("double").as("n"))
 
     // Each round's scores are PINNED (node-sized frames): a normalize
@@ -58,37 +60,26 @@ object Hits {
     // auth→hub→auth chain would otherwise re-evaluate every earlier
     // step 2^k times — 6 rounds = 64 replays of the base join
     // (measured 11 s on the trade-graph gate; 2.5 s pinned).
-    var pinned = List.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint(true)
-      pinned ::= out
-      out
-    }
-    var hub = pin(nodes.crossJoin(broadcast(nn))
-      .select(col("node"), (lit(1.0) / col("n")).as("score")))
+    var hub = nodes.crossJoin(broadcast(nn))
+      .select(col("node"), (lit(1.0) / col("n")).as("score")).pin()
     var auth: DataFrame = null
     for (_ <- 1 to iterations) {
-      auth = pin(normalized(nodes,
+      auth = normalized(nodes,
         e.join(hub.select(col("node").as("src"), col("score")), "src")
           .groupBy(col("dst").as("node"))
-          .agg(sum(col("weight") * col("score")).as("raw"))))
-      hub = pin(normalized(nodes,
+          .agg(sum(col("weight") * col("score")).as("raw"))).pin()
+      hub = normalized(nodes,
         e.join(auth.select(col("node").as("dst"), col("score")), "dst")
           .groupBy(col("src").as("node"))
-          .agg(sum(col("weight") * col("score")).as("raw"))))
+          .agg(sum(col("weight") * col("score")).as("raw"))).pin()
     }
-    val out = nodes
+    nodes
       .join(hub.select(col("node"), col("score").as("hub")), Seq("node"), "left")
       .join(auth.select(col("node"), col("score").as("authority")), Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub"), lit(0.0)).as("hub"),
         coalesce(col("authority"), lit(0.0)).as("authority"))
-      .localCheckpoint(true)
-    // the returned frame is materialized: release every internal pin
-    pinned.foreach(bridge.freeLocalCheckpoint)
-    bridge.freeLocalCheckpoint(nodes)
-    bridge.freeLocalCheckpoint(e)
-    out
+      .pin()
   }
 
   /** Left-join `raw` back onto the full node frame (missing → 0) and

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graft.bridge
+import graft.RunScope
+import graft.RunScope.Pinning
 
 /** k-center greedy / farthest-point traversal (Gonzalez 1985) — the
   * DIVERSITY selector of the embedding family: pick the point farthest
@@ -22,7 +23,7 @@ import org.apache.spark.sql.graft.bridge
   * Scale shape: per round ONE scan of the (id, vec, dist) frame with
   * the newest center as a PLAN-LITERAL vector (the model-as-literal
   * discipline — no join), one TakeOrdered(1) for the argmax, frames
-  * localCheckpointed and freed per round. Work is O(n·d·k) scan-side
+  * pinned and freed per round. Work is O(n·d·k) scan-side
   * compute; the selected vector collected per round is the bounded
   * O(d) artifact read.
   *
@@ -51,7 +52,7 @@ object KCenter {
       vecs: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int): DataFrame = {
+      k: Int): DataFrame = RunScope.scope("KCenter.greedyCenters") {
     require(k >= 1, "k must be >= 1")
     val spark = vecs.sparkSession
     // id is carried as bigint so the collected argmax row has one
@@ -66,7 +67,7 @@ object KCenter {
       (1, first.getLong(0), None))
     var cv: Seq[Double] = first.getSeq[Double](1)
     var cur = v.select(col("__id"), col("__v"),
-      dist2(col("__v"), cv).as("__d")).localCheckpoint(true)
+      dist2(col("__v"), cv).as("__d")).pin()
     var exhausted = false
     for (r <- 2 to k if !exhausted) {
       val best = cur
@@ -80,12 +81,11 @@ object KCenter {
         cv = best.getSeq[Double](1)
         val next = cur.select(col("__id"), col("__v"),
           least(col("__d"), dist2(col("__v"), cv)).as("__d"))
-          .localCheckpoint(true)
-        bridge.freeLocalCheckpoint(cur)
+          .pin()
+        RunScope.free(cur)
         cur = next
       }
     }
-    bridge.freeLocalCheckpoint(cur)
     import spark.implicits._
     centers.reverse
       .map { case (r, id, d) => (r, id, d) }

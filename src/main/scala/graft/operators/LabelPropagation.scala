@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** Synchronous label propagation (LPA, Raghavan et al. 2007): community
   * detection by iterated majority vote — every node adopts the label
   * most frequent among its neighbors, ties to the SMALLEST label, for a
@@ -17,9 +20,8 @@ import org.apache.spark.sql.functions._
   * neighbor id) + two hash aggregates ((node, label) counts, then the
   * per-node argmax) — the alternating join/agg discipline of
   * [[ConnectedComponents]] and [[PageRank]]. The driver loop only
-  * builds the plan. The edge frame is localCheckpoint'ed once and freed
-  * after the result is pinned; labels checkpoint every 10 rounds with
-  * the superseded block freed.
+  * builds the plan. The edge frame is pinned once; labels pin every 10
+  * rounds with the superseded pin freed.
   *
   * Determinism across engines: the argmax compares (count, label) with
   * count descending and label ascending — all-integer comparisons, no
@@ -62,9 +64,8 @@ object LabelPropagation {
       srcCol: String,
       dstCol: String,
       iterations: Int,
-      assumeCanonical: Boolean = false): DataFrame = {
+      assumeCanonical: Boolean = false): DataFrame = RunScope.scope("LabelPropagation.run") {
     require(iterations >= 1, "iterations must be >= 1")
-    import org.apache.spark.sql.graft.bridge
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       else edges
@@ -80,7 +81,7 @@ object LabelPropagation {
     // an explicit pre-repartition(nbr) added an exchange and cost 30%.
     val und = canon.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(canon.select(col("b").as("node"), col("a").as("nbr")))
-      .localCheckpoint(true)
+      .pin()
 
     var labels = und.select(col("node")).distinct()
       .select(col("node"), col("node").as("label"))
@@ -91,16 +92,12 @@ object LabelPropagation {
         .groupBy(col("node"))
         .agg(majorityLabel(col("label").cast("bigint")).as("label"))
       if (it % 10 == 0) {
-        val next = labels.localCheckpoint(true)
-        if (labelsCkpt != null) bridge.freeLocalCheckpoint(labelsCkpt)
+        val next = labels.pin()
+        if (labelsCkpt != null) RunScope.free(labelsCkpt)
         labelsCkpt = next
         labels = next
       }
     }
-    val out = labels.select(col("node"), col("label").as("community"))
-      .localCheckpoint(true)
-    bridge.freeLocalCheckpoint(und)
-    if (labelsCkpt != null) bridge.freeLocalCheckpoint(labelsCkpt)
-    out
+    labels.select(col("node"), col("label").as("community")).pin()
   }
 }

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** Neighborhood-overlap link prediction — the classic missing-edge
   * ranker (Liben-Nowell & Kleinberg 2003): for every NON-edge pair with
   * at least one common neighbor, the common-neighbor count, the
@@ -33,7 +36,8 @@ object LinkPrediction {
       srcCol: String,
       dstCol: String,
       k: Int,
-      assumeCanonical: Boolean = false): DataFrame = {
+      assumeCanonical: Boolean = false): DataFrame =
+      RunScope.scope("LinkPrediction.topCandidates") {
     require(k >= 1, "k must be >= 1")
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
@@ -43,7 +47,7 @@ object LinkPrediction {
           least(col(srcCol), col(dstCol)).as("a"),
           greatest(col(srcCol), col(dstCol)).as("b"))
         .distinct()
-        .localCheckpoint(true)
+        .pin()
     val und = canon.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(canon.select(col("b").as("node"), col("a").as("nbr")))
     val deg = und.groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -73,13 +77,8 @@ object LinkPrediction {
         (col("common_neighbors").cast("double") /
           (col("__du") + col("__dv") - col("common_neighbors"))).as("jaccard"))
       .orderBy(col("common_neighbors").desc, col("u"), col("v"))
-    if (assumeCanonical) out
-    else {
-      // the k-row result pins (trivial) so the internal canonical-edge
-      // checkpoint frees NOW instead of leaking until driver GC
-      val pinned = out.localCheckpoint(true)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(canon)
-      pinned
-    }
+    // the k-row result pins (trivial) so the internal canonical-edge
+    // checkpoint frees now
+    if (assumeCanonical) out else out.pin()
   }
 }

@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.bridge
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** Louvain-style modularity-greedy refinement (the local-move phase of
   * Blondel et al. 2008) over an existing community assignment — grades
   * and improves detection QUALITY where [[LabelPropagation]] only
@@ -103,7 +106,7 @@ object Louvain {
       labels: DataFrame,
       nodeCol: String,
       labelCol: String,
-      assumeCanonical: Boolean = false): DataFrame = {
+      assumeCanonical: Boolean = false): DataFrame = RunScope.scope("Louvain.bestMoveRefinement") {
     // assumeCanonical: the [[GraphStats.modularity]] contract — caller
     // vouches the frame is canonical AND materialized, skipping the
     // redundant |E|-row second residency + distinct shuffle.
@@ -115,9 +118,9 @@ object Louvain {
           least(col(srcCol), col(dstCol)).as("a"),
           greatest(col(srcCol), col(dstCol)).as("b"))
         .distinct()
-        .localCheckpoint(true)
+        .pin()
     val lab = labels.select(col(nodeCol).as("__n"), col(labelCol).as("__l"))
-      .localCheckpoint(true)
+      .pin()
     // edge count as a bounded 1-value driver artifact → plan literal
     val mVal = canon.agg(count(lit(1)).cast("bigint")).head().getLong(0)
     // r18: the 1-row argmax is consumed exactly once by the output plan —
@@ -134,7 +137,7 @@ object Louvain {
     // pass instead of two — the oracle recomputes the after state from
     // the updated labels independently, so the gate still confirms the
     // derivation against a from-scratch computation.
-    val out = best
+    best
       .crossJoin(broadcast(qInts(canon, lab)))
       .withColumn("__ia", (col("intra") + (col("k") - col("ka"))).cast("bigint"))
       .withColumn("__sa",
@@ -155,11 +158,7 @@ object Louvain {
         (col("__ia").cast("double") / col("m") -
           col("__sa").cast("double") / (lit(4.0) * col("m") * col("m")))
           .as("modularity_after"))
-      .localCheckpoint(true)
-
-    bridge.freeLocalCheckpoint(lab)
-    if (!assumeCanonical) bridge.freeLocalCheckpoint(canon)
-    out
+      .pin()
   }
 
   /** Current labels = the checkpointed base frame with the applied moves
@@ -218,7 +217,7 @@ object Louvain {
       nodeCol: String,
       labelCol: String,
       maxMoves: Int,
-      assumeCanonical: Boolean = false): DataFrame = {
+      assumeCanonical: Boolean = false): DataFrame = RunScope.scope("Louvain.sweepRefinement") {
     require(maxMoves >= 1, "apply at least one move")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -234,10 +233,10 @@ object Louvain {
           least(col(srcCol), col(dstCol)).cast("bigint").as("a"),
           greatest(col(srcCol), col(dstCol)).cast("bigint").as("b"))
         .distinct()
-        .localCheckpoint(true)
+        .pin()
     val lab0 = labels.select(
       col(nodeCol).cast("bigint").as("__n"), col(labelCol).cast("bigint").as("__l"))
-      .localCheckpoint(true)
+      .pin()
     var overrides = Map.empty[Long, Long]
     val q0 = qInts(canon, lab0).head()
     val m = q0.getLong(0)
@@ -277,8 +276,6 @@ object Louvain {
     require(fin.getLong(1) == intra && fin.getLong(2) == sds,
       s"sweepRefinement drift: derived (intra=$intra, sds=$sds) != " +
         s"recomputed (${fin.getLong(1)}, ${fin.getLong(2)})")
-    bridge.freeLocalCheckpoint(lab0)
-    if (!assumeCanonical) bridge.freeLocalCheckpoint(canon)
     moves.result().toDF(
       "move_no", "moved_node", "from_label", "to_label", "gain_x4m2", "n_edges",
       "intra_before", "sum_deg_sq_before", "modularity_before",
@@ -427,13 +424,13 @@ object Louvain {
       weightCol: String,
       labels: DataFrame,
       nodeCol: String,
-      labelCol: String): DataFrame = {
+      labelCol: String): DataFrame = RunScope.scope("Louvain.weightedBestMoveRefinement") {
     val w = wedges.select(
       col(srcCol).as("a"), col(dstCol).as("b"),
       col(weightCol).cast("bigint").as("wt"))
-      .localCheckpoint(true)
+      .pin()
     val lab = labels.select(col(nodeCol).as("__n"), col(labelCol).as("__l"))
-      .localCheckpoint(true)
+      .pin()
     val (cross, und, deg) = weightedParts(w)
     val mVal = w.agg(sum(col("wt")).cast("bigint")).head().getLong(0)
     // r18: argmax consumed once — no checkpoint action (see
@@ -446,7 +443,7 @@ object Louvain {
     // update to the unweighted form — the self-loop moves with the node
     // and cancels; mlCore require-verifies this algebra every level);
     // the oracle recomputes the after state independently.
-    val out = best
+    best
       .crossJoin(broadcast(
         weightedModularity(w, "a", "b", "wt", lab, "__n", "__l")
           .select(col("m"), col("intra"), col("sum_deg_sq").as("sds"))))
@@ -469,11 +466,7 @@ object Louvain {
         (col("__ia").cast("double") / col("m") -
           col("__sa").cast("double") / (lit(4.0) * col("m") * col("m")))
           .as("modularity_after"))
-      .localCheckpoint(true)
-
-    bridge.freeLocalCheckpoint(lab)
-    bridge.freeLocalCheckpoint(w)
-    out
+      .pin()
   }
 
   /** Move-phase candidate generation — the AGGREGATE-FIRST fused shape
@@ -673,12 +666,10 @@ object Louvain {
       labelCol: String,
       levels: Int,
       maxMovesPerLevel: Int,
-      assumeCanonical: Boolean = false): DataFrame = {
-    val (stats, assign) = mlCore(
+      assumeCanonical: Boolean = false): DataFrame = RunScope.scope("Louvain.multilevel") {
+    mlCore(
       edges, srcCol, dstCol, None, labels, nodeCol, labelCol, levels,
-      maxMovesPerLevel, assumeCanonical)
-    bridge.freeLocalCheckpoint(assign)
-    stats
+      maxMovesPerLevel, assumeCanonical)._1
   }
 
   /** [[multilevel]] over an ALREADY-WEIGHTED canonical graph (`a <= b`,
@@ -698,12 +689,10 @@ object Louvain {
       nodeCol: String,
       labelCol: String,
       levels: Int,
-      maxMovesPerLevel: Int): DataFrame = {
-    val (stats, assign) = mlCore(
+      maxMovesPerLevel: Int): DataFrame = RunScope.scope("Louvain.multilevelWeighted") {
+    mlCore(
       wedges, srcCol, dstCol, Some(weightCol), labels, nodeCol, labelCol,
-      levels, maxMovesPerLevel, assumeCanonical = true)
-    bridge.freeLocalCheckpoint(assign)
-    stats
+      levels, maxMovesPerLevel, assumeCanonical = true)._1
   }
 
   /** [[multilevel]]'s FINAL per-node assignment — the map a user feeds
@@ -713,7 +702,7 @@ object Louvain {
     * contractions. Composition is one |V|-row map join per level
     * (original node → super-node → its new label), checkpointed and
     * freed per level like everything else in the driver. Returns
-    * `(node, community)` as bigint, materialized (caller may free).
+    * `(node, community)` as bigint, pinned.
     */
   def multilevelAssignments(
       edges: DataFrame,
@@ -736,7 +725,7 @@ object Louvain {
     * both anyway; a caller that wants to gate the assignment map on the
     * run's evidence (e.g. "level 1 actually moved", the q_g20 trace
     * guard) gets it for free instead of paying a second full run. The
-    * assignments frame is checkpointed; the caller may free it.
+    * assignments frame is pinned.
     */
   def multilevelWithAssignments(
       edges: DataFrame,
@@ -762,7 +751,7 @@ object Louvain {
       labelCol: String,
       levels: Int,
       maxMovesPerLevel: Int,
-      assumeCanonical: Boolean): (DataFrame, DataFrame) = {
+      assumeCanonical: Boolean): (DataFrame, DataFrame) = RunScope.scope("Louvain.mlCore") {
     require(levels >= 1, "need at least one level")
     require(maxMovesPerLevel >= 1, "apply at least one move per level")
     val spark = edges.sparkSession
@@ -786,10 +775,10 @@ object Louvain {
             greatest(col(srcCol), col(dstCol)).cast("bigint").as("b"))
           .distinct())
           .select(col("a"), col("b"), lit(1L).as("wt"))
-    }).localCheckpoint(true)
+    }).pin()
     var lab = labels.select(
       col(nodeCol).cast("bigint").as("__n"), col(labelCol).cast("bigint").as("__l"))
-      .localCheckpoint(true)
+      .pin()
     def q(m: Long, i: Long, s: Long): Double =
       i.toDouble / m - s.toDouble / (4.0 * m * m)
     val rows = Seq.newBuilder[
@@ -801,7 +790,7 @@ object Louvain {
     var stop = false
     while (level <= levels && !stop) {
       val (_, und, deg0) = weightedParts(w)
-      val deg = deg0.localCheckpoint(true) // static per level, read per move
+      val deg = deg0.pin() // static per level, read per move
       val q0 = weightedQInts(w, deg, lab).head()
       val m = q0.getAs[Long]("m")
       val intra0 = q0.getAs[Long]("intra")
@@ -841,8 +830,8 @@ object Louvain {
       if (overrides.nonEmpty) {
         // materialize the level's final labels ONCE (contraction, the
         // assignment compose, and the self-check all read them)
-        val labF = overlaid(lab, overrides).localCheckpoint(true)
-        bridge.freeLocalCheckpoint(lab)
+        val labF = overlaid(lab, overrides).pin()
+        RunScope.free(lab)
         lab = labF
       }
       // one self-check recompute per level: running integers must equal
@@ -853,7 +842,7 @@ object Louvain {
           s"recomputed (${fin.getAs[Long]("intra")}, ${fin.getAs[Long]("sum_deg_sq")})")
       rows += ((level, nNodes, nPairs, m, moves,
         intra0, sds0, q(m, intra0, sds0), intra, sds, q(m, intra, sds)))
-      bridge.freeLocalCheckpoint(deg)
+      RunScope.free(deg)
       // compose the original-node assignment through this level's labels
       val nextAssign =
         (if (level == 1)
@@ -861,8 +850,8 @@ object Louvain {
         else assign
           .join(lab, assign("community") === lab("__n"))
           .select(assign("node"), col("__l").as("community")))
-          .localCheckpoint(true)
-      if (assign != null) bridge.freeLocalCheckpoint(assign)
+          .pin()
+      if (assign != null) RunScope.free(assign)
       assign = nextAssign
       if (moves == 0) stop = true
       else if (level < levels) {
@@ -877,22 +866,20 @@ object Louvain {
             col("wt"))
           .groupBy(col("a"), col("b"))
           .agg(sum(col("wt")).cast("bigint").as("wt"))
-          .localCheckpoint(true)
+          .pin()
         val nextLab = nextW.select(col("a").as("__n"))
           .unionAll(nextW.select(col("b").as("__n")))
           .distinct()
           .select(col("__n"), col("__n").as("__l"))
-          .localCheckpoint(true)
-        bridge.freeLocalCheckpoint(w)
-        bridge.freeLocalCheckpoint(lab)
+          .pin()
+        RunScope.free(w)
+        RunScope.free(lab)
         w = nextW
         lab = nextLab
         carried = Some((intra, sds))
       }
       level += 1
     }
-    bridge.freeLocalCheckpoint(w)
-    bridge.freeLocalCheckpoint(lab)
     (rows.result().toDF(
       "level", "n_nodes", "n_pairs", "total_weight", "moves_applied",
       "intra_before", "sum_deg_sq_before", "modularity_before",

@@ -4,6 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** Binary-classifier evaluation over a scored frame — the model-quality
   * readout that closes the train (QualityClassifier.fit) → score →
   * EVALUATE loop of a production corpus-quality gate.
@@ -254,7 +257,7 @@ object MlEval {
       labelCol: String,
       scoreCol: String,
       calPred: org.apache.spark.sql.Column,
-      alpha: Double = 0.1): DataFrame = {
+      alpha: Double = 0.1): DataFrame = RunScope.scope("MlEval.splitConformal") {
     require(alpha > 0 && alpha < 1, "alpha must be in (0,1)")
     val base = wellFormed(scored, labelCol, scoreCol)
       .select(
@@ -272,7 +275,7 @@ object MlEval {
     val upTo = Window.orderBy(col("r").asc, col("s").asc, col("y").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val calCum = cal.withColumn("__cum", sum(col("c")).over(upTo))
-      .localCheckpoint(true) // distinct-score-bounded; scanned twice below
+      .pin() // distinct-score-bounded; scanned twice below
     val nk = calCum
       .agg(coalesce(sum(col("c")), lit(0L)).cast("bigint").as("n_cal"))
       .select(
@@ -287,8 +290,7 @@ object MlEval {
       .agg(min(col("r")).as("qhat"))
       .crossJoin(broadcast(nk))
       .select(col("n_cal"), col("k"), col("qhat"))
-      .localCheckpoint(true) // 1 row — frees calCum below
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(calCum)
+      .pin() // 1 row — frees calCum on return
     val evalAgg = base.filter(!col("__cal"))
       .crossJoin(broadcast(resolved))
       .agg(
@@ -339,7 +341,7 @@ object MlEval {
       labelCol: String,
       scoreCol: String,
       steps: Int = 3,
-      learningRate: Double = 0.5): DataFrame = {
+      learningRate: Double = 0.5): DataFrame = RunScope.scope("MlEval.temperatureScale") {
     require(steps >= 1, "steps must be >= 1")
     val sc = least(greatest(col(scoreCol).cast("double"), lit(1e-6)),
       lit(1.0 - 1e-6))
@@ -351,7 +353,7 @@ object MlEval {
     val zf = wellFormed(scored, labelCol, scoreCol)
       .select(col(labelCol).cast("double").as("y"),
         log(sc / (lit(1.0) - sc)).as("z"))
-      .localCheckpoint(true) // scanned once per GD step + once for NLLs
+      .pin() // scanned once per GD step + once for NLLs
     var t = 1.0
     (1 to steps).foreach { _ =>
       val p = lit(1.0) / (lit(1.0) + exp(-(col("z") / lit(t))))
@@ -369,16 +371,14 @@ object MlEval {
       val p = lit(1.0) / (lit(1.0) + exp(-(col("z") / lit(tv))))
       -sum(col("y") * log(p) + (lit(1.0) - col("y")) * log(lit(1.0) - p))
     }
-    val out = zf.agg(
+    zf.agg(
       count(lit(1)).cast("bigint").as("n"),
       nll(1.0).as("nll_before"),
       nll(t).as("nll_after"))
       .select(
         lit(t).as("t_fitted"), col("n"), col("nll_before"), col("nll_after"),
         (col("nll_after") <= col("nll_before")).as("improved"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(zf)
-    out
+      .pin()
   }
 
   /** Reliability diagram + Expected Calibration Error over fixed-width

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** Multimodal (image/audio/video) column handling for training-data
   * pipelines: media travels as an opaque `binary` payload column plus a
   * typed metadata struct; decode / feature-extraction / frame-sampling are
@@ -1595,7 +1598,7 @@ object Multimodal {
       df: DataFrame,
       idCol: String,
       payloadCol: String,
-      maxPixels: Int = 1 << 22): DataFrame = {
+      maxPixels: Int = 1 << 22): DataFrame = RunScope.scope("Multimodal.pnmDecodedFrame") {
     val meta = df
       .select(col(idCol), col(payloadCol).as("__pnm_payload"),
         decodePnmMeta(col(payloadCol)).as("__m"))
@@ -1605,7 +1608,7 @@ object Multimodal {
         col("__m.height").as("height"),
         col("__m.maxval").as("maxval"),
         col("__m.data_offset").as("__off"))
-      .localCheckpoint(true)
+      .pin()
     val ch = when(col("format") === "P6", lit(3L)).otherwise(lit(1L))
     // NULL-guarded size bound — least() SKIPS nulls, so an invalid
     // payload (width/height NULL) would otherwise size the fold at
@@ -1633,8 +1636,7 @@ object Multimodal {
         col(idCol), col("format"),
         col("width"), col("height"), col("maxval"),
         stats.as("__s"), hash.as("ahash"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(meta)
+      .pin()
     stage2.select(
       col(idCol), col("format"),
       col("width"), col("height"), col("maxval"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
 import graft.functions.TextAnalysis
 
 /** Multinomial Naive Bayes text classifier (the McCallum & Nigam 1998
@@ -38,16 +40,14 @@ object NaiveBayes {
     * log-likelihood of an UNSEEN token under class y. All log values
     * quantized to DECIMAL(18,9).
     *
-    * Both frames are returned MATERIALIZED (local checkpoints — the
-    * model is the vocabulary-bounded trained artifact, reused across
-    * scoring calls); the caller owns them and may release with
-    * `bridge.freeLocalCheckpoint` when done.
+    * Both frames are returned pinned (the model is the
+    * vocabulary-bounded trained artifact, reused across scoring calls).
     */
   def train(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      labelCol: String): (DataFrame, DataFrame) = {
+      labelCol: String): (DataFrame, DataFrame) = RunScope.scope("NaiveBayes.train") {
     // fail loudly on a degenerate corpus: a single-class input makes one
     // prior log(0) = -Inf, which the DECIMAL cast then ANSI-faults with
     // an unhelpful message (or silently poisons the model off-ANSI)
@@ -64,7 +64,7 @@ object NaiveBayes {
       .agg(
         sum(when(col("__y") === 1, lit(1L)).otherwise(lit(0L))).as("__c1"),
         sum(when(col("__y") === 0, lit(1L)).otherwise(lit(0L))).as("__c0"))
-      .localCheckpoint(true)
+      .pin()
     val stats0 = classTok.agg(
       sum(col("__c0")).as("__t0"),
       sum(col("__c1")).as("__t1"),
@@ -81,20 +81,15 @@ object NaiveBayes {
       q9(log(lit(1.0) / (col("__t0") + col("__v")).cast("double"))).as("def0"),
       q9(log(lit(1.0) / (col("__t1") + col("__v")).cast("double"))).as("def1"),
       col("__t0"), col("__t1"), col("__v"))
-    // materialize the bounded artifacts, then free the internal pin —
-    // returning a lazy plan over classTok would leak its checkpoint
-    // blocks for the session (the r10 appendEdges lesson)
+    // pin the bounded artifacts so the classTok pin frees
     val model = classTok.crossJoin(broadcast(stats)).select(
       col("token"),
       q9(log((col("__c0") + lit(1)).cast("double") /
         (col("__t0") + col("__v")).cast("double"))).as("ll0"),
       q9(log((col("__c1") + lit(1)).cast("double") /
         (col("__t1") + col("__v")).cast("double"))).as("ll1"))
-      .localCheckpoint(true)
-    val statsOut = stats.select("prior0", "prior1", "def0", "def1")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(classTok)
-    (model, statsOut)
+      .pin()
+    (model, stats.select("prior0", "prior1", "def0", "def1").pin())
   }
 
   /** Score `df`: (idCol…, s0, s1, margin, pred) — s_y the exact decimal

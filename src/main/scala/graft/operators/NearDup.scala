@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
 import graft.functions.{Hashing, TextAnalysis}
 
 /** Near-duplicate detection for training-data pipelines: exact, n-gram
@@ -463,19 +465,18 @@ object NearDup {
       maxHamming: Int = 3,
       numBlocks: Int = 4,
       signatureOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        t => Hashing.simHash(TextAnalysis.tokens(t))): DataFrame = {
+        t => Hashing.simHash(TextAnalysis.tokens(t))): DataFrame =
+      RunScope.scope("NearDup.blockingQuality") {
     val spark = docs.sparkSession
     import spark.implicits._
     val truth = ngramJaccardPairs(docs, idCol, textCol, k, jaccardThreshold)
-      .select("id_a", "id_b").localCheckpoint(true)
+      .select("id_a", "id_b").pin()
     val cand = simHashPairs(docs, idCol, textCol, maxHamming, numBlocks, signatureOf)
-      .select("id_a", "id_b").localCheckpoint(true)
+      .select("id_a", "id_b").pin()
     val nDocs = docs.count()
     val nTrue = truth.count()
     val nCand = cand.count()
     val nFound = truth.join(cand, Seq("id_a", "id_b"), "left_semi").count()
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(truth)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(cand)
     val allPairs = nDocs * (nDocs - 1) / 2
     Seq((nDocs, allPairs, nTrue, nCand, nFound))
       .toDF("n_docs", "n_all_pairs", "n_true_pairs", "n_candidates", "n_found")

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** Weighted PageRank with uniform dangling-mass redistribution, fixed
   * iteration count — the centrality pass over relationship graphs the
   * engine's dup-cluster and trade-flow analyses produce.
@@ -30,9 +33,9 @@ object PageRank {
   def run(
       edges: DataFrame,
       iterations: Int,
-      damping: Double = 0.85): DataFrame = {
+      damping: Double = 0.85): DataFrame = RunScope.scope("PageRank.run") {
     require(iterations >= 0, "iterations must be non-negative")
-    val e = edges.localCheckpoint(true)
+    val e = edges.pin()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
@@ -43,7 +46,6 @@ object PageRank {
       .join(outW, "src")
       .select(col("src"), col("dst"), (col("weight") / col("out_w")).as("p"))
 
-    import org.apache.spark.sql.graft.bridge
     var rank = nodes.crossJoin(broadcast(nn))
       .select(col("node"), (lit(1.0) / col("n")).as("rank"))
     var rankCkpt: DataFrame = null
@@ -68,20 +70,14 @@ object PageRank {
       // joins + an agg; 50 iterations of that is an analyzer stall) and
       // free the superseded checkpoint so executor blocks don't pile up
       if (it % 10 == 0) {
-        val next = rank.localCheckpoint(true)
-        if (rankCkpt != null) bridge.freeLocalCheckpoint(rankCkpt)
+        val next = rank.pin()
+        if (rankCkpt != null) RunScope.free(rankCkpt)
         rankCkpt = next
         rank = next
       }
     }
-    // The returned plan must not depend on the freed blocks: pin the
-    // final ranks, then release the edge frame and any superseded
-    // intermediate (blocks otherwise live until a driver GC happens to
-    // run, ADVICE r7).
-    val out = rank.localCheckpoint(true)
-    bridge.freeLocalCheckpoint(e)
-    if (rankCkpt != null && (rankCkpt ne out)) bridge.freeLocalCheckpoint(rankCkpt)
-    out
+    // pinned, so the edge frame and the last intermediate free on return
+    rank.pin()
   }
 
   /** Personalized PageRank: teleport (and dangling) mass returns to the
@@ -97,10 +93,10 @@ object PageRank {
       edges: DataFrame,
       seeds: Seq[Long],
       iterations: Int,
-      damping: Double = 0.85): DataFrame = {
+      damping: Double = 0.85): DataFrame = RunScope.scope("PageRank.personalized") {
     require(iterations >= 0, "iterations must be non-negative")
     require(seeds.nonEmpty, "need at least one seed node")
-    val e = edges.localCheckpoint(true)
+    val e = edges.pin()
     // Union the seeds into the node frame: a seed with no incident edges
     // would otherwise vanish from `nodes`, silently dropping its
     // 1/|seeds| teleport share and breaking the ranks-sum-to-1 contract.
@@ -118,7 +114,6 @@ object PageRank {
       .join(outW, "src")
       .select(col("src"), col("dst"), (col("weight") / col("out_w")).as("p"))
 
-    import org.apache.spark.sql.graft.bridge
     var rank = nodes.select(col("node"), tele.as("rank"))
     var rankCkpt: DataFrame = null
     for (it <- 1 to iterations) {
@@ -138,15 +133,12 @@ object PageRank {
             lit(damping) * (coalesce(col("in_sum"), lit(0.0)) + col("dm") * tele))
             .as("rank"))
       if (it % 10 == 0) {
-        val next = rank.localCheckpoint(true)
-        if (rankCkpt != null) bridge.freeLocalCheckpoint(rankCkpt)
+        val next = rank.pin()
+        if (rankCkpt != null) RunScope.free(rankCkpt)
         rankCkpt = next
         rank = next
       }
     }
-    val out = rank.localCheckpoint(true)
-    bridge.freeLocalCheckpoint(e)
-    if (rankCkpt != null && (rankCkpt ne out)) bridge.freeLocalCheckpoint(rankCkpt)
-    out
+    rank.pin()
   }
 }

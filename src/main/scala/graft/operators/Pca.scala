@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** Distributed top-component PCA (uncentered) via the Gram matrix and
   * FIXED-count power iteration — the embedding-space structure pass
   * (dominant direction, spectral mass) without MLlib's randomized SVD,
@@ -33,7 +36,7 @@ object Pca {
       vecs: DataFrame,
       idCol: String,
       vecCol: String,
-      iterations: Int = 3): DataFrame = {
+      iterations: Int = 3): DataFrame = RunScope.scope("Pca.topComponent") {
     require(iterations >= 1, "iterations must be >= 1")
     val vd = vecs.select(
       col(idCol).as("__id"),
@@ -44,7 +47,7 @@ object Pca {
         Seq("__id"))
       .groupBy(col("__i"), col("__j"))
       .agg(sum(col("__xi") * col("__xj")).as("__g"))
-      .localCheckpoint(true)
+      .pin()
 
     // Dimensionality from the first row — bounded driver read (one int).
     // PRECONDITION: every vector shares this dimensionality; mixed-width
@@ -66,12 +69,10 @@ object Pca {
       v = w.crossJoin(broadcast(lastNorm))
         .select(col("__p"), (col("__w") / col("__n")).as("__v"))
     }
-    val out = v
+    v
       .crossJoin(broadcast(lastNorm.select(col("__n").as("eigenvalue"))))
       .select(col("__p").as("dim"), col("__v").as("loading"), col("eigenvalue"))
       .orderBy("dim")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(gram)
-    out
+      .pin()
   }
 }

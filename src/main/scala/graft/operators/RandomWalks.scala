@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graft.bridge
+import graft.RunScope
+import graft.RunScope.Pinning
 
 /** DeepWalk walk-corpus generation (Perozzi–Al-Rfou–Skiena, KDD 2014
   * §4.1): `walksPerNode` fixed-length uniform random walks started from
@@ -49,7 +50,7 @@ object RandomWalks {
       bCol: String,
       walksPerNode: Int,
       walkLength: Int,
-      seed: Long): DataFrame = {
+      seed: Long): DataFrame = RunScope.scope("RandomWalks.deepWalk") {
     require(walksPerNode >= 1, "need at least one walk per node")
     require(walkLength >= 1, "need at least one step")
     val und = edges
@@ -63,9 +64,9 @@ object RandomWalks {
       .select(col("node"), col("nbr"),
         (row_number().over(Window.partitionBy("node").orderBy("nbr")) - 1)
           .cast("bigint").as("r"))
-      .localCheckpoint(true) // probed every step; built once
+      .pin() // probed every step; built once
     val deg = adj.groupBy("node").agg(count(lit(1)).cast("bigint").as("deg"))
-      .localCheckpoint(true)
+      .pin()
 
     var st = deg
       .select(col("node").as("start"),
@@ -73,7 +74,7 @@ object RandomWalks {
       .select(
         (col("start") * walksPerNode + col("g")).as("walk_id"),
         col("start"), col("start").as("cur"))
-      .localCheckpoint(true)
+      .pin()
     val parts = Seq.newBuilder[DataFrame]
     parts += st.select(
       col("walk_id"), col("start"), lit(0).as("step"), col("cur").as("node"))
@@ -93,18 +94,15 @@ object RandomWalks {
       val next = picked
         .join(adjR, col("cur") === col("__an") && col("idx") === col("__ar"))
         .select(col("walk_id"), col("start"), col("__anbr").as("cur"))
-        .localCheckpoint(true)
-      // NOT freed: every step's state frame IS an output slice (parts
+        .pin()
+      // kept: every step's state frame IS an output slice (parts
       // references it); total pinned residency is the walk corpus itself,
-      // (walkLength+1)·|V|·γ rows — the caller frees after consuming
+      // (walkLength+1)·|V|·γ rows
       st = next
       parts += st.select(
         col("walk_id"), col("start"), lit(k).as("step"), col("cur").as("node"))
       k += 1
     }
-    // every step state is materialized, so the build-side frames can go
-    bridge.freeLocalCheckpoint(adj)
-    bridge.freeLocalCheckpoint(deg)
     // the per-step frames are checkpointed slices of walk state — the
     // union is a metadata concat, no recompute
     parts.result().reduce(_ unionByName _)
@@ -140,7 +138,7 @@ object RandomWalks {
       seed: Long,
       wReturn: Long,
       wNear: Long,
-      wFar: Long): DataFrame = {
+      wFar: Long): DataFrame = RunScope.scope("RandomWalks.node2vec") {
     require(walksPerNode >= 1 && walkLength >= 1, "positive walk geometry")
     // wFar >= 1 guarantees every candidate set has positive total mass
     // (a zero-mass set would leave the modular pick undefined)
@@ -157,9 +155,9 @@ object RandomWalks {
       .select(col("node"), col("nbr"),
         (row_number().over(Window.partitionBy("node").orderBy("nbr")) - 1)
           .cast("bigint").as("r"))
-      .localCheckpoint(true)
+      .pin()
     val deg = adj.groupBy("node").agg(count(lit(1)).cast("bigint").as("deg"))
-      .localCheckpoint(true)
+      .pin()
     val degR = deg.select(col("node").as("__dn"), col("deg").as("__deg"))
     val adjR = adj.select(
       col("node").as("__an"), col("nbr").as("__anbr"), col("r").as("__ar"))
@@ -172,7 +170,7 @@ object RandomWalks {
         (col("start") * walksPerNode + col("g")).as("walk_id"),
         col("start"), lit(null).cast("bigint").as("prev"),
         col("start").as("cur"))
-      .localCheckpoint(true)
+      .pin()
     val parts = Seq.newBuilder[DataFrame]
     def slice(k: Int) = st.select(
       col("walk_id"), col("start"), lit(k).as("step"), col("cur").as("node"))
@@ -190,7 +188,7 @@ object RandomWalks {
           .join(adjR, col("cur") === col("__an") && col("idx") === col("__ar"))
           .select(col("walk_id"), col("start"),
             col("cur").as("prev"), col("__anbr").as("cur"))
-          .localCheckpoint(true)
+          .pin()
       } else {
         val cand = st
           .join(adjR, col("cur") === col("__an")) // expand: all neighbors x
@@ -215,14 +213,12 @@ object RandomWalks {
         picked
           .select(col("walk_id"), col("start"),
             col("cur").as("prev"), col("x").as("cur"))
-          .localCheckpoint(true)
+          .pin()
       }
       st = next
       parts += slice(k)
       k += 1
     }
-    bridge.freeLocalCheckpoint(adj)
-    bridge.freeLocalCheckpoint(deg)
     parts.result().reduce(_ unionByName _)
   }
 }

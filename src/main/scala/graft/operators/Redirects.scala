@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.RunScope.Pinning
+
 /** HTTP redirect resolution over a capture frame — the crawl's URL
   * aliasing layer: a 3xx capture names its successor in `Location`
   * ([[HttpMessage]] hands the header plane up), and corpus URL
@@ -69,7 +71,7 @@ object Redirects {
       .agg(min(struct(col("__redir"), col("__dst"))).as("__s"))
       .select(col("__lu"), col("__s.__redir").as("__redir"),
         col("__s.__dst").as("__dst"))
-      .localCheckpoint(true)
+      .pin()
     val init = captures
       .withColumn("__cur", canon)
       .withColumn("__visited", array(canon))

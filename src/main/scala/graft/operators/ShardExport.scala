@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** Terminal TRAINING-SHARD export — the curation pipeline's last mile
   * (r15 VERDICT task #5/#6 family): after filtering/mixing/packing, a
   * training run mounts fixed-token-budget shard files plus a MANIFEST
@@ -105,7 +108,7 @@ object ShardExport {
       textCol: String,
       sourceCol: String,
       budget: Int,
-      outDir: String): Unit = {
+      outDir: String): Unit = RunScope.scope("ShardExport.append") {
     val maxRow = spark.read.parquet(s"$outDir/_manifest")
       .agg(max(col("shard_id"))).head()
     require(!maxRow.isNullAt(0),
@@ -114,21 +117,17 @@ object ShardExport {
     val maxShard = maxRow.getLong(0)
     val assigned = assign(docs, idCol, textCol, sourceCol, budget)
       .withColumn("shard_id", col("shard_id") + (maxShard + 1L))
-      .localCheckpoint(true)
-    try {
-      assigned
-        .repartition(col("shard_id"))
-        .sortWithinPartitions("shard_id", "seq_in_shard")
-        .write.mode(SaveMode.Append)
-        .partitionBy("shard_id")
-        .parquet(s"$outDir/shards")
-      manifest(assigned, idCol, textCol, sourceCol)
-        .coalesce(1)
-        .write.mode(SaveMode.Append)
-        .parquet(s"$outDir/_manifest")
-    } finally {
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(assigned)
-    }
+      .pin()
+    assigned
+      .repartition(col("shard_id"))
+      .sortWithinPartitions("shard_id", "seq_in_shard")
+      .write.mode(SaveMode.Append)
+      .partitionBy("shard_id")
+      .parquet(s"$outDir/shards")
+    manifest(assigned, idCol, textCol, sourceCol)
+      .coalesce(1)
+      .write.mode(SaveMode.Append)
+      .parquet(s"$outDir/_manifest")
   }
 
   /** Write the mountable artifact: shard member files partitioned by
@@ -142,23 +141,19 @@ object ShardExport {
       textCol: String,
       sourceCol: String,
       budget: Int,
-      outDir: String): Unit = {
+      outDir: String): Unit = RunScope.scope("ShardExport.write") {
     val assigned = assign(docs, idCol, textCol, sourceCol, budget)
-      .localCheckpoint(true)
-    try {
-      assigned
-        .repartition(col("shard_id"))
-        .sortWithinPartitions("shard_id", "seq_in_shard")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("shard_id")
-        .parquet(s"$outDir/shards")
-      manifest(assigned, idCol, textCol, sourceCol)
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/_manifest")
-    } finally {
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(assigned)
-    }
+      .pin()
+    assigned
+      .repartition(col("shard_id"))
+      .sortWithinPartitions("shard_id", "seq_in_shard")
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy("shard_id")
+      .parquet(s"$outDir/shards")
+    manifest(assigned, idCol, textCol, sourceCol)
+      .coalesce(1)
+      .write.mode(SaveMode.Overwrite)
+      .parquet(s"$outDir/_manifest")
   }
 
   /** One member's ustar bytes (POSIX.1-1988, the [[Multimodal]]
@@ -232,57 +227,53 @@ object ShardExport {
       textCol: String,
       sourceCol: String,
       budget: Int,
-      outDir: String): Unit = {
+      outDir: String): Unit = RunScope.scope("ShardExport.writeTar") {
     val assigned = assign(docs, idCol, textCol, sourceCol, budget)
-      .localCheckpoint(true)
-    try {
-      val member = tarMember(
-        concat(col(idCol).cast("string"), lit(".txt")),
-        encode(coalesce(col(textCol), lit("")), "UTF-8"))
-      val emptyBin = unhex(lit(""))
-      val tars = assigned
-        .select(col("shard_id"), col("seq_in_shard"), member.as("__m"))
-        .groupBy("shard_id")
-        .agg(concat(
-          aggregate(
-            array_sort(collect_list(struct(col("seq_in_shard").as("__s"),
-              col("__m").as("__b")))),
-            emptyBin,
-            (a, m) => concat(a, m.getField("__b"))),
-          unhex(call_function("repeat", lit("00"), lit(1024))))
-          .as("tar"))
-      // clear stale shard files first: a re-run with fewer shards must
-      // not leave phantom members of the previous export behind
-      val hconf = docs.sparkSession.sparkContext.hadoopConfiguration
-      val outPath = new org.apache.hadoop.fs.Path(outDir)
-      val fs0 = outPath.getFileSystem(hconf)
-      if (fs0.exists(outPath)) {
-        fs0.globStatus(new org.apache.hadoop.fs.Path(outDir, "shard-*.tar"))
-          .foreach(st => fs0.delete(st.getPath, false))
-      }
-      val dir = outDir
-      tars
-        .repartition(col("shard_id"))
-        .foreachPartition {
-          (rows: Iterator[org.apache.spark.sql.Row]) =>
-            if (rows.hasNext) {
-              val conf = new org.apache.hadoop.conf.Configuration()
-              rows.foreach { r =>
-                val p = new org.apache.hadoop.fs.Path(
-                  f"$dir/shard-${r.getLong(0)}%05d.tar")
-                val fs = p.getFileSystem(conf)
-                val out = fs.create(p, true)
-                try out.write(r.getAs[Array[Byte]](1))
-                finally out.close()
-              }
-            }
-        }
-      manifest(assigned, idCol, textCol, sourceCol)
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/_manifest")
-    } finally {
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(assigned)
+      .pin()
+    val member = tarMember(
+      concat(col(idCol).cast("string"), lit(".txt")),
+      encode(coalesce(col(textCol), lit("")), "UTF-8"))
+    val emptyBin = unhex(lit(""))
+    val tars = assigned
+      .select(col("shard_id"), col("seq_in_shard"), member.as("__m"))
+      .groupBy("shard_id")
+      .agg(concat(
+        aggregate(
+          array_sort(collect_list(struct(col("seq_in_shard").as("__s"),
+            col("__m").as("__b")))),
+          emptyBin,
+          (a, m) => concat(a, m.getField("__b"))),
+        unhex(call_function("repeat", lit("00"), lit(1024))))
+        .as("tar"))
+    // clear stale shard files first: a re-run with fewer shards must
+    // not leave phantom members of the previous export behind
+    val hconf = docs.sparkSession.sparkContext.hadoopConfiguration
+    val outPath = new org.apache.hadoop.fs.Path(outDir)
+    val fs0 = outPath.getFileSystem(hconf)
+    if (fs0.exists(outPath)) {
+      fs0.globStatus(new org.apache.hadoop.fs.Path(outDir, "shard-*.tar"))
+        .foreach(st => fs0.delete(st.getPath, false))
     }
+    val dir = outDir
+    tars
+      .repartition(col("shard_id"))
+      .foreachPartition {
+        (rows: Iterator[org.apache.spark.sql.Row]) =>
+          if (rows.hasNext) {
+            val conf = new org.apache.hadoop.conf.Configuration()
+            rows.foreach { r =>
+              val p = new org.apache.hadoop.fs.Path(
+                f"$dir/shard-${r.getLong(0)}%05d.tar")
+              val fs = p.getFileSystem(conf)
+              val out = fs.create(p, true)
+              try out.write(r.getAs[Array[Byte]](1))
+              finally out.close()
+            }
+          }
+      }
+    manifest(assigned, idCol, textCol, sourceCol)
+      .coalesce(1)
+      .write.mode(SaveMode.Overwrite)
+      .parquet(s"$outDir/_manifest")
   }
 }

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graft.bridge
+import graft.RunScope
+import graft.RunScope.Pinning
 
 /** Single-source shortest paths (Bellman-Ford relaxation) over a
   * weighted undirected edge list — the weighted companion to
@@ -67,7 +68,7 @@ object Sssp {
       bCol: String,
       weightCol: String,
       source: Long,
-      maxRounds: Int = 30): DataFrame = {
+      maxRounds: Int = 30): DataFrame = RunScope.scope("Sssp.distances") {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
@@ -75,12 +76,11 @@ object Sssp {
       .select(col(aCol).as("s"), col(bCol).as("d"), col(weightCol).cast("long").as("w"))
       .unionByName(
         edges.select(col(bCol).as("s"), col(aCol).as("d"), col(weightCol).cast("long").as("w")))
-      .localCheckpoint(true) // probed every round (raw-row blocks: the
+      .pin() // probed every round (raw-row blocks: the
     // persisted-InMemoryRelation variant pays a columnar decode per
-    // round-read); safe to free at the end because every round's frame
-    // is itself pinned, so the returned map never re-derives e.
+    // round-read)
     val imp = col("__cd").isNotNull && (col("dist").isNull || col("__cd") < col("dist"))
-    try FixedPoint.run[Long]("Sssp", Seq((source, 0L, true)).toDF("node", "dist", "__imp"),
+    FixedPoint.run[Long]("Sssp", Seq((source, 0L, true)).toDF("node", "dist", "__imp"),
         maxRounds,
         step = (cur, _) => {
           val f = broadcast(cur.where(col("__imp")).select(col("node"), col("dist")))
@@ -99,6 +99,5 @@ object Sssp {
         signal = (cur, _) => cur.where(col("__imp")).count(),
         converged = (_, improved) => improved == 0L)
       .select(col("node"), col("dist"))
-    finally bridge.freeLocalCheckpoint(e)
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
 import graft.functions.Hashing
 
 /** Persisted EXACT-SUBSTRING dedup index — the incremental form of the
@@ -154,8 +156,7 @@ object SubstringIndex {
     // eagerly instead because its probe must materialize BEFORE the
     // append mutates the postings).
     probeFrom(spark, path,
-      grams(newDocs, idCol, textCol, L, nBuckets)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      grams(newDocs, idCol, textCol, L, nBuckets).pin(RunScope.Persist),
       crossDocOnly)
 
   private def probeFrom(
@@ -200,21 +201,19 @@ object SubstringIndex {
       path: String,
       L: Int,
       nBuckets: Int = 64,
-      crossDocOnly: Boolean = true): DataFrame = {
-    val g = layoutByKp(grams(docs, idCol, textCol, L, nBuckets), nBuckets)
-      .localCheckpoint(true)
+      crossDocOnly: Boolean = true): DataFrame =
+      RunScope.scope("SubstringIndex.writeAndDuplicates") {
+    val g = layoutByKp(grams(docs, idCol, textCol, L, nBuckets), nBuckets).pin()
     g.write.mode("overwrite").partitionBy("kp").parquet(postingsPath(path))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("kp", "fp")
-    val dups = g
+    g
       .withColumn("__n", count(lit(1)).over(w))
       .withColumn("__mn", min(col("doc")).over(w))
       .withColumn("__mx", max(col("doc")).over(w))
       .filter(col("__n") >= 2 &&
         (if (crossDocOnly) col("__mn") =!= col("__mx") else lit(true)))
       .select("doc", "off")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(g)
-    dups
+      .pin()
   }
 
   /** [[probe]] + [[appendBatch]] fused: the batch is fingerprinted ONCE
@@ -232,12 +231,10 @@ object SubstringIndex {
       path: String,
       L: Int,
       nBuckets: Int = 64,
-      crossDocOnly: Boolean = true): DataFrame = {
-    val bg = layoutByKp(grams(newDocs, idCol, textCol, L, nBuckets), nBuckets)
-      .localCheckpoint(true)
-    val out = probeFrom(spark, path, bg, crossDocOnly).localCheckpoint(true)
+      crossDocOnly: Boolean = true): DataFrame = RunScope.scope("SubstringIndex.probeAndAppend") {
+    val bg = layoutByKp(grams(newDocs, idCol, textCol, L, nBuckets), nBuckets).pin()
+    val out = probeFrom(spark, path, bg, crossDocOnly).pin()
     bg.write.mode("append").partitionBy("kp").parquet(postingsPath(path))
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(bg)
     out
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.RunScope.Pinning
+
 /** Distributed generalized suffix array over a document corpus — the
   * machinery behind EXACT-SUBSTRING training-data deduplication (Lee et
   * al. 2022, "Deduplicating Training Data Makes Language Models Better":
@@ -81,7 +83,7 @@ object SuffixArray {
     * document (+1 for its sentinel — full suffix distinction) or is the
     * largest power of two ≤ `maxWindow` (all a fixed-L dedup needs).
     *
-    * `materializeRounds` localCheckpoints each round (the
+    * `materializeRounds` pins each round (the
     * [[ConnectedComponents]] checkpoint-and-free discipline) — keep it on
     * when several tables are consumed repeatedly ([[repetitionProfile]]);
     * turn it off when only the last table feeds a single downstream plan
@@ -157,7 +159,7 @@ object SuffixArray {
           expr(s"substr(txt, CAST(off AS INT), $w0)").as("k_ch"))
         rankUnordered(keyed0, Seq("k_ch"))
       }
-    val t0 = if (materializeRounds || ordered) t0raw.localCheckpoint() else t0raw
+    val t0 = if (materializeRounds || ordered) t0raw.pin() else t0raw
 
     val needed = math.min(maxWindow.toLong, maxLen + 1L)
     var tables = Vector(w0 -> t0)
@@ -175,7 +177,7 @@ object SuffixArray {
         else rankUnordered(paired, Seq("k1", "k2"))
       window *= 2
       tables = tables :+
-        (window -> (if (materializeRounds || ordered) next.localCheckpoint() else next))
+        (window -> (if (materializeRounds || ordered) next.pin() else next))
     }
     SuffixContext(tables, coversCorpus = window.toLong >= maxLen + 1L)
   }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
 import graft.functions.{Hashing, TextAnalysis}
 
 /** Persisted BM25 text index — the retrieval twin of the persisted
@@ -41,38 +43,36 @@ object TextIndex {
       idCol: String,
       textCol: String,
       path: String,
-      numBuckets: Int = 64): Unit = {
+      numBuckets: Int = 64): Unit = RunScope.scope("TextIndex.build") {
     require(numBuckets >= 1, "numBuckets must be >= 1")
     // The postings and stats writes both consume the tokenized frame;
     // persist the per-doc (doc_id, dl) + token arrays across the two
     // jobs so the corpus really is tokenized ONCE (stats can't come from
     // postings: an empty doc has no postings rows but still counts
     // toward n_docs/avgdl). MEMORY_AND_DISK so a 100 TB build spills
-    // rather than OOMs; freed before return.
+    // rather than OOMs.
     val toks = graft.Tables.spread(docs).select(
       col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__tk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      toks
-        .select(
-          col("doc_id"), size(col("__tk")).cast("double").as("dl"),
-          explode(col("__tk")).as("term"))
-        .groupBy(col("doc_id"), col("dl"), col("term"))
-        .agg(count(lit(1)).cast("double").as("tf"))
-        .withColumn("bucket", pmod(Hashing.md5Hash60(col("term")), lit(numBuckets.toLong)))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/postings")
-      // sum_dl rides along for exact incremental folds ([[appendBatch]]):
-      // dl is an integer-valued double, so sums are exact in IEEE double
-      // and fold associatively; reconstructing the sum from n·avgdl
-      // would NOT be bit-exact (division roundtrip).
-      toks
-        .select(size(col("__tk")).cast("double").as("dl"))
-        .agg(
-          count(lit(1)).cast("double").as("n_docs"),
-          (sum("dl") / count(lit(1))).as("avgdl"),
-          coalesce(sum("dl"), lit(0.0)).as("sum_dl"))
-        .write.mode("overwrite").parquet(s"$path/stats")
-    } finally toks.unpersist(blocking = false)
+      .pin(RunScope.Persist)
+    toks
+      .select(
+        col("doc_id"), size(col("__tk")).cast("double").as("dl"),
+        explode(col("__tk")).as("term"))
+      .groupBy(col("doc_id"), col("dl"), col("term"))
+      .agg(count(lit(1)).cast("double").as("tf"))
+      .withColumn("bucket", pmod(Hashing.md5Hash60(col("term")), lit(numBuckets.toLong)))
+      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/postings")
+    // sum_dl rides along for exact incremental folds ([[appendBatch]]):
+    // dl is an integer-valued double, so sums are exact in IEEE double
+    // and fold associatively; reconstructing the sum from n·avgdl
+    // would NOT be bit-exact (division roundtrip).
+    toks
+      .select(size(col("__tk")).cast("double").as("dl"))
+      .agg(
+        count(lit(1)).cast("double").as("n_docs"),
+        (sum("dl") / count(lit(1))).as("avgdl"),
+        coalesce(sum("dl"), lit(0.0)).as("sum_dl"))
+      .write.mode("overwrite").parquet(s"$path/stats")
   }
 
   /** Fold a document batch into an existing index WITHOUT a corpus
@@ -98,7 +98,7 @@ object TextIndex {
       idCol: String,
       textCol: String,
       path: String,
-      numBuckets: Int = 64): Unit = {
+      numBuckets: Int = 64): Unit = RunScope.scope("TextIndex.appendBatch") {
     require(numBuckets >= 1, "numBuckets must be >= 1")
     val spark = docs.sparkSession
     val old = spark.read.parquet(s"$path/stats")
@@ -110,27 +110,25 @@ object TextIndex {
     }
     val toks = graft.Tables.spread(docs).select(
       col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__tk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      toks
-        .select(
-          col("doc_id"), size(col("__tk")).cast("double").as("dl"),
-          explode(col("__tk")).as("term"))
-        .groupBy(col("doc_id"), col("dl"), col("term"))
-        .agg(count(lit(1)).cast("double").as("tf"))
-        .withColumn("bucket", pmod(Hashing.md5Hash60(col("term")), lit(numBuckets.toLong)))
-        .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
-      val delta = toks
-        .select(size(col("__tk")).cast("double").as("dl"))
-        .agg(count(lit(1)).cast("double"), coalesce(sum("dl"), lit(0.0)))
-        .collect() match { case Array(r) => (r.getDouble(0), r.getDouble(1)) }
-      val nDocs = old._1 + delta._1
-      val sumDl = old._2 + delta._2
-      val __sp = spark
-      import __sp.implicits._
-      Seq((nDocs, sumDl / nDocs, sumDl)).toDF("n_docs", "avgdl", "sum_dl")
-        .write.mode("overwrite").parquet(s"$path/stats")
-    } finally toks.unpersist(blocking = false)
+      .pin(RunScope.Persist)
+    toks
+      .select(
+        col("doc_id"), size(col("__tk")).cast("double").as("dl"),
+        explode(col("__tk")).as("term"))
+      .groupBy(col("doc_id"), col("dl"), col("term"))
+      .agg(count(lit(1)).cast("double").as("tf"))
+      .withColumn("bucket", pmod(Hashing.md5Hash60(col("term")), lit(numBuckets.toLong)))
+      .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
+    val delta = toks
+      .select(size(col("__tk")).cast("double").as("dl"))
+      .agg(count(lit(1)).cast("double"), coalesce(sum("dl"), lit(0.0)))
+      .collect() match { case Array(r) => (r.getDouble(0), r.getDouble(1)) }
+    val nDocs = old._1 + delta._1
+    val sumDl = old._2 + delta._2
+    val __sp = spark
+    import __sp.implicits._
+    Seq((nDocs, sumDl / nDocs, sumDl)).toDF("n_docs", "avgdl", "sum_dl")
+      .write.mode("overwrite").parquet(s"$path/stats")
   }
 
   /** BM25 scores for `queryTerms` served from the index at `path` —

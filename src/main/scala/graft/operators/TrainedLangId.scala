@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
 import graft.functions.Hashing
 
 /** TRAINED language identification — a hashed char-n-gram MULTICLASS
@@ -71,7 +73,7 @@ object TrainedLangId {
 
   /** Train: (model, priors) — the complete (label, bucket, ll) grid
     * and the (label, prior) frame, both DECIMAL(18,9)-quantized and
-    * MATERIALIZED (caller frees via bridge.freeLocalCheckpoint).
+    * pinned.
     */
   def train(
       df: DataFrame,
@@ -102,12 +104,12 @@ object TrainedLangId {
         q9(log((coalesce(col("__c"), lit(0L)) + lit(1)).cast("double") /
           (coalesce(col("__t"), lit(0L)) + lit(buckets)).cast("double")))
           .as("ll"))
-      .localCheckpoint(true)
+      .pin()
     val nDocs = df.count()
     val priors = df.groupBy(col(labelCol).as("label"))
       .agg(q9(log(count(lit(1)).cast("double") / lit(nDocs.toDouble)))
         .as("prior"))
-      .localCheckpoint(true)
+      .pin()
     (model, priors)
   }
 
@@ -168,16 +170,13 @@ object TrainedLangId {
       textCol: String,
       labelCol: String,
       n: Int = 3,
-      buckets: Int = 256): DataFrame = {
+      buckets: Int = 256): DataFrame = RunScope.scope("TrainedLangId.trainAndPredict") {
     val (model, priors) = train(df, textCol, labelCol, n, buckets)
-    val out = predict(df, idCol, textCol, model, priors, n, buckets)
+    predict(df, idCol, textCol, model, priors, n, buckets)
       .join(df.select(col(idCol), col(labelCol).as("lang_declared")),
         Seq(idCol))
       .select(col(idCol), col("lang_declared"), col("lang_predicted"),
         col("score"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(model)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(priors)
-    out
+      .pin()
   }
 }

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** Degree-ordered triangle counting (the node-iterator++ / forward
   * algorithm): orient every undirected edge from its (degree, id)-smaller
   * endpoint to the larger, so each triangle {x,y,z} is found EXACTLY once
@@ -26,7 +29,8 @@ object Triangles {
     * `edges` is any (src, dst) frame; self-loops dropped, direction and
     * duplicates canonicalized away.
     */
-  def globalStats(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+  def globalStats(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+      RunScope.scope("Triangles.globalStats") {
     // materialize once: the canonical edge list feeds the degree count
     // AND the rank join — without this the caller's edge derivation
     // (often itself a join) runs twice
@@ -36,7 +40,7 @@ object Triangles {
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .distinct()
-      .localCheckpoint(true)
+      .pin()
     val deg = canon.select(col("a").as("n")).unionAll(canon.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     // rank = (degree, id); orient edges rank-ascending
@@ -53,7 +57,7 @@ object Triangles {
         .otherwise(col("a")).as("dst"),
       when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("db"))
         .otherwise(col("da")).as("dstd"))
-      .localCheckpoint(true)
+      .pin()
     // compact-forward: for each oriented edge (u→v), triangles closed
     // over it are the common OUT-neighbors of u and v — computed by
     // intersecting the two adjacency lists IN the join projection, so
@@ -71,15 +75,11 @@ object Triangles {
       count(lit(1)).as("n_nodes"),
       (sum(col("d")) / 2).cast("bigint").as("n_edges"),
       sum(col("d") * (col("d") - 1) / 2).cast("bigint").as("n_wedges"))
-    val out = base.crossJoin(broadcast(triangles))
+    base.crossJoin(broadcast(triangles))
       .select(
         col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),
         (lit(3.0) * col("n_triangles") / col("n_wedges")).as("clustering"))
-      // pin the one-row result, then release the canon/oriented blocks —
-      // they otherwise live until a driver GC happens to run (ADVICE r7)
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(canon)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(oriented)
-    out
+      // pin the one-row result so the canon/oriented blocks free
+      .pin()
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
 import graft.functions.TextAnalysis
 
 /** Unigram-LM (SentencePiece-style, Kudo 2018) tokenizer TRAINING —
@@ -286,9 +288,8 @@ object UnigramTokenizer {
   }
 
   /** [[seedPieces]] → `rounds` hard-EM re-estimations → the trained
-    * piece table (piece, lpn), each stage localCheckpoint-pinned and
-    * intermediates freed; the RETURNED frame stays pinned (caller
-    * frees).
+    * piece table (piece, lpn), each stage pinned; the RETURNED frame
+    * stays pinned.
     */
   def trainPieces(
       docs: DataFrame,
@@ -296,24 +297,21 @@ object UnigramTokenizer {
       rounds: Int,
       maxPieceLen: Int = 4,
       topPieces: Int = 250,
-      maxWordLen: Int = 12): DataFrame = {
+      maxWordLen: Int = 12): DataFrame = RunScope.scope("UnigramTokenizer.trainPieces") {
     require(rounds >= 1, "at least one EM round")
     require(maxPieceLen >= 1 && maxPieceLen <= 16,
       s"maxPieceLen must be in [1,16] (key radix), got $maxPieceLen")
-    import org.apache.spark.sql.graft.bridge.freeLocalCheckpoint
-    val wrds = words(docs, textCol, maxWordLen).localCheckpoint(true)
-    val vocab = seedPieces(wrds, maxPieceLen, topPieces).localCheckpoint(true)
+    val wrds = words(docs, textCol, maxWordLen).pin()
+    val vocab = seedPieces(wrds, maxPieceLen, topPieces).pin()
     var pieces = vocab
     var r = 0
     while (r < rounds) {
       val seg = segment(wrds, pieces, maxPieceLen)
-      val next = reestimate(seg, vocab).localCheckpoint(true)
-      if (pieces ne vocab) freeLocalCheckpoint(pieces)
+      val next = reestimate(seg, vocab).pin()
+      if (pieces ne vocab) RunScope.free(pieces)
       pieces = next
       r += 1
     }
-    if (pieces ne vocab) freeLocalCheckpoint(vocab)
-    freeLocalCheckpoint(wrds)
     pieces
   }
 
@@ -370,20 +368,15 @@ object UnigramTokenizer {
       rounds: Int,
       maxPieceLen: Int = 4,
       topPieces: Int = 250,
-      maxWordLen: Int = 12): DataFrame = {
-    import org.apache.spark.sql.graft.bridge.freeLocalCheckpoint
+      maxWordLen: Int = 12): DataFrame = RunScope.scope("UnigramTokenizer.trainAndSegment") {
     val pieces = trainPieces(docs, textCol, rounds, maxPieceLen,
       topPieces, maxWordLen)
-    val wrds = words(docs, textCol, maxWordLen).localCheckpoint(true)
-    // pin the result, then free every intermediate (the q_f15 rule:
-    // the returned plan must not depend on freed checkpoints)
-    val out = segment(wrds, pieces, maxPieceLen)
+    val wrds = words(docs, textCol, maxWordLen).pin()
+    // pinned, so the intermediates free on return
+    segment(wrds, pieces, maxPieceLen)
       .select(col("w"), col("wc"), col("score_nanos"),
         size(col("seg_arr")).cast("int").as("n_pieces"),
         concat_ws("|", col("seg_arr")).as("seg"))
-      .localCheckpoint(true)
-    freeLocalCheckpoint(pieces)
-    freeLocalCheckpoint(wrds)
-    out
+      .pin()
   }
 }

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.RunScope
+import graft.RunScope.Pinning
+
 /** `.warc.gz` EXPORT — the write path of the landing format the engine
   * reads ([[WarcGz]]): captures serialize as one gzip member per WARC
   * `response` record (the Common Crawl convention — a reader can seek
@@ -58,7 +61,7 @@ object WarcExport {
       dateCol: String,
       payloadCol: String,
       budget: Int,
-      outDir: String): DataFrame = {
+      outDir: String): DataFrame = RunScope.scope("WarcExport.write") {
     require(budget >= 1, "budget must be positive")
     val rc = graft.functions.hof.bind(
       coalesce(col(payloadCol), lit(""))) { pl =>
@@ -72,83 +75,77 @@ object WarcExport {
     val base = captures
       .select(col(idCol), col(urlCol), col(dateCol), rc.as("__rc"),
         length(coalesce(col(payloadCol), lit(""))).as("__np"))
-      .localCheckpoint(true)
-    try {
-      val oversize = base.where(length(col("__rc")) > maxRecordBytes)
-        .limit(1).collect()
-      require(oversize.isEmpty,
-        s"record exceeds $maxRecordBytes bytes (STORED one-block cap) " +
-          s"at ${idCol}=${if (oversize.nonEmpty) oversize.head.get(0) else ""}")
-      val assigned = Curation
-        .packSequences(
-          base.withColumn("__w", lit(1)), idCol, "__w", budget)
-        .withColumnRenamed("pack_id", "shard_id")
-        .withColumn("seq_in_shard",
-          row_number().over(
-            Window.partitionBy("shard_id").orderBy(idCol)).cast("int"))
-      val bytesCol = graft.functions.hof.bind(
-        encode(col("__rc"), "ISO-8859-1")) { b =>
-        unhex(concat(
-          lit("1F8B0800000000000003"),
-          lit("01"), le16(length(col("__rc"))),
-          le16(lit(65535) - length(col("__rc"))),
-          hex(b), le32(crc32(b)), le32(length(col("__rc")))))
-      }
-      val emptyBin = unhex(lit(""))
-      val shards = assigned
-        .select(col("shard_id"), col("seq_in_shard"), col(idCol),
-          col("__rc"), col("__np"), bytesCol.as("__gz"))
-        .groupBy("shard_id")
-        .agg(
-          aggregate(
-            array_sort(collect_list(struct(col("seq_in_shard").as("__s"),
-              col("__gz").as("__b")))),
-            emptyBin,
-            (a, m) => concat(a, m.getField("__b"))).as("gz"),
-          count(lit(1)).as("n_records"),
-          sum(col("__np")).as("total_payload"),
-          md5(concat_ws("",
-            transform(
-              array_sort(collect_list(struct(col(idCol).as("__id"),
-                md5(encode(col("__rc"), "ISO-8859-1")).as("__h")))),
-              s => s.getField("__h"))).cast("binary")).as("content_md5"))
-        .localCheckpoint(true)
-      val hconf = captures.sparkSession.sparkContext.hadoopConfiguration
-      val outPath = new org.apache.hadoop.fs.Path(outDir)
-      val fs0 = outPath.getFileSystem(hconf)
-      if (fs0.exists(outPath)) {
-        fs0.globStatus(
-          new org.apache.hadoop.fs.Path(outDir, "shard-*.warc.gz"))
-          .foreach(st => fs0.delete(st.getPath, false))
-      }
-      val dir = outDir
-      shards
-        .select(col("shard_id"), col("gz"))
-        .repartition(col("shard_id"))
-        .foreachPartition {
-          (rows: Iterator[org.apache.spark.sql.Row]) =>
-            if (rows.hasNext) {
-              val conf = new org.apache.hadoop.conf.Configuration()
-              rows.foreach { r =>
-                val p = new org.apache.hadoop.fs.Path(
-                  f"$dir/shard-${r.getLong(0)}%05d.warc.gz")
-                val fs = p.getFileSystem(conf)
-                val out = fs.create(p, true)
-                try out.write(r.getAs[Array[Byte]](1))
-                finally out.close()
-              }
-            }
-        }
-      val manifest = shards
-        .select("shard_id", "n_records", "total_payload", "content_md5")
-        .orderBy("shard_id")
-      manifest.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/_manifest")
-      val pinned = manifest.localCheckpoint(true)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(shards)
-      pinned
-    } finally {
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(base)
+      .pin()
+    val oversize = base.where(length(col("__rc")) > maxRecordBytes)
+      .limit(1).collect()
+    require(oversize.isEmpty,
+      s"record exceeds $maxRecordBytes bytes (STORED one-block cap) " +
+        s"at ${idCol}=${if (oversize.nonEmpty) oversize.head.get(0) else ""}")
+    val assigned = Curation
+      .packSequences(
+        base.withColumn("__w", lit(1)), idCol, "__w", budget)
+      .withColumnRenamed("pack_id", "shard_id")
+      .withColumn("seq_in_shard",
+        row_number().over(
+          Window.partitionBy("shard_id").orderBy(idCol)).cast("int"))
+    val bytesCol = graft.functions.hof.bind(
+      encode(col("__rc"), "ISO-8859-1")) { b =>
+      unhex(concat(
+        lit("1F8B0800000000000003"),
+        lit("01"), le16(length(col("__rc"))),
+        le16(lit(65535) - length(col("__rc"))),
+        hex(b), le32(crc32(b)), le32(length(col("__rc")))))
     }
+    val emptyBin = unhex(lit(""))
+    val shards = assigned
+      .select(col("shard_id"), col("seq_in_shard"), col(idCol),
+        col("__rc"), col("__np"), bytesCol.as("__gz"))
+      .groupBy("shard_id")
+      .agg(
+        aggregate(
+          array_sort(collect_list(struct(col("seq_in_shard").as("__s"),
+            col("__gz").as("__b")))),
+          emptyBin,
+          (a, m) => concat(a, m.getField("__b"))).as("gz"),
+        count(lit(1)).as("n_records"),
+        sum(col("__np")).as("total_payload"),
+        md5(concat_ws("",
+          transform(
+            array_sort(collect_list(struct(col(idCol).as("__id"),
+              md5(encode(col("__rc"), "ISO-8859-1")).as("__h")))),
+            s => s.getField("__h"))).cast("binary")).as("content_md5"))
+      .pin()
+    val hconf = captures.sparkSession.sparkContext.hadoopConfiguration
+    val outPath = new org.apache.hadoop.fs.Path(outDir)
+    val fs0 = outPath.getFileSystem(hconf)
+    if (fs0.exists(outPath)) {
+      fs0.globStatus(
+        new org.apache.hadoop.fs.Path(outDir, "shard-*.warc.gz"))
+        .foreach(st => fs0.delete(st.getPath, false))
+    }
+    val dir = outDir
+    shards
+      .select(col("shard_id"), col("gz"))
+      .repartition(col("shard_id"))
+      .foreachPartition {
+        (rows: Iterator[org.apache.spark.sql.Row]) =>
+          if (rows.hasNext) {
+            val conf = new org.apache.hadoop.conf.Configuration()
+            rows.foreach { r =>
+              val p = new org.apache.hadoop.fs.Path(
+                f"$dir/shard-${r.getLong(0)}%05d.warc.gz")
+              val fs = p.getFileSystem(conf)
+              val out = fs.create(p, true)
+              try out.write(r.getAs[Array[Byte]](1))
+              finally out.close()
+            }
+          }
+      }
+    val manifest = shards
+      .select("shard_id", "n_records", "total_payload", "content_md5")
+      .orderBy("shard_id")
+    manifest.coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(s"$outDir/_manifest")
+    manifest.pin()
   }
 }

@@ -5,6 +5,8 @@ import java.time.Instant
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.RunScope
+import graft.RunScope.Pinning
 import graft.operators.{ConnectedComponents, EntityResolution, SchemaValidation, SyncDiff}
 import graft.sources.{FileSinks, Http, RestSink}
 
@@ -127,18 +129,17 @@ object SyncRun {
     * over [[EntityResolution.emMatchedPairs]]' evidence: fit → threshold
     * on the fitted posterior → closure, zero hand-set weights.
     */
-  def resolveRepresentativesEm(customer: DataFrame, cfg: EmResolutionConfig): DataFrame = {
+  def resolveRepresentativesEm(customer: DataFrame, cfg: EmResolutionConfig): DataFrame =
+      RunScope.scope("SyncRun.resolveRepresentativesEm") {
     val pairs = EntityResolution.emMatchedPairs(
       customer, "c_custkey", cfg.nameCol, cfg.fieldCols,
       cfg.maxNameDist, cfg.minPosterior, cfg.iterations, blockCol = cfg.blockCol)
     // representativesByScore clusters eagerly (alternating star), so the
     // pair pin frees as soon as it returns
-    val out = ConnectedComponents
+    ConnectedComponents
       .representativesByScore(customer, "c_custkey", pairs, col("c_acctbal"))
       .withColumn("c_custkey", col("cluster_id"))
       .drop("cluster_id")
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(pairs)
-    out
   }
 
   def run(
@@ -151,7 +152,7 @@ object SyncRun {
       quarantineDir: Option[String] = None,
       customerOverride: Option[DataFrame] = None,
       resolution: Option[IdentityResolution] = None,
-      now: () => Instant = () => Instant.now()): Result = {
+      now: () => Instant = () => Instant.now()): Result = RunScope.scope("SyncRun.run") {
     val started = now()
 
     val rawCustomer = customerOverride.getOrElse(
@@ -171,7 +172,7 @@ object SyncRun {
     // the quarantine frame is consumed three times (sink, count, delete
     // withholding) — materialize the (small) slice once instead of
     // re-scanning + re-validating the raw source per consumer
-    val quarantine = quarantine0.localCheckpoint(true)
+    val quarantine = quarantine0.pin()
     quarantineDir.foreach(d =>
       quarantine.withColumn("errors", org.apache.spark.sql.functions
         .concat_ws(",", col("errors")))
@@ -204,8 +205,6 @@ object SyncRun {
       try (RestSink.delete(plan.deletes, "studentUniqueId", transport, tokens, entityPath), None)
       catch { case e: Exception => (RestSink.SinkReport(0, 0), Some(s"delete: ${e.getMessage}")) }
 
-    // every quarantine consumer has run — release the pinned blocks
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(quarantine)
 
     val finished = now()
     val report = FileSinks.RunReport(

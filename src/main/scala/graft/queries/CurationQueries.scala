@@ -3,9 +3,10 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.operators.Curation
 import graft.functions.TextAnalysis
+import graft.RunScope.Pinning
 
 /** Corpus-curation operators over the documents table: deterministic
   * (hash-threshold) sampling, weighted source mixing, sequence packing,
@@ -417,22 +418,20 @@ object CurationQueries extends QueryGroup {
        |$qcSteps""".stripMargin
 
   /** Scala twin of [[qcTrainCtes]]: train on the corpus and return the
-    * PINNED scored frame (doc_id, y, score, pred) — the feature
-    * checkpoint is freed before returning.
+    * PINNED scored frame (doc_id, y, score, pred).
     */
   private[queries] def qcScoredPinned(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+      RunScope.scope("qcScoredPinned") {
     val docs = Tables.load(s, dir, "documents")
     val feats = graft.operators.QualityClassifier.features(
       docs, "doc_id", "text", col("lang") === "en", numBuckets = qcB)
-      .localCheckpoint(true) // scanned once per GD step + once to score
+      .pin() // scanned once per GD step + once to score
     val model = graft.operators.QualityClassifier.fit(
       feats, numBuckets = qcB, steps = 3, learningRate = 0.5)
     val scored = graft.operators.QualityClassifier.score(feats, "doc_id", model)
       .join(feats.select(col("doc_id"), col("y")), "doc_id")
-    val pinned = scored.localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(feats)
-    pinned
+    scored.pin()
   }
 
   private[queries] val qC13 = Q(
@@ -632,10 +631,8 @@ object CurationQueries extends QueryGroup {
        |       CASE WHEN tp + fp > 0 THEN CAST(tp AS DOUBLE) / (tp + fp) END AS precision
        |FROM c ORDER BY s DESC""".stripMargin) { (s, dir) =>
     val scored = qcScoredPinned(s, dir)
-    val out = graft.operators.MlEval.rocPoints(scored, "y", "score")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(scored)
-    out
+    graft.operators.MlEval.rocPoints(scored, "y", "score")
+      .pin()
   }
 
   // Average precision (operators.MlEval.averagePrecision): the PR-curve
@@ -667,10 +664,8 @@ object CurationQueries extends QueryGroup {
        |       END AS average_precision
        |FROM c""".stripMargin) { (s, dir) =>
     val scored = qcScoredPinned(s, dir)
-    val out = graft.operators.MlEval.averagePrecision(scored, "y", "score")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(scored)
-    out
+    graft.operators.MlEval.averagePrecision(scored, "y", "score")
+      .pin()
   }
 
   // Split-conformal prediction sets (operators.MlEval.splitConformal):
@@ -714,11 +709,9 @@ object CurationQueries extends QueryGroup {
        |FROM ev CROSS JOIN nk CROSS JOIN q
        |GROUP BY 1, 2, 3""".stripMargin) { (s, dir) =>
     val scored = qcScoredPinned(s, dir)
-    val out = graft.operators.MlEval.splitConformal(
+    graft.operators.MlEval.splitConformal(
       scored, "y", "score", col("doc_id") % 5 === 0, alpha = 0.1)
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(scored)
-    out
+      .pin()
   }
 
   // Isotonic calibration (operators.MlEval.isotonicCalibration): the
@@ -769,8 +762,7 @@ object CurationQueries extends QueryGroup {
     val out = graft.operators.MlEval
       .isotonicCalibration(scored, "y", "score", nBins = 10)
       .orderBy("bin")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(scored)
+      .pin()
     val fits = out.select("iso_fitted").collect().map(_.getDouble(0))
     fits.sliding(2).foreach {
       case Array(a, b) => require(a <= b,
@@ -839,14 +831,10 @@ object CurationQueries extends QueryGroup {
     val docs = Tables.load(s, dir, "documents")
       .withColumn("y", (col("lang") === "en").cast("int"))
     val (model, stats) = graft.operators.NaiveBayes.train(docs, "doc_id", "text", "y")
-    // pin the scored frame, then release the model artifacts — the gate
-    // must not leak the vocabulary-bounded checkpoints per invocation
-    val out = graft.operators.NaiveBayes.score(docs, "doc_id", "text", model, stats)
+    // pin the scored frame so the model artifacts free with the query
+    graft.operators.NaiveBayes.score(docs, "doc_id", "text", model, stats)
       .orderBy("doc_id")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(model)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(stats)
-    out
+      .pin()
   }
 
   // χ² feature selection (FeatureSelection.chiSquareTokens, Yang &
@@ -932,13 +920,10 @@ object CurationQueries extends QueryGroup {
     val (model, stats) = graft.operators.NaiveBayes.train(docs, "doc_id", "text", "y")
     val scored = graft.operators.NaiveBayes.score(docs, "doc_id", "text", model, stats)
       .join(docs.select(col("doc_id"), col("y")), Seq("doc_id"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(model)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(stats)
+      .pin()
     val out = graft.operators.LabelNoise.confidentJoint(scored, "y", "margin")
       .orderBy("given_label", "confident_label")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(scored)
+      .pin()
     val cells = out.collect()
     require(cells.nonEmpty && cells.map(_.getAs[Long]("n_docs")).sum >= 1,
       "q_c24: the confident joint must count at least one example")
@@ -1549,12 +1534,12 @@ object CurationQueries extends QueryGroup {
           xBody.as("body")))).as("sm"))
       .select(col("host"), col("sm.url").as("url"),
         col("sm.body").as("body"))
-      .localCheckpoint(true)
+      .pin()
     val robots = hosts.select(col("host"),
       when(col("h") % 2 === 0, "User-agent: *\nDisallow: /private/\n")
         .otherwise("User-agent: *\nDisallow:\n").as("robots"))
-      .localCheckpoint(true)
-    val out = graft.operators.Sitemap
+      .pin()
+    graft.operators.Sitemap
       .governedFrontier(sitemaps, "host", "url", "body",
         robots, "host", "robots", "graftbot")
       .select(col("host"), col("sitemap_url"),
@@ -1564,10 +1549,7 @@ object CurationQueries extends QueryGroup {
         col("matched_pattern"),
         col("matched_allow").cast("int").as("matched_allow"))
       .orderBy("host", "sitemap_url", "loc")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(sitemaps)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(robots)
-    out
+      .pin()
   }
 
   // Outlink extraction + RFC 3986 resolution (LinkExtract.outlinks):
@@ -1610,9 +1592,8 @@ object CurationQueries extends QueryGroup {
         lit("<a href=\"javascript:void(0)\">x</a>"),
         lit("<a href=\"/root/"), col("i"),
         lit("?utm_source=x&gclid=9\">dup</a></body></html>")).as("html"))
-      .localCheckpoint(true)
-    // pages stays pinned inside the returned plan — freed by the
-    // caller via freeLocalCheckpoint once its own result is pinned
+      .pin()
+    // pages stays pinned inside the returned plan
     graft.operators.LinkExtract
       .outlinks(pages, "doc_id", "url", "html")
   }
@@ -1648,9 +1629,7 @@ object CurationQueries extends QueryGroup {
       |SELECT doc_id, url_raw, url FROM rws
       |ORDER BY doc_id, url""".stripMargin) { (s, dir) =>
     val pre = outlinkResolveOf(Tables.load(s, dir, "documents"))
-    val out = pre.orderBy("doc_id", "url").localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(pre)
-    out
+    pre.orderBy("doc_id", "url").pin()
   }
 
   // Per-host politeness scheduling (CrawlSchedule.schedule): 23 hosts
@@ -1782,15 +1761,13 @@ object CurationQueries extends QueryGroup {
       .select(col("doc_id"), col("cap.url").as("url"),
         col("cap.status").as("status"),
         col("cap.location").as("location"))
-      .localCheckpoint(true)
-    val out = graft.operators.Redirects
+      .pin()
+    graft.operators.Redirects
       .finalTargets(captures, "url", "status", "location", maxHops = 5)
       .select(col("doc_id"), col("url"), col("final_url"),
         col("n_hops").cast("int").as("n_hops"), col("status"))
       .orderBy("doc_id", "url")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(captures)
-    out
+      .pin()
   }
 
   // Crawl-trap detection (TrapDetect.report): 12 hosts in three
@@ -1855,8 +1832,8 @@ object CurationQueries extends QueryGroup {
         (j % 3 =!= 2 || col("doc_id") % 25 === 0))
       .select(host.as("host"),
         concat(lit("https://"), host, path).as("url"))
-      .localCheckpoint(true)
-    val out = graft.operators.TrapDetect
+      .pin()
+    graft.operators.TrapDetect
       .report(frontier, "host", "url", minUrls = 10, thresholdPct = 50)
       .select(col("host"),
         col("n_urls").cast("long").as("n_urls"),
@@ -1865,9 +1842,7 @@ object CurationQueries extends QueryGroup {
         col("top_count").cast("long").as("top_count"),
         col("is_trap").cast("int").as("is_trap"))
       .orderBy("host")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(frontier)
-    out
+      .pin()
   }
 
   override val all: Seq[Q] =

@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.operators.{FuzzyJoin, NearDup}
+import graft.RunScope.Pinning
 
 /** Deduplication operator suite over the documents table. The testdata
   * plants near-duplicates: ~5% of docs are an existing doc's text plus a
@@ -457,7 +458,7 @@ object DedupQueries extends QueryGroup {
     pairsOracle.replace("WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8",
       "WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8 AND id_b >= 400")) { (s, dir) =>
     val docs = Tables.load(s, dir, "documents")
-    val idx = java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString
+    val idx = RunScope.scratchDir("graft_dedup_idx")
     graft.operators.DedupIndex.write(
       docs.where(col("doc_id") < 400), "doc_id", "text", idx)
     graft.operators.DedupIndex.probe(
@@ -529,7 +530,7 @@ object DedupQueries extends QueryGroup {
     val pairs = NearDup.minHashLshPairs(docs, "doc_id", "text",
       k = 3, numPerm = 64, bands = 16, threshold = 0.8)
       .select("id_a", "id_b")
-      .localCheckpoint(true) // split consumed twice (old slice + batch)
+      .pin() // split consumed twice (old slice + batch)
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val cut = (maxId * 4) / 5
     val labeling0 = ConnectedComponents.alternatingStar(
@@ -542,9 +543,7 @@ object DedupQueries extends QueryGroup {
       .select(col("doc_id"),
         coalesce(col("cluster"), col("doc_id")).as("cluster_id"))
       .orderBy("doc_id")
-    val pinned = out.localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(pairs)
-    pinned
+    out.pin()
   }
 
   // GRADED decontamination (Decontamination.overlapFraction): q_d8's
@@ -825,7 +824,7 @@ object DedupQueries extends QueryGroup {
       .orderBy("doc_id", "span_start")
       // checkpointed so the non-vacuity probe and the driver's consumption
       // share one materialization
-      .localCheckpoint()
+      .pin()
     // the whole point: the shifted shared paragraph MUST surface as spans
     require(out.limit(1).count() >= 1,
       "q_d21: shared-paragraph duplicate spans must exist")
@@ -952,7 +951,7 @@ object DedupQueries extends QueryGroup {
       |ORDER BY doc, off""".stripMargin) { (s, dir) =>
     import graft.operators.SubstringIndex
     val docs = Tables.load(s, dir, "documents")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ssi_idx").toString
+    val idx = RunScope.scratchDir("graft_ssi_idx")
     // r18 opt: writeAndDuplicates — the index docs fingerprint ONCE
     // (checkpointed) and the index-internal duplicate windows come off
     // that frame instead of a full read-back of the just-written
@@ -1028,16 +1027,14 @@ object DedupQueries extends QueryGroup {
     val pages = Tables.load(s, dir, "documents")
       .where(col("doc_id") < 1500)
       .select(col("doc_id"), url.as("url"), html.as("html"))
-      .localCheckpoint(true)
-    val out = graft.operators.CanonicalDedup
+      .pin()
+    graft.operators.CanonicalDedup
       .collapse(pages, "doc_id", "url", "html")
       .select(col("doc_id"), col("url_canon"), col("canonical_key"),
         col("is_self").cast("int").as("is_self"),
         col("is_kept").cast("int").as("is_kept"))
       .orderBy("doc_id")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(pages)
-    out
+      .pin()
   }
 
   override val all: Seq[Q] =

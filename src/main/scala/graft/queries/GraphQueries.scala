@@ -1,8 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.RunScope.Pinning
 import graft.operators.PageRank
 
 /** Graph analytics over relationship frames the engine derives —
@@ -12,6 +14,38 @@ import graft.operators.PageRank
   * DuckDB.
   */
 object GraphQueries extends QueryGroup {
+
+  /** The co-order graph: part pairs `a < b` bought in one order, one row
+    * per shared order. `minQuantity` keeps only lineitems with at least
+    * that quantity; `maxOrderParts` keeps only orders with at most that
+    * many distinct parts on the `a` side.
+    */
+  private def coOrderPairs(
+      s: SparkSession,
+      dir: String,
+      minQuantity: Option[Int] = None,
+      maxOrderParts: Option[Int] = None,
+      a: String = "a",
+      b: String = "b"): DataFrame = {
+    val lineitem = Tables.load(s, dir, "lineitem")
+    val items = minQuantity.fold(lineitem)(q => lineitem.filter(col("l_quantity") >= q))
+      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
+    val small = maxOrderParts.fold(items) { n =>
+      items.join(
+        items.groupBy(col("__o")).agg(count(lit(1)).as("__n"))
+          .where(col("__n") <= n).select(col("__o")),
+        Seq("__o"), "left_semi")
+    }
+    small.select(col("__o"), col("__p").as(a))
+      .join(items.select(col("__o"), col("__p").as(b)), Seq("__o"))
+      .filter(col(a) < col(b))
+  }
+
+  /** The canonical co-order edge set `(a, b)`, pinned: gates that feed
+    * one edge frame to several operators.
+    */
+  private def coOrderEdges(s: SparkSession, dir: String, minQuantity: Option[Int] = None) =
+    coOrderPairs(s, dir, minQuantity).select("a", "b").distinct().pin()
 
   // 3-iteration weighted PageRank over the nation-level trade graph
   // (supplier nation → customer nation, weight = lineitem count). At
@@ -193,12 +227,7 @@ object GraphQueries extends QueryGroup {
       |SELECT n_nodes, n_edges, n_wedges, t AS n_triangles,
       |       3.0 * t / n_wedges AS clustering
       |FROM base CROSS JOIN tri""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    val edges = items.select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
+    val edges = coOrderPairs(s, dir).select("a", "b")
     graft.operators.Triangles.globalStats(edges, "a", "b")
   }
 
@@ -295,12 +324,7 @@ object GraphQueries extends QueryGroup {
       |                row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
       |         FROM c3) WHERE rn = 1)
       |SELECT node, label AS community FROM l3 ORDER BY node""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    val edges = items.select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
+    val edges = coOrderPairs(s, dir).select("a", "b")
     graft.operators.LabelPropagation.run(edges, "a", "b", iterations = 3)
       .orderBy("node")
   }
@@ -330,12 +354,7 @@ object GraphQueries extends QueryGroup {
       |SELECT n_nodes, n_edges,
       |       CASE WHEN vx > 0 AND vy > 0 THEN cov / sqrt(vx * vy) END AS assortativity
       |FROM m CROSS JOIN nn""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    val edges = items.select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
+    val edges = coOrderPairs(s, dir).select("a", "b")
     graft.operators.GraphStats.degreeAssortativity(edges, "a", "b")
   }
 
@@ -366,14 +385,7 @@ object GraphQueries extends QueryGroup {
       |$kcoreRounds
       |SELECT s AS node, CAST(count(*) AS INT) AS core_degree
       |FROM e5 GROUP BY s ORDER BY node""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    val smallO = items.groupBy(col("__o")).agg(count(lit(1)).as("__n"))
-      .where(col("__n") <= 3).select(col("__o"))
-    val edges = items.join(smallO, Seq("__o"), "left_semi")
-      .select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
+    val edges = coOrderPairs(s, dir, maxOrderParts = Some(3))
       .select("a", "b")
       .distinct()
     graft.operators.KCore.coreNodes(edges, "a", "b", k = 6, maxRounds = 6)
@@ -432,26 +444,14 @@ object GraphQueries extends QueryGroup {
       |       CAST(intra_edges AS DOUBLE) / n_edges
       |       - CAST(sum_deg_sq AS DOUBLE) / (4.0 * n_edges * n_edges) AS modularity
       |FROM ea CROSS JOIN ca""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    // The co-order self-join is the dominant subtree; materialize it ONCE
+    // The co-order self-join is the dominant subtree; pin it ONCE
     // (already canonical: a < b + distinct) and feed the SAME frame to
-    // both LPA and the modularity score — both operators pin their own
-    // one-row/|V|-row outputs, so the shared frame is freed here after
-    // the final result exists.
-    val edges = items.select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-      .localCheckpoint(true)
+    // both LPA and the modularity score.
+    val edges = coOrderEdges(s, dir)
     val communities = graft.operators.LabelPropagation.run(
       edges, "a", "b", iterations = 3, assumeCanonical = true)
-    val out = graft.operators.GraphStats.modularity(
+    graft.operators.GraphStats.modularity(
       edges, "a", "b", communities, "node", "community", assumeCanonical = true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(communities)
-    out
   }
 
   // Weighted single-source shortest paths (Sssp.distances, fixed-round
@@ -492,14 +492,7 @@ object GraphQueries extends QueryGroup {
       |d0 AS (SELECT (SELECT min(a) FROM ce) AS node, CAST(0 AS BIGINT) AS dist),
       |$ssspRounds
       |SELECT node, dist FROM d20 ORDER BY node""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    val smallO = items.groupBy(col("__o")).agg(count(lit(1)).as("__n"))
-      .where(col("__n") <= 2).select(col("__o"))
-    val edges = items.join(smallO, Seq("__o"), "left_semi")
-      .select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
+    val edges = coOrderPairs(s, dir, maxOrderParts = Some(2))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).cast("long").as("w"))
     // min node id as the source: a 1-value driver artifact (the literal-
@@ -596,22 +589,13 @@ object GraphQueries extends QueryGroup {
       |       - CAST(sa.sum_deg_sq_after AS DOUBLE) / (4.0 * m.m * m.m) AS modularity_after
       |FROM best b CROSS JOIN m CROSS JOIN eb CROSS JOIN sb
       |CROSS JOIN ea CROSS JOIN sa""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
     // One materialized co-order edge frame shared by LPA and the
     // refinement — the q_g9 discipline.
-    val edges = items.select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-      .localCheckpoint(true)
+    val edges = coOrderEdges(s, dir)
     val communities = graft.operators.LabelPropagation.run(
       edges, "a", "b", iterations = 3, assumeCanonical = true)
     val out = graft.operators.Louvain.bestMoveRefinement(
       edges, "a", "b", communities, "node", "community", assumeCanonical = true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(communities)
     // Empty when the assignment is already local-move optimal (true at
     // sf0.001, where 3 LPA rounds leave no cross-community neighbor at
     // all) — then the oracle is empty too and absence-of-row is the
@@ -661,20 +645,10 @@ object GraphQueries extends QueryGroup {
       |JOIN deg dv ON dv.node = ne.v
       |ORDER BY common_neighbors DESC, u, v
       |LIMIT 100""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .filter(col("l_quantity") >= 40)
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    val edges = items.select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-      .localCheckpoint(true)
+    val edges = coOrderEdges(s, dir, minQuantity = Some(40))
     val out = graft.operators.LinkPrediction
       .topCandidates(edges, "a", "b", k = 100, assumeCanonical = true)
-    val pinned = out.localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
-    pinned
+    out.pin()
   }
 
   // Louvain PHASE-1 SWEEP (Louvain.sweepRefinement): the q_g12 single
@@ -750,14 +724,7 @@ object GraphQueries extends QueryGroup {
     Q(
       "q_g14_louvain_sweep",
       s"$header,\n$moveCtes\n$moveRows\nORDER BY move_no") { (s, dir) =>
-      val items = Tables.load(s, dir, "lineitem")
-        .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-      val edges = items.select(col("__o"), col("__p").as("a"))
-        .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(true)
+      val edges = coOrderEdges(s, dir)
       val labels = edges.select(col("a").as("node"))
         .unionAll(edges.select(col("b").as("node")))
         .distinct()
@@ -765,7 +732,6 @@ object GraphQueries extends QueryGroup {
       val out = graft.operators.Louvain.sweepRefinement(
         edges, "a", "b", labels, "node", "community",
         maxMoves = 3, assumeCanonical = true)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
       // every applied move must strictly increase Q, and the chain must
       // be consistent (each move starts where the previous ended)
       val rows = out.orderBy("move_no").collect()
@@ -802,23 +768,14 @@ object GraphQueries extends QueryGroup {
       |       CAST(count(*) AS BIGINT) AS weight
       |FROM ce JOIN l3 la ON ce.a = la.node JOIN l3 lb ON ce.b = lb.node
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    val edges = items.select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-      .localCheckpoint(true)
+    val edges = coOrderEdges(s, dir)
     val communities = graft.operators.LabelPropagation.run(
       edges, "a", "b", iterations = 3, assumeCanonical = true)
     val out = graft.operators.Louvain.contractGraph(
       edges, "a", "b", communities, "node", "community", assumeCanonical = true)
       .orderBy("a", "b")
-      .localCheckpoint(true) // pinned so the edge frame can free below
+      .pin() // pinned so the edge frame frees with the query
     val nEdges = edges.count()
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(communities)
     // the contraction invariant: edge mass is conserved exactly
     val wSum = out.agg(sum(col("weight"))).head().getLong(0)
     require(wSum == nEdges,
@@ -872,19 +829,12 @@ object GraphQueries extends QueryGroup {
       |                 THEN b.c ELSE l3.label END AS BIGINT) AS community
       |FROM l3 LEFT JOIN best b ON l3.label = b.node
       |ORDER BY l3.node""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    val edges = items.select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-      .localCheckpoint(true)
+    val edges = coOrderEdges(s, dir)
     val communities = graft.operators.LabelPropagation.run(
       edges, "a", "b", iterations = 3, assumeCanonical = true)
     val contracted = graft.operators.Louvain.contractGraph(
       edges, "a", "b", communities, "node", "community", assumeCanonical = true)
-      .localCheckpoint(true)
+      .pin()
     val superIdn = contracted.select(col("a").as("node"))
       .unionAll(contracted.select(col("b").as("node")))
       .distinct()
@@ -922,10 +872,7 @@ object GraphQueries extends QueryGroup {
           when(col("community") === from, lit(to))
             .otherwise(col("community")).as("community"))
       case None => communities.select(col("node"), col("community"))
-    }).orderBy("node").localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(contracted)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(communities)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
+    }).orderBy("node").pin()
     out
   }
 
@@ -962,19 +909,12 @@ object GraphQueries extends QueryGroup {
       |SELECT CAST(r3.node AS BIGINT) AS community, cs.n_members, r3.rank
       |FROM r3 JOIN cs ON cs.label = r3.node
       |ORDER BY community""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    val edges = items.select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-      .localCheckpoint(true)
+    val edges = coOrderEdges(s, dir)
     val communities = graft.operators.LabelPropagation.run(
       edges, "a", "b", iterations = 3, assumeCanonical = true)
     val contracted = graft.operators.Louvain.contractGraph(
       edges, "a", "b", communities, "node", "community", assumeCanonical = true)
-      .localCheckpoint(true)
+      .pin()
     val cross = contracted.filter(col("a") =!= col("b"))
     val dig = cross
       .select(col("a").as("src"), col("b").as("dst"),
@@ -986,15 +926,11 @@ object GraphQueries extends QueryGroup {
           col("weight").cast("double").as("weight")))
     val sizes = communities.groupBy(col("community"))
       .agg(count(lit(1)).cast("bigint").as("n_members"))
-    val out = PageRank.run(dig, iterations = 3, damping = 0.85)
+    PageRank.run(dig, iterations = 3, damping = 0.85)
       .join(sizes, col("node") === col("community"))
       .select(col("community"), col("n_members"), col("rank"))
       .orderBy("community")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(contracted)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(communities)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
-    out
+      .pin()
   }
 
   // Weighted HITS hubs/authorities (Hits.run) over the q_g1 trade graph
@@ -1171,15 +1107,7 @@ object GraphQueries extends QueryGroup {
          |${mlLevelRow(2)}
          |ORDER BY level""".stripMargin
     Q("q_g19_louvain_full", sql) { (s, dir) =>
-      val items = Tables.load(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 40)
-        .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-      val edges = items.select(col("__o"), col("__p").as("a"))
-        .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(true)
+      val edges = coOrderEdges(s, dir, minQuantity = Some(40))
       val labels = edges.select(col("a").as("node"))
         .unionAll(edges.select(col("b").as("node")))
         .distinct()
@@ -1187,7 +1115,6 @@ object GraphQueries extends QueryGroup {
       val out = graft.operators.Louvain.multilevel(
         edges, "a", "b", labels, "node", "community",
         levels = 2, maxMovesPerLevel = mlMoves, assumeCanonical = true)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
       val rows = out.orderBy("level").collect()
       require(rows.length == 2, s"q_g19: expected 2 levels, got ${rows.length}")
       require(rows(0).getAs[Int]("moves_applied") >= 1,
@@ -1222,15 +1149,7 @@ object GraphQueries extends QueryGroup {
        |SELECT n.node AS node, CAST(l2.label AS BIGINT) AS community
        |FROM l1_$mlMoves n JOIN l2_$mlMoves l2 ON n.label = l2.node
        |ORDER BY n.node""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .filter(col("l_quantity") >= 40)
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    val edges = items.select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-      .localCheckpoint(true)
+    val edges = coOrderEdges(s, dir, minQuantity = Some(40))
     val labels = edges.select(col("a").as("node"))
       .unionAll(edges.select(col("b").as("node")))
       .distinct()
@@ -1243,7 +1162,6 @@ object GraphQueries extends QueryGroup {
     val (stats, out) = graft.operators.Louvain.multilevelWithAssignments(
       edges, "a", "b", labels, "node", "community",
       levels = 2, maxMovesPerLevel = mlMoves, assumeCanonical = true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
     val l1 = stats.orderBy("level").collect()
     require(l1.nonEmpty && l1(0).getAs[Int]("moves_applied") >= 1,
       "q_g20: the oracle's two-level unroll assumes a level-1 move; " +
@@ -1317,18 +1235,9 @@ object GraphQueries extends QueryGroup {
          |FROM nodes n LEFT JOIN bc ON bc.node = n.node
          |ORDER BY n.node""".stripMargin
     Q("q_g21_betweenness", sql) { (s, dir) =>
-      val items = Tables.load(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 40)
-        .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-      val edges = items.select(col("__o"), col("__p").as("a"))
-        .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(true)
+      val edges = coOrderEdges(s, dir, minQuantity = Some(40))
       val out = graft.operators.Betweenness.pivotBetweenness(
         edges, "a", "b", numPivots = 8, maxDepth = depth, assumeCanonical = true)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
       out.orderBy("node")
     }
   }
@@ -1352,18 +1261,9 @@ object GraphQueries extends QueryGroup {
          |FROM nodes n LEFT JOIN hc ON hc.node = n.node
          |ORDER BY n.node""".stripMargin
     Q("q_g22_harmonic_centrality", sql) { (s, dir) =>
-      val items = Tables.load(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 40)
-        .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-      val edges = items.select(col("__o"), col("__p").as("a"))
-        .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(true)
+      val edges = coOrderEdges(s, dir, minQuantity = Some(40))
       val out = graft.operators.Betweenness.harmonicCentrality(
         edges, "a", "b", numPivots = 8, maxDepth = bfsDepth, assumeCanonical = true)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
       out.orderBy("node")
     }
   }
@@ -1387,18 +1287,9 @@ object GraphQueries extends QueryGroup {
          |       (SELECT max(eccentricity) FROM pp) AS diameter_lb
          |FROM pp ORDER BY pv""".stripMargin
     Q("q_g23_eccentricity", sql) { (s, dir) =>
-      val items = Tables.load(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 40)
-        .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-      val edges = items.select(col("__o"), col("__p").as("a"))
-        .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(true)
+      val edges = coOrderEdges(s, dir, minQuantity = Some(40))
       val out = graft.operators.Betweenness.pivotEccentricity(
         edges, "a", "b", numPivots = 8, maxDepth = bfsDepth, assumeCanonical = true)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
       // pivot is a DuckDB reserved word: the gate projects it as pv
       out.select(col("pivot").as("pv"), col("eccentricity"),
         col("n_reached"), col("diameter_lb")).orderBy("pv")
@@ -1454,18 +1345,9 @@ object GraphQueries extends QueryGroup {
          |SELECT walk_id, start, step, node FROM dwsteps
          |ORDER BY walk_id, step""".stripMargin
     Q("q_g24_deepwalk", sql) { (s, dir) =>
-      val items = Tables.load(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 40)
-        .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-      val edges = items.select(col("__o"), col("__p").as("a"))
-        .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(true)
+      val edges = coOrderEdges(s, dir, minQuantity = Some(40))
       val out = graft.operators.RandomWalks.deepWalk(
         edges, "a", "b", walksPerNode = 2, walkLength = 4, seed = 42L)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
       out.orderBy("walk_id", "step")
     }
   }
@@ -1530,19 +1412,10 @@ object GraphQueries extends QueryGroup {
          |  UNION ALL SELECT walk_id, start, 3, cur FROM s3)
          |ORDER BY walk_id, step""".stripMargin
     Q("q_g25_node2vec", sql) { (s, dir) =>
-      val items = Tables.load(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 40)
-        .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-      val edges = items.select(col("__o"), col("__p").as("a"))
-        .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(true)
+      val edges = coOrderEdges(s, dir, minQuantity = Some(40))
       val out = graft.operators.RandomWalks.node2vec(
         edges, "a", "b", walksPerNode = 1, walkLength = 3, seed = 7L,
         wReturn = 4L, wNear = 2L, wFar = 1L)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
       out.orderBy("walk_id", "step")
     }
   }
@@ -1579,28 +1452,17 @@ object GraphQueries extends QueryGroup {
        |JOIN ug b ON b.tok = p.tok_b
        |CROSS JOIN tots t2
        |ORDER BY tok_a, tok_b""".stripMargin) { (s, dir) =>
-    val items = Tables.load(s, dir, "lineitem")
-      .filter(col("l_quantity") >= 40)
-      .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-    val edges = items.select(col("__o"), col("__p").as("a"))
-      .join(items.select(col("__o"), col("__p").as("b")), Seq("__o"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-      .localCheckpoint(true)
+    val edges = coOrderEdges(s, dir, minQuantity = Some(40))
     val walks = graft.operators.RandomWalks.deepWalk(
       edges, "a", "b", walksPerNode = 2, walkLength = 4, seed = 42L)
     val seqs = walks.groupBy("walk_id")
       .agg(transform(
         array_sort(collect_list(struct(col("step"), col("node")))),
         e => e.getField("node").cast("string")).as("seq"))
-    val out = graft.operators.Cooccurrence
+    graft.operators.Cooccurrence
       .pmiPairsOfArrays(seqs, "seq", window = 2, minPairCount = 2L)
       .orderBy("tok_a", "tok_b")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(edges)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(walks)
-    out
+      .pin()
   }
 
   // k-TRUSS decomposition (operators.KTruss, Cohen 2008): the edge-
@@ -1639,12 +1501,7 @@ object GraphQueries extends QueryGroup {
          |FROM e$rounds e JOIN s${rounds - 1} s ON e.a = s.a AND e.b = s.b
          |ORDER BY e.a, e.b""".stripMargin
     Q("q_g27_ktruss", sql) { (s, dir) =>
-      val items = Tables.load(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 40)
-        .select(col("l_orderkey").as("__o"), col("l_partkey").as("__p")).distinct()
-      val edges = items.select(col("__o"), col("__p").as("x"))
-        .join(items.select(col("__o"), col("__p").as("y")), Seq("__o"))
-        .filter(col("x") < col("y"))
+      val edges = coOrderPairs(s, dir, minQuantity = Some(40), a = "x", b = "y")
         .select("x", "y").distinct()
       graft.operators.KTruss.trussEdges(edges, "x", "y", k = 4, maxRounds = 5)
         .orderBy("a", "b")

@@ -1,13 +1,12 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.operators.ZOrder
 import graft.sources.Layout
+import graft.RunScope.Pinning
 
 /** Physical-layout operators under the oracle gate: results must equal the
   * plain logical query on the raw table, while the plan proves the layout
@@ -75,7 +74,7 @@ object LayoutQueries extends QueryGroup {
         ZOrder.cell(col("l_partkey"), pkLo, pkHi, bits),
         ZOrder.cell(col("l_quantity"), qtyLo, qtyHi, bits)),
       bits)
-    val tmp = Files.createTempDirectory("graft_zorder").toString
+    val tmp = RunScope.scratchDir("graft_zorder")
     li.withColumn("zb", zb).write.mode("overwrite").partitionBy("zb").parquet(tmp)
     val covering = ZOrder.coveringZ(
       Seq((100d, 180d), (10d, 20d)), Seq(pkLo, qtyLo), Seq(pkHi, qtyHi), bits)
@@ -111,7 +110,7 @@ object LayoutQueries extends QueryGroup {
         concat(lit("\""), translate(substring(col("text"), 1, 40), " ", ","),
           lit("\",x")).as("payload"),
         col("lang"), col("n_chars"))
-    val tmp = Files.createTempDirectory("graft_csv").toString
+    val tmp = RunScope.scratchDir("graft_csv")
     graft.sources.FileSinks.csv(slice, tmp)
     s.read
       .schema(slice.schema)
@@ -127,8 +126,8 @@ object LayoutQueries extends QueryGroup {
   private val qL3 = Q(
     "q_l3_compaction",
     """SELECT doc_id, lang, n_chars FROM documents ORDER BY doc_id""") { (s, dir) =>
-    val frag = Files.createTempDirectory("graft_frag").toString
-    val out = Files.createTempDirectory("graft_compact").toString
+    val frag = RunScope.scratchDir("graft_frag")
+    val out = RunScope.scratchDir("graft_compact")
     Tables.load(s, dir, "documents")
       .select("doc_id", "lang", "n_chars", "text")
       .repartition(48)
@@ -151,7 +150,7 @@ object LayoutQueries extends QueryGroup {
     """SELECT l_orderkey, l_linenumber, l_quantity
       |FROM lineitem WHERE l_orderkey BETWEEN 100 AND 500
       |ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin) { (s, dir) =>
-    val frag = Files.createTempDirectory("graft_zonemap").toString
+    val frag = RunScope.scratchDir("graft_zonemap")
     t(s, dir, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_quantity")
       .repartitionByRange(16, col("l_orderkey"))
@@ -198,7 +197,7 @@ object LayoutQueries extends QueryGroup {
     "q_s4_orc_roundtrip",
     """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate
       |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-    val out = Files.createTempDirectory("graft_orc").toString
+    val out = RunScope.scratchDir("graft_orc")
     t(s, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
       .write.mode("overwrite").orc(out)
@@ -229,7 +228,7 @@ object LayoutQueries extends QueryGroup {
         col("l_linenumber"), col("l_quantity"), col("l_shipdate"),
         col("flag")))).as("lines"),
       count(lit(1)).cast("int").as("n_lines"))
-    val tmp = Files.createTempDirectory("graft_jsonl").toString
+    val tmp = RunScope.scratchDir("graft_jsonl")
     nested.write.mode("overwrite").json(tmp)
     val back = s.read.schema(nested.schema).json(tmp)
     back
@@ -266,7 +265,7 @@ object LayoutQueries extends QueryGroup {
         col("l_linenumber"), col("l_quantity"), col("l_shipdate"),
         col("flag")))).as("lines"),
       count(lit(1)).cast("int").as("n_lines"))
-    val tmp = Files.createTempDirectory("graft_xml").toString
+    val tmp = RunScope.scratchDir("graft_xml")
     nested.write.mode("overwrite").option("rowTag", "order").xml(tmp)
     val back = s.read.schema(nested.schema).option("rowTag", "order").xml(tmp)
     back
@@ -300,7 +299,7 @@ object LayoutQueries extends QueryGroup {
         col("l_linenumber"), col("l_quantity"), col("l_shipdate"),
         col("flag")))).as("lines"),
       count(lit(1)).cast("int").as("n_lines"))
-    val tmp = Files.createTempDirectory("graft_avro").toString
+    val tmp = RunScope.scratchDir("graft_avro")
     nested.write.mode("overwrite").format("org.apache.spark.sql.avro.AvroFileFormat").save(tmp)
     val back = s.read.schema(nested.schema).format("org.apache.spark.sql.avro.AvroFileFormat").load(tmp)
     back
@@ -327,7 +326,7 @@ object LayoutQueries extends QueryGroup {
       |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
       |FROM lineitem WHERE l_returnflag = 'R'
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    val tmp = Files.createTempDirectory("graft_hive").toString
+    val tmp = RunScope.scratchDir("graft_hive")
     Layout.writePartitioned(
       t(s, dir, "lineitem").select("l_returnflag", "l_quantity"),
       tmp, Seq("l_returnflag"))
@@ -361,7 +360,7 @@ object LayoutQueries extends QueryGroup {
       |       max(epoch_us(ts)) AS max_us,
       |       CAST(sum(epoch_us(ts) % 86400000000) AS BIGINT) AS sum_tod_us
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, dir) =>
-    val tmp = Files.createTempDirectory("graft_ntz").toString
+    val tmp = RunScope.scratchDir("graft_ntz")
     t(s, dir, "events")
       .select(col("event_type"), col("ts").cast(TimestampNTZType).as("ts"))
       .write.mode("overwrite").parquet(tmp)
@@ -429,7 +428,7 @@ object LayoutQueries extends QueryGroup {
     val customer = Tables.load(s, dir, "customer")
     val out = graft.operators.DataProfile
       .joinSizeProfile(orders, "o_custkey", customer, "c_custkey")
-      .localCheckpoint(true)
+      .pin()
     // the identity check: the prediction must equal the real join's size
     val predicted = out.head().getAs[Long]("predicted_rows")
     val actual = orders.join(

@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.operators.Multimodal
+import graft.RunScope.Pinning
 
 /** Multimodal binary-column operators. The payload is the document text
   * encoded as UTF-8 bytes — the testdata ships no media blobs, so the
@@ -337,7 +338,7 @@ object MultimodalQueries extends QueryGroup {
       |       ok AS valid_png,
       |       CAST(33 AS BIGINT) AS n_bytes
       |FROM src ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val zone = java.nio.file.Files.createTempDirectory("graft_binzone").toString
+    val zone = RunScope.scratchDir("graft_binzone")
     Tables.spread(Tables.load(s, dir, "documents"))
       .where(col("doc_id") < 120)
       .select(col("doc_id"), unhex(pngPayloadHex).as("payload"))
@@ -432,7 +433,7 @@ object MultimodalQueries extends QueryGroup {
     // downstream plan fills the cache, zero extra jobs.
     val withPayload = Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id"), unhex(payloadHex).as("payload"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pin(RunScope.Persist)
     withPayload
       .withColumn("m", Multimodal.decodeWavMeta(col("payload")))
       .select(
@@ -581,7 +582,7 @@ object MultimodalQueries extends QueryGroup {
     // is the real-world shape anyway (bytes come from storage)
     val withPayload = Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id"), unhex(payloadHex).as("payload"))
-      .localCheckpoint(true) // ≤500 rows × ≤400 B — trivial residency
+      .pin() // ≤500 rows × ≤400 B — trivial residency
     withPayload
       .withColumn("st", Multimodal.wavSampleStats(col("payload")))
       .select(col("doc_id"), explode_outer(col("st")).as("e"))
@@ -690,7 +691,7 @@ object MultimodalQueries extends QueryGroup {
     // same planning truncation, lineage survives, no eager job.
     val withPayload = Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id"), unhex(payloadHex).as("payload"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .pin(RunScope.Persist)
     withPayload
       .withColumn("m", Multimodal.bmpPixelStats(col("payload")))
       .select(
@@ -723,11 +724,11 @@ object MultimodalQueries extends QueryGroup {
   /** The q_m11 synthetic BMP corpus + aHash, as a reusable BATCH-plan
     * transform (doc_id, ahash, valid_bmp) — shared by the batch gate and
     * the streaming parity gate (q_st22), which maps it per micro-batch.
-    * The internal payload checkpoint is freed before returning; the
-    * OUTPUT is pinned so callers in foreachBatch can write then free.
+    * The OUTPUT is pinned.
     */
   private[queries] def bmpAHashFrame(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      RunScope.scope("bmpAHashFrame") {
     def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
       concat((0 until nBytes).map(i =>
         lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
@@ -766,15 +767,13 @@ object MultimodalQueries extends QueryGroup {
     // break the one-input-split ceiling before the per-row construction
     val withPayload = graft.Tables.spread(docs)
       .select(col("doc_id"), unhex(payloadHex).as("payload"))
-      .localCheckpoint(true)
-    val out = withPayload
+      .pin()
+    withPayload
       .select(
         col("doc_id"),
         Multimodal.bmpAHash(col("payload")).as("ahash"),
         Multimodal.bmpAHash(col("payload")).isNotNull.as("valid_bmp"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(withPayload)
-    out
+      .pin()
   }
 
   private[queries] val qM11 = Q(
@@ -890,7 +889,7 @@ object MultimodalQueries extends QueryGroup {
     val withPayload = Tables.spread(Tables.load(s, dir, "documents"))
       .filter(col("doc_id") < 400)
       .select(col("doc_id"), unhex(payloadHex).as("payload"))
-      .localCheckpoint(true)
+      .pin()
     graft.operators.NearDup.simHashPairs(
       withPayload, "doc_id", "payload",
       maxHamming = 3, numBlocks = 4,
@@ -1025,7 +1024,7 @@ object MultimodalQueries extends QueryGroup {
       dataHex)
     val withPayload = Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id"), unhex(payloadHex).as("payload"))
-      .localCheckpoint(true)
+      .pin()
     withPayload
       .withColumn("st", Multimodal.wavZeroCrossings(col("payload")))
       .select(col("doc_id"), explode_outer(col("st")).as("e"))
@@ -1367,7 +1366,7 @@ object MultimodalQueries extends QueryGroup {
     val withPayload = Tables.spread(Tables.load(s, dir, "documents"))
       .filter(col("doc_id") < 500)
       .select(col("doc_id"), unhex(pngHex).as("payload"))
-      .localCheckpoint(true) // ≤500 rows × ≤900 B — trivial residency
+      .pin() // ≤500 rows × ≤900 B — trivial residency
     withPayload
       .withColumn("m", Multimodal.pngPixelStats(col("payload"), maxPixels = 512))
       .select(
@@ -1399,7 +1398,8 @@ object MultimodalQueries extends QueryGroup {
     * zone twin (q_st27), which maps it per micro-batch.
     */
   private[queries] def pngAHashFrame(
-      docs0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      docs0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      RunScope.scope("pngAHashFrame") {
     // doc_id < 500 caps the gate corpus (the q_r3 rule — the dual PNG
     // construction is HOF-interpreted per byte); applied INSIDE the
     // shared frame so batch gate, streaming twin, and oracle agree
@@ -1422,8 +1422,8 @@ object MultimodalQueries extends QueryGroup {
         col("doc_id"),
         unhex(grayHex).as("gray_payload"),
         unhex(rgbHex).as("rgb_payload"))
-      .localCheckpoint(true) // <=500 rows x <=700 B - trivial residency
-    val out = withPayload
+      .pin() // <=500 rows x <=700 B - trivial residency
+    withPayload
       .select(
         col("doc_id"),
         Multimodal.pngAHash(col("gray_payload"), maxPixels = 128).as("hg"),
@@ -1434,9 +1434,7 @@ object MultimodalQueries extends QueryGroup {
         when(col("hg").isNotNull && col("hr").isNotNull,
           (col("hg") === col("hr")).cast("int")).as("formats_agree"),
         col("hg").isNotNull.as("valid_png"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(withPayload)
-    out
+      .pin()
   }
 
   private[queries] val qM17 = Q(
@@ -1571,7 +1569,7 @@ object MultimodalQueries extends QueryGroup {
       lit("00"), lit("3B"))             // terminator + trailer
     val withPayload = Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id"), unhex(gifHex).as("payload"))
-      .localCheckpoint(true) // ≤500 rows × ≤600 B — trivial residency
+      .pin() // ≤500 rows × ≤600 B — trivial residency
     withPayload
       .withColumn("m", Multimodal.gifPixelStats(col("payload"), maxPixels = 64))
       .select(
@@ -2119,7 +2117,7 @@ object MultimodalQueries extends QueryGroup {
     val payload = unhex(concat(locals, cds, eocd))
     val corpus = graft.Tables.spread(df.filter(col("doc_id") < 500))
       .select(col("doc_id"), payload.as("payload"))
-      .localCheckpoint(true)
+      .pin()
     corpus
       .withColumn("m", graft.operators.Multimodal.decodeZipMeta(col("payload")))
       .select(
@@ -2242,7 +2240,7 @@ object MultimodalQueries extends QueryGroup {
     val corpus = Tables.spread(Tables.load(s, dir, "documents"))
       .filter(col("doc_id") < 500)
       .select(col("doc_id"), payload.as("payload"))
-      .localCheckpoint(true)
+      .pin()
     corpus
       .withColumn("m", graft.operators.Multimodal.decodeTarMeta(col("payload")))
       .select(
@@ -2388,7 +2386,7 @@ object MultimodalQueries extends QueryGroup {
     val withPayload = Tables.spread(Tables.load(s, dir, "documents"))
       .filter(col("doc_id") < 500)
       .select(col("doc_id"), unhex(jpegHex).as("payload"))
-      .localCheckpoint(true) // <=500 rows x <=400 B - trivial residency
+      .pin() // <=500 rows x <=400 B - trivial residency
     withPayload
       .withColumn("m", Multimodal.jpegPixelStats(col("payload"), maxPixels = 1024))
       .select(
@@ -2421,7 +2419,8 @@ object MultimodalQueries extends QueryGroup {
     * landing-zone twin (q_st32), which applies it per micro-batch.
     */
   private[queries] def ahashParity5Frame(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      RunScope.scope("ahashParity5Frame") {
     def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
       concat((0 until nBytes).map(i =>
         lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
@@ -2472,7 +2471,7 @@ object MultimodalQueries extends QueryGroup {
         unhex(grayPng).as("p_gpng"), unhex(rgbPng).as("p_cpng"),
         unhex(bmpHex).as("p_bmp"), unhex(ppmHex).as("p_ppm"),
         unhex(jpegHex).as("p_jpg"))
-      .localCheckpoint(true) // <=500 rows x 5 payloads <=2.5 KB
+      .pin() // <=500 rows x 5 payloads <=2.5 KB
     val hashed = withPayload
       .select(
         col("doc_id"),
@@ -2481,8 +2480,7 @@ object MultimodalQueries extends QueryGroup {
         Multimodal.bmpAHash(col("p_bmp")).as("hb"),
         Multimodal.pnmAHash(col("p_ppm")).as("hp"),
         Multimodal.jpegAHash(col("p_jpg"), maxPixels = 512).as("hj"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(withPayload)
+      .pin()
     def agree(other: org.apache.spark.sql.Column) =
       when(col("hg").isNotNull && other.isNotNull,
         (col("hg") === other).cast("int"))
@@ -2600,7 +2598,7 @@ object MultimodalQueries extends QueryGroup {
     val corpus = Tables.spread(Tables.load(s, dir, "documents"))
       .filter(col("doc_id") < 500)
       .select(col("doc_id"), warcFile.as("w"))
-      .localCheckpoint(true)
+      .pin()
     graft.operators.Warc.records(corpus, "doc_id", "w", maxRecords = 4)
       .select(
         col("file_id").as("doc_id"),
@@ -2709,7 +2707,7 @@ object MultimodalQueries extends QueryGroup {
     // column is consumed by filter + explode
     val corpus = warcGzCorpusOf(
       Tables.load(s, dir, "documents").filter(col("doc_id") < 500))
-      .localCheckpoint(true)
+      .pin()
     graft.operators.WarcGz.records(corpus, "doc_id", "gz", maxMembers = 4)
       .select(
         col("file_id").as("doc_id"),
@@ -2750,7 +2748,7 @@ object MultimodalQueries extends QueryGroup {
       |ORDER BY s.doc_id""".stripMargin) { (s, dir) =>
     val corpus = warcGzCorpusOf(
       Tables.load(s, dir, "documents").filter(col("doc_id") < 500))
-      .localCheckpoint(true)
+      .pin()
     graft.operators.WarcGz
       .fileSummary(corpus, "doc_id", "gz", maxMembers = 4)
       .select(
@@ -2819,9 +2817,7 @@ object MultimodalQueries extends QueryGroup {
       |       ELSE md5(payload) END AS body_md5
       |FROM src ORDER BY doc_id""".stripMargin) { (s, dir) =>
     val pre = httpEnvelopeOf(Tables.load(s, dir, "documents"))
-    val out = pre.orderBy("doc_id").localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(pre)
-    out
+    pre.orderBy("doc_id").pin()
   }
 
   /** The q_m31 envelope frame over a documents batch: six constructed
@@ -2829,11 +2825,11 @@ object MultimodalQueries extends QueryGroup {
     * → [[graft.operators.HttpMessage.responses]] with the gate's casts.
     * Decisions are per-row, so streamed ≡ batch (the streaming twin
     * reuses this and the q_m31 oracle verbatim). Pins the constructed
-    * message corpus; the caller frees it by freeing the RETURNED plan's
-    * checkpoints once its own result is pinned.
+    * message corpus, which the returned plan reads.
     */
   private[queries] def httpEnvelopeOf(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      RunScope.scope("httpEnvelopeOf") {
     def le16(c: org.apache.spark.sql.Column) = {
       val h = lpad(hex(c), 4, "0")
       concat(substring(h, 3, 2), substring(h, 1, 2))
@@ -2848,7 +2844,7 @@ object MultimodalQueries extends QueryGroup {
       .select(col("doc_id"),
         expr("substring(rpad(coalesce(text, ''), 120, 'x'), 1, " +
           "CAST(doc_id % 80 + 20 AS INT))").as("payload"))
-      .localCheckpoint(true)
+      .pin()
     val pl = col("payload")
     val n = length(pl)
     val pc = (col("doc_id") % 6).cast("int")
@@ -2916,10 +2912,7 @@ object MultimodalQueries extends QueryGroup {
     val msgs = base
       .select(col("doc_id"),
         concat(statusLine, ctHdr, frameHdr, lit("\r\n"), body).as("msg"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(base)
-    // msgs stays pinned inside the returned plan — freed by the caller
-    // via freeLocalCheckpoint on (a plan containing) this result
+      .pin()
     graft.operators.HttpMessage
       .responses(msgs, "doc_id", "msg", maxChunks = 4)
       .select(

@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.plans.EntityAssembly
+import graft.RunScope.Pinning
 
 /** Flagship pipeline queries: the full SURVEY.md §3.2 entity assembly
   * (projection → descriptor resolution → dedup-merge → nesting → sync
@@ -151,7 +152,7 @@ object PipelineQueries extends QueryGroup {
   private val qF5 = Q("q_f5_incremental_sync", entityJsonOracle) { (s, dir) =>
     import graft.sources.MemoryServer
     import graft.streaming.IncrementalSync
-    val tmp = java.nio.file.Files.createTempDirectory("graft_incr").toString
+    val tmp = RunScope.scratchDir("graft_incr")
     val serverName = s"incr_gate_$tmp"
     val endpoint = new MemoryServer.Endpoint(serverName)
     val tokens = new MemoryServer.Tokens
@@ -754,7 +755,7 @@ object PipelineQueries extends QueryGroup {
       .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
       .agg(countDistinct(col("tok")).as("vocabulary"))
     val lc = docs.groupBy(col("lang")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .pin()
     val lng = lc.agg(count(lit(1)).as("n_langs"))
     val top = lc.orderBy(col("c").desc, col("lang")).limit(1)
       .select(col("lang").as("top_lang"), col("c").as("top_c"))
@@ -765,7 +766,7 @@ object PipelineQueries extends QueryGroup {
     val pii = graft.operators.PiiRedaction.redact(docs, "doc_id", "text")
       .where(col("n_emails") + col("n_ssns") + col("n_phones") + col("n_ips") > 0)
       .agg(count(lit(1)).as("pii_docs"))
-    val out = vol
+    vol
       .crossJoin(broadcast(voc))
       .crossJoin(broadcast(lng))
       .crossJoin(broadcast(top))
@@ -779,10 +780,7 @@ object PipelineQueries extends QueryGroup {
         col("exact_dup_docs"),
         round(col("mq"), 6).as("mean_quality"),
         col("pii_docs"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(scored)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(lc)
-    out
+      .pin()
   }
 
   // Jaro–Winkler similarity (expressions.JaroWinkler — native codegen
@@ -1008,12 +1006,12 @@ object PipelineQueries extends QueryGroup {
     // whole regex chain re-evaluates per consumer (8.1 s -> ~4 s)
     val ext = HtmlExtract.extract(
       TextQueries.htmlCorpusOf(Tables.load(s, dir, "documents")),
-      "doc_id", "html").localCheckpoint(true)
-    val hyg = TextHygiene.clean(ext, "doc_id", "text").localCheckpoint(true)
+      "doc_id", "html").pin()
+    val hyg = TextHygiene.clean(ext, "doc_id", "text").pin()
     val dd = DocRepetition.dedupLines(
       hyg.select(col("doc_id"), col("text_clean").as("text")),
       "doc_id", "text")
-    val out = ext
+    ext
       .select(col("doc_id"), col("n_blocks_kept"), col("n_blocks_dropped"))
       .join(hyg.select(col("doc_id"),
         col("had_control").cast("int").as("had_control"),
@@ -1028,10 +1026,7 @@ object PipelineQueries extends QueryGroup {
         "n_blocks_dropped", "had_control", "had_mojibake", "had_nfc",
         "n_lines", "n_lines_kept", "dup_line_fraction")
       .orderBy("doc_id")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(ext)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(hyg)
-    out
+      .pin()
   }
 
   // Terminal TRAINING-SHARD export (ShardExport — the curation
@@ -1081,13 +1076,11 @@ object PipelineQueries extends QueryGroup {
     // two-level prefix chain
     val assigned = graft.operators.ShardExport.assign(
       Tables.load(s, dir, "documents"), "doc_id", "text", "source",
-      budget = 2000).localCheckpoint(true)
-    val out = graft.operators.ShardExport
+      budget = 2000).pin()
+    graft.operators.ShardExport
       .manifest(assigned, "doc_id", "text", "source")
       .orderBy("shard_id")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(assigned)
-    out
+      .pin()
   }
 
   // The Common Crawl FRONT DOOR composed end to end: `.warc.gz` landing
@@ -1187,7 +1180,7 @@ object PipelineQueries extends QueryGroup {
     val recs = Tables.load(s, dir, "documents")
       .filter(col("doc_id") < 400)
       .select(col("doc_id"), record.as("rc"))
-      .localCheckpoint(true)
+      .pin()
     val crc = crc32(encode(col("rc"), "UTF-8"))
     val crcOut = when(col("doc_id") % 9 === 0,
       pmod(crc + 1, lit(4294967296L))).otherwise(crc)
@@ -1198,8 +1191,7 @@ object PipelineQueries extends QueryGroup {
         le16(lit(65535) - length(col("rc"))),
         hex(encode(col("rc"), "UTF-8")),
         le32(crcOut), le32(length(col("rc"))))).as("gz"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(recs)
+      .pin()
     // crack the HTTP envelope: only VERIFIED 200 text/html bodies may
     // feed the text pipeline (the 404s and anything malformed drop)
     val envelopes = graft.operators.WarcGz
@@ -1211,7 +1203,7 @@ object PipelineQueries extends QueryGroup {
       .filter(col("ok") && col("status_code") === 200 &&
         col("content_type") === "text/html")
       .select(col("doc_id"), col("body_text").as("html"))
-    val out = graft.operators.HtmlExtract
+    graft.operators.HtmlExtract
       .extract(pages, "doc_id", "html")
       .select(
         col("doc_id"),
@@ -1219,9 +1211,7 @@ object PipelineQueries extends QueryGroup {
         length(col("text")).as("n_chars"),
         col("n_blocks_kept"), col("n_blocks_dropped"))
       .orderBy("doc_id")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(corpus)
-    out
+      .pin()
   }
 
   // CDX capture index + revisit dedup over the warc.gz landing format
@@ -1312,7 +1302,7 @@ object PipelineQueries extends QueryGroup {
     val recs = Tables.load(s, dir, "documents")
       .filter(col("doc_id") < 360)
       .select(col("doc_id"), record.as("rc"))
-      .localCheckpoint(true)
+      .pin()
     val crc = crc32(encode(col("rc"), "UTF-8"))
     val crcOut = when(col("doc_id") % 9 === 0,
       pmod(crc + 1, lit(4294967296L))).otherwise(crc)
@@ -1323,9 +1313,8 @@ object PipelineQueries extends QueryGroup {
         le16(lit(65535) - length(col("rc"))),
         hex(encode(col("rc"), "UTF-8")),
         le32(crcOut), le32(length(col("rc"))))).as("gz"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(recs)
-    val out = graft.operators.Surt
+      .pin()
+    graft.operators.Surt
       .revisits(graft.operators.Surt
         .cdxIndex(corpus, "doc_id", "gz", maxMembers = 2))
       .select(col("surt_key"), col("warc_date"), col("url"),
@@ -1334,9 +1323,7 @@ object PipelineQueries extends QueryGroup {
         col("rec_ok").cast("int").as("rec_ok"),
         col("is_revisit").cast("int").as("is_revisit"))
       .orderBy("surt_key", "warc_date", "url")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(corpus)
-    out
+      .pin()
   }
 
   // Link-graph frontier prioritization (LinkExtract.hostGraph →
@@ -1405,17 +1392,15 @@ object PipelineQueries extends QueryGroup {
       .select(col("doc_id"),
         concat(lit("https://"), hostOf(k), lit("/p/"), did).as("url"),
         html.as("html"))
-      .localCheckpoint(true)
+      .pin()
     val edges = graft.operators.LinkExtract
       .hostGraph(pages, "doc_id", "url", "html")
       .select(col("src_host").as("src"), col("dst_host").as("dst"),
         col("n_links").cast("double").as("weight"))
-    val out = graft.operators.PageRank.run(edges, iterations = 3)
+    graft.operators.PageRank.run(edges, iterations = 3)
       .select(col("node").as("host"), col("rank"))
       .orderBy("host")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(pages)
-    out
+      .pin()
   }
 
   // The crawl's NEXT-WAVE plan, composed end to end (LinkExtract →
@@ -1477,7 +1462,7 @@ object PipelineQueries extends QueryGroup {
       .select(col("doc_id"),
         concat(lit("https://"), hostOf(k), lit("/p/"), i).as("url"),
         html.as("html"))
-      .localCheckpoint(true)
+      .pin()
     val hosts = Tables.load(s, dir, "documents")
       .where(col("doc_id") < 500)
       .select((col("doc_id") % 11).cast("int").as("k")).distinct()
@@ -1485,7 +1470,7 @@ object PipelineQueries extends QueryGroup {
       hostOf(col("k")).as("host"),
       when(col("k") % 2 === 0, "User-agent: *\nDisallow: /private/\n")
         .otherwise("User-agent: *\nDisallow:\n").as("robots"))
-      .localCheckpoint(true)
+      .pin()
     val delays = hosts.select(
       hostOf(col("k")).as("host"),
       when(col("k") % 3 === 2, lit(null).cast("long"))
@@ -1500,7 +1485,7 @@ object PipelineQueries extends QueryGroup {
       .decide(robots, "host", "robots", frontier, "host", "path",
         "graftbot")
       .where(col("allowed"))
-    val out = graft.operators.CrawlSchedule
+    graft.operators.CrawlSchedule
       .schedule(governed, "host", "url", delays, "host", "delay",
         defaultDelaySec = 2)
       .select(col("host"), col("url"),
@@ -1508,10 +1493,7 @@ object PipelineQueries extends QueryGroup {
         col("fetch_seq").cast("int").as("fetch_seq"),
         col("fetch_at_sec").cast("long").as("fetch_at_sec"))
       .orderBy("host", "fetch_seq")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(pages)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(robots)
-    out
+      .pin()
   }
 
   // Incremental-crawl fetch plan (Surt.fetchPlan): the frontier spells
@@ -1544,7 +1526,7 @@ object PipelineQueries extends QueryGroup {
     val frontier = d.select(col("doc_id"),
       concat(lit("https://WWW.s"), k, lit(".example.org/p/"), i,
         lit("?b=2&a=1")).as("url"))
-      .localCheckpoint(true)
+      .pin()
     val iurl = concat(lit("https://s"), k, lit(".example.org/p/"), i,
       lit("?a=1&b=2"))
     val index = d.where(col("doc_id") % 3 =!= 2)
@@ -1561,16 +1543,13 @@ object PipelineQueries extends QueryGroup {
         graft.operators.Surt.surtKey(col("cap.url")).as("surt_key"),
         col("cap.warc_date").as("warc_date"), col("cap.url").as("url"),
         col("cap.digest").as("digest"))
-      .localCheckpoint(true)
-    val out = graft.operators.Surt
+      .pin()
+    graft.operators.Surt
       .fetchPlan(index, frontier, "url")
       .select(col("doc_id"), col("url"), col("surt_key"), col("status"),
         col("last_date"), col("last_digest"))
       .orderBy("doc_id")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(frontier)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(index)
-    out
+      .pin()
   }
 
   // Sitemap DISCOVERY through robots.txt (Robots.meta →
@@ -1626,7 +1605,7 @@ object PipelineQueries extends QueryGroup {
           lit("/sm/b.xml\n")))
         .otherwise(""))
     val robots = hosts.select(col("host"), robotsBody.as("robots"))
-      .localCheckpoint(true)
+      .pin()
     val aBody = concat(
       lit("<urlset><url><loc>"), base, lit("/p/"), js,
       lit("/1</loc><lastmod>2024-05-01</lastmod></url><url><loc>"),
@@ -1642,23 +1621,20 @@ object PipelineQueries extends QueryGroup {
       .as("sm"))
       .select(col("host"), col("sm.url").as("url"),
         col("sm.body").as("body"))
-      .localCheckpoint(true)
+      .pin()
     val discovered = graft.operators.Robots
       .meta(robots, "host", "robots", "graftbot")
       .where(col("sitemaps") =!= "")
       .select(col("host"),
         explode(split(col("sitemaps"), ",")).as("url"))
     val sm = discovered.join(bodies, Seq("host", "url"))
-    val out = graft.operators.Sitemap
+    graft.operators.Sitemap
       .governedFrontier(sm, "host", "url", "body",
         robots, "host", "robots", "graftbot")
       .select(col("host"), col("sitemap_url"), col("loc"),
         col("lastmod"), col("allowed").cast("int").as("allowed"))
       .orderBy("host", "sitemap_url", "loc")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(robots)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(bodies)
-    out
+      .pin()
   }
 
   // warc.gz EXPORT manifest (WarcExport.write — the landing format's
@@ -1704,10 +1680,9 @@ object PipelineQueries extends QueryGroup {
         lit("2024-06-01T00:00:00Z").as("date"),
         expr("substring(rpad(coalesce(text, ''), 150, 'y'), 1, " +
           "CAST(doc_id % 90 + 30 AS INT))").as("payload"))
-      .localCheckpoint(true)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_warc_export").toString
-    val m = graft.operators.WarcExport
+      .pin()
+    val outDir = RunScope.scratchDir("graft_warc_export")
+    graft.operators.WarcExport
       .write(captures, "doc_id", "url", "date", "payload",
         budget = 50, outDir)
       .select(col("shard_id").cast("long").as("shard_id"),
@@ -1715,9 +1690,7 @@ object PipelineQueries extends QueryGroup {
         col("total_payload").cast("long").as("total_payload"),
         col("content_md5"))
       .orderBy("shard_id")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(captures)
-    m
+      .pin()
   }
 
   override val all: Seq[Q] =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{DataProfile, SchemaValidation}
 import graft.operators.SchemaValidation.FieldRule
+import graft.RunScope.Pinning
 
 /** Data-quality operators: contract validation with quarantine reasons
   * and one-pass column profiling — the schema-enforcement surface of the
@@ -856,7 +857,7 @@ object QualityQueries extends QueryGroup {
         count(lit(1)).as("n"),
         expr("percentile(CAST(l_extendedprice AS DOUBLE), array(0.5, 0.9, 0.99))")
           .as("q"))
-      .localCheckpoint(true)
+      .pin()
     g.select(col("l_returnflag"), col("n"), lit(0.5).as("p"),
         round(element_at(col("q"), 1), 6).as("value"))
       .unionByName(g.select(col("l_returnflag"), col("n"), lit(0.9).as("p"),
@@ -934,16 +935,14 @@ object QualityQueries extends QueryGroup {
       (col("nv0") / (dd("n0") * (dd("n0") - lit(1.0)))).as("v0"))
     val se1 = col("v1") / dd("n1")
     val se0 = col("v0") / dd("n0")
-    val out = d.select(
+    d.select(
       col("n1"), col("n0"),
       round(col("m1"), 6).as("mean1"), round(col("m0"), 6).as("mean0"),
       round((col("m1") - col("m0")) / sqrt(se1 + se0), 6).as("t"),
       round((se1 + se0) * (se1 + se0) /
         (se1 * se1 / (dd("n1") - lit(1.0)) + se0 * se0 / (dd("n0") - lit(1.0))), 6)
         .as("welch_df"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(scored)
-    out
+      .pin()
   }
 
   // Mergeable bottom-k-by-hash quantile sketch (QuantileSketch

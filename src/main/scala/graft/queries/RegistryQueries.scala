@@ -2,7 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.core.QueryRegistry
 
 /** The config-compiler contract end to end: a runtime directory of
@@ -15,7 +15,7 @@ object RegistryQueries extends QueryGroup {
 
   /** One shared config dir per JVM (queries may run repeatedly). */
   private lazy val cfgDir: java.nio.file.Path = {
-    val d = Files.createTempDirectory("graft_cfg")
+    val d = java.nio.file.Paths.get(RunScope.scratchDir("graft_cfg"))
     Files.writeString(d.resolve("candidateIds.sql"),
       """SELECT c_custkey, c_name, c_mktsegment
         |FROM customer

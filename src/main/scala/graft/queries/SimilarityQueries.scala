@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Vectors
 import graft.operators.SimilaritySearch
+import graft.RunScope.Pinning
 
 /** Similarity search over the embeddings table (array<float>, 64-dim).
   *
@@ -570,11 +571,11 @@ object SimilarityQueries extends QueryGroup {
          |SELECT 16 AS dim, query_id, recall FROM r16
          |UNION ALL SELECT 32, query_id, recall FROM r32
          |ORDER BY dim, query_id""".stripMargin) { (s, dir) =>
-      val emb = Tables.load(s, dir, "embeddings").localCheckpoint(true)
+      val emb = Tables.load(s, dir, "embeddings").pin()
       val qs = emb.filter(col("vec_id") < 8)
       val exact = SimilaritySearch
         .bruteForceTopK(emb, qs, "vec_id", "embedding", k = 10)
-        .localCheckpoint(true) // consumed once per dim
+        .pin() // consumed once per dim
       val perDim = Seq(16, 32).map { dim =>
         val te = emb.select(
           col("vec_id"), slice(col("embedding"), 1, dim).as("embedding"))
@@ -583,11 +584,8 @@ object SimilarityQueries extends QueryGroup {
         SimilaritySearch.recallAtK(exact, approx, 10)
           .select(lit(dim).as("dim"), col("query_id"), col("recall"))
       }
-      val out = perDim.reduce(_ unionAll _).orderBy("dim", "query_id")
-        .localCheckpoint(true)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(exact)
-      org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(emb)
-      out
+      perDim.reduce(_ unionAll _).orderBy("dim", "query_id")
+        .pin()
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.streaming.EventStreams
+import graft.RunScope
 
 /** Structured Streaming operators, each run to completion with
   * Trigger.AvailableNow so the driver's batch DuckDB oracle verifies the
@@ -417,7 +418,7 @@ object StreamingQueries extends QueryGroup {
       |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
     graft.streaming.CorpusStream.ingestWithReportAvailableNow(
       s, dir,
-      java.nio.file.Files.createTempDirectory("graft_report_out").toString,
+      RunScope.scratchDir("graft_report_out"),
       shards = 2)
       .orderBy("batch_shard")
   }

@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.functions.TextAnalysis._
+import graft.RunScope.Pinning
 
 /** Text-analysis operators over the documents table. */
 object TextQueries extends QueryGroup {
@@ -688,7 +689,7 @@ object TextQueries extends QueryGroup {
       |GROUP BY tf.doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
     val docs = Tables.load(s, dir, "documents")
     val terms = Seq("data", "table", "join")
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25idx").toString
+    val idx = RunScope.scratchDir("graft_bm25idx")
     graft.operators.TextIndex.build(docs, "doc_id", "text", idx)
     val served = graft.operators.TextIndex.scoreFromIndex(s, idx, terms)
     require(graft.sources.Layout.hasPartitionFilter(served, "bucket"),
@@ -737,7 +738,7 @@ object TextQueries extends QueryGroup {
       |GROUP BY tf.doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
     val docs = Tables.load(s, dir, "documents")
     val terms = Seq("data", "table", "join")
-    val idx = java.nio.file.Files.createTempDirectory("graft_bm25app").toString
+    val idx = RunScope.scratchDir("graft_bm25app")
     graft.operators.TextIndex.build(docs.where(col("doc_id") < 400), "doc_id", "text", idx)
     graft.operators.TextIndex.appendBatch(
       docs.where(col("doc_id") >= 400), "doc_id", "text", idx)
@@ -1990,17 +1991,14 @@ object TextQueries extends QueryGroup {
       |ORDER BY doc.doc_id""".stripMargin) { (s, dir) =>
     val slice = Tables.load(s, dir, "documents")
       .filter(col("doc_id") < 300)
-      .localCheckpoint(true)
+      .pin()
     val pieces = graft.operators.UnigramTokenizer
       .trainPieces(slice, "text", rounds = 2)
-    val out = graft.operators.UnigramTokenizer
+    graft.operators.UnigramTokenizer
       .applyByVocab(slice, "doc_id", "text", pieces)
       .select("doc_id", "n_words", "n_words_long", "n_pieces", "tok_digest")
       .orderBy("doc_id")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(pieces)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(slice)
-    out
+      .pin()
   }
 
   // CCNet-style quality screen on the TRAINED unigram LM
@@ -2055,19 +2053,16 @@ object TextQueries extends QueryGroup {
       |ORDER BY p.doc_id""".stripMargin) { (s, dir) =>
     val slice = Tables.load(s, dir, "documents")
       .filter(col("doc_id") < 300)
-      .localCheckpoint(true)
+      .pin()
     val pieces = graft.operators.UnigramTokenizer
       .trainPieces(slice, "text", rounds = 2)
-    val out = graft.operators.UnigramTokenizer
+    graft.operators.UnigramTokenizer
       .qualityScreen(slice, "doc_id", "text", pieces)
       .select(col("doc_id"), col("n_words"), col("n_words_long"),
         col("n_pieces"), col("sum_score_nanos"),
         col("keep").cast("int").as("keep"))
       .orderBy("doc_id")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(pieces)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(slice)
-    out
+      .pin()
   }
 
   // Charset SNIFF + DECODE (CharsetDecode.decodeAll — r16 VERDICT task
@@ -2122,7 +2117,7 @@ object TextQueries extends QueryGroup {
       .select(col("doc_id"),
         expr("substring(rpad(coalesce(text, ''), 120, 'x'), 1, " +
           "CAST(doc_id % 70 + 15 AS INT))").as("payload"))
-      .localCheckpoint(true)
+      .pin()
     val pl = col("payload")
     val pc = (col("doc_id") % 6).cast("int")
     val raw = when(pc === 0, pl)
@@ -2140,9 +2135,8 @@ object TextQueries extends QueryGroup {
       .when(pc === 5, "ISO-8859-1").otherwise("")
     val frame = base
       .select(col("doc_id"), raw.as("raw"), hdrCs.as("hdr_cs"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(base)
-    val out = graft.operators.CharsetDecode
+      .pin()
+    graft.operators.CharsetDecode
       .decodeAll(frame, "doc_id", "raw", Some("hdr_cs"))
       .select(
         col("doc_id"), col("charset"), col("charset_source"),
@@ -2150,9 +2144,7 @@ object TextQueries extends QueryGroup {
         col("n_chars"),
         md5(col("text").cast("binary")).as("text_md5"))
       .orderBy("doc_id")
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(frame)
-    out
+      .pin()
   }
 
   // TRAINED language ID (TrainedLangId.trainAndPredict — r16 VERDICT
@@ -2236,8 +2228,8 @@ object TextQueries extends QueryGroup {
   // construction.
   /** The q_t45 metadata frame over a documents batch — construction
     * and extraction are per-row, so streamed ≡ batch (q_st42 reuses
-    * this and the q_t45 oracle verbatim). Pins the page corpus; the
-    * caller frees it through the returned plan.
+    * this and the q_t45 oracle verbatim). Pins the page corpus, which
+    * the returned plan reads.
     */
   private[queries] def htmlMetaOf(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
@@ -2273,7 +2265,7 @@ object TextQueries extends QueryGroup {
           lit("\"></head>")))
     val pages = graft.Tables.spread(docs.where(col("doc_id") < 1200))
       .select(col("doc_id"), html.as("html"))
-      .localCheckpoint(true)
+      .pin()
     graft.operators.HtmlMeta.meta(pages, "doc_id", "html")
   }
 
@@ -2303,9 +2295,7 @@ object TextQueries extends QueryGroup {
       |       END AS lang
       |FROM d ORDER BY doc_id""".stripMargin) { (s, dir) =>
     val pre = htmlMetaOf(Tables.load(s, dir, "documents"))
-    val out = pre.orderBy("doc_id").localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(pre)
-    out
+    pre.orderBy("doc_id").pin()
   }
 
   override val all: Seq[Q] =

@@ -29,8 +29,10 @@ package object queries {
 
   trait QueryGroup {
     def all: Seq[Q]
+    /** Each builder runs in a [[graft.RunScope]] named after its query. */
     final def queries: Map[String, (SparkSession, String) => DataFrame] =
-      all.map(q => q.name -> q.fn).toMap
+      all.map(q => q.name -> ((s: SparkSession, dir: String) =>
+        RunScope.scope(q.name)(q.fn(s, dir)))).toMap
     final def oracles: Map[String, String] =
       all.flatMap(q => q.oracle.map(q.name -> _)).toMap
   }

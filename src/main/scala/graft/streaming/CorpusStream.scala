@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.Tables
+import graft.{RunScope, Tables}
+import graft.RunScope.Pinning
 import graft.functions.TextAnalysis
 
 /** Streaming ingest of the DOCUMENT corpus: the landing zone consumed as
@@ -120,15 +121,15 @@ object CorpusStream {
   def qualityScoredAvailableNow(
       spark: SparkSession,
       sfDir: String,
-      statePartitions: Int = EventStreams.defaultStatePartitions): DataFrame = {
+      statePartitions: Int = EventStreams.defaultStatePartitions): DataFrame =
+      RunScope.scope("CorpusStream.qualityScoredAvailableNow") {
     import graft.operators.QualityClassifier
     val numBuckets = 8
     val docs = Tables.load(spark, sfDir, "documents")
     val feats = QualityClassifier.features(
       docs, "doc_id", "text", col("lang") === "en", numBuckets)
-      .localCheckpoint(true) // scanned once per GD step
+      .pin() // scanned once per GD step
     val model = QualityClassifier.fit(feats, numBuckets, steps = 3, learningRate = 0.5)
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(feats)
     val s = EventStreams.streamSession(spark, statePartitions)
     EventStreams.runToTable(
       s,
@@ -155,19 +156,19 @@ object CorpusStream {
       spark: SparkSession,
       sfDir: String,
       alpha: Double = 0.1,
-      statePartitions: Int = EventStreams.defaultStatePartitions): DataFrame = {
+      statePartitions: Int = EventStreams.defaultStatePartitions): DataFrame =
+      RunScope.scope("CorpusStream.conformalScoredAvailableNow") {
     import graft.operators.QualityClassifier
     val numBuckets = 8
     val docs = Tables.load(spark, sfDir, "documents")
     val feats = QualityClassifier.features(
       docs, "doc_id", "text", col("lang") === "en", numBuckets)
-      .localCheckpoint(true)
+      .pin()
     val model = QualityClassifier.fit(feats, numBuckets, steps = 3, learningRate = 0.5)
     val scored = QualityClassifier.score(feats, "doc_id", model)
       .join(feats.select(col("doc_id"), col("y")), "doc_id")
     val conf = graft.operators.MlEval.splitConformal(
       scored, "y", "score", col("doc_id") % 5 === 0, alpha).head()
-    org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(feats)
     val qhatCol =
       if (conf.isNullAt(2)) lit(null).cast("double")
       else lit(conf.getDouble(2))
@@ -215,8 +216,7 @@ object CorpusStream {
     // which append-mode streaming plans disallow. Measured 10× cheaper
     // than the per-occurrence scan-side fold on the 10×-corpus run;
     // results land in a parquet sink, driver state stays O(1).
-    val outDir =
-      java.nio.file.Files.createTempDirectory("graft_stream_bpe_out").toString
+    val outDir = RunScope.scratchDir("graft_stream_bpe_out")
     val q = spark.readStream
       .schema(docs.schema)
       .option("maxFilesPerTrigger", "1") // one micro-batch per drop
@@ -237,13 +237,13 @@ object CorpusStream {
   /** Generic per-micro-batch BATCH-PLAN transform over the document
     * landing zone, run to completion: each drop arrives as ONE
     * micro-batch, `f` maps it with a full batch plan (joins, groupBys,
-    * localCheckpoints — everything append-mode streaming plans
-    * disallow), results append to a parquet sink (driver state O(1)),
-    * and the folded table reads back at the end. `f` must be
-    * PER-DOCUMENT (row-local or batch-local with deterministic
-    * per-doc output) for the result to be replayable by a batch oracle
-    * regardless of sharding. Checkpoints `f` may pin are freed after
-    * each batch's write — the landing zone runs forever, residency must
+    * pins — everything append-mode streaming plans disallow), results
+    * append to a parquet sink (driver state O(1)), and the folded table
+    * reads back at the end. `f` must be PER-DOCUMENT (row-local or
+    * batch-local with deterministic per-doc output) for the result to be
+    * replayable by a batch oracle regardless of sharding. Each batch
+    * runs in its own [[graft.RunScope]], so pins `f` makes free after
+    * the batch's write — the landing zone runs forever, residency must
     * not.
     */
   /** Streaming Naive Bayes scoring: the [[graft.operators.NaiveBayes]]
@@ -254,7 +254,7 @@ object CorpusStream {
     * ≡ batch exactly and the q_c22 oracle replays it verbatim.
     *
     * The model ships via a temp-parquet round trip and is RE-READ per
-    * batch rather than held as a localCheckpoint: checkpoint blocks do
+    * batch rather than held as a pin: checkpoint blocks do
     * not survive interleaved micro-batch executions (the q_st23
     * lesson, CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), and the
     * vocabulary-bounded scan is cheaper than the residency. DECIMAL
@@ -264,17 +264,14 @@ object CorpusStream {
   def nbScoredAvailableNow(
       spark: SparkSession,
       sfDir: String,
-      shards: Int = 2): DataFrame = {
+      shards: Int = 2): DataFrame = RunScope.scope("CorpusStream.nbScoredAvailableNow") {
     import graft.operators.NaiveBayes
-    val bridge = org.apache.spark.sql.graft.bridge
     val docs = Tables.load(spark, sfDir, "documents")
       .withColumn("__y", (col("lang") === "en").cast("int"))
     val (model, stats) = NaiveBayes.train(docs, "doc_id", "text", "__y")
-    val dir = java.nio.file.Files.createTempDirectory("graft_nb_model").toString
+    val dir = RunScope.scratchDir("graft_nb_model")
     model.write.parquet(s"$dir/model")
     stats.write.parquet(s"$dir/stats")
-    bridge.freeLocalCheckpoint(model)
-    bridge.freeLocalCheckpoint(stats)
     val modelR = spark.read.parquet(s"$dir/model")
     val statsR = spark.read.parquet(s"$dir/stats")
     transformAvailableNow(spark, sfDir, shards) { batch =>
@@ -288,8 +285,7 @@ object CorpusStream {
       shards: Int = 2)(f: DataFrame => DataFrame): DataFrame = {
     require(shards >= 1)
     val docs = Tables.load(spark, sfDir, "documents")
-    val outDir =
-      java.nio.file.Files.createTempDirectory("graft_stream_transform").toString
+    val outDir = RunScope.scratchDir("graft_stream_transform")
     val q = spark.readStream
       .schema(docs.schema)
       .option("maxFilesPerTrigger", "1")
@@ -297,10 +293,9 @@ object CorpusStream {
       .writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val out = f(batch.toDF())
-        out.write.mode("append").parquet(outDir)
-        org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(out)
-        ()
+        RunScope.scope("CorpusStream.transformAvailableNow") {
+          f(batch.toDF()).write.mode("append").parquet(outDir)
+        }
       }
       .start()
     q.awaitTermination()
@@ -325,7 +320,7 @@ object CorpusStream {
     * as `(doc_id % shards), doc_id, idx`.
     */
   private def writeLandingZone(docs: DataFrame, shards: Int): String = {
-    val landing = java.nio.file.Files.createTempDirectory("graft_landing").toString
+    val landing = RunScope.scratchDir("graft_landing")
     writeShardFiles(docs, shards, landing)
     landing
   }
@@ -435,7 +430,7 @@ object CorpusStream {
     import spark.implicits._
     require(shards >= 1)
     val docs = Tables.load(spark, sfDir, "documents")
-    val landing = java.nio.file.Files.createTempDirectory("graft_stream_report").toString
+    val landing = RunScope.scratchDir("graft_stream_report")
     writeShardFiles(docs, shards, landing)
     val startedAt = java.time.Instant.now().toString
     val batches =
@@ -499,12 +494,11 @@ object CorpusStream {
       sfDir: String,
       shards: Int = 3): DataFrame = {
     import graft.operators.{ConnectedComponents, DedupIndex}
-    import org.apache.spark.sql.graft.bridge
     require(shards >= 1)
     val docs = Tables.load(spark, sfDir, "documents")
-    val landing = java.nio.file.Files.createTempDirectory("graft_stream_cc").toString
+    val landing = RunScope.scratchDir("graft_stream_cc")
     writeShardFiles(docs, shards, landing)
-    val idx = java.nio.file.Files.createTempDirectory("graft_stream_cc_idx").toString
+    val idx = RunScope.scratchDir("graft_stream_cc_idx")
     var indexed = false
     var labeling: DataFrame = null
     val q = spark.readStream
@@ -515,32 +509,31 @@ object CorpusStream {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.toDF()
-        val pairs =
-          if (!indexed) {
-            // first drop: no index to probe yet — fused in-batch pairs +
-            // index seed (the batch is shingled/hashed ONCE, same as the
-            // probeAndAppend path below; the unfused form hashed it twice)
-            val p = DedupIndex.writeAndPairs(b, "doc_id", "text", idx)
-            indexed = true
-            p
-          } else
-            // fused probe+append: the batch is shingled/hashed ONCE
-            DedupIndex.probeAndAppend(spark, b, "doc_id", "text", idx)
-        // both branches return a frame ALREADY pinned by the operator
-        // (alternatingStar/appendEdges materialize internally so their
-        // own checkpoints free deterministically) — no second residency
-        val folded =
-          if (labeling == null)
+        val superseded = labeling
+        // the batch's pair pin frees as the scope exits: holding one per
+        // micro-batch would leak executor storage across a long-running
+        // landing zone
+        labeling = RunScope.scope("CorpusStream.componentsAvailableNow") {
+          val pairs =
+            if (!indexed) {
+              // first drop: no index to probe yet — fused in-batch pairs +
+              // index seed (the batch is shingled/hashed ONCE, same as the
+              // probeAndAppend path below; the unfused form hashed it twice)
+              val p = DedupIndex.writeAndPairs(b, "doc_id", "text", idx)
+              indexed = true
+              p
+            } else
+              // fused probe+append: the batch is shingled/hashed ONCE
+              DedupIndex.probeAndAppend(spark, b, "doc_id", "text", idx)
+          // both branches return a frame ALREADY pinned by the operator
+          // (alternatingStar/appendEdges materialize internally so their
+          // own pins free deterministically) — no second residency
+          if (superseded == null)
             ConnectedComponents.alternatingStar(pairs.select("id_a", "id_b"))
           else
-            ConnectedComponents.appendEdges(labeling, pairs.select("id_a", "id_b"))
-        if (labeling != null) bridge.freeLocalCheckpoint(labeling)
-        labeling = folded
-        // both branches return a PINNED pair frame; free it now that the
-        // fold is materialized — holding one per micro-batch would leak
-        // executor storage across a long-running landing zone
-        bridge.freeLocalCheckpoint(pairs)
-        ()
+            ConnectedComponents.appendEdges(superseded, pairs.select("id_a", "id_b"))
+        }
+        if (superseded != null) RunScope.free(superseded)
       }
       .start()
     q.awaitTermination()
@@ -570,8 +563,7 @@ object CorpusStream {
       shards: Int = 2,
       L: Int = 40): DataFrame = {
     import graft.operators.SubstringIndex
-    val idx =
-      java.nio.file.Files.createTempDirectory("graft_stream_ssi").toString
+    val idx = RunScope.scratchDir("graft_stream_ssi")
     var seeded = false
     transformAvailableNow(spark, sfDir, shards) { b =>
       if (!seeded) {
@@ -603,8 +595,7 @@ object CorpusStream {
       buildCorpus: DataFrame => DataFrame,
       shards: Int = 2): DataFrame = {
     import org.apache.spark.sql.functions._
-    val store =
-      java.nio.file.Files.createTempDirectory("graft_stream_lines").toString
+    val store = RunScope.scratchDir("graft_stream_lines")
     var seeded = false
     transformAvailableNow(spark, sfDir, shards) { b =>
       val corpus = buildCorpus(b)
@@ -612,7 +603,7 @@ object CorpusStream {
         if (seeded) Some(spark.read.parquet(store)) else None
       val kept = graft.operators.DocRepetition
         .dedupLinesGlobal(corpus, "doc_id", "text", seenLines = seen)
-        .localCheckpoint(true)
+        .pin()
       // append this batch's surviving substantial lines to the store
       kept
         .select(posexplode(split(col("text_clean"), "\n"))
@@ -704,13 +695,12 @@ object CorpusStream {
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
             batchId: Long) =>
-          if (!batch.isEmpty) {
+          if (!batch.isEmpty) RunScope.scope("CorpusStream.warcExportAvailableNow") {
             val seg = f"$outDir/segment-$batchId%03d"
-            val m = WarcExport.write(mk(batch.toDF()), "doc_id", "url",
+            WarcExport.write(mk(batch.toDF()), "doc_id", "url",
               "date", "payload", budget, seg)
-            org.apache.spark.sql.graft.bridge.freeLocalCheckpoint(m)
+            ()
           }
-          ()
       }
       .start()
     q.awaitTermination()

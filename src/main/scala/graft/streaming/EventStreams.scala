@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{RunScope, Tables}
 
 /** Structured Streaming operators over the events table.
   *
@@ -472,7 +472,7 @@ object EventStreams {
     */
   def mvMaintainAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.MvMaintain
-    val mvDir = java.nio.file.Files.createTempDirectory("graft_stream_mv").toString
+    val mvDir = RunScope.scratchDir("graft_stream_mv")
     val orders = Tables.load(spark, sfDir, "orders")
     MvMaintain.buildMv(orders.where(col("o_orderkey") % 5 =!= 0), "o_custkey", "o_totalprice")
       .write.parquet(s"$mvDir/v0")
@@ -512,7 +512,7 @@ object EventStreams {
     */
   def cdcMergeAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.SyncDiff
-    val snapDir = java.nio.file.Files.createTempDirectory("graft_stream_cdc").toString
+    val snapDir = RunScope.scratchDir("graft_stream_cdc")
     Tables.load(spark, sfDir, "customer").write.parquet(s"$snapDir/v0")
     var version = 0
     val cust = Tables.readStream(spark, sfDir, "customer")

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Tables
-import graft.plans.EntityAssembly
+import graft.operators.SchemaValidation
+import graft.plans.{EntityAssembly, SyncRun}
 import graft.sources.{Http, RestSink}
 
 /** Continuous form of [[graft.plans.SyncRun]]: a STREAM of changed source
@@ -46,6 +47,10 @@ object IncrementalSync {
     *     a deterministic total order — so a key that flipped into the
     *     segment is never upserted from its new row and then deleted from
     *     its stale one.
+    *   - VALID ROWS ONLY: the collapsed rows pass [[SyncRun]]'s
+    *     coercions and rules; an invalid row is neither upserted nor
+    *     deleted this batch, as [[SyncRun.run]] withholds quarantined
+    *     keys.
     *   - CHANGE-SET-BOUND WORK: [[EntityAssembly.assembleFrom]]
     *     semi-join-prunes the detail tables to the batch's keys (orders on
     *     custkey, then lineitem on the surviving orderkeys) BEFORE the two
@@ -60,17 +65,19 @@ object IncrementalSync {
       tokens: Http.TokenSource,
       entityPath: String,
       versionCols: Seq[String] = Seq.empty): BatchCounts = {
-    val collapsed = graft.operators.Dedup
-      .lastRowWinsTotal(batch, Seq("c_custkey"), versionCols)
-    val inSeg = collapsed.filter(col("c_mktsegment") === EntityAssembly.segment)
+    val (valid, _) = SchemaValidation.split(SchemaValidation.validate(
+      SchemaValidation.coerce(
+        graft.operators.Dedup.lastRowWinsTotal(batch, Seq("c_custkey"), versionCols),
+        SyncRun.customerCoercions),
+      SyncRun.customerRules))
     val entities = EntityAssembly.toJsonPayload(
       EntityAssembly.assembleFrom(
-        inSeg,
+        valid,
         Tables.load(spark, sfDir, "nation"),
         Tables.load(spark, sfDir, "orders"),
         Tables.load(spark, sfDir, "lineitem")))
     val up = RestSink.upsert(entities, transport, tokens, entityPath)
-    val gone = collapsed
+    val gone = valid
       .filter(col("c_mktsegment") =!= EntityAssembly.segment)
       .select(col("c_custkey").as("studentUniqueId"))
       .distinct()

@@ -30,19 +30,35 @@ object bridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
-  /** Free the executor blocks behind a `localCheckpoint`ed frame.
-    * `Dataset.unpersist()` is a no-op for checkpoints (their blocks are
-    * owned by the materialized RDD, not the cache manager, and are only
-    * dropped when the RDD object is GC'd) — iterative algorithms that
-    * supersede a checkpoint every round would otherwise hold every
-    * round's blocks until a driver GC happens to run.
+  /** Free the executor blocks behind a `localCheckpoint`ed frame; pin
+    * lifetimes are [[graft.RunScope]]'s, which frees through here.
+    * `SparkContext.unpersistRDD` removes the same blocks as
+    * `RDD.unpersist`, without its "lineage has been truncated" WARN for
+    * every locally checkpointed RDD.
     */
   def freeLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
+        r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
       case _ => ()
     }
+
+  /** The id of the block RDD behind a persisted frame, once a job has
+    * built it.
+    */
+  def cachedRddId(df: org.apache.spark.sql.DataFrame): Option[Int] =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(_.isCachedColumnBuffersLoaded)
+      .map(_.cachedColumnBuffers.id)
+
+  /** A fresh directory under `java.io.tmpdir` that Spark's shutdown hook
+    * deletes when the JVM exits.
+    */
+  def createTempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
 
   /** Partition counts of a frame's in-memory RDD leaves (checkpointed
     * frames, micro-batch frames), available WITHOUT running a job —

@@ -66,6 +66,29 @@ class IncrementalSyncSpec extends SparkSpec {
     assert(counts.deletes === outSeg) // 404s count as success (idempotent)
   }
 
+  test("applyBatch withholds rows failing SyncRun's validation from upsert and delete") {
+    FakeServer.reset()
+    val customer = Tables.load(spark, sf(), "customer")
+    val inSeg = customer.filter($"c_mktsegment" === "BUILDING").orderBy("c_custkey").limit(2)
+    val outSeg = customer.filter($"c_mktsegment" =!= "BUILDING").orderBy("c_custkey").limit(2)
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("c_custkey").collect().map(_.getLong(0)).toSeq
+    val Seq(nullName, goodIn) = keys(inSeg)
+    val Seq(badNation, _) = keys(outSeg)
+    // SyncRun quarantines both broken rows: a null c_name and a
+    // c_nationkey below the rule's minimum
+    val batch = inSeg
+      .withColumn("c_name",
+        when($"c_custkey" === nullName, lit(null).cast("string")).otherwise($"c_name"))
+      .unionByName(outSeg
+        .withColumn("c_nationkey",
+          when($"c_custkey" === badNation, lit(-1)).otherwise($"c_nationkey")))
+    val counts = IncrementalSync.applyBatch(
+      spark, sf(), batch, new FakeServer.Fake, new FakeServer.Tokens, "/entities")
+    assert(counts === IncrementalSync.BatchCounts(upserts = 1, deletes = 1))
+    assert(storeKeys === Set(goodIn.toString))
+  }
+
   test("a key flipping within one batch resolves to its NEWEST state") {
     val customer = Tables.load(spark, sf(), "customer")
     val k = customer.filter($"c_mktsegment" === "BUILDING")
