@@ -137,9 +137,7 @@ object SyncApp {
       reportDir = Some(cfg.outputDir),
       quarantineDir = Some(s"${cfg.outputDir}/$runDate/$runTime/quarantine"),
       now = now)
-
-    val reportName = started.toString.replaceAll("[:.]", "-")
-    Summary(compiled.size, result, s"${cfg.outputDir}/$reportName.report")
+    Summary(compiled.size, result, result.reportPath.get)
   }
 
   /** Wire the seam from config: `loopback:<name>` → [[MemoryServer]];

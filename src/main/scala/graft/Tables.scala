@@ -65,12 +65,6 @@ object Tables {
     if (name == "events") normalizeEventTs(raw) else raw
   }
 
-  /** Register every table as a temp view so `spark.sql` text matches the
-    * DuckDB oracle's table names exactly.
-    */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
-
   /** Ensure at least the cluster's default parallelism before heavy per-row
     * compute (signature passes, per-doc hashing). A small corpus arriving
     * as one parquet row group is ONE input split — without this, a 32-core

@@ -24,9 +24,6 @@ import org.apache.spark.sql.functions.{col, lit}
   */
 final case class ColumnMap(entries: Seq[(String, String)]) {
 
-  /** Logical field names in file order. */
-  def logicalNames: Seq[String] = entries.map(_._1)
-
   /** Apply as a projection: one `select`, fully column-pruned by Catalyst,
     * so only mapped physical columns are read from the scan.
     */

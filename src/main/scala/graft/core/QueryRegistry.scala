@@ -2,6 +2,7 @@ package graft.core
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -38,10 +39,9 @@ object QueryRegistry {
 
   private def filesWithExt(dir: Path, ext: String): Seq[Path] =
     if (!Files.isDirectory(dir)) Seq.empty
-    else
-      Files.list(dir).iterator.asScala
-        .filter(p => p.getFileName.toString.endsWith(ext))
-        .toSeq.sortBy(_.getFileName.toString)
+    else Using.resource(Files.list(dir))(_.iterator.asScala
+      .filter(p => p.getFileName.toString.endsWith(ext))
+      .toSeq.sortBy(_.getFileName.toString))
 
   private def baseName(p: Path): String = {
     val f = p.getFileName.toString

@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** Native Catalyst expression: REAL GIF first-frame pixel decode — the
   * full GIF87a/89a container walk (logical screen descriptor, color
@@ -27,17 +25,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * by `maxPixels`·3 BEFORE decoding — the decompression-bomb guard.
   */
 case class GifFramePixels(child: Expression, maxPixels: Int)
-    extends UnaryExpression {
+    extends BinaryInput {
   require(maxPixels >= 1, "maxPixels must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary input, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "gif_frame_pixels"
 
   override def nullSafeEval(bytes: Any): Any =

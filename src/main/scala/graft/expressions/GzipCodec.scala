@@ -2,8 +2,7 @@ package graft.expressions
 
 import java.util.zip.{CRC32, DataFormatException, Inflater}
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType}
@@ -25,17 +24,9 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType}
   * JSON/JDBC payloads and never cracks a compressed container.
   */
 case class GzipInflate(child: Expression, maxBytes: Int)
-    extends UnaryExpression {
+    extends BinaryInput {
   require(maxBytes >= 1, "maxBytes must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary input, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "gzip_inflate"
 
   override def nullSafeEval(bytes: Any): Any =
@@ -62,19 +53,12 @@ case class GzipInflate(child: Expression, maxBytes: Int)
   * not guess (the tar-meta/[[graft.operators.Warc]] contract).
   */
 case class GzipMembers(child: Expression, maxMembers: Int, maxBytesEach: Int)
-    extends UnaryExpression {
+    extends BinaryInput {
   require(maxMembers >= 1 && maxMembers <= 4096,
     "maxMembers must be in [1, 4096] (one landing-zone record group)")
   require(maxBytesEach >= 1, "maxBytesEach must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary input, got ${t.simpleString}")
-  }
-
   override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "gzip_members"
 
   override def nullSafeEval(bytes: Any): Any =

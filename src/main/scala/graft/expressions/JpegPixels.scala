@@ -1,9 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** Native Catalyst expression: REAL baseline-JPEG pixel decode — marker
   * walk, Huffman entropy decode (canonical T.81 F.2.2.3 tables), restart
@@ -24,17 +22,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * progressive (SOF2) remains the documented SURVEY §8 exemption.
   */
 case class JpegBaselinePixels(child: Expression, maxPixels: Int)
-    extends UnaryExpression {
+    extends BinaryInput {
   require(maxPixels >= 1, "maxPixels must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary input, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "jpeg_pixels"
 
   override def nullSafeEval(bytes: Any): Any =

@@ -2,10 +2,8 @@ package graft.expressions
 
 import java.util.zip.{DataFormatException, Inflater}
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** Native Catalyst expression: DEFLATE-decompress a zlib stream
   * (RFC 1950/1951) to at most `maxBytes`, NULL on any malformation —
@@ -25,17 +23,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * must crack the container.
   */
 case class ZlibInflate(child: Expression, maxBytes: Int)
-    extends UnaryExpression {
+    extends BinaryInput {
   require(maxBytes >= 1, "maxBytes must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary input, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "zlib_inflate"
 
   override def nullSafeEval(bytes: Any): Any =
@@ -77,17 +67,9 @@ case class ZlibInflate(child: Expression, maxBytes: Int)
   * `maxPixels`·channels before any allocation happens.
   */
 case class PngUnfilteredPixels(child: Expression, maxPixels: Int)
-    extends UnaryExpression {
+    extends BinaryInput {
   require(maxPixels >= 1, "maxPixels must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary input, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
   override def prettyName: String = "png_unfiltered_pixels"
 
   override def nullSafeEval(bytes: Any): Any =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
 
-/** Persistence + reuse for fitted ANN index structures (IVF, PQ): at
+/** Persistence + reuse for fitted ANN index structures (IVF): at
   * 100 TB the index must OUTLIVE the job. Fit once, assign/encode the
   * corpus once, persist both, then serve every subsequent query job from
   * the artifact — no driver re-fit, no re-scan of raw vectors for
@@ -15,27 +15,22 @@ import graft.functions.Vectors
   * {{{
   *   path/centroids/    IVF: numCentroids rows (cell int, centroid array<float>)
   *   path/assignments/  IVF: every corpus row + its cell, PARTITIONED BY cell
-  *   path/codebooks/    PQ:  m·ksub rows (subspace, code, codeword array<double>)
-  *   path/codes/        PQ:  corpus encoded once (neighbor_id, __codes, __cn)
   * }}}
   *
-  * Scale shape: the model side (centroids/codebooks) is a bounded
-  * artifact — numCentroids or m·ksub rows regardless of corpus size — so
+  * Scale shape: the model side (centroids) is a bounded
+  * artifact — numCentroids rows regardless of corpus size — so
   * reloading it is a tiny driver read (the same class of bounded collect
   * as the fit's sample). The data side is executor-parallel parquet. IVF
   * assignments are `partitionBy(cell)`, so a probe of `nprobe` cells
   * prunes to those cells' files at the scan: the broadcast equi-join on
   * the `cell` partition column gives Spark dynamic partition pruning,
   * and a 1000-executor query job reads nprobe/numCentroids of the index
-  * instead of the whole corpus. PQ codes are the compressed scan (m bytes
-  * + a norm per vector instead of 4·dim), paid once at build time rather
-  * than per query job.
+  * instead of the whole corpus.
   *
   * Determinism contract (spec-gated): querying a persisted index returns
   * BIT-IDENTICAL results to the fresh-fit operators — centroids round-trip
-  * as float arrays, codebooks as double arrays, and the reload paths feed
-  * them through the exact expressions ([[SimilaritySearch.bestCellsOf]],
-  * [[SimilaritySearch.pqAdcRerank]]) the fresh fit uses.
+  * as float arrays, and the reload path feeds them through the exact
+  * expression ([[SimilaritySearch.bestCellsOf]]) the fresh fit uses.
   *
   * Reference scope ends at full-snapshot sync (SURVEY.md §2); index
   * persistence is part of the beyond-reference LLM-pipeline surface.
@@ -44,8 +39,6 @@ object AnnIndex {
 
   private def centroidsPath(path: String) = s"$path/centroids"
   private def assignmentsPath(path: String) = s"$path/assignments"
-  private def codebooksPath(path: String) = s"$path/codebooks"
-  private def codesPath(path: String) = s"$path/codes"
 
   /** Fit an IVF index over `corpus` and persist it: the centroid table
     * (tiny) plus every corpus row tagged with its nearest-centroid cell,
@@ -147,66 +140,5 @@ object AnnIndex {
       .withColumn("cosine", Vectors.cosine(col("__qv"), col(vecCol)))
       .select(col("query_id"), col(idCol).as("neighbor_id"), col("cosine"))
     SimilaritySearch.topKPerKey(scored, "query_id", k)
-  }
-
-  /** Fit PQ codebooks over `corpus`, encode the corpus ONCE, persist both.
-    * Codewords are stored as doubles (the fit's exact values) so the
-    * reloaded lookup tables are bit-identical to fresh-fit ones.
-    */
-  def writePq(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      m: Int = 8,
-      ksub: Int = 16,
-      kmeansIters: Int = 5): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val books = SimilaritySearch.pqCodebooks(
-      corpus, idCol, vecCol, m, ksub, iters = kmeansIters)
-    (for {
-      s <- books.indices
-      c <- books(s).indices
-    } yield (s, c, books(s)(c).toSeq))
-      .toDF("subspace", "code", "codeword")
-      .coalesce(1) // m·ksub rows — one tiny file
-      .write.mode("overwrite").parquet(codebooksPath(path))
-    SimilaritySearch.pqEncode(corpus, idCol, vecCol, books)
-      .write.mode("overwrite").parquet(codesPath(path))
-  }
-
-  /** The persisted codebooks, (subspace, code)-ordered — a bounded
-    * model-artifact read (m·ksub rows).
-    */
-  def loadPqCodebooks(spark: SparkSession, path: String): Array[Array[Array[Double]]] =
-    spark.read.parquet(codebooksPath(path))
-      .select("subspace", "code", "codeword")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .groupBy(_._1).toArray.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3))
-
-  /** PQ-ADC top-k over a persisted index: candidates come from the
-    * PERSISTED codes (the corpus is never re-encoded — at 100 TB that is
-    * the point), the reloaded codebooks build the per-query lookup
-    * tables, and only the top-nCand candidates per query touch `corpus`
-    * for the exact re-rank.
-    */
-  def pqTopKPersisted(
-      spark: SparkSession,
-      path: String,
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      rerank: Int = 0): DataFrame = {
-    val nCand = if (rerank > 0) rerank else 5 * k
-    require(nCand >= k, "rerank must be at least k")
-    val books = loadPqCodebooks(spark, path)
-    val encoded = spark.read.parquet(codesPath(path))
-    SimilaritySearch.pqAdcRerank(
-      encoded, corpus, queries, idCol, vecCol, k, books, nCand)
   }
 }

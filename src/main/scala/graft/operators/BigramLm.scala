@@ -28,10 +28,11 @@ import graft.functions.TextAnalysis
   */
 object BigramLm {
 
-  /** (doc_id, n_bigrams, mean_logprob) per document; documents with
-    * fewer than two tokens are absent (no bigram to score).
+  /** `(base, bigrams, counts, ctx)`: each doc's tokens `__tk`, one row per
+    * bigram occurrence `(idCol, w1, w2)`, the bigram counts `__c12` and
+    * their per-context totals `__c1`.
     */
-  def meanLogProb(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+  private def bigramCounts(docs: DataFrame, idCol: String, textCol: String) = {
     val base = graft.Tables.spread(docs)
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__tk"))
     val bigrams = base
@@ -45,6 +46,14 @@ object BigramLm {
       .select(col(idCol), col("__bg.w1").as("w1"), col("__bg.w2").as("w2"))
     val counts = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("__c12"))
     val ctx = counts.groupBy("w1").agg(sum(col("__c12")).as("__c1"))
+    (base, bigrams, counts, ctx)
+  }
+
+  /** (doc_id, n_bigrams, mean_logprob) per document; documents with
+    * fewer than two tokens are absent (no bigram to score).
+    */
+  def meanLogProb(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val (base, bigrams, counts, ctx) = bigramCounts(docs, idCol, textCol)
     val vocab = base
       .select(explode(col("__tk")).as("__term"))
       .agg(count_distinct(col("__term")).as("__v"))
@@ -76,19 +85,7 @@ object BigramLm {
       textCol: String,
       lambda: Double): DataFrame = {
     require(lambda >= 0 && lambda <= 1, "lambda must be in [0, 1]")
-    val base = graft.Tables.spread(docs)
-      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__tk"))
-    val bigrams = base
-      .filter(size(col("__tk")) >= 2)
-      .select(
-        col(idCol),
-        explode(zip_with(
-          slice(col("__tk"), lit(1), size(col("__tk")) - 1),
-          slice(col("__tk"), lit(2), size(col("__tk")) - 1),
-          (a, b) => struct(a.as("w1"), b.as("w2")))).as("__bg"))
-      .select(col(idCol), col("__bg.w1").as("w1"), col("__bg.w2").as("w2"))
-    val counts = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("__c12"))
-    val ctx = counts.groupBy("w1").agg(sum(col("__c12")).as("__c1"))
+    val (base, bigrams, counts, ctx) = bigramCounts(docs, idCol, textCol)
     val terms = base.select(explode(col("__tk")).as("__term"))
     val uni = terms.groupBy("__term").agg(count(lit(1)).as("__cu"))
       .select(col("__term").as("w2"), col("__cu"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
@@ -19,6 +19,30 @@ import graft.functions.TextAnalysis
   */
 object Bm25 {
 
+  /** Corpus stats over token arrays `__tk`: one scan-side aggregate to a
+    * single broadcast row `(n_docs, avgdl)`.
+    */
+  private[operators] def corpusStats(toks: DataFrame): DataFrame =
+    toks
+      .select(size(col("__tk")).cast("double").as("dl"))
+      .agg(
+        count(lit(1)).cast("double").as("n_docs"),
+        (sum("dl") / count(lit(1))).as("avgdl"))
+
+  /** Postings `tf` decorated with their term's `df` and the corpus `stats`. */
+  private[operators] def withStats(tf: DataFrame, stats: DataFrame): DataFrame =
+    tf.join(broadcast(tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))), "term")
+      .crossJoin(broadcast(stats))
+
+  /** The positive idf `ln(1 + (N − df + 0.5)/(df + 0.5))`. */
+  private[operators] val idf: Column =
+    log(lit(1) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+
+  /** The length-normalized term frequency. */
+  private[operators] def tfNorm(k1: Double, b: Double): Column =
+    col("tf") * lit(k1 + 1) /
+      (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
+
   /** Per-document BM25 score for `queryTerms` (docs with ≥1 matching
     * term). Output: idCol, n_terms_matched, bm25.
     */
@@ -34,12 +58,7 @@ object Bm25 {
     // a one-row-group corpus otherwise tokenizes on one input split
     val toks = graft.Tables.spread(docs).select(
       col(idCol), TextAnalysis.tokens(col(textCol)).as("__tk"))
-    // corpus stats: one scan-side aggregate to a single broadcast row
-    val stats = toks
-      .select(size(col("__tk")).cast("double").as("dl"))
-      .agg(
-        count(lit(1)).cast("double").as("n_docs"),
-        (sum("dl") / count(lit(1))).as("avgdl"))
+    val stats = corpusStats(toks)
     // postings: doc length rides along the explode, so tf never needs a
     // corpus-sized join back to a doc-length table
     val tf = toks
@@ -48,16 +67,10 @@ object Bm25 {
       .where(col("term").isin(queryTerms: _*))
       .groupBy(col(idCol), col("dl"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
-    val df = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val idf = log(lit(1) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val tfNorm = col("tf") * lit(k1 + 1) /
-      (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
-    tf
-      .join(broadcast(df), "term")
-      .crossJoin(broadcast(stats))
+    withStats(tf, stats)
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).cast("int").as("n_terms_matched"),
-        sum(idf * tfNorm).as("bm25"))
+        sum(idf * tfNorm(k1, b)).as("bm25"))
   }
 }

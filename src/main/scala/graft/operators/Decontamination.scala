@@ -29,6 +29,27 @@ import graft.functions.TextAnalysis
   */
 object Decontamination {
 
+  /** `(idCol, hitsCol)`: per corpus document with at least one hit, the
+    * number of its distinct k-shingles that appear anywhere in `probes`.
+    * Per-doc shingle dedup happens SCAN-SIDE (array_distinct before the
+    * explode) — a DataFrame.distinct() over the corpus would shuffle every
+    * corpus shingle, which is what these operators promise not to do.
+    */
+  private def shingleHits(
+      corpus: DataFrame, probes: DataFrame, idCol: String, textCol: String, k: Int,
+      hitsCol: String): DataFrame = {
+    val probeShingles = graft.Tables.spread(probes)
+      .select(explode(array_distinct(TextAnalysis.tokenShingles(col(textCol), k)))
+        .as("__s"))
+      .distinct()
+    graft.Tables.spread(corpus)
+      .select(col(idCol),
+        explode(array_distinct(TextAnalysis.tokenShingles(col(textCol), k))).as("__s"))
+      .join(probeShingles, "__s")
+      .groupBy(idCol)
+      .agg(count(lit(1)).as(hitsCol))
+  }
+
   /** Per-corpus-document overlap with the probe set: every corpus column
     * plus `n_hits` (the document's DISTINCT k-shingles appearing anywhere
     * in `probes`) and `contaminated` = `n_hits > 0`. Every corpus row is
@@ -42,23 +63,8 @@ object Decontamination {
       textCol: String,
       k: Int = 8): DataFrame = {
     require(k > 0, "shingle size must be positive")
-    // probes only need the text column; corpus needs (idCol, textCol).
-    // Per-doc shingle dedup happens SCAN-SIDE (array_distinct before the
-    // explode) — a DataFrame.distinct() here would shuffle every corpus
-    // shingle, which is exactly what this operator promises not to do.
-    val probeShingles = graft.Tables.spread(probes)
-      .select(explode(array_distinct(TextAnalysis.tokenShingles(col(textCol), k)))
-        .as("__s"))
-      .distinct()
-    val corpusShingles = graft.Tables.spread(corpus)
-      .select(col(idCol),
-        explode(array_distinct(TextAnalysis.tokenShingles(col(textCol), k))).as("__s"))
-    val hits = corpusShingles
-      .join(probeShingles, "__s")
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("n_hits"))
     corpus
-      .join(hits, Seq(idCol), "left")
+      .join(shingleHits(corpus, probes, idCol, textCol, k, "n_hits"), Seq(idCol), "left")
       .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
       .withColumn("contaminated", col("n_hits") > 0)
   }
@@ -84,22 +90,10 @@ object Decontamination {
       textCol: String,
       k: Int = 8): DataFrame = {
     require(k > 0, "shingle size must be positive")
-    val probeShingles = graft.Tables.spread(probes)
-      .select(explode(array_distinct(TextAnalysis.tokenShingles(col(textCol), k)))
-        .as("__s"))
-      .distinct()
-    val withCount = corpus.withColumn(
+    corpus.withColumn(
       "n_shingles",
       size(array_distinct(TextAnalysis.tokenShingles(col(textCol), k))).cast("bigint"))
-    val corpusShingles = graft.Tables.spread(corpus)
-      .select(col(idCol),
-        explode(array_distinct(TextAnalysis.tokenShingles(col(textCol), k))).as("__s"))
-    val hits = corpusShingles
-      .join(probeShingles, "__s")
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("__nh"))
-    withCount
-      .join(hits, Seq(idCol), "left")
+      .join(shingleHits(corpus, probes, idCol, textCol, k, "__nh"), Seq(idCol), "left")
       .withColumn("n_hits", coalesce(col("__nh"), lit(0L)))
       .drop("__nh")
       .withColumn("overlap_fraction",

@@ -35,9 +35,7 @@ object Descriptors {
       .select(col(dimCode).as("__graft_code"), col(dimValue).as("__graft_value"))
       .dropDuplicates("__graft_code")
     df.join(broadcast(d), df(codeCol) === col("__graft_code"), "left")
-      .withColumn(
-        outCol,
-        coalesce(concat(lit(namespacePrefix), col("__graft_value")), df(codeCol).cast("string")))
+      .withColumn(outCol, uriOrPassthrough(col("__graft_value"), df(codeCol), namespacePrefix))
       .drop("__graft_code", "__graft_value")
   }
 

@@ -15,6 +15,18 @@ import graft.RunScope.Pinning
   */
 object GraphStats {
 
+  /** The undirected edge set of `edges` as canonical `(a, b)` pairs:
+    * self-loops dropped, each edge once with `a < b`.
+    */
+  private[operators] def canonicalEdges(
+      edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .filter(col(srcCol) =!= col(dstCol))
+      .select(
+        least(col(srcCol), col(dstCol)).as("a"),
+        greatest(col(srcCol), col(dstCol)).as("b"))
+      .distinct()
+
   /** Degree assortativity: Pearson correlation of endpoint degrees over
     * all edges (each undirected edge contributes BOTH orientations, the
     * standard symmetrization). Output one row:
@@ -38,13 +50,7 @@ object GraphStats {
     // Pin it ONCE so the (possibly expensive) upstream edge derivation
     // never re-runs per consumer; the one-row result is pinned too (the
     // [[KCore]]/[[Triangles]] discipline).
-    val canon = edges
-      .filter(col(srcCol) =!= col(dstCol))
-      .select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .distinct()
-      .pin()
+    val canon = canonicalEdges(edges, srcCol, dstCol).pin()
     val deg = canon.select(col("a").as("n")).unionAll(canon.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val decorated = canon
@@ -112,13 +118,7 @@ object GraphStats {
     // the edge aggregate — pinned once, as is the one-row result.
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      else edges
-        .filter(col(srcCol) =!= col(dstCol))
-        .select(
-          least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
-        .distinct()
-        .pin()
+      else canonicalEdges(edges, srcCol, dstCol).pin()
     val lab = labels.select(col(nodeCol).as("__n"), col(labelCol).as("__l"))
     val decorated = canon
       .join(lab.select(col("__n").as("a"), col("__l").as("__la")), Seq("a"))

@@ -68,12 +68,7 @@ object LabelPropagation {
     require(iterations >= 1, "iterations must be >= 1")
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      else edges
-        .filter(col(srcCol) =!= col(dstCol))
-        .select(
-          least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
-        .distinct()
+      else GraphStats.canonicalEdges(edges, srcCol, dstCol)
     // The per-round join builds its hash table from the |V|-row labels
     // frame (broadcast at gate scale; at cluster scale AQE picks the
     // labels side as the build side since |V| << |E|), so the

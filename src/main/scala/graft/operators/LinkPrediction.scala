@@ -41,13 +41,7 @@ object LinkPrediction {
     require(k >= 1, "k must be >= 1")
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      else edges
-        .filter(col(srcCol) =!= col(dstCol))
-        .select(
-          least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
-        .distinct()
-        .pin()
+      else GraphStats.canonicalEdges(edges, srcCol, dstCol).pin()
     val und = canon.select(col("a").as("node"), col("b").as("nbr"))
       .unionAll(canon.select(col("b").as("node"), col("a").as("nbr")))
     val deg = und.groupBy(col("node")).agg(count(lit(1)).as("d"))

@@ -112,13 +112,7 @@ object Louvain {
     // redundant |E|-row second residency + distinct shuffle.
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      else edges
-        .filter(col(srcCol) =!= col(dstCol))
-        .select(
-          least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
-        .distinct()
-        .pin()
+      else GraphStats.canonicalEdges(edges, srcCol, dstCol).pin()
     val lab = labels.select(col(nodeCol).as("__n"), col(labelCol).as("__l"))
       .pin()
     // edge count as a bounded 1-value driver artifact → plan literal
@@ -127,9 +121,6 @@ object Louvain {
     // its former localCheckpoint was a whole extra action per gate; the
     // TakeOrderedAndProject now runs inside the single output job.
     val cand = candidateGains(canon, lab, mVal)
-    val best = cand.where(col("gain") > 0)
-      .orderBy(col("gain").desc, col("node").asc, col("c").asc)
-      .limit(1)
     // after-stats DERIVE exactly from the move's own integer sufficient
     // statistics (the sweepRefinement/mlCore update, require-verified
     // there on every path): intra' = intra + (k − k_A),
@@ -137,8 +128,19 @@ object Louvain {
     // pass instead of two — the oracle recomputes the after state from
     // the updated labels independently, so the gate still confirms the
     // derivation against a from-scratch computation.
-    best
-      .crossJoin(broadcast(qInts(canon, lab)))
+    bestMoveReport(cand, qInts(canon, lab))
+  }
+
+  /** The best positive-gain move of `cand` (gain desc, node asc, c asc)
+    * reported with the before/after modularity statistics: the one-row
+    * `stats` `(m, intra, sds)` plus the after state derived exactly from
+    * the move's own integers.
+    */
+  private def bestMoveReport(cand: DataFrame, stats: DataFrame): DataFrame =
+    cand.where(col("gain") > 0)
+      .orderBy(col("gain").desc, col("node").asc, col("c").asc)
+      .limit(1)
+      .crossJoin(broadcast(stats))
       .withColumn("__ia", (col("intra") + (col("k") - col("ka"))).cast("bigint"))
       .withColumn("__sa",
         (col("sds") - col("dca") * col("dca") - col("dcb") * col("dcb") +
@@ -159,7 +161,6 @@ object Louvain {
           col("__sa").cast("double") / (lit(4.0) * col("m") * col("m")))
           .as("modularity_after"))
       .pin()
-  }
 
   /** Current labels = the checkpointed base frame with the applied moves
     * overlaid as ONE literal-map lookup (r18): a move loop that
@@ -310,12 +311,7 @@ object Louvain {
       assumeCanonical: Boolean = false): DataFrame = {
     val canon =
       if (assumeCanonical) edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      else edges
-        .filter(col(srcCol) =!= col(dstCol))
-        .select(
-          least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
-        .distinct()
+      else GraphStats.canonicalEdges(edges, srcCol, dstCol)
     val lab = labels.select(col(nodeCol).as("__n"), col(labelCol).as("__l"))
     canon
       .join(lab.select(col("__n").as("a"), col("__l").as("__la")), Seq("a"))
@@ -436,37 +432,13 @@ object Louvain {
     // r18: argmax consumed once — no checkpoint action (see
     // [[bestMoveRefinement]])
     val cand = weightedGains(und, deg, lab, mVal)
-    val best = cand.where(col("gain") > 0)
-      .orderBy(col("gain").desc, col("node").asc, col("c").asc)
-      .limit(1)
     // after-stats derive exactly from the move's integers (identical
     // update to the unweighted form — the self-loop moves with the node
     // and cancels; mlCore require-verifies this algebra every level);
     // the oracle recomputes the after state independently.
-    best
-      .crossJoin(broadcast(
-        weightedModularity(w, "a", "b", "wt", lab, "__n", "__l")
-          .select(col("m"), col("intra"), col("sum_deg_sq").as("sds"))))
-      .withColumn("__ia", (col("intra") + (col("k") - col("ka"))).cast("bigint"))
-      .withColumn("__sa",
-        (col("sds") - col("dca") * col("dca") - col("dcb") * col("dcb") +
-          (col("dca") - col("d")) * (col("dca") - col("d")) +
-          (col("dcb") + col("d")) * (col("dcb") + col("d"))).cast("bigint"))
-      .select(
-        col("node").as("moved_node"), col("a_label").as("from_label"),
-        col("c").as("to_label"), col("gain").as("gain_x4m2"),
-        col("m").as("n_edges"),
-        col("intra").as("intra_before"),
-        col("sds").as("sum_deg_sq_before"),
-        (col("intra").cast("double") / col("m") -
-          col("sds").cast("double") / (lit(4.0) * col("m") * col("m")))
-          .as("modularity_before"),
-        col("__ia").as("intra_after"),
-        col("__sa").as("sum_deg_sq_after"),
-        (col("__ia").cast("double") / col("m") -
-          col("__sa").cast("double") / (lit(4.0) * col("m") * col("m")))
-          .as("modularity_after"))
-      .pin()
+    bestMoveReport(cand,
+      weightedModularity(w, "a", "b", "wt", lab, "__n", "__l")
+        .select(col("m"), col("intra"), col("sum_deg_sq").as("sds")))
   }
 
   /** Move-phase candidate generation — the AGGREGATE-FIRST fused shape
@@ -482,7 +454,7 @@ object Louvain {
     * (gain DESC, c ASC) rule, which preserves the global
     * (gain DESC, node ASC, c ASC) argmax every consumer takes.
     */
-  private def weightedGains(
+  private[graft] def weightedGains(
       und: DataFrame, deg: DataFrame, lab: DataFrame, m: Long): DataFrame =
     weightedGainsAggFirst(und, deg, lab, m)
 
@@ -549,13 +521,6 @@ object Louvain {
         Seq("node"))
     fusedArgmaxTail(rows, cd, m)
   }
-
-  /** Test-only window into the fused path (the spec cannot see the
-    * private production method).
-    */
-  private[graft] def weightedGainsTest(
-      und: DataFrame, deg: DataFrame, lab: DataFrame, m: Long): DataFrame =
-    weightedGains(und, deg, lab, m)
 
   /** The UNFUSED all-candidates frame (two hash aggregates + the k_iA
     * self-join + the five-join decoration): one row per (node,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,6 +41,18 @@ object MlEval {
     df.filter(col(scoreCol).isNotNull && !isnan(col(scoreCol).cast("double")) &&
       col(labelCol).cast("double").isin(0.0, 1.0))
 
+  /** Positive (`pc`) and negative (`nc`) counts per distinct score `s`
+    * (quantized to 6 decimals) of the well-formed rows, grouped under
+    * `keys` first.
+    */
+  private def perScoreCounts(
+      scored: DataFrame, labelCol: String, scoreCol: String, keys: Column*): DataFrame =
+    wellFormed(scored, labelCol, scoreCol)
+      .groupBy(keys :+ round(col(scoreCol).cast("double"), 6).as("s"): _*)
+      .agg(
+        sum(when(col(labelCol).cast("double") === 1.0, 1L).otherwise(0L)).as("pc"),
+        sum(when(col(labelCol).cast("double") === 1.0, 0L).otherwise(1L)).as("nc"))
+
   /** @param scored  frame with a 0/1 label column and a numeric score
     * @return one row: (n, n_pos, n_neg, auc, tp, fp, fn, tn, accuracy,
     *         precision, recall, f1, brier)
@@ -58,11 +70,7 @@ object MlEval {
     // output, which arrives pre-rounded), so the single-partition window
     // below is bounded at ≤10⁶+1 rows by construction — a caller passing
     // raw sigmoids no longer gets a corpus-sized window.
-    val perScore = wellFormed(scored, labelCol, scoreCol)
-      .groupBy(round(col(scoreCol).cast("double"), 6).as("s"))
-      .agg(
-        sum(when(col(labelCol).cast("double") === 1.0, 1L).otherwise(0L)).as("pc"),
-        sum(when(col(labelCol).cast("double") === 1.0, 0L).otherwise(1L)).as("nc"))
+    val perScore = perScoreCounts(scored, labelCol, scoreCol)
     // single-partition window over the DISTINCT-SCORE frame only
     val below = Window.orderBy("s")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -112,11 +120,7 @@ object MlEval {
       labelCol: String,
       scoreCol: String,
       threshold: Double = 0.5): DataFrame = {
-    val perScore = wellFormed(scored, labelCol, scoreCol)
-      .groupBy(col(sliceCol).as("slice"), round(col(scoreCol).cast("double"), 6).as("s"))
-      .agg(
-        sum(when(col(labelCol).cast("double") === 1.0, 1L).otherwise(0L)).as("pc"),
-        sum(when(col(labelCol).cast("double") === 1.0, 0L).otherwise(1L)).as("nc"))
+    val perScore = perScoreCounts(scored, labelCol, scoreCol, col(sliceCol).as("slice"))
     val below = Window.partitionBy("slice").orderBy("s")
       .rowsBetween(Window.unboundedPreceding, -1)
     val cum = perScore.withColumn(
@@ -167,11 +171,7 @@ object MlEval {
       scored: DataFrame,
       labelCol: String,
       scoreCol: String): DataFrame = {
-    val perScore = wellFormed(scored, labelCol, scoreCol)
-      .groupBy(round(col(scoreCol).cast("double"), 6).as("s"))
-      .agg(
-        sum(when(col(labelCol).cast("double") === 1.0, 1L).otherwise(0L)).as("pc"),
-        sum(when(col(labelCol).cast("double") === 1.0, 0L).otherwise(1L)).as("nc"))
+    val perScore = perScoreCounts(scored, labelCol, scoreCol)
     val fromTop = Window.orderBy(col("s").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val all = Window.rowsBetween(
@@ -211,11 +211,7 @@ object MlEval {
       scored: DataFrame,
       labelCol: String,
       scoreCol: String): DataFrame = {
-    val perScore = wellFormed(scored, labelCol, scoreCol)
-      .groupBy(round(col(scoreCol).cast("double"), 6).as("s"))
-      .agg(
-        sum(when(col(labelCol).cast("double") === 1.0, 1L).otherwise(0L)).as("pc"),
-        sum(when(col(labelCol).cast("double") === 1.0, 0L).otherwise(1L)).as("nc"))
+    val perScore = perScoreCounts(scored, labelCol, scoreCol)
     val fromTop = Window.orderBy(col("s").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     perScore

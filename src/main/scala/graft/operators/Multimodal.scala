@@ -683,35 +683,13 @@ object Multimodal {
     }
   }
 
-  /** REAL WAV PCM SAMPLE decode — the payload is no longer opaque: this
-    * reads the actual frames of the canonical-layout PCM file that
-    * [[decodeWavMeta]] validates and emits the per-channel content
-    * statistics an audio curation pass filters on (silent / clipped
-    * clips): `array<struct(channel, n_frames, rms, peak, n_clipped,
-    * clipping_rate)>`, one entry per channel, or NULL when the header is
-    * invalid or the data chunk is not at the canonical offset.
-    *
-    * Sample semantics follow the WAV spec: 8-bit PCM is UNSIGNED with a
-    * 128 center (v = byte − 128); 16/24/32-bit are SIGNED little-endian
-    * two's complement. A sample clips at the exact rail values
-    * 2^(bits−1)−1 / −2^(bits−1) (8-bit: byte 255 / 0). Everything up to
-    * the final divisions is exact integer arithmetic — Σv² folds through
-    * DECIMAL(38,0) (a 32-bit rail squared is 2^62; a long accumulator
-    * would wrap two samples in), peak is max|v|, clip count an integer —
-    * so `rms = sqrt(Σv²/n)` and `clipping_rate = clips/n` are
-    * engine-replayable to the bit, the q_m8 oracle discipline extended
-    * from headers to CONTENT.
-    *
-    * Scale contract: cost is O(frames·channels) per row with the frame
-    * loop as one codegen `aggregate` fold per channel — embarrassingly
-    * parallel, zero shuffle, zero UDF. The fold materializes a
-    * `sequence` of frame indices per row, so payloads must be bounded
-    * clips (the landing-zone shape — long recordings arrive pre-chunked);
-    * `maxFrames` caps the scan defensively (stats cover the first
-    * `maxFrames` frames, reported in `n_frames`) so one rogue
-    * hour-long file cannot allocate a 100M-slot array in an executor.
+  /** The canonical 44-byte PCM WAV header of `payload`, as one struct
+    * `(ch, bits, ba, bp, half, used)` to bind once per row (`used` = the
+    * frames to decode, capped at `maxFrames`), and whether the row has a
+    * valid header and at least one frame. Shared by [[wavSampleStats]]
+    * and [[wavZeroCrossings]].
     */
-  def wavSampleStats(payload: Column, maxFrames: Int = 1 << 20): Column = {
+  private def pcmHeader(payload: Column, maxFrames: Int): (Column, Column) = {
     val channels = le(payload, 23, 2)
     val bits = le(payload, 35, 2)
     val blockAlign = le(payload, 33, 2)
@@ -752,32 +730,70 @@ object Multimodal {
         typedlit(Map(8 -> 128L, 16 -> 32768L, 24 -> 8388608L, 32 -> 2147483648L)),
         bits.cast("int")).as("half"),
       used.as("used"))
+    (hdr, payload.isNotNull && headerOk && used >= 1L)
+  }
+
+  /** Sample `ch` of `frame` under the bound header `h`: one
+    * substring+hex+conv per SAMPLE (not per byte) — read big-endian and
+    * byte-swap arithmetically to little-endian; 8-bit is unsigned with a
+    * 128 center, wider depths signed two's complement.
+    */
+  private def pcmSample(payload: Column, h: Column, frame: Column, ch: Column): Column = {
+    val hBits = h.getField("bits")
+    val hHalf = h.getField("half")
+    val off = lit(45L) + frame * h.getField("ba") +
+      ch.cast("bigint") * h.getField("bp")
+    val be = conv(hex(substring(payload, off, h.getField("bp"))), 16, 10)
+      .cast("bigint")
+    val raw = when(hBits === 8L, be)
+      .when(hBits === 16L,
+        be.bitwiseAND(lit(255L)) * 256L + shiftright(be, 8))
+      .when(hBits === 24L,
+        be.bitwiseAND(lit(255L)) * 65536L +
+          shiftright(be, 8).bitwiseAND(lit(255L)) * 256L +
+          shiftright(be, 16))
+      .otherwise(
+        be.bitwiseAND(lit(255L)) * 16777216L +
+          shiftright(be, 8).bitwiseAND(lit(255L)) * 65536L +
+          shiftright(be, 16).bitwiseAND(lit(255L)) * 256L +
+          shiftright(be, 24))
+    when(hBits === 8L, raw - 128L)
+      .otherwise(when(raw >= hHalf, raw - hHalf * 2L).otherwise(raw))
+  }
+
+  /** REAL WAV PCM SAMPLE decode — the payload is no longer opaque: this
+    * reads the actual frames of the canonical-layout PCM file that
+    * [[decodeWavMeta]] validates and emits the per-channel content
+    * statistics an audio curation pass filters on (silent / clipped
+    * clips): `array<struct(channel, n_frames, rms, peak, n_clipped,
+    * clipping_rate)>`, one entry per channel, or NULL when the header is
+    * invalid or the data chunk is not at the canonical offset.
+    *
+    * Sample semantics follow the WAV spec: 8-bit PCM is UNSIGNED with a
+    * 128 center (v = byte − 128); 16/24/32-bit are SIGNED little-endian
+    * two's complement. A sample clips at the exact rail values
+    * 2^(bits−1)−1 / −2^(bits−1) (8-bit: byte 255 / 0). Everything up to
+    * the final divisions is exact integer arithmetic — Σv² folds through
+    * DECIMAL(38,0) (a 32-bit rail squared is 2^62; a long accumulator
+    * would wrap two samples in), peak is max|v|, clip count an integer —
+    * so `rms = sqrt(Σv²/n)` and `clipping_rate = clips/n` are
+    * engine-replayable to the bit, the q_m8 oracle discipline extended
+    * from headers to CONTENT.
+    *
+    * Scale contract: cost is O(frames·channels) per row with the frame
+    * loop as one codegen `aggregate` fold per channel — embarrassingly
+    * parallel, zero shuffle, zero UDF. The fold materializes a
+    * `sequence` of frame indices per row, so payloads must be bounded
+    * clips (the landing-zone shape — long recordings arrive pre-chunked);
+    * `maxFrames` caps the scan defensively (stats cover the first
+    * `maxFrames` frames, reported in `n_frames`) so one rogue
+    * hour-long file cannot allocate a 100M-slot array in an executor.
+    */
+  def wavSampleStats(payload: Column, maxFrames: Int = 1 << 20): Column = {
+    val (hdr, valid) = pcmHeader(payload, maxFrames)
     val perChannelBound = graft.functions.hof.bind(hdr) { h =>
-      val hBits = h.getField("bits")
       val hHalf = h.getField("half")
       val hUsed = h.getField("used")
-      // one substring+hex+conv per SAMPLE (not per byte): read the
-      // sample big-endian and byte-swap arithmetically to little-endian
-      def sampleAt(frame: Column, ch: Column): Column = {
-        val off = lit(45L) + frame * h.getField("ba") +
-          ch.cast("bigint") * h.getField("bp")
-        val be = conv(hex(substring(payload, off, h.getField("bp"))), 16, 10)
-          .cast("bigint")
-        val raw = when(hBits === 8L, be)
-          .when(hBits === 16L,
-            be.bitwiseAND(lit(255L)) * 256L + shiftright(be, 8))
-          .when(hBits === 24L,
-            be.bitwiseAND(lit(255L)) * 65536L +
-              shiftright(be, 8).bitwiseAND(lit(255L)) * 256L +
-              shiftright(be, 16))
-          .otherwise(
-            be.bitwiseAND(lit(255L)) * 16777216L +
-              shiftright(be, 8).bitwiseAND(lit(255L)) * 65536L +
-              shiftright(be, 16).bitwiseAND(lit(255L)) * 256L +
-              shiftright(be, 24))
-        when(hBits === 8L, raw - 128L)
-          .otherwise(when(raw >= hHalf, raw - hHalf * 2L).otherwise(raw))
-      }
       val zero = struct(
         lit(new java.math.BigDecimal(0)).cast("decimal(38,0)").as("sq"),
         lit(0L).as("peak"), lit(0L).as("clips"))
@@ -785,7 +801,7 @@ object Multimodal {
         // decode each sample ONCE into a value array; the stats fold then
         // touches only the lambda variable (three refs of a slot read,
         // not three re-decodes)
-        val vals = transform(sequence(lit(0L), hUsed - 1L), f => sampleAt(f, c))
+        val vals = transform(sequence(lit(0L), hUsed - 1L), f => pcmSample(payload, h, f, c))
         val folded = aggregate(
           vals,
           zero,
@@ -805,8 +821,7 @@ object Multimodal {
             .as("clipping_rate"))
       })
     }
-    when(payload.isNotNull && headerOk && used >= 1L, perChannelBound)
-      .otherwise(lit(null))
+    when(valid, perChannelBound).otherwise(lit(null))
   }
 
   /** Per-channel ZERO-CROSSING RATE and SILENCE statistics over real
@@ -833,65 +848,14 @@ object Multimodal {
       maxFrames: Int = 1 << 20,
       silenceDenom: Long = 1000L): Column = {
     require(silenceDenom >= 1L, "silenceDenom must be positive")
-    val channels = le(payload, 23, 2)
-    val bits = le(payload, 35, 2)
-    val blockAlign = le(payload, 33, 2)
-    val byteRate = le(payload, 29, 4)
-    val sampleRate = le(payload, 25, 4)
-    val consistent = blockAlign === channels * (bits / 8L) &&
-      byteRate === sampleRate * blockAlign
-    val headerOk = length(payload) >= 44 &&
-      hex(substring(payload, 1, 4)) === lit("52494646") &&
-      hex(substring(payload, 9, 4)) === lit("57415645") &&
-      hex(substring(payload, 13, 4)) === lit("666D7420") &&
-      le(payload, 17, 4) === 16L && le(payload, 21, 2) === 1L &&
-      channels >= 1L && sampleRate >= 1L && bits.isin(8L, 16L, 24L, 32L) &&
-      consistent &&
-      hex(substring(payload, 37, 4)) === lit("64617461")
-    val dataSize = least(le(payload, 41, 4), length(payload).cast("bigint") - 44L)
-    val nFrames = when(blockAlign >= 1L,
-      floor(dataSize / blockAlign).cast("bigint")).otherwise(lit(0L))
-    // least() SKIPS nulls (the q_m23 lesson): a 34-43-byte payload has a
-    // readable blockAlign but a NULL dataSize -> nFrames NULL -> an
-    // unguarded least() returns the CAP and the fold runs maxFrames
-    // no-op steps per malformed row
-    val used = when(nFrames.isNotNull, least(nFrames, lit(maxFrames.toLong)))
-      .otherwise(lit(0L))
-    val hdr = struct(
-      channels.as("ch"), bits.as("bits"), blockAlign.as("ba"),
-      (bits / 8L).cast("bigint").as("bp"),
-      element_at(
-        typedlit(Map(8 -> 128L, 16 -> 32768L, 24 -> 8388608L, 32 -> 2147483648L)),
-        bits.cast("int")).as("half"),
-      used.as("used"))
+    val (hdr, valid) = pcmHeader(payload, maxFrames)
     val perChannelBound = graft.functions.hof.bind(hdr) { h =>
-      val hBits = h.getField("bits")
       val hHalf = h.getField("half")
       val hUsed = h.getField("used")
       val thr = floor(hHalf / lit(silenceDenom)).cast("bigint")
-      def sampleAt(frame: Column, ch: Column): Column = {
-        val off = lit(45L) + frame * h.getField("ba") +
-          ch.cast("bigint") * h.getField("bp")
-        val be = conv(hex(substring(payload, off, h.getField("bp"))), 16, 10)
-          .cast("bigint")
-        val raw = when(hBits === 8L, be)
-          .when(hBits === 16L,
-            be.bitwiseAND(lit(255L)) * 256L + shiftright(be, 8))
-          .when(hBits === 24L,
-            be.bitwiseAND(lit(255L)) * 65536L +
-              shiftright(be, 8).bitwiseAND(lit(255L)) * 256L +
-              shiftright(be, 16))
-          .otherwise(
-            be.bitwiseAND(lit(255L)) * 16777216L +
-              shiftright(be, 8).bitwiseAND(lit(255L)) * 65536L +
-              shiftright(be, 16).bitwiseAND(lit(255L)) * 256L +
-              shiftright(be, 24))
-        when(hBits === 8L, raw - 128L)
-          .otherwise(when(raw >= hHalf, raw - hHalf * 2L).otherwise(raw))
-      }
       transform(sequence(lit(0), (h.getField("ch") - 1L).cast("int")), c =>
         graft.functions.hof.bind(
-          transform(sequence(lit(0L), hUsed - 1L), f => sampleAt(f, c))) { vals =>
+          transform(sequence(lit(0L), hUsed - 1L), f => pcmSample(payload, h, f, c))) { vals =>
           val folded = aggregate(
             sequence(lit(1L), hUsed),
             struct(lit(0L).as("zc"), lit(0L).as("sil")),
@@ -919,8 +883,34 @@ object Multimodal {
               .as("silence_rate"))
         })
     }
-    when(payload.isNotNull && headerOk && used >= 1L, perChannelBound)
-      .otherwise(lit(null))
+    when(valid, perChannelBound).otherwise(lit(null))
+  }
+
+  /** The header of a 24-bpp uncompressed BMP: `(dataOffset, w, h,
+    * topDown, stride, ok)` — `h` is the absolute height (a negative
+    * stored height means top-down rows), `stride` the 4-byte-padded row
+    * length, and `ok` whether the header is valid and the payload holds
+    * every row.
+    */
+  private def bmp24Header(payload: Column): (Column, Column, Column, Column, Column, Column) = {
+    val sigOk = hex(substring(payload, 1, 2)) === lit("424D")
+    val dataOffset = le(payload, 11, 4)
+    val dibSize = le(payload, 15, 4)
+    val w = le(payload, 19, 4)
+    val hRaw = le(payload, 23, 4)
+    val hNeg = hRaw >= lit(2147483648L)
+    val h = when(hNeg, lit(4294967296L) - hRaw).otherwise(hRaw)
+    val bpp = le(payload, 29, 2)
+    val stride = floor((w * 3L + 3L) / 4L).cast("bigint") * 4L
+    val headerOk = length(payload) >= 30 && sigOk && dibSize >= 40L &&
+      w >= 1L && w <= Int.MaxValue.toLong && h >= 1L && h <= Int.MaxValue.toLong &&
+      bpp === 24L &&
+      // DOUBLE comparison: h·stride for an absurd-but-in-range corrupt
+      // header (w=h=2^31−1) overflows ANSI bigint multiply; the double
+      // form is overflow-free and exact for every real file size
+      length(payload).cast("double") >=
+        dataOffset.cast("double") + h.cast("double") * stride.cast("double")
+    (dataOffset, w, h, hNeg, stride, headerOk)
   }
 
   /** REAL BMP PIXEL decode — per-channel content statistics over the
@@ -947,23 +937,7 @@ object Multimodal {
     * order, reported in `n_pixels`).
     */
   def bmpPixelStats(payload: Column, maxPixels: Int = 1 << 22): Column = {
-    val sigOk = hex(substring(payload, 1, 2)) === lit("424D")
-    val dataOffset = le(payload, 11, 4)
-    val dibSize = le(payload, 15, 4)
-    val w = le(payload, 19, 4)
-    val hRaw = le(payload, 23, 4)
-    val hNeg = hRaw >= lit(2147483648L)
-    val h = when(hNeg, lit(4294967296L) - hRaw).otherwise(hRaw)
-    val bpp = le(payload, 29, 2)
-    val stride = floor((w * 3L + 3L) / 4L).cast("bigint") * 4L
-    val headerOk = length(payload) >= 30 && sigOk && dibSize >= 40L &&
-      w >= 1L && w <= Int.MaxValue.toLong && h >= 1L && h <= Int.MaxValue.toLong &&
-      bpp === 24L &&
-      // DOUBLE comparison: h·stride for an absurd-but-in-range corrupt
-      // header (w=h=2^31−1) overflows ANSI bigint multiply; the double
-      // form is overflow-free and exact for every real file size
-      length(payload).cast("double") >=
-        dataOffset.cast("double") + h.cast("double") * stride.cast("double")
+    val (dataOffset, w, h, _, stride, headerOk) = bmp24Header(payload)
     // null-guarded (the q_m23 least()-null lesson): a <22-byte payload
     // has NULL dims and least() would size the fold at the cap
     val nPix = when(w.isNotNull && h.isNotNull,
@@ -1050,20 +1024,7 @@ object Multimodal {
     * `signatureOf` for banded image near-dup joins.
     */
   def bmpAHash(payload: Column): Column = {
-    val sigOk = hex(substring(payload, 1, 2)) === lit("424D")
-    val dataOffset = le(payload, 11, 4)
-    val dibSize = le(payload, 15, 4)
-    val w = le(payload, 19, 4)
-    val hRaw = le(payload, 23, 4)
-    val hNeg = hRaw >= lit(2147483648L)
-    val h = when(hNeg, lit(4294967296L) - hRaw).otherwise(hRaw)
-    val bpp = le(payload, 29, 2)
-    val stride = floor((w * 3L + 3L) / 4L).cast("bigint") * 4L
-    val headerOk = length(payload) >= 30 && sigOk && dibSize >= 40L &&
-      w >= 1L && w <= Int.MaxValue.toLong && h >= 1L && h <= Int.MaxValue.toLong &&
-      bpp === 24L &&
-      length(payload).cast("double") >=
-        dataOffset.cast("double") + h.cast("double") * stride.cast("double")
+    val (dataOffset, w, h, hNeg, stride, headerOk) = bmp24Header(payload)
     val geo = struct(
       dataOffset.as("off"), w.as("w"), h.as("h"), stride.as("stride"),
       hNeg.as("topdown"))

@@ -44,6 +44,19 @@ object NearDup {
       col(idCol),
       explode(array_distinct(TextAnalysis.tokenShingles(col(textCol), k))).as("__s"))
 
+  /** [[explodedShingles]] without the shingles occurring in more than
+    * `maxDocFreq` docs (0 = no cap).
+    */
+  private def cappedShingles(
+      docs: DataFrame, idCol: String, textCol: String, k: Int, maxDocFreq: Long): DataFrame = {
+    val sh0 = explodedShingles(docs, idCol, textCol, k)
+    if (maxDocFreq <= 0) sh0
+    else {
+      val hot = sh0.groupBy("__s").count().filter(col("count") > maxDocFreq).select("__s")
+      sh0.join(hot, Seq("__s"), "left_anti")
+    }
+  }
+
   /** Exact n-gram Jaccard similar pairs via inverted index: docs sharing
     * ≥1 shingle are candidates; exact Jaccard from intersection counts +
     * per-doc set sizes (no second pass over text).
@@ -60,13 +73,7 @@ object NearDup {
       k: Int = 3,
       threshold: Double = 0.8,
       maxDocFreq: Long = 0L): DataFrame = {
-    val sh0 = explodedShingles(docs, idCol, textCol, k)
-    val sh =
-      if (maxDocFreq <= 0) sh0
-      else {
-        val hot = sh0.groupBy("__s").count().filter(col("count") > maxDocFreq).select("__s")
-        sh0.join(hot, Seq("__s"), "left_anti")
-      }
+    val sh = cappedShingles(docs, idCol, textCol, k, maxDocFreq)
     // sizes over the SAME (possibly capped) shingle space, so the Jaccard
     // is consistent: with a cap it is the exact Jaccard of the capped sets.
     // (Name-based selects, not positional toDF: the anti-join above moves
@@ -111,13 +118,7 @@ object NearDup {
       threshold: Double = 0.5,
       maxDocFreq: Long = 0L): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
-    val sh0 = explodedShingles(docs, idCol, textCol, k)
-    val sh =
-      if (maxDocFreq <= 0) sh0
-      else {
-        val hot = sh0.groupBy("__s").count().filter(col("count") > maxDocFreq).select("__s")
-        sh0.join(hot, Seq("__s"), "left_anti")
-      }
+    val sh = cappedShingles(docs, idCol, textCol, k, maxDocFreq)
     val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("__n"))
     val a = sh.select(col(idCol).as("id_a"), col("__s").as("__sa"))
     val b = sh.select(col(idCol).as("id_b"), col("__s").as("__sb"))

@@ -21,6 +21,32 @@ import graft.RunScope.Pinning
   */
 object PageRank {
 
+  /** `(outW, trans)`: each source's total out-weight and the
+    * row-normalized transition probabilities `(src, dst, p)`.
+    */
+  private def transitions(e: DataFrame): (DataFrame, DataFrame) = {
+    val outW = e.groupBy("src").agg(sum("weight").as("out_w"))
+    val trans = e
+      .join(outW, "src")
+      .select(col("src"), col("dst"), (col("weight") / col("out_w")).as("p"))
+    (outW, trans)
+  }
+
+  /** One power step's inputs: `(inSum, dangling)` — each node's
+    * probability inflow `in_sum` under `rank`, and the one-row rank mass
+    * `dm` on nodes without out-edges.
+    */
+  private def inflow(trans: DataFrame, outW: DataFrame, rank: DataFrame): (DataFrame, DataFrame) = {
+    val inSum = trans
+      .join(rank.select(col("node").as("src"), col("rank")), "src")
+      .groupBy(col("dst").as("node"))
+      .agg(sum(col("p") * col("rank")).as("in_sum"))
+    val dangling = rank
+      .join(outW.select(col("src").as("node")), Seq("node"), "left_anti")
+      .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
+    (inSum, dangling)
+  }
+
   /** `edges`: (src, dst, weight). Nodes are the union of endpoints.
     * Output: node, rank (ranks sum to 1).
     *
@@ -40,23 +66,13 @@ object PageRank {
       .union(e.select(col("dst").as("node")))
       .distinct()
     val nn = nodes.agg(count(lit(1)).cast("double").as("n"))
-    val outW = e.groupBy("src").agg(sum("weight").as("out_w"))
-    // row-normalized transition probabilities
-    val trans = e
-      .join(outW, "src")
-      .select(col("src"), col("dst"), (col("weight") / col("out_w")).as("p"))
+    val (outW, trans) = transitions(e)
 
     var rank = nodes.crossJoin(broadcast(nn))
       .select(col("node"), (lit(1.0) / col("n")).as("rank"))
     var rankCkpt: DataFrame = null
     for (it <- 1 to iterations) {
-      val inSum = trans
-        .join(rank.select(col("node").as("src"), col("rank")), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("p") * col("rank")).as("in_sum"))
-      val dangling = rank
-        .join(outW.select(col("src").as("node")), Seq("node"), "left_anti")
-        .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
+      val (inSum, dangling) = inflow(trans, outW, rank)
       rank = nodes
         .crossJoin(broadcast(nn))
         .join(inSum, Seq("node"), "left")
@@ -109,21 +125,12 @@ object PageRank {
       .distinct()
     def tele = when(col("node").isin(seeds: _*), lit(1.0 / seeds.size))
       .otherwise(lit(0.0))
-    val outW = e.groupBy("src").agg(sum("weight").as("out_w"))
-    val trans = e
-      .join(outW, "src")
-      .select(col("src"), col("dst"), (col("weight") / col("out_w")).as("p"))
+    val (outW, trans) = transitions(e)
 
     var rank = nodes.select(col("node"), tele.as("rank"))
     var rankCkpt: DataFrame = null
     for (it <- 1 to iterations) {
-      val inSum = trans
-        .join(rank.select(col("node").as("src"), col("rank")), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("p") * col("rank")).as("in_sum"))
-      val dangling = rank
-        .join(outW.select(col("src").as("node")), Seq("node"), "left_anti")
-        .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
+      val (inSum, dangling) = inflow(trans, outW, rank)
       rank = nodes
         .join(inSum, Seq("node"), "left")
         .crossJoin(broadcast(dangling))

@@ -39,6 +39,28 @@ object RandomWalks {
 
   private val P = 1000000007L
 
+  /** The undirected graph of `edges` (self-loops dropped) as pinned
+    * `adj` `(node, nbr, r)` — `r` the neighbour's 0-based rank in nbr
+    * order, probed every walk step — and `deg` `(node, deg)`.
+    */
+  private def adjacency(edges: DataFrame, aCol: String, bCol: String): (DataFrame, DataFrame) = {
+    val und = edges
+      .filter(col(aCol) =!= col(bCol))
+      .select(col(aCol).cast("bigint").as("node"), col(bCol).cast("bigint").as("nbr"))
+      .unionByName(edges
+        .filter(col(aCol) =!= col(bCol))
+        .select(col(bCol).cast("bigint").as("node"), col(aCol).cast("bigint").as("nbr")))
+      .distinct()
+    val adj = und
+      .select(col("node"), col("nbr"),
+        (row_number().over(Window.partitionBy("node").orderBy("nbr")) - 1)
+          .cast("bigint").as("r"))
+      .pin()
+    val deg = adj.groupBy("node").agg(count(lit(1)).cast("bigint").as("deg"))
+      .pin()
+    (adj, deg)
+  }
+
   /** One row per visited position: `(walk_id, start, step, node)` with
     * step 0 = the start node itself, `walk_id = start·walksPerNode + g`.
     * Isolated nodes cannot occur (nodes derive from the edge list);
@@ -53,20 +75,7 @@ object RandomWalks {
       seed: Long): DataFrame = RunScope.scope("RandomWalks.deepWalk") {
     require(walksPerNode >= 1, "need at least one walk per node")
     require(walkLength >= 1, "need at least one step")
-    val und = edges
-      .filter(col(aCol) =!= col(bCol))
-      .select(col(aCol).cast("bigint").as("node"), col(bCol).cast("bigint").as("nbr"))
-      .unionByName(edges
-        .filter(col(aCol) =!= col(bCol))
-        .select(col(bCol).cast("bigint").as("node"), col(aCol).cast("bigint").as("nbr")))
-      .distinct()
-    val adj = und
-      .select(col("node"), col("nbr"),
-        (row_number().over(Window.partitionBy("node").orderBy("nbr")) - 1)
-          .cast("bigint").as("r"))
-      .pin() // probed every step; built once
-    val deg = adj.groupBy("node").agg(count(lit(1)).cast("bigint").as("deg"))
-      .pin()
+    val (adj, deg) = adjacency(edges, aCol, bCol)
 
     var st = deg
       .select(col("node").as("start"),
@@ -144,20 +153,7 @@ object RandomWalks {
     // (a zero-mass set would leave the modular pick undefined)
     require(wReturn >= 0 && wNear >= 0 && wFar >= 1,
       "need wReturn, wNear >= 0 and wFar >= 1")
-    val und = edges
-      .filter(col(aCol) =!= col(bCol))
-      .select(col(aCol).cast("bigint").as("node"), col(bCol).cast("bigint").as("nbr"))
-      .unionByName(edges
-        .filter(col(aCol) =!= col(bCol))
-        .select(col(bCol).cast("bigint").as("node"), col(aCol).cast("bigint").as("nbr")))
-      .distinct()
-    val adj = und
-      .select(col("node"), col("nbr"),
-        (row_number().over(Window.partitionBy("node").orderBy("nbr")) - 1)
-          .cast("bigint").as("r"))
-      .pin()
-    val deg = adj.groupBy("node").agg(count(lit(1)).cast("bigint").as("deg"))
-      .pin()
+    val (adj, deg) = adjacency(edges, aCol, bCol)
     val degR = deg.select(col("node").as("__dn"), col("deg").as("__deg"))
     val adjR = adj.select(
       col("node").as("__an"), col("nbr").as("__anbr"), col("r").as("__ar"))

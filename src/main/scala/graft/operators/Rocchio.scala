@@ -67,54 +67,18 @@ object Rocchio {
 
     // rescore: the Bm25.score shape with the isin literal replaced by a
     // broadcast join against the weighted term frame
-    val stats = toks
-      .select(size(col("__tk")).cast("double").as("dl"))
-      .agg(
-        count(lit(1)).cast("double").as("n_docs"),
-        (sum("dl") / count(lit(1))).as("avgdl"))
+    val stats = Bm25.corpusStats(toks)
     val tf = toks
       .select(col(idCol), size(col("__tk")).cast("double").as("dl"),
         explode(col("__tk")).as("term"))
       .join(broadcast(weights), Seq("term"))
       .groupBy(col(idCol), col("dl"), col("term"), col("__w"))
       .agg(count(lit(1)).cast("double").as("tf"))
-    val df = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val idf = log(lit(1) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val tfNorm = col("tf") * lit(k1 + 1) /
-      (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
-    tf
-      .join(broadcast(df), "term")
-      .crossJoin(broadcast(stats))
+    Bm25.withStats(tf, stats)
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).cast("int").as("n_terms_matched"),
-        round(sum(col("__w") * idf * tfNorm), 6).as("rocchio"))
-  }
-
-  /** The E expansion terms with their counts — the evidence frame a
-    * caller inspects before trusting the expanded query.
-    */
-  def expansionTerms(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      queryTerms: Seq[String],
-      topR: Int = 10,
-      expandE: Int = 5,
-      k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    val base = Bm25.score(docs, idCol, textCol, queryTerms, k1, b)
-    val topDocs = base
-      .orderBy(round(col("bm25"), 6).desc, col(idCol).asc)
-      .limit(topR)
-      .select(col(idCol))
-    docs.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__tk"))
-      .join(broadcast(topDocs), Seq(idCol), "left_semi")
-      .select(explode(col("__tk")).as("term"))
-      .where(!col("term").isin(queryTerms: _*))
-      .groupBy("term").agg(count(lit(1)).cast("bigint").as("tf_in_top"))
-      .orderBy(col("tf_in_top").desc, col("term").asc)
-      .limit(expandE)
+        round(sum(col("__w") * Bm25.idf * Bm25.tfNorm(k1, b)), 6).as("rocchio"))
   }
 
   /** Literal query-term frame builder (spark-session-derived so the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -67,22 +67,5 @@ object Scd2 {
       .drop("valid_from", "valid_to", "is_current")
     history(replay.unionByName(changes), keyCols, tsCol, tieBreak)
       .unionByName(untouched)
-  }
-
-  /** The state of the dimension as of `at`: for each key, the latest
-    * change at or before the instant (same `tieBreak` order as
-    * [[history]], so a zero-length interval resolves to the later change)
-    * — one ranked window over the interval frame, no join.
-    */
-  def snapshotAt(
-      hist: DataFrame, keyCols: Seq[String], tieBreak: String, at: Column): DataFrame = {
-    val w = Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col("valid_from").desc, col(tieBreak).desc)
-    hist
-      .filter(col("valid_from") <= at)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
   }
 }

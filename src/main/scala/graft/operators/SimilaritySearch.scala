@@ -101,30 +101,6 @@ object SimilaritySearch {
         (col("pos") + 1).as("rank"))
   }
 
-  /** Window-function top-k, kept as the cross-check reference for
-    * [[topKPerKey]] (spec-asserted equal, including the null/NaN-score
-    * exclusion). Two-phase: phase 1 prunes to k rows per
-    * (key, input-partition); phase 2 ranks the survivors. Still sorts
-    * candidates within partitions — the aggregate form replaces it.
-    */
-  def topKPerKeyWindow(scored: DataFrame, keyCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byPart = Window
-      .partitionBy(col(keyCol), spark_partition_id())
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val pruned = scored
-      .filter(col("cosine").isNotNull && !isnan(col("cosine")))
-      .withColumn("__pr", row_number().over(byPart))
-      .filter(col("__pr") <= k)
-      .drop("__pr")
-    val global = Window
-      .partitionBy(col(keyCol))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    pruned
-      .withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= k)
-  }
-
   /** Spherical k-means centroids over a deterministic hash-ordered sample
     * of the corpus: init = first `k` sample vectors (the previous
     * hash-sample behavior), then `iters` Lloyd rounds of cosine assignment
@@ -339,13 +315,29 @@ object SimilaritySearch {
       Vectors.norm(col(vecCol)).as("__cn"))
   }
 
+  /** The top `k` of each query's candidates `(query_id, neighbor_id)`
+    * re-ranked by exact cosine against the raw vectors.
+    */
+  private def exactRerank(
+      cand: DataFrame, corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      k: Int): DataFrame = {
+    val rescored = cand.select("query_id", "neighbor_id")
+      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv")),
+        "neighbor_id")
+      .join(
+        broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))),
+        "query_id")
+      .select(col("query_id"), col("neighbor_id"),
+        Vectors.cosine(col("__qv"), col("__cv")).as("cosine"))
+    topKPerKey(rescored, "query_id", k)
+  }
+
   /** ADC candidate generation + exact re-rank over an already-encoded
     * corpus: each query precomputes its `m × ksub` dot-product lookup
     * table ONCE in the query-side projection, per (query, vector) scoring
     * is `m` table lookups + adds, and the top `nCand` ADC candidates are
     * re-ranked by exact cosine against `corpus` (only nCand rows per query
-    * are ever joined back to raw vectors). Shared by [[pqTopK]] (fresh
-    * fit) and [[AnnIndex.pqTopKPersisted]] (reloaded fit).
+    * are ever joined back to raw vectors). Used by [[pqTopK]].
     */
   private[operators] def pqAdcRerank(
       encoded: DataFrame,
@@ -375,16 +367,7 @@ object SimilaritySearch {
       encoded.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"), adcScore.as("cosine")),
       "query_id", nCand)
-    // exact re-rank of the ADC candidates
-    val rescored = cand.select("query_id", "neighbor_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv")),
-        "neighbor_id")
-      .join(
-        broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))),
-        "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        Vectors.cosine(col("__qv"), col("__cv")).as("cosine"))
-    topKPerKey(rescored, "query_id", k)
+    exactRerank(cand, corpus, queries, idCol, vecCol, k)
   }
 
   def pqTopK(
@@ -436,43 +419,7 @@ object SimilaritySearch {
         .select(col("query_id"), col("neighbor_id"),
           Vectors.cosine(floats(col("__qc")), floats(col("__cc"))).as("cosine")),
       "query_id", nCand)
-    val rescored = cand.select("query_id", "neighbor_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv")),
-        "neighbor_id")
-      .join(
-        broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))),
-        "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        Vectors.cosine(col("__qv"), col("__cv")).as("cosine"))
-    topKPerKey(rescored, "query_id", k)
-  }
-
-  /** Cell-population histogram of a fitted IVF index: `(cell, n_rows,
-    * share)`, one row per NON-EMPTY Voronoi cell. The balance guard for
-    * [[ivfTopK]]: probe cost is the population of the `nprobe` chosen
-    * cells, so a hot cell at share s makes worst-case query cost s·|corpus|
-    * instead of nprobe/numCentroids·|corpus| — at 100 TB an unbalanced fit
-    * (bad sample, collapsed k-means cells) silently turns the index back
-    * into brute force. Emit this next to any fitted index and alert when
-    * `max(share)` crosses a few multiples of 1/numCentroids; re-fit with a
-    * larger sample / more iterations (or split the hot cell's vectors over
-    * a sub-index) before serving. One scan + one tiny aggregate.
-    */
-  def ivfCellHistogram(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      numCentroids: Int = 16,
-      kmeansIters: Int = 3): DataFrame = {
-    val centroids = kmeansCentroids(corpus, idCol, vecCol, numCentroids, iters = kmeansIters)
-    val cLits = centroids.map(c => typedlit(c))
-    val assigned = graft.Tables.spread(corpus).select(
-      element_at(bestCellsOf(cLits)(col(vecCol), 1), 1).getField("cell").as("cell"))
-    val counts = assigned.groupBy("cell").agg(count(lit(1)).as("n_rows"))
-    val total = counts.agg(sum("n_rows").as("__total"))
-    counts.crossJoin(broadcast(total))
-      .select(col("cell"), col("n_rows"),
-        (col("n_rows").cast("double") / col("__total")).as("share"))
+    exactRerank(cand, corpus, queries, idCol, vecCol, k)
   }
 
   /** All corpus pairs with cosine ≥ threshold (embedding near-dup).

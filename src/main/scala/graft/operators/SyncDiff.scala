@@ -19,14 +19,14 @@ object SyncDiff {
 
   final case class SyncPlan(upserts: DataFrame, deletes: DataFrame)
 
+  /** Invariant: delete keys ∪ source keys ⊇ target keys, and delete keys
+    * ∩ source keys = ∅ (checked by the `SyncDiffSpec` property "delete∩source=∅
+    * and target ⊆ source∪deletes (key-space partition)" in DedupSpec.scala).
+    */
   def plan(source: DataFrame, target: DataFrame, keyCols: Seq[String]): SyncPlan = {
     val deletes = target.join(source.select(keyCols.head, keyCols.tail: _*), keyCols, "left_anti")
     SyncPlan(upserts = source, deletes = deletes)
   }
-
-  /** Invariant (property-tested): delete keys ∪ source keys ⊇ target keys,
-    * and delete keys ∩ source keys = ∅.
-    */
 
   /** Apply a CDC change batch to a snapshot — the MERGE INTO shape:
     * rows of `changes` with `opCol` = "D" delete their key from the

@@ -28,6 +28,27 @@ import graft.functions.{Hashing, TextAnalysis}
   */
 object TextIndex {
 
+  /** Tokenizes `docs` once (persisted, returned as `(doc_id, __tk)`) and
+    * writes its postings `(doc_id, dl, term, tf)` partitioned by term
+    * bucket under `path/postings` in save `mode`.
+    */
+  private def writePostings(
+      docs: DataFrame, idCol: String, textCol: String, path: String, numBuckets: Int,
+      mode: String): DataFrame = {
+    val toks = graft.Tables.spread(docs).select(
+      col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__tk"))
+      .pin(RunScope.Persist)
+    toks
+      .select(
+        col("doc_id"), size(col("__tk")).cast("double").as("dl"),
+        explode(col("__tk")).as("term"))
+      .groupBy(col("doc_id"), col("dl"), col("term"))
+      .agg(count(lit(1)).cast("double").as("tf"))
+      .withColumn("bucket", pmod(Hashing.md5Hash60(col("term")), lit(numBuckets.toLong)))
+      .write.mode(mode).partitionBy("bucket").parquet(s"$path/postings")
+    toks
+  }
+
   /** JVM twin of [[Hashing.md5Hash60]] for driver-side bucket routing of
     * literal query terms (first 15 hex chars of md5, parsed base-16).
     */
@@ -51,17 +72,7 @@ object TextIndex {
     // postings: an empty doc has no postings rows but still counts
     // toward n_docs/avgdl). MEMORY_AND_DISK so a 100 TB build spills
     // rather than OOMs.
-    val toks = graft.Tables.spread(docs).select(
-      col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__tk"))
-      .pin(RunScope.Persist)
-    toks
-      .select(
-        col("doc_id"), size(col("__tk")).cast("double").as("dl"),
-        explode(col("__tk")).as("term"))
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-      .withColumn("bucket", pmod(Hashing.md5Hash60(col("term")), lit(numBuckets.toLong)))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/postings")
+    val toks = writePostings(docs, idCol, textCol, path, numBuckets, "overwrite")
     // sum_dl rides along for exact incremental folds ([[appendBatch]]):
     // dl is an integer-valued double, so sums are exact in IEEE double
     // and fold associatively; reconstructing the sum from n·avgdl
@@ -108,17 +119,7 @@ object TextIndex {
       case other => throw new IllegalStateException(
         s"TextIndex.appendBatch: stats at $path/stats must be one row, got ${other.length}")
     }
-    val toks = graft.Tables.spread(docs).select(
-      col(idCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("__tk"))
-      .pin(RunScope.Persist)
-    toks
-      .select(
-        col("doc_id"), size(col("__tk")).cast("double").as("dl"),
-        explode(col("__tk")).as("term"))
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-      .withColumn("bucket", pmod(Hashing.md5Hash60(col("term")), lit(numBuckets.toLong)))
-      .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
+    val toks = writePostings(docs, idCol, textCol, path, numBuckets, "append")
     val delta = toks
       .select(size(col("__tk")).cast("double").as("dl"))
       .agg(count(lit(1)).cast("double"), coalesce(sum("dl"), lit(0.0)))

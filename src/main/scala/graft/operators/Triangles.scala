@@ -34,13 +34,7 @@ object Triangles {
     // materialize once: the canonical edge list feeds the degree count
     // AND the rank join — without this the caller's edge derivation
     // (often itself a join) runs twice
-    val canon = edges
-      .filter(col(srcCol) =!= col(dstCol))
-      .select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .distinct()
-      .pin()
+    val canon = GraphStats.canonicalEdges(edges, srcCol, dstCol).pin()
     val deg = canon.select(col("a").as("n")).unionAll(canon.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     // rank = (degree, id); orient edges rank-ascending

@@ -36,17 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object UrlOps {
 
-  /** Two-part public suffixes — LEGACY embedded subset kept only as
-    * documentation of the original boundary; the domain rule now rides
-    * the pinned PSL snapshot in [[PublicSuffix]] (version
-    * [[PublicSuffix.snapshotVersion]], r15 VERDICT task #4).
-    */
-  val twoPartSuffixes: Seq[String] = Seq(
-    "co\\.uk", "org\\.uk", "ac\\.uk", "gov\\.uk",
-    "com\\.au", "net\\.au", "org\\.au",
-    "co\\.jp", "ne\\.jp", "or\\.jp",
-    "com\\.br", "com\\.cn", "com\\.mx", "co\\.in", "co\\.nz", "co\\.za")
-
   private val trackingParam = "(?:utm_[A-Za-z0-9_]*|gclid|fbclid|ref)"
 
   /** The fixed canonicalization chain. Tracking-param removal is three

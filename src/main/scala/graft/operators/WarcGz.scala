@@ -92,6 +92,30 @@ object WarcGz {
         parsed.as("recs"))
     }
 
+  /** `(file_id, w)`: each file's [[walk]] result. */
+  private def walked(
+      df: DataFrame, idCol: String, gzCol: String, maxMembers: Int,
+      maxRecordBytes: Int): DataFrame =
+    df.select(col(idCol).as("file_id"),
+      walk(col(gzCol), maxMembers, maxRecordBytes).as("w"))
+
+  /** One row per record of each valid file with the [[records]] columns,
+    * then `extra` (projections of the record struct `r`).
+    */
+  private def recordRows(
+      df: DataFrame, idCol: String, gzCol: String, maxMembers: Int,
+      maxRecordBytes: Int, extra: Column*): DataFrame =
+    walked(df, idCol, gzCol, maxMembers, maxRecordBytes)
+      .filter(col("w.valid"))
+      .select(col("file_id"), posexplode(col("w.recs")).as(Seq("rec_idx", "r")))
+      .select(Seq(col("file_id"), col("rec_idx").cast("int").as("rec_idx"),
+        col("r.warc_type").as("warc_type"),
+        col("r.record_id").as("record_id"),
+        col("r.target_uri").as("target_uri"),
+        col("r.warc_date").as("warc_date"),
+        col("r.content_length").as("content_length"),
+        col("r.payload_md5").as("payload_md5")) ++ extra: _*)
+
   /** One row per record of each VALID file: (file_id, rec_idx,
     * warc_type, record_id, target_uri, warc_date, content_length,
     * payload_md5). Invalid files contribute no rows — read
@@ -103,17 +127,7 @@ object WarcGz {
       gzCol: String,
       maxMembers: Int = 16,
       maxRecordBytes: Int = 1 << 24): DataFrame =
-    df.select(col(idCol).as("file_id"),
-      walk(col(gzCol), maxMembers, maxRecordBytes).as("w"))
-      .filter(col("w.valid"))
-      .select(col("file_id"), posexplode(col("w.recs")).as(Seq("rec_idx", "r")))
-      .select(col("file_id"), col("rec_idx").cast("int").as("rec_idx"),
-        col("r.warc_type").as("warc_type"),
-        col("r.record_id").as("record_id"),
-        col("r.target_uri").as("target_uri"),
-        col("r.warc_date").as("warc_date"),
-        col("r.content_length").as("content_length"),
-        col("r.payload_md5").as("payload_md5"))
+    recordRows(df, idCol, gzCol, maxMembers, maxRecordBytes)
 
   /** [[records]] plus the PAYLOAD TEXT itself (`payload_text`, the
     * lossless ISO-8859-1 view of the payload bytes) — the column the
@@ -128,18 +142,8 @@ object WarcGz {
       gzCol: String,
       maxMembers: Int = 16,
       maxRecordBytes: Int = 1 << 24): DataFrame =
-    df.select(col(idCol).as("file_id"),
-      walk(col(gzCol), maxMembers, maxRecordBytes).as("w"))
-      .filter(col("w.valid"))
-      .select(col("file_id"), posexplode(col("w.recs")).as(Seq("rec_idx", "r")))
-      .select(col("file_id"), col("rec_idx").cast("int").as("rec_idx"),
-        col("r.warc_type").as("warc_type"),
-        col("r.record_id").as("record_id"),
-        col("r.target_uri").as("target_uri"),
-        col("r.warc_date").as("warc_date"),
-        col("r.content_length").as("content_length"),
-        col("r.payload_md5").as("payload_md5"),
-        col("r.payload_text").as("payload_text"))
+    recordRows(df, idCol, gzCol, maxMembers, maxRecordBytes,
+      col("r.payload_text").as("payload_text"))
 
   /** Per-file ledger: (file_id, valid, n_records, total_payload). */
   def fileSummary(
@@ -148,8 +152,7 @@ object WarcGz {
       gzCol: String,
       maxMembers: Int = 16,
       maxRecordBytes: Int = 1 << 24): DataFrame =
-    df.select(col(idCol).as("file_id"),
-      walk(col(gzCol), maxMembers, maxRecordBytes).as("w"))
+    walked(df, idCol, gzCol, maxMembers, maxRecordBytes)
       .select(
         col("file_id"),
         col("w.valid").as("valid"),

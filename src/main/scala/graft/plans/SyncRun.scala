@@ -53,11 +53,13 @@ object SyncRun {
       min = Some(0), max = Some(1e6)),
     SchemaValidation.FieldRule("c_acctbal", min = Some(-1e9), max = Some(1e9)))
 
+  /** `reportPath` is the report file the run wrote, if it had a `reportDir`. */
   final case class Result(
       upserts: Long,
       deletes: Long,
       quarantined: Long,
-      report: FileSinks.RunReport)
+      report: FileSinks.RunReport,
+      reportPath: Option[String])
 
   /** Optional pre-sync entity resolution (the reference's identity problem:
     * the same student arriving under variant spellings across extracts,
@@ -214,8 +216,8 @@ object SyncRun {
       deleteCount = del.succeeded,
       errors = Seq(upErr, delErr).flatten,
       quarantineCount = nQuarantined)
-    reportDir.foreach(d =>
+    val reportPath = reportDir.map(d =>
       FileSinks.writeReport(report, d, started.toString.replaceAll("[:.]", "-")))
-    Result(up.succeeded, del.succeeded, nQuarantined, report)
+    Result(up.succeeded, del.succeeded, nQuarantined, report, reportPath)
   }
 }

@@ -208,14 +208,7 @@ object CurationQueries extends QueryGroup {
   private val qC8 = Q(
     "q_c8_leakage_safe_split",
     s"""WITH RECURSIVE pairs AS (${DedupQueries.pairsOracle}),
-       |edges AS (
-       |  SELECT id_a AS u, id_b AS v FROM pairs
-       |  UNION SELECT id_b, id_a FROM pairs),
-       |reach(u, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
-       |comp AS (SELECT u, min(lbl) AS cluster_id FROM reach GROUP BY u),
+       |${DedupQueries.pairsClosureSql},
        |clustered AS (
        |  SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
        |  FROM documents d LEFT JOIN comp c ON c.u = d.doc_id)
@@ -264,10 +257,8 @@ object CurationQueries extends QueryGroup {
   // gate, not just the counts.
   private val qC12 = Q(
     "q_c12_perplexity_buckets",
-    """WITH t AS (
-      |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
+    s"""WITH t AS (
+      |${TextQueries.docTokensSql}
       |terms AS (SELECT doc_id, unnest(tk) AS term FROM t),
       |counts AS (SELECT term, count(*) AS c FROM terms GROUP BY term),
       |totals AS (SELECT sum(c) AS tt, count(*) AS v FROM counts),
@@ -416,6 +407,24 @@ object CurationQueries extends QueryGroup {
        |wt0 AS (SELECT ${(0 until qcB).map(j => s"0.0 AS w$j").mkString(", ")},
        |               0.0 AS wl, 0.0 AS b),
        |$qcSteps""".stripMargin
+
+  /** Oracle fragment (margin text, after [[qcTrainCtes]]): the trained
+    * scores `sc`, the calibration split `cal` (doc_id % 5 = 0) and its
+    * split-conformal threshold `q.qhat` at coverage 0.9.
+    */
+  private[queries] val conformalThresholdSql =
+    s"""sc AS (SELECT f.doc_id, f.y,
+       |              round(1.0 / (1.0 + exp(-(${qcZ("wt3")}))), 6) AS score
+       |       FROM f CROSS JOIN wt3),
+       |cal AS (SELECT CASE WHEN y = 1.0 THEN 1.0 - score ELSE score END AS r,
+       |               score AS s, y
+       |        FROM sc WHERE doc_id % 5 = 0),
+       |nk AS (SELECT CAST(count(*) AS BIGINT) AS n_cal,
+       |              CAST(ceil((count(*) + 1) * 0.9) AS BIGINT) AS k FROM cal),
+       |cum AS (SELECT r, sum(c) OVER (ORDER BY r, s, y
+       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm
+       |        FROM (SELECT r, s, y, count(*) AS c FROM cal GROUP BY 1, 2, 3)),
+       |q AS (SELECT min(r) AS qhat FROM cum CROSS JOIN nk WHERE cm >= nk.k)"""
 
   /** Scala twin of [[qcTrainCtes]]: train on the corpus and return the
     * PINNED scored frame (doc_id, y, score, pred).
@@ -679,18 +688,7 @@ object CurationQueries extends QueryGroup {
   private val qC20 = Q(
     "q_c20_conformal_sets",
     s"""WITH $qcTrainCtes,
-       |sc AS (SELECT f.doc_id, f.y,
-       |              round(1.0 / (1.0 + exp(-(${qcZ("wt3")}))), 6) AS score
-       |       FROM f CROSS JOIN wt3),
-       |cal AS (SELECT CASE WHEN y = 1.0 THEN 1.0 - score ELSE score END AS r,
-       |               score AS s, y
-       |        FROM sc WHERE doc_id % 5 = 0),
-       |nk AS (SELECT CAST(count(*) AS BIGINT) AS n_cal,
-       |              CAST(ceil((count(*) + 1) * 0.9) AS BIGINT) AS k FROM cal),
-       |cum AS (SELECT r, sum(c) OVER (ORDER BY r, s, y
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm
-       |        FROM (SELECT r, s, y, count(*) AS c FROM cal GROUP BY 1, 2, 3)),
-       |q AS (SELECT min(r) AS qhat FROM cum CROSS JOIN nk WHERE cm >= nk.k),
+       |$conformalThresholdSql,
        |ev AS (SELECT y, score AS s FROM sc WHERE doc_id % 5 <> 0)
        |SELECT nk.n_cal, nk.k, q.qhat,
        |       CAST(count(*) AS BIGINT) AS n_eval,

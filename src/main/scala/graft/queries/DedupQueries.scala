@@ -12,6 +12,34 @@ import graft.RunScope.Pinning
   */
 object DedupQueries extends QueryGroup {
 
+  /** Oracle fragment (margin text, interpolated before stripMargin): the
+    * near-dup `pairs` closed into components — `comp` maps every paired
+    * doc to its cluster's minimum doc_id.
+    */
+  private[queries] val pairsClosureSql =
+    """edges AS (
+      |  SELECT id_a AS u, id_b AS v FROM pairs
+      |  UNION SELECT id_b, id_a FROM pairs),
+      |reach(u, lbl) AS (
+      |  SELECT u, u FROM edges
+      |  UNION
+      |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
+      |comp AS (SELECT u, min(lbl) AS cluster_id FROM reach GROUP BY u)"""
+
+  /** Body of a shingle CTE over `toks` (margin text): each doc's distinct
+    * token k-shingles; a doc shorter than k tokens contributes its whole
+    * text as its single shingle, as TextAnalysis.tokenShingles does.
+    */
+  private def shinglesSql(k: Int): String =
+    s"""  SELECT DISTINCT doc_id, s FROM (
+       |    SELECT doc_id,
+       |           unnest(list_transform(range(1, len(tk) - ${k - 2}),
+       |                                 i -> array_to_string(tk[i:i+${k - 1}], ' '))) AS s
+       |    FROM toks WHERE len(tk) >= $k
+       |    UNION ALL
+       |    SELECT doc_id, array_to_string(tk, ' ') AS s
+       |    FROM toks WHERE len(tk) < $k)),"""
+
   /** Shared oracle: exact token-3-gram Jaccard pairs at threshold 0.8.
     * Serves BOTH the inverted-index query (identical algorithm) and the
     * MinHash-LSH query (LSH recall at J≥0.8 with 16×4 bands is
@@ -76,17 +104,10 @@ object DedupQueries extends QueryGroup {
   // preserving the full pair set.
   private val qD2b = Q(
     "q_d2b_ngram_jaccard_capped",
-    """WITH toks AS (
+    raw"""WITH toks AS (
       |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk FROM documents),
       |sh0 AS (
-      |  SELECT DISTINCT doc_id, s FROM (
-      |    SELECT doc_id,
-      |           unnest(list_transform(range(1, len(tk) - 1),
-      |                                 i -> array_to_string(tk[i:i+2], ' '))) AS s
-      |    FROM toks WHERE len(tk) >= 3
-      |    UNION ALL
-      |    SELECT doc_id, array_to_string(tk, ' ') AS s
-      |    FROM toks WHERE len(tk) < 3)),
+      |${shinglesSql(3)}
       |sh AS (
       |  SELECT sh0.doc_id, sh0.s FROM sh0
       |  JOIN (SELECT s FROM sh0 GROUP BY s HAVING count(*) <= 4) keep USING (s)),
@@ -222,14 +243,7 @@ object DedupQueries extends QueryGroup {
   private val qD6 = Q(
     "q_d6_dup_clusters",
     s"""WITH RECURSIVE pairs AS ($pairsOracle),
-       |edges AS (
-       |  SELECT id_a AS u, id_b AS v FROM pairs
-       |  UNION SELECT id_b, id_a FROM pairs),
-       |reach(u, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
-       |comp AS (SELECT u, min(lbl) AS cluster_id FROM reach GROUP BY u)
+       |$pairsClosureSql
        |SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
        |FROM documents d LEFT JOIN comp c ON c.u = d.doc_id
        |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
@@ -247,14 +261,7 @@ object DedupQueries extends QueryGroup {
   private val qD7 = Q(
     "q_d7_dedup_transitive",
     s"""WITH RECURSIVE pairs AS ($pairsOracle),
-       |edges AS (
-       |  SELECT id_a AS u, id_b AS v FROM pairs
-       |  UNION SELECT id_b, id_a FROM pairs),
-       |reach(u, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
-       |comp AS (SELECT u, min(lbl) AS cluster_id FROM reach GROUP BY u)
+       |$pairsClosureSql
        |SELECT d.doc_id, d.text
        |FROM documents d LEFT JOIN comp c ON c.u = d.doc_id
        |WHERE coalesce(c.cluster_id, d.doc_id) = d.doc_id
@@ -274,17 +281,10 @@ object DedupQueries extends QueryGroup {
   // oracle replays the identical shingling + overlap join.
   private val qD8 = Q(
     "q_d8_decontaminate",
-    """WITH toks AS (
+    raw"""WITH toks AS (
       |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk FROM documents),
       |sh AS (
-      |  SELECT DISTINCT doc_id, s FROM (
-      |    SELECT doc_id,
-      |           unnest(list_transform(range(1, len(tk) - 3),
-      |                                 i -> array_to_string(tk[i:i+4], ' '))) AS s
-      |    FROM toks WHERE len(tk) >= 5
-      |    UNION ALL
-      |    SELECT doc_id, array_to_string(tk, ' ') AS s
-      |    FROM toks WHERE len(tk) < 5)),
+      |${shinglesSql(5)}
       |probe AS (SELECT DISTINCT s FROM sh WHERE doc_id < 5),
       |hits AS (
       |  SELECT sh.doc_id, count(*) AS n_hits
@@ -312,14 +312,7 @@ object DedupQueries extends QueryGroup {
   private val qD9 = Q(
     "q_d9_cluster_representatives",
     s"""WITH RECURSIVE pairs AS ($pairsOracle),
-       |edges AS (
-       |  SELECT id_a AS u, id_b AS v FROM pairs
-       |  UNION SELECT id_b, id_a FROM pairs),
-       |reach(u, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
-       |comp AS (SELECT u, min(lbl) AS cluster_id FROM reach GROUP BY u),
+       |$pairsClosureSql,
        |clustered AS (
        |  SELECT d.doc_id, d.n_chars, coalesce(c.cluster_id, d.doc_id) AS cluster_id
        |  FROM documents d LEFT JOIN comp c ON c.u = d.doc_id),
@@ -475,17 +468,10 @@ object DedupQueries extends QueryGroup {
   // near-dup pairs plus the size-skewed overlaps Jaccard 0.8 drops.
   private val qD15 = Q(
     "q_d15_containment_pairs",
-    """WITH toks AS (
+    raw"""WITH toks AS (
       |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk FROM documents),
       |sh AS (
-      |  SELECT DISTINCT doc_id, s FROM (
-      |    SELECT doc_id,
-      |           unnest(list_transform(range(1, len(tk) - 1),
-      |                                 i -> array_to_string(tk[i:i+2], ' '))) AS s
-      |    FROM toks WHERE len(tk) >= 3
-      |    UNION ALL
-      |    SELECT doc_id, array_to_string(tk, ' ') AS s
-      |    FROM toks WHERE len(tk) < 3)),
+      |${shinglesSql(3)}
       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       |inter AS (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
@@ -511,17 +497,10 @@ object DedupQueries extends QueryGroup {
   // oracle is the FRESH full-corpus closure, so the gate is exactly
   // appended ≡ rebuilt (the q_d14/q_t21 persisted-index discipline at the
   // transitive layer).
-  private val qD16 = Q(
+  private[queries] val qD16 = Q(
     "q_d16_incremental_components",
     s"""WITH RECURSIVE pairs AS ($pairsOracle),
-       |edges AS (
-       |  SELECT id_a AS u, id_b AS v FROM pairs
-       |  UNION SELECT id_b, id_a FROM pairs),
-       |reach(u, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
-       |comp AS (SELECT u, min(lbl) AS cluster_id FROM reach GROUP BY u)
+       |$pairsClosureSql
        |SELECT d.doc_id, CAST(coalesce(c.cluster_id, d.doc_id) AS BIGINT) AS cluster_id
        |FROM documents d LEFT JOIN comp c ON c.u = d.doc_id
        |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
@@ -556,17 +535,10 @@ object DedupQueries extends QueryGroup {
   // tokens), probes = docs 0–4, graded over docs ≥ 5.
   private[queries] val qD17 = Q(
     "q_d17_contamination_fraction",
-    """WITH toks AS (
+    raw"""WITH toks AS (
       |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk FROM documents),
       |sh AS (
-      |  SELECT DISTINCT doc_id, s FROM (
-      |    SELECT doc_id,
-      |           unnest(list_transform(range(1, len(tk) - 3),
-      |                                 i -> array_to_string(tk[i:i+4], ' '))) AS s
-      |    FROM toks WHERE len(tk) >= 5
-      |    UNION ALL
-      |    SELECT doc_id, array_to_string(tk, ' ') AS s
-      |    FROM toks WHERE len(tk) < 5)),
+      |${shinglesSql(5)}
       |probe AS (SELECT DISTINCT s FROM sh WHERE doc_id < 5),
       |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles
       |        FROM sh WHERE doc_id >= 5 GROUP BY 1),
@@ -600,18 +572,11 @@ object DedupQueries extends QueryGroup {
   // ratios — a value-exact evaluation harness, not a floor gate.
   private val qD18 = Q(
     "q_d18_blocking_quality",
-    """WITH toks AS (
+    raw"""WITH toks AS (
       |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS tk
       |  FROM documents WHERE trim(text) <> ''),
       |sh AS (
-      |  SELECT DISTINCT doc_id, s FROM (
-      |    SELECT doc_id,
-      |           unnest(list_transform(range(1, len(tk) - 1),
-      |                                 i -> array_to_string(tk[i:i+2], ' '))) AS s
-      |    FROM toks WHERE len(tk) >= 3
-      |    UNION ALL
-      |    SELECT doc_id, array_to_string(tk, ' ') AS s
-      |    FROM toks WHERE len(tk) < 3)),
+      |${shinglesSql(3)}
       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       |inter AS (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
@@ -766,6 +731,26 @@ object DedupQueries extends QueryGroup {
       .orderBy("rk")
   }
 
+  /** Oracle fragment (margin text): the 40-grams `g` that repeat across
+    * docs, each doc's covered positions, and `isl`, which numbers each
+    * maximal run `i` of windows that overlap or touch.
+    */
+  private val dupGramIslandsSql =
+    """dup AS (
+      |  SELECT gram FROM g GROUP BY gram
+      |  HAVING count(*) >= 2 AND count(DISTINCT doc_id) >= 2),
+      |cov AS (SELECT g.doc_id, g.p FROM g JOIN dup USING (gram)),
+      |brk AS (
+      |  SELECT doc_id, p,
+      |         CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) <= 40
+      |              THEN 0 ELSE 1 END AS b
+      |  FROM cov),
+      |isl AS (
+      |  SELECT doc_id, p,
+      |         sum(b) OVER (PARTITION BY doc_id ORDER BY p
+      |                      ROWS UNBOUNDED PRECEDING) AS i
+      |  FROM brk)"""
+
   // Exact-substring dedup spans (Lee et al. 2022): every doc gets a
   // doc-dependent variable-length prefix before a shared 308-char
   // paragraph (the q_d19 shifted-duplicate construction), and the gate
@@ -786,20 +771,7 @@ object DedupQueries extends QueryGroup {
        |  SELECT doc_id, CAST(u.p AS BIGINT) AS p,
        |         substr(txt, CAST(u.p AS INT), 40) AS gram
        |  FROM src, unnest(range(1, length(txt) - 38)) AS u(p)),
-       |dup AS (
-       |  SELECT gram FROM g GROUP BY gram
-       |  HAVING count(*) >= 2 AND count(DISTINCT doc_id) >= 2),
-       |cov AS (SELECT g.doc_id, g.p FROM g JOIN dup USING (gram)),
-       |brk AS (
-       |  SELECT doc_id, p,
-       |         CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) <= 40
-       |              THEN 0 ELSE 1 END AS b
-       |  FROM cov),
-       |isl AS (
-       |  SELECT doc_id, p,
-       |         sum(b) OVER (PARTITION BY doc_id ORDER BY p
-       |                      ROWS UNBOUNDED PRECEDING) AS i
-       |  FROM brk)
+       |$dupGramIslandsSql
        |SELECT CAST(doc_id AS BIGINT) AS doc_id,
        |       min(p) AS span_start,
        |       CAST(max(p) - min(p) + 40 AS BIGINT) AS span_len,
@@ -881,24 +853,11 @@ object DedupQueries extends QueryGroup {
   // chars each doc carries and in how many maximal spans.
   private val qD23 = Q(
     "q_d23_exact_substring_corpus",
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT doc_id, CAST(u.p AS BIGINT) AS p,
       |         substr(text, CAST(u.p AS INT), 40) AS gram
       |  FROM documents, unnest(range(1, length(text) - 38)) AS u(p)),
-      |dup AS (
-      |  SELECT gram FROM g GROUP BY gram
-      |  HAVING count(*) >= 2 AND count(DISTINCT doc_id) >= 2),
-      |cov AS (SELECT g.doc_id, g.p FROM g JOIN dup USING (gram)),
-      |brk AS (
-      |  SELECT doc_id, p,
-      |         CASE WHEN p - lag(p) OVER (PARTITION BY doc_id ORDER BY p) <= 40
-      |              THEN 0 ELSE 1 END AS b
-      |  FROM cov),
-      |isl AS (
-      |  SELECT doc_id, p,
-      |         sum(b) OVER (PARTITION BY doc_id ORDER BY p
-      |                      ROWS UNBOUNDED PRECEDING) AS i
-      |  FROM brk),
+      |$dupGramIslandsSql,
       |spans AS (
       |  SELECT doc_id, i,
       |         max(p) - min(p) + 40 AS span_len,

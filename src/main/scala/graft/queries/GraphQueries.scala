@@ -15,6 +15,23 @@ import graft.operators.PageRank
   */
 object GraphQueries extends QueryGroup {
 
+  /** Oracle fragment of q_g26 and q_t30 (margin text): `tots`, then the
+    * PMI of each pair count in `pc` (pairs `pr`, unigram counts `ug`), to
+    * the final ordered select.
+    */
+  private[queries] val pmiScoresSql =
+    """tots AS (
+      |  SELECT (SELECT CAST(sum(c) AS BIGINT) FROM ug) AS n_tok,
+      |         (SELECT CAST(count(*) AS BIGINT) FROM pr) AS n_pairs)
+      |SELECT p.tok_a, p.tok_b, p.c_ab, a.c AS c_a, b.c AS c_b,
+      |       round(ln((CAST(p.c_ab AS DOUBLE) * t2.n_tok * t2.n_tok)
+      |                / (CAST(t2.n_pairs AS DOUBLE) * a.c * b.c)), 6) AS pmi
+      |FROM pc p
+      |JOIN ug a ON a.tok = p.tok_a
+      |JOIN ug b ON b.tok = p.tok_b
+      |CROSS JOIN tots t2
+      |ORDER BY tok_a, tok_b"""
+
   /** The co-order graph: part pairs `a < b` bought in one order, one row
     * per shared order. `minQuantity` keeps only lineitems with at least
     * that quantity; `maxOrderParts` keeps only orders with at most that
@@ -83,27 +100,11 @@ object GraphQueries extends QueryGroup {
       |              FROM r2 r LEFT JOIN ow ON r.node = ow.src
       |              WHERE ow.src IS NULL) dgl)""".stripMargin
 
-  private val qG1 = Q(
-    "q_g1_pagerank_trade",
-    s"""WITH e AS (
-      |  SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-      |         CAST(count(*) AS DOUBLE) AS w
-      |  FROM lineitem l
-      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  GROUP BY 1, 2),
-      |nodes AS (SELECT DISTINCT node FROM
-      |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-      |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-      |ow AS (SELECT src, sum(w) AS out_w FROM e GROUP BY 1),
-      |p AS (SELECT src, dst, w / out_w AS p FROM e JOIN ow USING (src)),
-      |r0 AS (SELECT node, 1.0 / n AS rank FROM nodes CROSS JOIN nn),
-      |$iter3
-      |SELECT n.n_name, CAST(r3.node AS INT) AS nationkey, r3.rank
-      |FROM r3 JOIN nation n ON r3.node = n.n_nationkey
-      |ORDER BY n.n_name""".stripMargin) { (s, dir) =>
-    val edges = Tables.load(s, dir, "lineitem")
+  /** The nation trade graph: one edge per (supplier nation, customer
+    * nation) weighted by its lineitem count.
+    */
+  private def tradeEdges(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Tables.load(s, dir, "lineitem")
       .join(Tables.load(s, dir, "orders"),
         col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(Tables.load(s, dir, "supplier")),
@@ -112,7 +113,33 @@ object GraphQueries extends QueryGroup {
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("s_nationkey").as("src"), col("c_nationkey").as("dst"))
       .agg(count(lit(1)).cast("double").as("weight"))
-    PageRank.run(edges, iterations = 3, damping = 0.85)
+
+  // Its oracle twin (margin text, interpolated before stripMargin): the
+  // body of CTE `e`, then `nodes`.
+  private val tradeGraphSql =
+    """  SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
+      |         CAST(count(*) AS DOUBLE) AS w
+      |  FROM lineitem l
+      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
+      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+      |  JOIN customer c ON o.o_custkey = c.c_custkey
+      |  GROUP BY 1, 2),
+      |nodes AS (SELECT DISTINCT node FROM
+      |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),"""
+
+  private val qG1 = Q(
+    "q_g1_pagerank_trade",
+    s"""WITH e AS (
+      |$tradeGraphSql
+      |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
+      |ow AS (SELECT src, sum(w) AS out_w FROM e GROUP BY 1),
+      |p AS (SELECT src, dst, w / out_w AS p FROM e JOIN ow USING (src)),
+      |r0 AS (SELECT node, 1.0 / n AS rank FROM nodes CROSS JOIN nn),
+      |$iter3
+      |SELECT n.n_name, CAST(r3.node AS INT) AS nationkey, r3.rank
+      |FROM r3 JOIN nation n ON r3.node = n.n_nationkey
+      |ORDER BY n.n_name""".stripMargin) { (s, dir) =>
+    PageRank.run(tradeEdges(s, dir), iterations = 3, damping = 0.85)
       .join(broadcast(Tables.load(s, dir, "nation")),
         col("node") === col("n_nationkey"))
       .select(col("n_name"), col("node").cast("int").as("nationkey"), col("rank"))
@@ -144,15 +171,7 @@ object GraphQueries extends QueryGroup {
   private val qG10 = Q(
     "q_g10_personalized_pagerank",
     s"""WITH e AS (
-      |  SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-      |         CAST(count(*) AS DOUBLE) AS w
-      |  FROM lineitem l
-      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  GROUP BY 1, 2),
-      |nodes AS (SELECT DISTINCT node FROM
-      |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
+      |$tradeGraphSql
       |ow AS (SELECT src, sum(w) AS out_w FROM e GROUP BY 1),
       |p AS (SELECT src, dst, w / out_w AS p FROM e JOIN ow USING (src)),
       |tele AS (SELECT node, CASE WHEN node IN (7, 19) THEN 0.5 ELSE 0.0 END AS t
@@ -162,16 +181,7 @@ object GraphQueries extends QueryGroup {
       |SELECT n.n_name, CAST(r3.node AS INT) AS nationkey, r3.rank
       |FROM r3 JOIN nation n ON r3.node = n.n_nationkey
       |ORDER BY n.n_name""".stripMargin) { (s, dir) =>
-    val edges = Tables.load(s, dir, "lineitem")
-      .join(Tables.load(s, dir, "orders"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.load(s, dir, "supplier")),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.load(s, dir, "customer")),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("s_nationkey").as("src"), col("c_nationkey").as("dst"))
-      .agg(count(lit(1)).cast("double").as("weight"))
-    PageRank.personalized(edges, seeds = Seq(7L, 19L), iterations = 3, damping = 0.85)
+    PageRank.personalized(tradeEdges(s, dir), seeds = Seq(7L, 19L), iterations = 3, damping = 0.85)
       .join(broadcast(Tables.load(s, dir, "nation")),
         col("node") === col("n_nationkey"))
       .select(col("n_name"), col("node").cast("int").as("nationkey"), col("rank"))
@@ -291,6 +301,21 @@ object GraphQueries extends QueryGroup {
       .orderBy("node")
   }
 
+  /** The oracle's synchronous 3-round LPA unroll over `und` (margin text):
+    * `l0` gives every node its own label; round r takes each node's
+    * majority neighbour label under `l{r-1}`, ties to the smaller label.
+    * `l3Head` opens the last round's CTE.
+    */
+  private def lpaUnrollSql(l3Head: String): String =
+    "l0 AS (SELECT DISTINCT node, node AS label FROM und),\n" + (1 to 3).map { r =>
+      s"""c$r AS (SELECT u.node, l.label, count(*) AS c
+         |       FROM und u JOIN l${r - 1} l ON u.nbr = l.node GROUP BY 1, 2),
+         |${if (r == 3) l3Head else s"l$r AS"} (SELECT node, label FROM (
+         |         SELECT node, label,
+         |                row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
+         |         FROM c$r) WHERE rn = 1)"""
+    }.mkString(",\n")
+
   // Synchronous label-propagation communities (3 fixed rounds) over the
   // co-order part graph — density communities inside the components
   // CC (q_d6) finds. Every round is all-integer majority voting (count
@@ -300,29 +325,11 @@ object GraphQueries extends QueryGroup {
   // dependent).
   private val qG6 = Q(
     "q_g6_label_propagation",
-    """WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+    s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
       |ce AS (SELECT DISTINCT a.p AS a, b.p AS b
       |       FROM items a JOIN items b ON a.o = b.o AND a.p < b.p),
       |und AS (SELECT a AS node, b AS nbr FROM ce UNION ALL SELECT b, a FROM ce),
-      |l0 AS (SELECT DISTINCT node, node AS label FROM und),
-      |c1 AS (SELECT u.node, l.label, count(*) AS c
-      |       FROM und u JOIN l0 l ON u.nbr = l.node GROUP BY 1, 2),
-      |l1 AS (SELECT node, label FROM (
-      |         SELECT node, label,
-      |                row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-      |         FROM c1) WHERE rn = 1),
-      |c2 AS (SELECT u.node, l.label, count(*) AS c
-      |       FROM und u JOIN l1 l ON u.nbr = l.node GROUP BY 1, 2),
-      |l2 AS (SELECT node, label FROM (
-      |         SELECT node, label,
-      |                row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-      |         FROM c2) WHERE rn = 1),
-      |c3 AS (SELECT u.node, l.label, count(*) AS c
-      |       FROM und u JOIN l2 l ON u.nbr = l.node GROUP BY 1, 2),
-      |l3 AS (SELECT node, label FROM (
-      |         SELECT node, label,
-      |                row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-      |         FROM c3) WHERE rn = 1)
+      |${lpaUnrollSql("l3 AS")}
       |SELECT node, label AS community FROM l3 ORDER BY node""".stripMargin) { (s, dir) =>
     val edges = coOrderPairs(s, dir).select("a", "b")
     graft.operators.LabelPropagation.run(edges, "a", "b", iterations = 3)
@@ -404,29 +411,11 @@ object GraphQueries extends QueryGroup {
   // whose addition order could drift.
   private val qG9 = Q(
     "q_g9_modularity",
-    """WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+    s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
       |ce AS (SELECT DISTINCT a.p AS a, b.p AS b
       |       FROM items a JOIN items b ON a.o = b.o AND a.p < b.p),
       |und AS (SELECT a AS node, b AS nbr FROM ce UNION ALL SELECT b, a FROM ce),
-      |l0 AS (SELECT DISTINCT node, node AS label FROM und),
-      |c1 AS (SELECT u.node, l.label, count(*) AS c
-      |       FROM und u JOIN l0 l ON u.nbr = l.node GROUP BY 1, 2),
-      |l1 AS (SELECT node, label FROM (
-      |         SELECT node, label,
-      |                row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-      |         FROM c1) WHERE rn = 1),
-      |c2 AS (SELECT u.node, l.label, count(*) AS c
-      |       FROM und u JOIN l1 l ON u.nbr = l.node GROUP BY 1, 2),
-      |l2 AS (SELECT node, label FROM (
-      |         SELECT node, label,
-      |                row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-      |         FROM c2) WHERE rn = 1),
-      |c3 AS (SELECT u.node, l.label, count(*) AS c
-      |       FROM und u JOIN l2 l ON u.nbr = l.node GROUP BY 1, 2),
-      |l3 AS (SELECT node, label FROM (
-      |         SELECT node, label,
-      |                row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-      |         FROM c3) WHERE rn = 1),
+      |${lpaUnrollSql("l3 AS")},
       |e2 AS (SELECT la.label AS la, lb.label AS lb FROM ce
       |       JOIN l3 la ON ce.a = la.node JOIN l3 lb ON ce.b = lb.node),
       |ea AS (SELECT CAST(count(*) AS BIGINT) AS n_edges,
@@ -521,29 +510,11 @@ object GraphQueries extends QueryGroup {
     * discipline brought to the graph gates).
     */
   private val coOrderLpaCtes: String =
-    """items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+    s"""items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
       |ce AS MATERIALIZED (SELECT DISTINCT a.p AS a, b.p AS b
       |       FROM items a JOIN items b ON a.o = b.o AND a.p < b.p),
       |und AS MATERIALIZED (SELECT a AS node, b AS nbr FROM ce UNION ALL SELECT b, a FROM ce),
-      |l0 AS (SELECT DISTINCT node, node AS label FROM und),
-      |c1 AS (SELECT u.node, l.label, count(*) AS c
-      |       FROM und u JOIN l0 l ON u.nbr = l.node GROUP BY 1, 2),
-      |l1 AS (SELECT node, label FROM (
-      |         SELECT node, label,
-      |                row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-      |         FROM c1) WHERE rn = 1),
-      |c2 AS (SELECT u.node, l.label, count(*) AS c
-      |       FROM und u JOIN l1 l ON u.nbr = l.node GROUP BY 1, 2),
-      |l2 AS (SELECT node, label FROM (
-      |         SELECT node, label,
-      |                row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-      |         FROM c2) WHERE rn = 1),
-      |c3 AS (SELECT u.node, l.label, count(*) AS c
-      |       FROM und u JOIN l2 l ON u.nbr = l.node GROUP BY 1, 2),
-      |l3 AS MATERIALIZED (SELECT node, label FROM (
-      |         SELECT node, label,
-      |                row_number() OVER (PARTITION BY node ORDER BY c DESC, label ASC) AS rn
-      |         FROM c3) WHERE rn = 1)""".stripMargin
+      |${lpaUnrollSql("l3 AS MATERIALIZED")}""".stripMargin
 
   private val qG12 = Q(
     "q_g12_louvain_refine",
@@ -958,15 +929,7 @@ object GraphQueries extends QueryGroup {
   private val qG18 = Q(
     "q_g18_hits",
     s"""WITH e AS (
-      |  SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
-      |         CAST(count(*) AS DOUBLE) AS w
-      |  FROM lineitem l
-      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  GROUP BY 1, 2),
-      |nodes AS (SELECT DISTINCT node FROM
-      |  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
+      |$tradeGraphSql
       |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
       |h0 AS (SELECT node, 1.0 / n AS score FROM nodes CROSS JOIN nn),
       |$hitsIter
@@ -975,16 +938,7 @@ object GraphQueries extends QueryGroup {
       |FROM h3 JOIN a3 ON h3.node = a3.node
       |JOIN nation n ON h3.node = n.n_nationkey
       |ORDER BY n.n_name""".stripMargin) { (s, dir) =>
-    val edges = Tables.load(s, dir, "lineitem")
-      .join(Tables.load(s, dir, "orders"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.load(s, dir, "supplier")),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.load(s, dir, "customer")),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("s_nationkey").as("src"), col("c_nationkey").as("dst"))
-      .agg(count(lit(1)).cast("double").as("weight"))
-    graft.operators.Hits.run(edges, iterations = 3)
+    graft.operators.Hits.run(tradeEdges(s, dir), iterations = 3)
       .join(broadcast(Tables.load(s, dir, "nation")),
         col("node") === col("n_nationkey"))
       .select(col("n_name"), col("node").cast("int").as("nationkey"),
@@ -1305,6 +1259,22 @@ object GraphQueries extends QueryGroup {
   // % deg. An off-by-one in ranks, a wrong hash constant, or any
   // nondeterminism in the adjacency order diverges every downstream
   // step — the gate is self-amplifying.
+  // Oracle fragment of the walk gates (margin text, interpolated before
+  // stripMargin): the rest of `items` — the l_quantity >= 40 slice — then
+  // its co-order graph `ce`/`und`, the ranked adjacency `adj` and degrees `dg`.
+  private val sliceAdjacencySql =
+    """       FROM lineitem WHERE l_quantity >= 40),
+      |ce AS MATERIALIZED (SELECT DISTINCT a.p AS a, b.p AS b
+      |       FROM items a JOIN items b ON a.o = b.o AND a.p < b.p),
+      |und AS MATERIALIZED (SELECT a AS node, b AS nbr FROM ce
+      |       UNION ALL SELECT b, a FROM ce),
+      |adj AS MATERIALIZED (
+      |  SELECT node, nbr,
+      |         row_number() OVER (PARTITION BY node ORDER BY nbr) - 1 AS r
+      |  FROM und),
+      |dg AS MATERIALIZED (
+      |  SELECT node, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY 1),"""
+
   // shared by q_g24 and q_g26 (walk-context PMI): the uniform-walk CTE
   // chain — adjacency, degrees, gamma=2 starts, four chained pick steps
   private def dwStepCte(k: Int): String =
@@ -1317,17 +1287,7 @@ object GraphQueries extends QueryGroup {
          |               + $k * 40503 + 42) % 1000000007) % d.d))""".stripMargin
   private lazy val dwWithBody: String =
     s"""items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-       |       FROM lineitem WHERE l_quantity >= 40),
-       |ce AS MATERIALIZED (SELECT DISTINCT a.p AS a, b.p AS b
-       |       FROM items a JOIN items b ON a.o = b.o AND a.p < b.p),
-       |und AS MATERIALIZED (SELECT a AS node, b AS nbr FROM ce
-       |       UNION ALL SELECT b, a FROM ce),
-       |adj AS MATERIALIZED (
-       |  SELECT node, nbr,
-       |         row_number() OVER (PARTITION BY node ORDER BY nbr) - 1 AS r
-       |  FROM und),
-       |dg AS MATERIALIZED (
-       |  SELECT node, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY 1),
+       |$sliceAdjacencySql
        |s0 AS MATERIALIZED (
        |  SELECT node * 2 + g.g AS walk_id, node AS start, node AS cur
        |  FROM dg, unnest(range(2)) AS g(g)),
@@ -1385,17 +1345,7 @@ object GraphQueries extends QueryGroup {
          |    AND ${hashSql(k)} % tot < cum)""".stripMargin
     val sql =
       s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |       FROM lineitem WHERE l_quantity >= 40),
-         |ce AS MATERIALIZED (SELECT DISTINCT a.p AS a, b.p AS b
-         |       FROM items a JOIN items b ON a.o = b.o AND a.p < b.p),
-         |und AS MATERIALIZED (SELECT a AS node, b AS nbr FROM ce
-         |       UNION ALL SELECT b, a FROM ce),
-         |adj AS MATERIALIZED (
-         |  SELECT node, nbr,
-         |         row_number() OVER (PARTITION BY node ORDER BY nbr) - 1 AS r
-         |  FROM und),
-         |dg AS MATERIALIZED (
-         |  SELECT node, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY 1),
+         |$sliceAdjacencySql
          |s0 AS (SELECT node AS walk_id, node AS start,
          |              CAST(NULL AS BIGINT) AS prev, node AS cur FROM dg),
          |s1 AS MATERIALIZED (
@@ -1441,17 +1391,7 @@ object GraphQueries extends QueryGroup {
        |ug AS (
        |  SELECT CAST(node AS VARCHAR) AS tok, CAST(count(*) AS BIGINT) AS c
        |  FROM dwsteps GROUP BY 1),
-       |tots AS (
-       |  SELECT (SELECT CAST(sum(c) AS BIGINT) FROM ug) AS n_tok,
-       |         (SELECT CAST(count(*) AS BIGINT) FROM pr) AS n_pairs)
-       |SELECT p.tok_a, p.tok_b, p.c_ab, a.c AS c_a, b.c AS c_b,
-       |       round(ln((CAST(p.c_ab AS DOUBLE) * t2.n_tok * t2.n_tok)
-       |                / (CAST(t2.n_pairs AS DOUBLE) * a.c * b.c)), 6) AS pmi
-       |FROM pc p
-       |JOIN ug a ON a.tok = p.tok_a
-       |JOIN ug b ON b.tok = p.tok_b
-       |CROSS JOIN tots t2
-       |ORDER BY tok_a, tok_b""".stripMargin) { (s, dir) =>
+       |$pmiScoresSql""".stripMargin) { (s, dir) =>
     val edges = coOrderEdges(s, dir, minQuantity = Some(40))
     val walks = graft.operators.RandomWalks.deepWalk(
       edges, "a", "b", walksPerNode = 2, walkLength = 4, seed = 42L)

@@ -251,12 +251,7 @@ object LayoutQueries extends QueryGroup {
   // serialize/parse coercion breaks the hash.
   private val qS6 = Q(
     "q_s6_xml_roundtrip",
-    """SELECT l_orderkey,
-      |       CAST(count(*) OVER (PARTITION BY l_orderkey) AS INT) AS n_lines,
-      |       l_linenumber, l_quantity, l_shipdate,
-      |       nullif(l_returnflag, 'N') AS flag
-      |FROM lineitem
-      |ORDER BY l_orderkey, l_linenumber, l_quantity, l_shipdate""".stripMargin) { (s, dir) =>
+    qS5.oracle.get) { (s, dir) =>
     val li = t(s, dir, "lineitem").select(
       col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
       col("l_shipdate"), nullif(col("l_returnflag"), lit("N")).as("flag"))
@@ -285,12 +280,7 @@ object LayoutQueries extends QueryGroup {
   // original parquet.
   private val qS7 = Q(
     "q_s7_avro_roundtrip",
-    """SELECT l_orderkey,
-      |       CAST(count(*) OVER (PARTITION BY l_orderkey) AS INT) AS n_lines,
-      |       l_linenumber, l_quantity, l_shipdate,
-      |       nullif(l_returnflag, 'N') AS flag
-      |FROM lineitem
-      |ORDER BY l_orderkey, l_linenumber, l_quantity, l_shipdate""".stripMargin) { (s, dir) =>
+    qS5.oracle.get) { (s, dir) =>
     val li = t(s, dir, "lineitem").select(
       col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
       col("l_shipdate"), nullif(col("l_returnflag"), lit("N")).as("flag"))

@@ -21,6 +21,11 @@ object MultimodalQueries extends QueryGroup {
   private def withPayload(df: org.apache.spark.sql.DataFrame) =
     df.withColumn("payload", col("text").cast("binary"))
 
+  /** Little-endian hex rendering of the low `nBytes` bytes of `c`. */
+  private def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
+    concat((0 until nBytes).map(i =>
+      lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
+
   /** DuckDB twin of Multimodal.saltedHash(payload, salt, portable=true)
     * over `hx` = hex(encode(text)).
     */
@@ -446,73 +451,52 @@ object MultimodalQueries extends QueryGroup {
       .orderBy("doc_id")
   }
 
-  // REAL WAV PCM SAMPLE decode (Multimodal.wavSampleStats) — the round
-  // that makes the audio payload non-opaque: each document gets a
-  // complete PCM file (canonical 44-byte header + REAL interleaved
-  // frames) constructed in-plan, samples generated by an integer formula
-  // over (doc_id, sample index) with forced rail hits (k%10==0 → +full
-  // scale, k%10==5 → −full scale) so clipping is exercised
-  // deterministically across all four bit depths (8-bit unsigned-center,
-  // 16/24/32-bit signed LE). The ENGINE decodes the bytes back; the
-  // oracle derives per-channel RMS/peak/clip counts INDEPENDENTLY from
-  // the generating formula — an interleave, endianness, sign, or center
-  // bug cannot round-trip. Every 9th doc gets a corrupted RIFF
-  // signature → NULL stats row. Ground truth against real
-  // AudioSystem-written WAVs lives in MultimodalSpec.
-  private val qM9 = Q(
-    "q_m9_wav_sample_stats",
-    """WITH src AS (
-      |  SELECT doc_id,
-      |         CAST(doc_id % 2 + 1 AS BIGINT) AS ch,
-      |         CAST(CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 8 WHEN 1 THEN 16
-      |              WHEN 2 THEN 24 ELSE 32 END AS BIGINT) AS bits,
-      |         CAST(n_chars % 40 + 2 AS BIGINT) AS frames,
-      |         (doc_id % 9 <> 0) AS ok
-      |  FROM documents),
-      |samp AS (
-      |  SELECT doc_id, ch, frames, k % ch AS c,
-      |         CASE WHEN k % 10 = 0 THEN hf - 1
-      |              WHEN k % 10 = 5 THEN -hf
-      |              WHEN bits = 8 THEN vraw - 128
-      |              WHEN vraw < hf THEN vraw
-      |              ELSE vraw - sp END AS v,
-      |         hf
-      |  FROM (
-      |    SELECT s.*, u.k,
-      |           CASE bits WHEN 8 THEN 256 WHEN 16 THEN 65536
-      |                WHEN 24 THEN 16777216 ELSE 4294967296 END AS sp,
-      |           CASE bits WHEN 8 THEN 128 WHEN 16 THEN 32768
-      |                WHEN 24 THEN 8388608 ELSE 2147483648 END AS hf,
-      |           (s.doc_id * 31 + u.k * 17 + 7) %
-      |             (CASE bits WHEN 8 THEN 256 WHEN 16 THEN 65536
-      |                   WHEN 24 THEN 16777216 ELSE 4294967296 END) AS vraw
-      |    FROM src s, unnest(range(s.frames * s.ch)) AS u(k)
-      |    WHERE s.ok)),
-      |ag AS (
-      |  SELECT doc_id, c,
-      |         sum(v * v) AS sq,
-      |         max(abs(v)) AS peak,
-      |         sum(CASE WHEN v = hf - 1 OR v = -hf THEN 1 ELSE 0 END) AS clips
-      |  FROM samp GROUP BY 1, 2)
-      |SELECT s.doc_id,
-      |       CAST(ag.c AS INT) AS channel,
-      |       s.frames AS n_frames,
-      |       -- via VARCHAR: DuckDB's hugeint→double cast is off by an ulp
-      |       -- for some values; its string parse (like Spark's
-      |       -- decimal→double) is correctly rounded
-      |       sqrt(CAST(CAST(ag.sq AS VARCHAR) AS DOUBLE) / s.frames) AS rms,
-      |       CAST(ag.peak AS BIGINT) AS peak,
-      |       CAST(ag.clips AS BIGINT) AS n_clipped,
-      |       CAST(ag.clips AS DOUBLE) / s.frames AS clipping_rate
-      |FROM src s JOIN ag ON ag.doc_id = s.doc_id
-      |UNION ALL
-      |SELECT doc_id, CAST(NULL AS INT), CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
-      |       CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE)
-      |FROM src WHERE NOT ok
-      |ORDER BY doc_id, channel""".stripMargin) { (s, dir) =>
-    def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
-      concat((0 until nBytes).map(i =>
-        lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
+  /** Hex of a 24-bpp BMP of `w`×`h` pixels under signature `sig`: a
+    * 54-byte header (58 when `gap` puts DEADBEEF before the pixels), rows
+    * stored top-down when `topDown` (negative height) and padded to 4
+    * bytes with 0xAB, each pixel channel from the doc_id formula, or
+    * `doc_id % 256` throughout when `blank`.
+    */
+  private def bmpPayloadHex(
+      sig: org.apache.spark.sql.Column, w: org.apache.spark.sql.Column,
+      h: org.apache.spark.sql.Column, topDown: org.apache.spark.sql.Column,
+      blank: org.apache.spark.sql.Column, gap: org.apache.spark.sql.Column) = {
+    val stride = floor((w * 3 + 3) / 4).cast("bigint") * 4
+    val dataOffset = when(gap, lit(58L)).otherwise(lit(54L))
+    val hStored = when(topDown, lit(4294967296L) - h).otherwise(h)
+    def pix(i: org.apache.spark.sql.Column, chn: Int) =
+      when(blank, col("doc_id") % 256)
+        .otherwise((col("doc_id") * 7 + i * 13 + chn * 29) % 256)
+    val rowsHex = array_join(
+      transform(sequence(lit(0L), h - 1L), r =>
+        concat(
+          array_join(
+            transform(sequence(lit(0L), w - 1L), x => {
+              val i = r * w + x
+              concat(leHexN(pix(i, 0), 1), leHexN(pix(i, 1), 1), leHexN(pix(i, 2), 1))
+            }), ""),
+          // stride padding: 0xAB so misread pads shift min/max visibly
+          repeat(lit("AB"), ((lit(4L) - (w * 3) % 4) % 4).cast("int")))), "")
+    concat(
+      sig, leHexN(dataOffset + h * stride, 4), lit("00000000"),
+      leHexN(dataOffset, 4),
+      lit("28000000"),
+      leHexN(w, 4), leHexN(hStored, 4),
+      lit("0100"), lit("1800"),
+      // remaining 24 BITMAPINFOHEADER bytes (compression BI_RGB=0,
+      // image size, resolutions, palette counts — all zero) so the
+      // pixel array genuinely starts at the declared offset 54
+      lit("00" * 24),
+      when(gap, lit("DEADBEEF")).otherwise(lit("")),
+      rowsHex)
+  }
+
+  /** The constructed PCM corpus of q_m9 and q_m13: one complete WAV
+    * file per document (canonical 44-byte header + interleaved frames at
+    * 8/16/24/32 bits, 1–2 channels, rail hits at k%10 ∈ {0, 5}, every 9th
+    * doc a corrupt RIFF signature), as `(doc_id, payload)`.
+    */
+  private def wavPcmPayloads(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val ch = (col("doc_id") % 2 + 1).cast("bigint")
     val bits = element_at(
       typedlit(Seq(8L, 16L, 24L, 32L)), (col("doc_id") % 4 + 1).cast("int"))
@@ -580,10 +564,84 @@ object MultimodalQueries extends QueryGroup {
     // whole in-plan construction tree at every reference blows codegen
     // up (the driver OOMs compiling it); decoding a bound binary column
     // is the real-world shape anyway (bytes come from storage)
-    val withPayload = Tables.spread(Tables.load(s, dir, "documents"))
+    Tables.spread(Tables.load(s, dir, "documents"))
       .select(col("doc_id"), unhex(payloadHex).as("payload"))
       .pin() // ≤500 rows × ≤400 B — trivial residency
-    withPayload
+  }
+
+  // Oracle fragments of the same corpus, interpolated as margin text
+  // before the query's stripMargin: the body of the `src` CTE, and the
+  // tail of `samp` (every sample's value `v` from the generating formula).
+  private val wavSrcSql =
+    """  SELECT doc_id,
+      |         CAST(doc_id % 2 + 1 AS BIGINT) AS ch,
+      |         CAST(CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 8 WHEN 1 THEN 16
+      |              WHEN 2 THEN 24 ELSE 32 END AS BIGINT) AS bits,
+      |         CAST(n_chars % 40 + 2 AS BIGINT) AS frames,
+      |         (doc_id % 9 <> 0) AS ok
+      |  FROM documents),"""
+  private val wavSamplesSql =
+    """         CASE WHEN k % 10 = 0 THEN hf - 1
+      |              WHEN k % 10 = 5 THEN -hf
+      |              WHEN bits = 8 THEN vraw - 128
+      |              WHEN vraw < hf THEN vraw
+      |              ELSE vraw - sp END AS v,
+      |         hf
+      |  FROM (
+      |    SELECT s.*, u.k,
+      |           CASE bits WHEN 8 THEN 256 WHEN 16 THEN 65536
+      |                WHEN 24 THEN 16777216 ELSE 4294967296 END AS sp,
+      |           CASE bits WHEN 8 THEN 128 WHEN 16 THEN 32768
+      |                WHEN 24 THEN 8388608 ELSE 2147483648 END AS hf,
+      |           (s.doc_id * 31 + u.k * 17 + 7) %
+      |             (CASE bits WHEN 8 THEN 256 WHEN 16 THEN 65536
+      |                   WHEN 24 THEN 16777216 ELSE 4294967296 END) AS vraw
+      |    FROM src s, unnest(range(s.frames * s.ch)) AS u(k)
+      |    WHERE s.ok)),"""
+
+  // REAL WAV PCM SAMPLE decode (Multimodal.wavSampleStats) — the round
+  // that makes the audio payload non-opaque: each document gets a
+  // complete PCM file (canonical 44-byte header + REAL interleaved
+  // frames) constructed in-plan, samples generated by an integer formula
+  // over (doc_id, sample index) with forced rail hits (k%10==0 → +full
+  // scale, k%10==5 → −full scale) so clipping is exercised
+  // deterministically across all four bit depths (8-bit unsigned-center,
+  // 16/24/32-bit signed LE). The ENGINE decodes the bytes back; the
+  // oracle derives per-channel RMS/peak/clip counts INDEPENDENTLY from
+  // the generating formula — an interleave, endianness, sign, or center
+  // bug cannot round-trip. Every 9th doc gets a corrupted RIFF
+  // signature → NULL stats row. Ground truth against real
+  // AudioSystem-written WAVs lives in MultimodalSpec.
+  private val qM9 = Q(
+    "q_m9_wav_sample_stats",
+    s"""WITH src AS (
+      |$wavSrcSql
+      |samp AS (
+      |  SELECT doc_id, ch, frames, k % ch AS c,
+      |$wavSamplesSql
+      |ag AS (
+      |  SELECT doc_id, c,
+      |         sum(v * v) AS sq,
+      |         max(abs(v)) AS peak,
+      |         sum(CASE WHEN v = hf - 1 OR v = -hf THEN 1 ELSE 0 END) AS clips
+      |  FROM samp GROUP BY 1, 2)
+      |SELECT s.doc_id,
+      |       CAST(ag.c AS INT) AS channel,
+      |       s.frames AS n_frames,
+      |       -- via VARCHAR: DuckDB's hugeint→double cast is off by an ulp
+      |       -- for some values; its string parse (like Spark's
+      |       -- decimal→double) is correctly rounded
+      |       sqrt(CAST(CAST(ag.sq AS VARCHAR) AS DOUBLE) / s.frames) AS rms,
+      |       CAST(ag.peak AS BIGINT) AS peak,
+      |       CAST(ag.clips AS BIGINT) AS n_clipped,
+      |       CAST(ag.clips AS DOUBLE) / s.frames AS clipping_rate
+      |FROM src s JOIN ag ON ag.doc_id = s.doc_id
+      |UNION ALL
+      |SELECT doc_id, CAST(NULL AS INT), CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
+      |       CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE)
+      |FROM src WHERE NOT ok
+      |ORDER BY doc_id, channel""".stripMargin) { (s, dir) =>
+    wavPcmPayloads(s, dir)
       .withColumn("st", Multimodal.wavSampleStats(col("payload")))
       .select(col("doc_id"), explode_outer(col("st")).as("e"))
       .select(
@@ -649,43 +707,13 @@ object MultimodalQueries extends QueryGroup {
       |       s.ok AS valid_bmp
       |FROM src s LEFT JOIN ag ON ag.doc_id = s.doc_id
       |ORDER BY s.doc_id""".stripMargin) { (s, dir) =>
-    def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
-      concat((0 until nBytes).map(i =>
-        lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
     val w = (col("doc_id") % 4 + 1).cast("bigint")
     val h = (col("doc_id") % 3 + 1).cast("bigint")
     val blank = col("doc_id") % 6 === 0
     val topDown = col("doc_id") % 3 === 0
     val gap = col("doc_id") % 7 === 0
-    val stride = floor((w * 3 + 3) / 4).cast("bigint") * 4
-    val dataOffset = when(gap, lit(58L)).otherwise(lit(54L))
-    val hStored = when(topDown, lit(4294967296L) - h).otherwise(h)
     val bmpSig = when(col("doc_id") % 5 === 0, lit("0000")).otherwise(lit("424D"))
-    def pix(i: org.apache.spark.sql.Column, chn: Int) =
-      when(blank, col("doc_id") % 256)
-        .otherwise((col("doc_id") * 7 + i * 13 + chn * 29) % 256)
-    val rowsHex = array_join(
-      transform(sequence(lit(0L), h - 1L), r =>
-        concat(
-          array_join(
-            transform(sequence(lit(0L), w - 1L), x => {
-              val i = r * w + x
-              concat(leHexN(pix(i, 0), 1), leHexN(pix(i, 1), 1), leHexN(pix(i, 2), 1))
-            }), ""),
-          // stride padding: 0xAB so misread pads shift min/max visibly
-          repeat(lit("AB"), ((lit(4L) - (w * 3) % 4) % 4).cast("int")))), "")
-    val payloadHex = concat(
-      bmpSig, leHexN(dataOffset + h * stride, 4), lit("00000000"),
-      leHexN(dataOffset, 4),
-      lit("28000000"),
-      leHexN(w, 4), leHexN(hStored, 4),
-      lit("0100"), lit("1800"),
-      // remaining 24 BITMAPINFOHEADER bytes (compression BI_RGB=0,
-      // image size, resolutions, palette counts — all zero) so the
-      // pixel array genuinely starts at the declared offset 54
-      lit("00" * 24),
-      when(gap, lit("DEADBEEF")).otherwise(lit("")),
-      rowsHex)
+    val payloadHex = bmpPayloadHex(bmpSig, w, h, topDown, blank, gap)
     // materialized for the same codegen-inlining reason as q_m9.
     // r18: persist (the q_m8 posture) — corpus-wide frame, one consumer:
     // same planning truncation, lineage survives, no eager job.
@@ -729,39 +757,13 @@ object MultimodalQueries extends QueryGroup {
   private[queries] def bmpAHashFrame(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
       RunScope.scope("bmpAHashFrame") {
-    def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
-      concat((0 until nBytes).map(i =>
-        lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
     val w = (col("doc_id") % 5 + 4).cast("bigint")
     val h = (col("doc_id") % 4 + 2).cast("bigint")
     val topDown = col("doc_id") % 2 === 0
     val blank = col("doc_id") % 6 === 0
     val gap = col("doc_id") % 11 === 0
-    val stride = floor((w * 3 + 3) / 4).cast("bigint") * 4
-    val dataOffset = when(gap, lit(58L)).otherwise(lit(54L))
-    val hStored = when(topDown, lit(4294967296L) - h).otherwise(h)
     val bmpSig = when(col("doc_id") % 7 === 0, lit("0000")).otherwise(lit("424D"))
-    def pix(i: org.apache.spark.sql.Column, chn: Int) =
-      when(blank, col("doc_id") % 256)
-        .otherwise((col("doc_id") * 7 + i * 13 + chn * 29) % 256)
-    val rowsHex = array_join(
-      transform(sequence(lit(0L), h - 1L), r =>
-        concat(
-          array_join(
-            transform(sequence(lit(0L), w - 1L), x => {
-              val i = r * w + x
-              concat(leHexN(pix(i, 0), 1), leHexN(pix(i, 1), 1), leHexN(pix(i, 2), 1))
-            }), ""),
-          repeat(lit("AB"), ((lit(4L) - (w * 3) % 4) % 4).cast("int")))), "")
-    val payloadHex = concat(
-      bmpSig, leHexN(dataOffset + h * stride, 4), lit("00000000"),
-      leHexN(dataOffset, 4),
-      lit("28000000"),
-      leHexN(w, 4), leHexN(hStored, 4),
-      lit("0100"), lit("1800"),
-      lit("00" * 24),
-      when(gap, lit("DEADBEEF")).otherwise(lit("")),
-      rowsHex)
+    val payloadHex = bmpPayloadHex(bmpSig, w, h, topDown, blank, gap)
     // r17 opt: spread INSIDE the shared frame so the batch gate, the
     // streaming twin's per-micro-batch call, and any future caller all
     // break the one-input-split ceiling before the per-row construction
@@ -776,9 +778,23 @@ object MultimodalQueries extends QueryGroup {
       .pin()
   }
 
+  /** Oracle fragment (margin text): the 64-bit average hash `v` per doc
+    * from its 64 grid lumas `lum` `(doc_id, k, L)` — bit k set when
+    * 64·L exceeds the lumas' sum, bit 0 the sign bit.
+    */
+  private val aHashBitsSql =
+    """tot AS (SELECT doc_id, sum(L) AS t FROM lum GROUP BY 1),
+      |hsh AS (
+      |  SELECT l.doc_id,
+      |         CAST(sum(CASE WHEN 64 * l.L > tot.t
+      |                       THEN CASE WHEN l.k = 0 THEN -9223372036854775808
+      |                            ELSE (1::BIGINT << CAST(63 - l.k AS INT)) END
+      |                       ELSE 0 END) AS BIGINT) AS v
+      |  FROM lum l JOIN tot ON l.doc_id = tot.doc_id GROUP BY 1)"""
+
   private[queries] val qM11 = Q(
     "q_m11_image_ahash",
-    """WITH src AS (
+    s"""WITH src AS (
       |  SELECT doc_id,
       |         CAST(doc_id % 5 + 4 AS BIGINT) AS w,
       |         CAST(doc_id % 4 + 2 AS BIGINT) AS h,
@@ -804,14 +820,7 @@ object MultimodalQueries extends QueryGroup {
       |  FROM (SELECT doc_id, k, blank,
       |               (CASE WHEN topdown THEN y ELSE h - 1 - y END) * w + x AS i
       |        FROM cell)),
-      |tot AS (SELECT doc_id, sum(L) AS t FROM lum GROUP BY 1),
-      |hsh AS (
-      |  SELECT l.doc_id,
-      |         CAST(sum(CASE WHEN 64 * l.L > tot.t
-      |                       THEN CASE WHEN l.k = 0 THEN -9223372036854775808
-      |                            ELSE (1::BIGINT << CAST(63 - l.k AS INT)) END
-      |                       ELSE 0 END) AS BIGINT) AS v
-      |  FROM lum l JOIN tot ON l.doc_id = tot.doc_id GROUP BY 1)
+      |$aHashBitsSql
       |SELECT s.doc_id,
       |       CASE WHEN s.ok THEN hsh.v END AS ahash,
       |       s.ok AS valid_bmp
@@ -857,9 +866,6 @@ object MultimodalQueries extends QueryGroup {
       |FROM hsh a JOIN hsh b ON a.doc_id < b.doc_id
       |WHERE bit_count(xor(a.v, b.v)) <= 3
       |ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-    def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
-      concat((0 until nBytes).map(i =>
-        lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
     val g = floor(col("doc_id") / 4).cast("bigint")
     val v = col("doc_id") % 4
     // bottom-up 8×8: storage row r holds image row y = 7 − r; grid cell
@@ -909,33 +915,11 @@ object MultimodalQueries extends QueryGroup {
   // gate pins the sample ORDER.
   private val qM13 = Q(
     "q_m13_wav_zero_crossings",
-    """WITH src AS (
-      |  SELECT doc_id,
-      |         CAST(doc_id % 2 + 1 AS BIGINT) AS ch,
-      |         CAST(CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 8 WHEN 1 THEN 16
-      |              WHEN 2 THEN 24 ELSE 32 END AS BIGINT) AS bits,
-      |         CAST(n_chars % 40 + 2 AS BIGINT) AS frames,
-      |         (doc_id % 9 <> 0) AS ok
-      |  FROM documents),
+    s"""WITH src AS (
+      |$wavSrcSql
       |samp AS (
       |  SELECT doc_id, ch, frames, k % ch AS c, k // ch AS f,
-      |         CASE WHEN k % 10 = 0 THEN hf - 1
-      |              WHEN k % 10 = 5 THEN -hf
-      |              WHEN bits = 8 THEN vraw - 128
-      |              WHEN vraw < hf THEN vraw
-      |              ELSE vraw - sp END AS v,
-      |         hf
-      |  FROM (
-      |    SELECT s.*, u.k,
-      |           CASE bits WHEN 8 THEN 256 WHEN 16 THEN 65536
-      |                WHEN 24 THEN 16777216 ELSE 4294967296 END AS sp,
-      |           CASE bits WHEN 8 THEN 128 WHEN 16 THEN 32768
-      |                WHEN 24 THEN 8388608 ELSE 2147483648 END AS hf,
-      |           (s.doc_id * 31 + u.k * 17 + 7) %
-      |             (CASE bits WHEN 8 THEN 256 WHEN 16 THEN 65536
-      |                   WHEN 24 THEN 16777216 ELSE 4294967296 END) AS vraw
-      |    FROM src s, unnest(range(s.frames * s.ch)) AS u(k)
-      |    WHERE s.ok)),
+      |$wavSamplesSql
       |lagged AS (
       |  SELECT doc_id, c, v, hf,
       |         lag(v) OVER (PARTITION BY doc_id, c ORDER BY f) AS pv
@@ -961,71 +945,7 @@ object MultimodalQueries extends QueryGroup {
       |       CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE)
       |FROM src WHERE NOT ok
       |ORDER BY doc_id, channel""".stripMargin) { (s, dir) =>
-    def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
-      concat((0 until nBytes).map(i =>
-        lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
-    val ch = (col("doc_id") % 2 + 1).cast("bigint")
-    val bits = element_at(
-      typedlit(Seq(8L, 16L, 24L, 32L)), (col("doc_id") % 4 + 1).cast("int"))
-    val span = element_at(
-      typedlit(Seq(256L, 65536L, 16777216L, 4294967296L)),
-      (col("doc_id") % 4 + 1).cast("int"))
-    val half = element_at(
-      typedlit(Seq(128L, 32768L, 8388608L, 2147483648L)),
-      (col("doc_id") % 4 + 1).cast("int"))
-    val frames = (col("n_chars") % 40 + 2).cast("bigint")
-    val rate = lit(16000L)
-    val blockAlign = ch * (bits / lit(8L)).cast("bigint")
-    val dataSize = frames * blockAlign
-    val sigHex = when(col("doc_id") % 9 === 0, lit("52494658"))
-      .otherwise(lit("52494646"))
-    val n = frames * ch
-    val docConst = struct(
-      bits.as("bits"), span.as("span"), half.as("half"),
-      col("doc_id").as("id"))
-    val dataHex = graft.functions.hof.bind(docConst) { d =>
-      val dBits = d.getField("bits")
-      val dSpan = d.getField("span")
-      val dHalf = d.getField("half")
-      array_join(
-        transform(sequence(lit(0L), n - 1L), k => {
-          val vraw = (d.getField("id") * 31 + k * 17 + 7) % dSpan
-          val v = when(k % 10 === 0, dHalf - 1)
-            .when(k % 10 === 5, -dHalf)
-            .when(dBits === 8L, vraw - 128L)
-            .when(vraw < dHalf, vraw)
-            .otherwise(vraw - dSpan)
-          val u = when(dBits === 8L, v + 128L)
-            .otherwise(when(v < 0, v + dSpan).otherwise(v))
-          val swapped = when(dBits === 8L, u)
-            .when(dBits === 16L,
-              u.bitwiseAND(lit(255L)) * 256L + shiftright(u, 8))
-            .when(dBits === 24L,
-              u.bitwiseAND(lit(255L)) * 65536L +
-                shiftright(u, 8).bitwiseAND(lit(255L)) * 256L +
-                shiftright(u, 16))
-            .otherwise(
-              u.bitwiseAND(lit(255L)) * 16777216L +
-                shiftright(u, 8).bitwiseAND(lit(255L)) * 65536L +
-                shiftright(u, 16).bitwiseAND(lit(255L)) * 256L +
-                shiftright(u, 24))
-          lpad(hex(swapped), ((dBits / 8L) * 2L).cast("int"), lit("0"))
-        }), "")
-    }
-    def le16(c: org.apache.spark.sql.Column) = leHexN(c, 2)
-    def le32(c: org.apache.spark.sql.Column) = leHexN(c, 4)
-    val payloadHex = concat(
-      sigHex, le32(dataSize + 36), lit("57415645"),
-      lit("666D7420"), le32(lit(16L)),
-      le16(lit(1L)), le16(ch),
-      le32(rate), le32(rate * blockAlign),
-      le16(blockAlign), le16(bits),
-      lit("64617461"), le32(dataSize),
-      dataHex)
-    val withPayload = Tables.spread(Tables.load(s, dir, "documents"))
-      .select(col("doc_id"), unhex(payloadHex).as("payload"))
-      .pin()
-    withPayload
+    wavPcmPayloads(s, dir)
       .withColumn("st", Multimodal.wavZeroCrossings(col("payload")))
       .select(col("doc_id"), explode_outer(col("st")).as("e"))
       .select(
@@ -1235,9 +1155,6 @@ object MultimodalQueries extends QueryGroup {
       adlerFlip: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     def beHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
       lpad(hex(c), 2 * nBytes, "0")
-    def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
-      concat((0 until nBytes).map(i =>
-        lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
     val rowLen = lit(1L) + w * ch
     val n = h * rowLen
     def rawByte(p: org.apache.spark.sql.Column) = {
@@ -1439,7 +1356,7 @@ object MultimodalQueries extends QueryGroup {
 
   private[queries] val qM17 = Q(
     "q_m17_png_ahash",
-    """WITH src AS (
+    s"""WITH src AS (
       |  SELECT doc_id,
       |         CAST(doc_id % 6 + 4 AS BIGINT) AS w,
       |         CAST(doc_id % 5 + 3 AS BIGINT) AS h,
@@ -1455,14 +1372,7 @@ object MultimodalQueries extends QueryGroup {
       |                 END) AS L
       |  FROM src s, unnest(range(64)) AS u(k)
       |  WHERE s.ok),
-      |tot AS (SELECT doc_id, sum(L) AS t FROM lum GROUP BY 1),
-      |hsh AS (
-      |  SELECT l.doc_id,
-      |         CAST(sum(CASE WHEN 64 * l.L > tot.t
-      |                       THEN CASE WHEN l.k = 0 THEN -9223372036854775808
-      |                            ELSE (1::BIGINT << CAST(63 - l.k AS INT)) END
-      |                       ELSE 0 END) AS BIGINT) AS v
-      |  FROM lum l JOIN tot ON l.doc_id = tot.doc_id GROUP BY 1)
+      |$aHashBitsSql
       |SELECT s.doc_id,
       |       CASE WHEN s.ok THEN hsh.v END AS ahash,
       |       CASE WHEN s.ok THEN 1 END AS formats_agree,
@@ -1535,9 +1445,6 @@ object MultimodalQueries extends QueryGroup {
       |       s.ok AS valid_gif
       |FROM src s LEFT JOIN ag a ON a.doc_id = s.doc_id
       |ORDER BY s.doc_id""".stripMargin) { (s, dir) =>
-    def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
-      concat((0 until nBytes).map(i =>
-        lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
     val w = (col("doc_id") % 7 + 3).cast("bigint")
     val h = (col("n_chars") % 6 + 2).cast("bigint")
     val seed = (col("doc_id") % 127).cast("bigint")
@@ -1613,9 +1520,6 @@ object MultimodalQueries extends QueryGroup {
       |            WHEN 1 THEN 'lossless' ELSE 'extended' END END AS format,
       |       ok AS valid_webp
       |FROM src ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
-      concat((0 until nBytes).map(i =>
-        lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
     val variant = (col("doc_id") % 3).cast("int")
     val w14 = (col("n_chars") % 16000 + 1).cast("bigint")
     val h14 = ((col("n_chars") * 3 + col("doc_id") % 777) % 16000 + 1).cast("bigint")
@@ -2421,9 +2325,6 @@ object MultimodalQueries extends QueryGroup {
   private[queries] def ahashParity5Frame(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
       RunScope.scope("ahashParity5Frame") {
-    def leHexN(c: org.apache.spark.sql.Column, nBytes: Int) =
-      concat((0 until nBytes).map(i =>
-        lpad(hex(shiftright(c, 8 * i).bitwiseAND(lit(255L))), 2, "0")): _*)
     val blank = col("doc_id") % 6 === 0
     val ok = col("doc_id") % 9 =!= 0
     // h fixed at 8 and the corpus capped at 250 (the q_r3 rule, tightened
@@ -2497,7 +2398,7 @@ object MultimodalQueries extends QueryGroup {
 
   private[queries] val qM27 = Q(
     "q_m27_ahash_parity_5formats",
-    """WITH src AS (
+    s"""WITH src AS (
       |  SELECT doc_id,
       |         (doc_id % 6 = 0) AS blank,
       |         (doc_id % 9 <> 0) AS ok,
@@ -2514,14 +2415,7 @@ object MultimodalQueries extends QueryGroup {
       |                            ELSE 0 END)) AS L
       |  FROM src s, unnest(range(64)) AS u(k)
       |  WHERE s.ok),
-      |tot AS (SELECT doc_id, sum(L) AS t FROM lum GROUP BY 1),
-      |hsh AS (
-      |  SELECT l.doc_id,
-      |         CAST(sum(CASE WHEN 64 * l.L > tot.t
-      |                       THEN CASE WHEN l.k = 0 THEN -9223372036854775808
-      |                            ELSE (1::BIGINT << CAST(63 - l.k AS INT)) END
-      |                       ELSE 0 END) AS BIGINT) AS v
-      |  FROM lum l JOIN tot ON l.doc_id = tot.doc_id GROUP BY 1)
+      |$aHashBitsSql
       |SELECT s.doc_id,
       |       CASE WHEN s.ok THEN hsh.v END AS ahash,
       |       CASE WHEN s.ok THEN 1 END AS agree_rgb_png,

@@ -200,7 +200,7 @@ object PipelineQueries extends QueryGroup {
   // keys — folded into the customer snapshot as one anti-join + union.
   // The oracle replays the batch construction and the MERGE semantics
   // with NOT EXISTS + UNION ALL.
-  private val qF6 = Q(
+  private[queries] val qF6 = Q(
     "q_f6_merge_cdc",
     """WITH changes AS (
       |  SELECT c_custkey,
@@ -248,6 +248,95 @@ object PipelineQueries extends QueryGroup {
       .orderBy("c_custkey")
   }
 
+  // The entity-resolution corpus of q_f7, q_f8, q_f10, q_f11 and q_f14:
+  // customers as `(rec_id, name, nat, seg)` records under a hash-derived
+  // 10-char name, plus planted variants of every k-th record at a fixed
+  // id offset.
+  private def erRecords(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Tables.load(s, dir, "customer")
+      .select(
+        col("c_custkey").cast("long").as("rec_id"),
+        substring(md5(col("c_custkey").cast("string")), 1, 10).as("name"),
+        col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"))
+
+  private def erVariant(base: org.apache.spark.sql.DataFrame, every: Int, offset: Long)(
+      cols: org.apache.spark.sql.Column*) =
+    base.where(col("rec_id") % every === 0)
+      .select((col("rec_id") + offset).as("rec_id") +: cols: _*)
+
+  /** Every 7th record with a dist-1 typo in its name. */
+  private def erTypo1(base: org.apache.spark.sql.DataFrame) =
+    erVariant(base, 7, 10000000L)(
+      concat(substring(col("name"), 1, 9), lit("z")).as("name"), col("nat"), col("seg"))
+
+  /** The records plus dist-1 (every 7th) and dist-2 (every 11th) typos. */
+  private def erTypoRecords(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val base = erRecords(s, dir)
+    base.unionByName(erTypo1(base)).unionByName(erVariant(base, 11, 20000000L)(
+      concat(substring(col("name"), 1, 8), lit("zz")).as("name"), col("nat"), col("seg")))
+  }
+
+  /** The records plus exact duplicates (every 5th), name coincidences
+    * across nations (every 6th) and dist-1 typos (every 7th).
+    */
+  private def erEmRecords(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val base = erRecords(s, dir)
+    base
+      .unionByName(erVariant(base, 5, 30000000L)(col("name"), col("nat"), col("seg")))
+      .unionByName(erVariant(base, 6, 40000000L)(
+        col("name"), ((col("nat") + 7) % 25).as("nat"), lit("ZZZ").as("seg")))
+      .unionByName(erTypo1(base))
+  }
+
+  // Oracle fragments (margin text, interpolated before stripMargin):
+  // q_f7/q_f8's typo corpus scored by fixed weights and closed into
+  // entities (`comp`), q_f11/q_f14's planted variants unioned into `r`,
+  // and their shared EM start point plus three rounds.
+  private val erClosureSql =
+    """base AS (SELECT CAST(c_custkey AS BIGINT) AS id,
+      |                substr(md5(CAST(c_custkey AS VARCHAR)), 1, 10) AS name,
+      |                c_nationkey AS nat, c_mktsegment AS seg
+      |         FROM customer),
+      |typo1 AS (SELECT id + 10000000 AS id, substr(name, 1, 9) || 'z' AS name,
+      |                 nat, seg FROM base WHERE id % 7 = 0),
+      |typo2 AS (SELECT id + 20000000 AS id, substr(name, 1, 8) || 'zz' AS name,
+      |                 nat, seg FROM base WHERE id % 11 = 0),
+      |r AS (SELECT * FROM base UNION ALL SELECT * FROM typo1
+      |      UNION ALL SELECT * FROM typo2),
+      |cand AS (
+      |  SELECT a.id AS id_a, b.id AS id_b,
+      |         levenshtein(a.name, b.name) AS dist,
+      |         a.nat AS nat_a, b.nat AS nat_b, a.seg AS seg_a, b.seg AS seg_b
+      |  FROM r a JOIN r b ON a.id < b.id
+      |  WHERE levenshtein(a.name, b.name) <= 2),
+      |m AS (
+      |  SELECT id_a, id_b FROM cand
+      |  WHERE (CASE dist WHEN 0 THEN 6.0 WHEN 1 THEN 4.0 ELSE 2.0 END)
+      |        + (CASE WHEN nat_a = nat_b THEN 1.5 ELSE -3.0 END)
+      |        + (CASE WHEN seg_a = seg_b THEN 1.0 ELSE -0.5 END) >= 5.0),
+      |edges AS (SELECT id_a AS u, id_b AS v FROM m UNION SELECT id_b, id_a FROM m),
+      |reach(u, lbl) AS (
+      |  SELECT u, u FROM edges
+      |  UNION
+      |  SELECT e.u, w.lbl FROM edges e JOIN reach w ON e.v = w.u),
+      |comp AS (SELECT u, min(lbl) AS entity_id FROM reach GROUP BY u)"""
+  private val erEmVariantsSql =
+    """exact AS (SELECT id + 30000000 AS id, name, nat, seg FROM base WHERE id % 5 = 0),
+      |coinc AS (SELECT id + 40000000 AS id, name, (nat + 7) % 25 AS nat,
+      |                 'ZZZ' AS seg FROM base WHERE id % 6 = 0),
+      |typo AS (SELECT id + 10000000 AS id, substr(name, 1, 9) || 'z' AS name,
+      |                nat, seg FROM base WHERE id % 7 = 0),
+      |r AS (SELECT * FROM base UNION ALL SELECT * FROM exact
+      |      UNION ALL SELECT * FROM coinc UNION ALL SELECT * FROM typo),"""
+  private val emRoundsSql =
+    s"""em0 AS (SELECT CAST(0.5 AS DOUBLE) AS lambda,
+       |               CAST(0.9 AS DOUBLE) AS m_name, CAST(0.1 AS DOUBLE) AS u_name,
+       |               CAST(0.9 AS DOUBLE) AS m_nat, CAST(0.1 AS DOUBLE) AS u_nat,
+       |               CAST(0.9 AS DOUBLE) AS m_seg, CAST(0.1 AS DOUBLE) AS u_seg),
+       |${emIter(1)},
+       |${emIter(2)},
+       |${emIter(3)}"""
+
   // End-to-end entity resolution — the reference's identity-matching
   // problem (SisConnectorService.java:142-160 keyed record syncs)
   // composed from engine parts: provably-complete fuzzy name blocking →
@@ -272,52 +361,13 @@ object PipelineQueries extends QueryGroup {
   // materializing all pairs.
   private val qF7 = Q(
     "q_f7_entity_resolution",
-    """WITH RECURSIVE
-      |base AS (SELECT CAST(c_custkey AS BIGINT) AS id,
-      |                substr(md5(CAST(c_custkey AS VARCHAR)), 1, 10) AS name,
-      |                c_nationkey AS nat, c_mktsegment AS seg
-      |         FROM customer),
-      |typo1 AS (SELECT id + 10000000 AS id, substr(name, 1, 9) || 'z' AS name,
-      |                 nat, seg FROM base WHERE id % 7 = 0),
-      |typo2 AS (SELECT id + 20000000 AS id, substr(name, 1, 8) || 'zz' AS name,
-      |                 nat, seg FROM base WHERE id % 11 = 0),
-      |r AS (SELECT * FROM base UNION ALL SELECT * FROM typo1
-      |      UNION ALL SELECT * FROM typo2),
-      |cand AS (
-      |  SELECT a.id AS id_a, b.id AS id_b,
-      |         levenshtein(a.name, b.name) AS dist,
-      |         a.nat AS nat_a, b.nat AS nat_b, a.seg AS seg_a, b.seg AS seg_b
-      |  FROM r a JOIN r b ON a.id < b.id
-      |  WHERE levenshtein(a.name, b.name) <= 2),
-      |m AS (
-      |  SELECT id_a, id_b FROM cand
-      |  WHERE (CASE dist WHEN 0 THEN 6.0 WHEN 1 THEN 4.0 ELSE 2.0 END)
-      |        + (CASE WHEN nat_a = nat_b THEN 1.5 ELSE -3.0 END)
-      |        + (CASE WHEN seg_a = seg_b THEN 1.0 ELSE -0.5 END) >= 5.0),
-      |edges AS (SELECT id_a AS u, id_b AS v FROM m UNION SELECT id_b, id_a FROM m),
-      |reach(u, lbl) AS (
-      |  SELECT u, u FROM edges
-      |  UNION
-      |  SELECT e.u, w.lbl FROM edges e JOIN reach w ON e.v = w.u),
-      |comp AS (SELECT u, min(lbl) AS entity_id FROM reach GROUP BY u)
+    s"""WITH RECURSIVE
+      |$erClosureSql
       |SELECT r.id AS rec_id, coalesce(c.entity_id, r.id) AS entity_id
       |FROM r LEFT JOIN comp c ON c.u = r.id
       |ORDER BY rec_id""".stripMargin) { (s, dir) =>
-    val base = graft.Tables.load(s, dir, "customer")
-      .select(
-        col("c_custkey").cast("long").as("rec_id"),
-        substring(md5(col("c_custkey").cast("string")), 1, 10).as("name"),
-        col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"))
-    val typo1 = base.where(col("rec_id") % 7 === 0)
-      .select((col("rec_id") + 10000000L).as("rec_id"),
-        concat(substring(col("name"), 1, 9), lit("z")).as("name"),
-        col("nat"), col("seg"))
-    val typo2 = base.where(col("rec_id") % 11 === 0)
-      .select((col("rec_id") + 20000000L).as("rec_id"),
-        concat(substring(col("name"), 1, 8), lit("zz")).as("name"),
-        col("nat"), col("seg"))
     graft.operators.EntityResolution.resolve(
-      base.unionByName(typo1).unionByName(typo2),
+      erTypoRecords(s, dir),
       idCol = "rec_id", nameCol = "name",
       nameWeights = Seq(6.0, 4.0, 2.0),
       fieldWeights = Seq(("nat", 1.5, -3.0), ("seg", 1.0, -0.5)),
@@ -340,34 +390,8 @@ object PipelineQueries extends QueryGroup {
   // set difference — so a wrong cluster anywhere flips a 'D' row.
   private val qF8 = Q(
     "q_f8_resolved_sync_diff",
-    """WITH RECURSIVE
-      |base AS (SELECT CAST(c_custkey AS BIGINT) AS id,
-      |                substr(md5(CAST(c_custkey AS VARCHAR)), 1, 10) AS name,
-      |                c_nationkey AS nat, c_mktsegment AS seg
-      |         FROM customer),
-      |typo1 AS (SELECT id + 10000000 AS id, substr(name, 1, 9) || 'z' AS name,
-      |                 nat, seg FROM base WHERE id % 7 = 0),
-      |typo2 AS (SELECT id + 20000000 AS id, substr(name, 1, 8) || 'zz' AS name,
-      |                 nat, seg FROM base WHERE id % 11 = 0),
-      |r AS (SELECT * FROM base UNION ALL SELECT * FROM typo1
-      |      UNION ALL SELECT * FROM typo2),
-      |cand AS (
-      |  SELECT a.id AS id_a, b.id AS id_b,
-      |         levenshtein(a.name, b.name) AS dist,
-      |         a.nat AS nat_a, b.nat AS nat_b, a.seg AS seg_a, b.seg AS seg_b
-      |  FROM r a JOIN r b ON a.id < b.id
-      |  WHERE levenshtein(a.name, b.name) <= 2),
-      |m AS (
-      |  SELECT id_a, id_b FROM cand
-      |  WHERE (CASE dist WHEN 0 THEN 6.0 WHEN 1 THEN 4.0 ELSE 2.0 END)
-      |        + (CASE WHEN nat_a = nat_b THEN 1.5 ELSE -3.0 END)
-      |        + (CASE WHEN seg_a = seg_b THEN 1.0 ELSE -0.5 END) >= 5.0),
-      |edges AS (SELECT id_a AS u, id_b AS v FROM m UNION SELECT id_b, id_a FROM m),
-      |reach(u, lbl) AS (
-      |  SELECT u, u FROM edges
-      |  UNION
-      |  SELECT e.u, w.lbl FROM edges e JOIN reach w ON e.v = w.u),
-      |comp AS (SELECT u, min(lbl) AS entity_id FROM reach GROUP BY u),
+    s"""WITH RECURSIVE
+      |$erClosureSql,
       |emap AS (SELECT r.id, coalesce(c.entity_id, r.id) AS entity_id
       |         FROM r LEFT JOIN comp c ON c.u = r.id)
       |SELECT entity_id AS key, 'U' AS op
@@ -376,20 +400,7 @@ object PipelineQueries extends QueryGroup {
       |SELECT id AS key, 'D' AS op FROM emap
       |WHERE id NOT IN (SELECT entity_id FROM emap)
       |ORDER BY op, key""".stripMargin) { (s, dir) =>
-    val base = graft.Tables.load(s, dir, "customer")
-      .select(
-        col("c_custkey").cast("long").as("rec_id"),
-        substring(md5(col("c_custkey").cast("string")), 1, 10).as("name"),
-        col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"))
-    val typo1 = base.where(col("rec_id") % 7 === 0)
-      .select((col("rec_id") + 10000000L).as("rec_id"),
-        concat(substring(col("name"), 1, 9), lit("z")).as("name"),
-        col("nat"), col("seg"))
-    val typo2 = base.where(col("rec_id") % 11 === 0)
-      .select((col("rec_id") + 20000000L).as("rec_id"),
-        concat(substring(col("name"), 1, 8), lit("zz")).as("name"),
-        col("nat"), col("seg"))
-    val raw = base.unionByName(typo1).unionByName(typo2)
+    val raw = erTypoRecords(s, dir)
     val resolved = graft.operators.EntityResolution.resolve(
       raw,
       idCol = "rec_id", nameCol = "name",
@@ -425,14 +436,7 @@ object PipelineQueries extends QueryGroup {
   private val qF9 = Q(
     "q_f9_corpus_pipeline",
     s"""WITH RECURSIVE pairs AS (${DedupQueries.pairsOracle}),
-       |edges AS (
-       |  SELECT id_a AS u, id_b AS v FROM pairs
-       |  UNION SELECT id_b, id_a FROM pairs),
-       |reach(u, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
-       |comp AS (SELECT u, min(lbl) AS cluster_id FROM reach GROUP BY u),
+       |${DedupQueries.pairsClosureSql},
        |dedup AS (
        |  SELECT d.doc_id FROM documents d LEFT JOIN comp c ON c.u = d.doc_id
        |  WHERE coalesce(c.cluster_id, d.doc_id) = d.doc_id),
@@ -555,17 +559,9 @@ object PipelineQueries extends QueryGroup {
       |SELECT id_a, id_b, CAST(dist AS INT) AS dist, score
       |FROM scored WHERE score >= 10.7
       |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
-    val base = Tables.load(s, dir, "customer")
-      .select(
-        col("c_custkey").cast("long").as("rec_id"),
-        substring(md5(col("c_custkey").cast("string")), 1, 10).as("name"),
-        col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"))
-    val typo1 = base.where(col("rec_id") % 7 === 0)
-      .select((col("rec_id") + 10000000L).as("rec_id"),
-        concat(substring(col("name"), 1, 9), lit("z")).as("name"),
-        col("nat"), col("seg"))
+    val base = erRecords(s, dir)
     graft.operators.EntityResolution.frequencyScoredPairs(
-      base.unionByName(typo1),
+      base.unionByName(erTypo1(base)),
       idCol = "rec_id", nameCol = "name",
       nameWeights = Seq(6.0, 4.0),
       freqFields = Seq(("nat", 0.95, -3.0, 6.0), ("seg", 0.9, -0.5, 4.0)),
@@ -633,13 +629,7 @@ object PipelineQueries extends QueryGroup {
        |                     substr(md5(CAST(c_custkey AS VARCHAR)), 1, 10) AS name,
        |                     c_nationkey AS nat, c_mktsegment AS seg
        |              FROM customer),
-       |exact AS (SELECT id + 30000000 AS id, name, nat, seg FROM base WHERE id % 5 = 0),
-       |coinc AS (SELECT id + 40000000 AS id, name, (nat + 7) % 25 AS nat,
-       |                 'ZZZ' AS seg FROM base WHERE id % 6 = 0),
-       |typo AS (SELECT id + 10000000 AS id, substr(name, 1, 9) || 'z' AS name,
-       |                nat, seg FROM base WHERE id % 7 = 0),
-       |r AS (SELECT * FROM base UNION ALL SELECT * FROM exact
-       |      UNION ALL SELECT * FROM coinc UNION ALL SELECT * FROM typo),
+       |$erEmVariantsSql
        |pat AS (
        |  SELECT CASE WHEN levenshtein(a.name, b.name) = 0 THEN 1 ELSE 0 END AS g_name,
        |         CASE WHEN a.nat = b.nat THEN 1 ELSE 0 END AS g_nat,
@@ -648,13 +638,7 @@ object PipelineQueries extends QueryGroup {
        |  FROM r a JOIN r b ON a.id < b.id
        |  WHERE levenshtein(a.name, b.name) <= 1
        |  GROUP BY 1, 2, 3),
-       |em0 AS (SELECT CAST(0.5 AS DOUBLE) AS lambda,
-       |               CAST(0.9 AS DOUBLE) AS m_name, CAST(0.1 AS DOUBLE) AS u_name,
-       |               CAST(0.9 AS DOUBLE) AS m_nat, CAST(0.1 AS DOUBLE) AS u_nat,
-       |               CAST(0.9 AS DOUBLE) AS m_seg, CAST(0.1 AS DOUBLE) AS u_seg),
-       |${emIter(1)},
-       |${emIter(2)},
-       |${emIter(3)}
+       |$emRoundsSql
        |SELECT g_name, g_nat, g_seg, cnt,
        |       round(pm / (pm + pu), 6) AS w,
        |       round(lambda, 6) AS lambda,
@@ -666,23 +650,8 @@ object PipelineQueries extends QueryGroup {
        |        ${emPmu("u")} AS pu
        |      FROM pat p CROSS JOIN em3 em)
        |ORDER BY g_name, g_nat, g_seg""".stripMargin) { (s, dir) =>
-    val base = Tables.load(s, dir, "customer")
-      .select(
-        col("c_custkey").cast("long").as("rec_id"),
-        substring(md5(col("c_custkey").cast("string")), 1, 10).as("name"),
-        col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"))
-    val exact = base.where(col("rec_id") % 5 === 0)
-      .select((col("rec_id") + 30000000L).as("rec_id"), col("name"),
-        col("nat"), col("seg"))
-    val coinc = base.where(col("rec_id") % 6 === 0)
-      .select((col("rec_id") + 40000000L).as("rec_id"), col("name"),
-        ((col("nat") + 7) % 25).as("nat"), lit("ZZZ").as("seg"))
-    val typo = base.where(col("rec_id") % 7 === 0)
-      .select((col("rec_id") + 10000000L).as("rec_id"),
-        concat(substring(col("name"), 1, 9), lit("z")).as("name"),
-        col("nat"), col("seg"))
     graft.operators.EntityResolution.emPatternWeights(
-      base.unionByName(exact).unionByName(coinc).unionByName(typo),
+      erEmRecords(s, dir),
       idCol = "rec_id", nameCol = "name", fieldCols = Seq("nat", "seg"),
       maxNameDist = 1, iterations = 3)
       .orderBy("g_name", "g_nat", "g_seg")
@@ -838,13 +807,7 @@ object PipelineQueries extends QueryGroup {
        |                substr(md5(CAST(c_custkey AS VARCHAR)), 1, 10) AS name,
        |                c_nationkey AS nat, c_mktsegment AS seg
        |         FROM customer),
-       |exact AS (SELECT id + 30000000 AS id, name, nat, seg FROM base WHERE id % 5 = 0),
-       |coinc AS (SELECT id + 40000000 AS id, name, (nat + 7) % 25 AS nat,
-       |                 'ZZZ' AS seg FROM base WHERE id % 6 = 0),
-       |typo AS (SELECT id + 10000000 AS id, substr(name, 1, 9) || 'z' AS name,
-       |                nat, seg FROM base WHERE id % 7 = 0),
-       |r AS (SELECT * FROM base UNION ALL SELECT * FROM exact
-       |      UNION ALL SELECT * FROM coinc UNION ALL SELECT * FROM typo),
+       |$erEmVariantsSql
        |candp AS (
        |  SELECT a.id AS id_a, b.id AS id_b,
        |         CASE WHEN levenshtein(a.name, b.name) = 0 THEN 1 ELSE 0 END AS g_name,
@@ -855,13 +818,7 @@ object PipelineQueries extends QueryGroup {
        |pat AS (
        |  SELECT g_name, g_nat, g_seg, count(*) AS cnt
        |  FROM candp GROUP BY 1, 2, 3),
-       |em0 AS (SELECT CAST(0.5 AS DOUBLE) AS lambda,
-       |               CAST(0.9 AS DOUBLE) AS m_name, CAST(0.1 AS DOUBLE) AS u_name,
-       |               CAST(0.9 AS DOUBLE) AS m_nat, CAST(0.1 AS DOUBLE) AS u_nat,
-       |               CAST(0.9 AS DOUBLE) AS m_seg, CAST(0.1 AS DOUBLE) AS u_seg),
-       |${emIter(1)},
-       |${emIter(2)},
-       |${emIter(3)},
+       |$emRoundsSql,
        |wpat AS (
        |  SELECT g_name, g_nat, g_seg,
        |         round(pm / (pm + pu), 6) AS w
@@ -882,23 +839,8 @@ object PipelineQueries extends QueryGroup {
        |SELECT r.id AS rec_id, coalesce(c.entity_id, r.id) AS entity_id
        |FROM r LEFT JOIN comp c ON c.u = r.id
        |ORDER BY rec_id""".stripMargin) { (s, dir) =>
-    val base = Tables.load(s, dir, "customer")
-      .select(
-        col("c_custkey").cast("long").as("rec_id"),
-        substring(md5(col("c_custkey").cast("string")), 1, 10).as("name"),
-        col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"))
-    val exact = base.where(col("rec_id") % 5 === 0)
-      .select((col("rec_id") + 30000000L).as("rec_id"), col("name"),
-        col("nat"), col("seg"))
-    val coinc = base.where(col("rec_id") % 6 === 0)
-      .select((col("rec_id") + 40000000L).as("rec_id"), col("name"),
-        ((col("nat") + 7) % 25).as("nat"), lit("ZZZ").as("seg"))
-    val typo = base.where(col("rec_id") % 7 === 0)
-      .select((col("rec_id") + 10000000L).as("rec_id"),
-        concat(substring(col("name"), 1, 9), lit("z")).as("name"),
-        col("nat"), col("seg"))
     graft.operators.EntityResolution.resolveWithEmWeights(
-      base.unionByName(exact).unionByName(coinc).unionByName(typo),
+      erEmRecords(s, dir),
       idCol = "rec_id", nameCol = "name", fieldCols = Seq("nat", "seg"),
       maxNameDist = 1, minPosterior = 0.9, iterations = 3,
       blockCol = Some("nat"))
@@ -1083,6 +1025,50 @@ object PipelineQueries extends QueryGroup {
       .pin()
   }
 
+  /** An HTTP response message: a 404 text/plain when `notFound`, else a
+    * 200 text/html carrying `page`.
+    */
+  private def httpResponse(
+      notFound: org.apache.spark.sql.Column, page: org.apache.spark.sql.Column) =
+    when(notFound,
+      lit("HTTP/1.1 404 Not Found\r\nContent-Type: text/plain\r\n" +
+        "Content-Length: 9\r\n\r\nnot found"))
+      .otherwise(concat(
+        lit("HTTP/1.1 200 OK\r\n" +
+          "Content-Type: text/html; charset=UTF-8\r\nContent-Length: "),
+        length(page).cast("string"), lit("\r\n\r\n"), page))
+
+  /** `(doc_id, gz)`: each doc's `record` text as one STORED-deflate gzip
+    * member (the q_m29 construction), CRC-corrupted on every 9th doc. The
+    * record text is pinned once — LEN/NLEN/hex/CRC/ISIZE all read it.
+    */
+  private def storedGzMembers(
+      docs: org.apache.spark.sql.DataFrame, record: org.apache.spark.sql.Column) = {
+    def le16(n: org.apache.spark.sql.Column) = {
+      val h = lpad(hex(n), 4, "0")
+      concat(substring(h, 3, 2), substring(h, 1, 2))
+    }
+    def le32(v: org.apache.spark.sql.Column) = {
+      val h = lpad(hex(v), 8, "0")
+      concat(substring(h, 7, 2), substring(h, 5, 2),
+        substring(h, 3, 2), substring(h, 1, 2))
+    }
+    val recs = docs
+      .select(col("doc_id"), record.as("rc"))
+      .pin()
+    val crc = crc32(encode(col("rc"), "UTF-8"))
+    val crcOut = when(col("doc_id") % 9 === 0,
+      pmod(crc + 1, lit(4294967296L))).otherwise(crc)
+    recs.select(col("doc_id"),
+      unhex(concat(
+        lit("1F8B0800000000000003"),
+        lit("01"), le16(length(col("rc"))),
+        le16(lit(65535) - length(col("rc"))),
+        hex(encode(col("rc"), "UTF-8")),
+        le32(crcOut), le32(length(col("rc"))))).as("gz"))
+      .pin()
+  }
+
   // The Common Crawl FRONT DOOR composed end to end: `.warc.gz` landing
   // files (one gzip member per record, STORED-deflate construction with
   // real CRC32 trailers; every 9th file CRC-corrupted and quarantined)
@@ -1151,13 +1137,7 @@ object PipelineQueries extends QueryGroup {
     // the record payload is a full HTTP response message (the real
     // Common Crawl `response` record shape): 200 text/html carrying the
     // page, or a 404 text/plain the envelope's status gate must drop
-    val http = when(col("doc_id") % 7 === 3,
-      lit("HTTP/1.1 404 Not Found\r\nContent-Type: text/plain\r\n" +
-        "Content-Length: 9\r\n\r\nnot found"))
-      .otherwise(concat(
-        lit("HTTP/1.1 200 OK\r\n" +
-          "Content-Type: text/html; charset=UTF-8\r\nContent-Length: "),
-        length(page).cast("string"), lit("\r\n\r\n"), page))
+    val http = httpResponse(col("doc_id") % 7 === 3, page)
     val record = concat(
       lit("WARC/1.0\r\nWARC-Type: response\r\n"),
       lit("WARC-Record-ID: <urn:uuid:fp-"), did, lit(">\r\n"),
@@ -1166,32 +1146,8 @@ object PipelineQueries extends QueryGroup {
       lit("Content-Type: application/http;msgtype=response\r\n"),
       lit("Content-Length: "), length(http).cast("string"),
       lit("\r\n\r\n"), http, lit("\r\n\r\n"))
-    def le16(n: org.apache.spark.sql.Column) = {
-      val h = lpad(hex(n), 4, "0")
-      concat(substring(h, 3, 2), substring(h, 1, 2))
-    }
-    def le32(v: org.apache.spark.sql.Column) = {
-      val h = lpad(hex(v), 8, "0")
-      concat(substring(h, 7, 2), substring(h, 5, 2),
-        substring(h, 3, 2), substring(h, 1, 2))
-    }
-    // one STORED-deflate member per record (the q_m29 construction);
-    // pin the record text once — LEN/NLEN/hex/CRC/ISIZE all read it
-    val recs = Tables.load(s, dir, "documents")
-      .filter(col("doc_id") < 400)
-      .select(col("doc_id"), record.as("rc"))
-      .pin()
-    val crc = crc32(encode(col("rc"), "UTF-8"))
-    val crcOut = when(col("doc_id") % 9 === 0,
-      pmod(crc + 1, lit(4294967296L))).otherwise(crc)
-    val corpus = recs.select(col("doc_id"),
-      unhex(concat(
-        lit("1F8B0800000000000003"),
-        lit("01"), le16(length(col("rc"))),
-        le16(lit(65535) - length(col("rc"))),
-        hex(encode(col("rc"), "UTF-8")),
-        le32(crcOut), le32(length(col("rc"))))).as("gz"))
-      .pin()
+    val corpus = storedGzMembers(
+      Tables.load(s, dir, "documents").filter(col("doc_id") < 400), record)
     // crack the HTTP envelope: only VERIFIED 200 text/html bodies may
     // feed the text pipeline (the 404s and anything malformed drop)
     val envelopes = graft.operators.WarcGz
@@ -1273,13 +1229,7 @@ object PipelineQueries extends QueryGroup {
       lit(".Example.org/p/"), gs, lit("?b=2&a=1"))
     val body = concat(lit("<html><body><p>Page "), gs,
       lit(" content for the capture index</p></body></html>"))
-    val http = when(r === 2,
-      lit("HTTP/1.1 404 Not Found\r\nContent-Type: text/plain\r\n" +
-        "Content-Length: 9\r\n\r\nnot found"))
-      .otherwise(concat(
-        lit("HTTP/1.1 200 OK\r\n" +
-          "Content-Type: text/html; charset=UTF-8\r\nContent-Length: "),
-        length(body).cast("string"), lit("\r\n\r\n"), body))
+    val http = httpResponse(r === 2, body)
     val record = concat(
       lit("WARC/1.0\r\nWARC-Type: response\r\n"),
       lit("WARC-Record-ID: <urn:uuid:cdx-"), col("doc_id").cast("string"),
@@ -1290,30 +1240,8 @@ object PipelineQueries extends QueryGroup {
       lit("Content-Type: application/http;msgtype=response\r\n"),
       lit("Content-Length: "), length(http).cast("string"),
       lit("\r\n\r\n"), http, lit("\r\n\r\n"))
-    def le16(n: org.apache.spark.sql.Column) = {
-      val h = lpad(hex(n), 4, "0")
-      concat(substring(h, 3, 2), substring(h, 1, 2))
-    }
-    def le32(v: org.apache.spark.sql.Column) = {
-      val h = lpad(hex(v), 8, "0")
-      concat(substring(h, 7, 2), substring(h, 5, 2),
-        substring(h, 3, 2), substring(h, 1, 2))
-    }
-    val recs = Tables.load(s, dir, "documents")
-      .filter(col("doc_id") < 360)
-      .select(col("doc_id"), record.as("rc"))
-      .pin()
-    val crc = crc32(encode(col("rc"), "UTF-8"))
-    val crcOut = when(col("doc_id") % 9 === 0,
-      pmod(crc + 1, lit(4294967296L))).otherwise(crc)
-    val corpus = recs.select(col("doc_id"),
-      unhex(concat(
-        lit("1F8B0800000000000003"),
-        lit("01"), le16(length(col("rc"))),
-        le16(lit(65535) - length(col("rc"))),
-        hex(encode(col("rc"), "UTF-8")),
-        le32(crcOut), le32(length(col("rc"))))).as("gz"))
-      .pin()
+    val corpus = storedGzMembers(
+      Tables.load(s, dir, "documents").filter(col("doc_id") < 360), record)
     graft.operators.Surt
       .revisits(graft.operators.Surt
         .cdxIndex(corpus, "doc_id", "gz", maxMembers = 2))

@@ -13,6 +13,29 @@ import graft.RunScope.Pinning
   */
 object QualityQueries extends QueryGroup {
 
+  // Oracle fragment of q_q22 and q_st30 (margin text, interpolated before
+  // stripMargin): HLL registers at p = 9 from the 60-bit hashes `hk` of
+  // each group `g` in `h`, up to `fin`, the raw estimate `e_raw`.
+  private[queries] val hllEstimateSql =
+    """reg AS (
+      |  SELECT g, hk & 511 AS bucket,
+      |         max(51 - length(ltrim(bin(hk >> 9), '0')) + 1) AS r
+      |  FROM h GROUP BY 1, 2),
+      |ag AS (
+      |  SELECT g, CAST(count(*) AS BIGINT) AS nb,
+      |         CAST(sum(1::BIGINT << CAST(52 - r AS INTEGER)) AS BIGINT) AS sp
+      |  FROM reg GROUP BY 1),
+      |est AS (
+      |  SELECT g, CAST(512 - nb AS BIGINT) AS n_zero,
+      |         CAST(sp + (512 - nb) * (1::BIGINT << 52) AS BIGINT) AS s_scaled
+      |  FROM ag),
+      |fin AS (
+      |  SELECT g, n_zero, s_scaled,
+      |         (CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE) + CAST(1.079 AS DOUBLE) / CAST(512 AS DOUBLE)))
+      |           * CAST(512 AS DOUBLE) * CAST(512 AS DOUBLE)
+      |           * CAST(1::BIGINT << 52 AS DOUBLE) / CAST(s_scaled AS DOUBLE) AS e_raw
+      |  FROM est)"""
+
   // Row-level contract validation over orders: status must be a known
   // open/finished code ('P' rows quarantine), totals must sit in
   // [0, 450k] (a few exceed), custkey is required (none missing — the
@@ -419,7 +442,7 @@ object QualityQueries extends QueryGroup {
   // ∝ delta keys. The oracle recomputes the final state DIRECTLY from
   // the surviving row set, so any maintenance drift (a lingering
   // zero-count group, a float-smeared retraction) breaks the hash.
-  private val qA12 = Q(
+  private[queries] val qA12 = Q(
     "q_a12_mv_incremental",
     """SELECT o_custkey,
       |       CAST(count(*) AS BIGINT) AS n_rows,
@@ -542,6 +565,28 @@ object QualityQueries extends QueryGroup {
       .orderBy("day")
   }
 
+  /** q_q12/q_q14's table: event_type × value band as `(x, y)`. */
+  private def valueBands(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Tables.load(s, dir, "events").select(
+      col("event_type").as("x"),
+      when(col("value") < 50, "v0").when(col("value") < 100, "v1")
+        .when(col("value") < 200, "v2").otherwise("v3").as("y"))
+
+  /** Its oracle twin (margin text): the body of CTE `b`, then the cell
+    * counts `c` and their margins `m`.
+    */
+  private val valueBandCountsSql =
+    """  SELECT event_type AS x,
+      |         CASE WHEN value < 50 THEN 'v0' WHEN value < 100 THEN 'v1'
+      |              WHEN value < 200 THEN 'v2' ELSE 'v3' END AS y
+      |  FROM events),
+      |c AS (SELECT x, y, count(*) AS obs FROM b GROUP BY 1, 2),
+      |m AS (SELECT x, y, obs,
+      |             sum(obs) OVER (PARTITION BY x) AS nx,
+      |             sum(obs) OVER (PARTITION BY y) AS ny,
+      |             sum(obs) OVER () AS n
+      |      FROM c)"""
+
   // Contingency-table dependence audit (DataProfile.contingencyStats):
   // event_type × value band, per cell the observed count, the
   // independence-expected count, the chi-square term, and the
@@ -552,17 +597,8 @@ object QualityQueries extends QueryGroup {
   // engines.
   private val qQ12 = Q(
     "q_q12_contingency",
-    """WITH b AS (
-      |  SELECT event_type AS x,
-      |         CASE WHEN value < 50 THEN 'v0' WHEN value < 100 THEN 'v1'
-      |              WHEN value < 200 THEN 'v2' ELSE 'v3' END AS y
-      |  FROM events),
-      |c AS (SELECT x, y, count(*) AS obs FROM b GROUP BY 1, 2),
-      |m AS (SELECT x, y, obs,
-      |             sum(obs) OVER (PARTITION BY x) AS nx,
-      |             sum(obs) OVER (PARTITION BY y) AS ny,
-      |             sum(obs) OVER () AS n
-      |      FROM c)
+    s"""WITH b AS (
+      |$valueBandCountsSql
       |SELECT x, y, CAST(obs AS BIGINT) AS obs,
       |       CAST(nx * ny AS DOUBLE) / n AS expected,
       |       (obs - CAST(nx * ny AS DOUBLE) / n) * (obs - CAST(nx * ny AS DOUBLE) / n)
@@ -570,11 +606,7 @@ object QualityQueries extends QueryGroup {
       |       (CAST(obs AS DOUBLE) / n) *
       |         ln(CAST(obs AS DOUBLE) * n / (CAST(nx AS DOUBLE) * ny)) AS mi_term
       |FROM m ORDER BY x, y""".stripMargin) { (s, dir) =>
-    val banded = Tables.load(s, dir, "events").select(
-      col("event_type").as("x"),
-      when(col("value") < 50, "v0").when(col("value") < 100, "v1")
-        .when(col("value") < 200, "v2").otherwise("v3").as("y"))
-    DataProfile.contingencyStats(banded, "x", "y").orderBy("x", "y")
+    DataProfile.contingencyStats(valueBands(s, dir), "x", "y").orderBy("x", "y")
   }
 
   // Cramér's V (DataProfile.cramersV): the [0,1] effect size over
@@ -585,17 +617,8 @@ object QualityQueries extends QueryGroup {
   // spec-covered.
   private val qQ14 = Q(
     "q_q14_cramers_v",
-    """WITH b AS (
-      |  SELECT event_type AS x,
-      |         CASE WHEN value < 50 THEN 'v0' WHEN value < 100 THEN 'v1'
-      |              WHEN value < 200 THEN 'v2' ELSE 'v3' END AS y
-      |  FROM events),
-      |c AS (SELECT x, y, count(*) AS obs FROM b GROUP BY 1, 2),
-      |m AS (SELECT x, y, obs,
-      |             sum(obs) OVER (PARTITION BY x) AS nx,
-      |             sum(obs) OVER (PARTITION BY y) AS ny,
-      |             sum(obs) OVER () AS n
-      |      FROM c),
+    s"""WITH b AS (
+      |$valueBandCountsSql,
       |t AS (SELECT x, y, obs,
       |             CAST(nx * ny AS DOUBLE) / n AS expected,
       |             (obs - CAST(nx * ny AS DOUBLE) / n) * (obs - CAST(nx * ny AS DOUBLE) / n)
@@ -615,11 +638,7 @@ object QualityQueries extends QueryGroup {
       |                      / (CAST(n AS DOUBLE) * (least(x_cats, y_cats) - 1))) END
       |         AS cramers_v
       |FROM a""".stripMargin) { (s, dir) =>
-    val banded = Tables.load(s, dir, "events").select(
-      col("event_type").as("x"),
-      when(col("value") < 50, "v0").when(col("value") < 100, "v1")
-        .when(col("value") < 200, "v2").otherwise("v3").as("y"))
-    DataProfile.cramersV(banded, "x", "y")
+    DataProfile.cramersV(valueBands(s, dir), "x", "y")
   }
 
   // Count-min sketch: the fixed-memory frequency structure — depth×width
@@ -1036,28 +1055,11 @@ object QualityQueries extends QueryGroup {
   // spec bounds at 3σ = 3·1.04/√512.
   private val qQ22 = Q(
     "q_q22_hll_distinct",
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT l_returnflag AS g,
       |         ('0x' || substring(md5(CAST(l_orderkey AS VARCHAR)), 1, 15))::BIGINT AS hk
       |  FROM lineitem),
-      |reg AS (
-      |  SELECT g, hk & 511 AS bucket,
-      |         max(51 - length(ltrim(bin(hk >> 9), '0')) + 1) AS r
-      |  FROM h GROUP BY 1, 2),
-      |ag AS (
-      |  SELECT g, CAST(count(*) AS BIGINT) AS nb,
-      |         CAST(sum(1::BIGINT << CAST(52 - r AS INTEGER)) AS BIGINT) AS sp
-      |  FROM reg GROUP BY 1),
-      |est AS (
-      |  SELECT g, CAST(512 - nb AS BIGINT) AS n_zero,
-      |         CAST(sp + (512 - nb) * (1::BIGINT << 52) AS BIGINT) AS s_scaled
-      |  FROM ag),
-      |fin AS (
-      |  SELECT g, n_zero, s_scaled,
-      |         (CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE) + CAST(1.079 AS DOUBLE) / CAST(512 AS DOUBLE)))
-      |           * CAST(512 AS DOUBLE) * CAST(512 AS DOUBLE)
-      |           * CAST(1::BIGINT << 52 AS DOUBLE) / CAST(s_scaled AS DOUBLE) AS e_raw
-      |  FROM est),
+      |$hllEstimateSql,
       |ex AS (SELECT l_returnflag AS g, CAST(count(DISTINCT l_orderkey) AS BIGINT) AS nd_exact
       |       FROM lineitem GROUP BY 1)
       |SELECT fin.g AS l_returnflag, CAST(512 AS INTEGER) AS m, fin.n_zero, fin.s_scaled,

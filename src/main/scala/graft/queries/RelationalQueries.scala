@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -450,7 +450,7 @@ object RelationalQueries extends QueryGroup {
 
   // Events: tumbling-window style aggregation (batch form; the streaming
   // twin lives in graft.streaming).
-  private val qEvents = Q(
+  private[queries] val qEvents = Q(
     "q_e1_event_window_agg",
     """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_bucket,
       |       event_type,
@@ -469,7 +469,7 @@ object RelationalQueries extends QueryGroup {
 
   // Sessionization, batch form: lag() gap detection — the oracle-checkable
   // twin of the stateful streaming sessionizer.
-  private val qSessions = Q(
+  private[queries] val qSessions = Q(
     "q_e2_sessionize",
     """SELECT user_id,
       |       CAST(count(*) AS INT) AS n_events,
@@ -1056,7 +1056,7 @@ object RelationalQueries extends QueryGroup {
   // event_id so the order is total), counts reduce to the |state|²
   // matrix, and P(next|cur) is the integer ratio n / row-total — both
   // engines divide the same two BIGINTs.
-  private val qE9 = Q(
+  private[queries] val qE9 = Q(
     "q_e9_markov_transitions",
     """WITH seq AS (
       |  SELECT event_type AS cur,
@@ -1228,17 +1228,7 @@ object RelationalQueries extends QueryGroup {
   // operators) actually planned.
   private val qE15 = Q(
     "q_e15_asof_native",
-    """WITH ev AS (
-      |  SELECT event_id, date_trunc('microseconds', ts) AS ts, user_id, event_type, value
-      |  FROM events),
-      |p AS (SELECT * FROM ev WHERE event_type = 'purchase'),
-      |c AS (SELECT user_id, ts, max(event_id) AS event_id
-      |      FROM ev WHERE event_type = 'click' GROUP BY 1, 2)
-      |SELECT p.event_id, p.user_id, p.value,
-      |       c.event_id AS click_id,
-      |       epoch_us(p.ts) - epoch_us(c.ts) AS wait_us
-      |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
-      |ORDER BY p.event_id""".stripMargin) { (s, dir) =>
+    qAsOf.oracle.get) { (s, dir) =>
     val ev = t(s, dir, "events")
     val purchases = ev.filter(col("event_type") === "purchase")
       .select("event_id", "user_id", "ts", "value")
@@ -1362,6 +1352,48 @@ object RelationalQueries extends QueryGroup {
       .orderBy("user_id", "island_start_us")
   }
 
+  // Oracle fragments of the daily series (the DuckDB twins of
+  // dailyValues / probeSeries / dailyWithProbes below). Each is margin
+  // text that the query strings interpolate before their stripMargin.
+  private val dailySql =
+    """  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
+      |  FROM events GROUP BY 1, 2"""
+  private val constantProbeSql =
+    """  UNION ALL
+      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
+      |         CAST(5.0 AS DOUBLE)
+      |  FROM range(10) t(i)"""
+  private val singlePairProbeSql =
+    """  UNION ALL
+      |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
+      |         CAST(i + 1 AS DOUBLE)
+      |  FROM range(2) t(i)"""
+  private val spikeProbeSql =
+    """  UNION ALL
+      |  SELECT CAST(-3 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
+      |         CASE WHEN i = 6 THEN CAST(200.0 AS DOUBLE) ELSE CAST(10.0 AS DOUBLE) END
+      |  FROM range(10) t(i)"""
+  private val dailyWithProbesSql =
+    s"""$dailySql
+       |$constantProbeSql
+       |$singlePairProbeSql"""
+
+  /** `l` and `p`: every (x, lagged y) pair of the series `d` at lags 1–3. */
+  private val lagPairsSql =
+    """l AS (
+      |  SELECT user_id, daily_value AS x,
+      |         lag(daily_value, 1) OVER (PARTITION BY user_id ORDER BY day) AS y1,
+      |         lag(daily_value, 2) OVER (PARTITION BY user_id ORDER BY day) AS y2,
+      |         lag(daily_value, 3) OVER (PARTITION BY user_id ORDER BY day) AS y3
+      |  FROM d),
+      |p AS (
+      |  SELECT user_id, 1 AS lag_k, x, y1 AS y FROM l WHERE y1 IS NOT NULL
+      |  UNION ALL
+      |  SELECT user_id, 2 AS lag_k, x, y2 AS y FROM l WHERE y2 IS NOT NULL
+      |  UNION ALL
+      |  SELECT user_id, 3 AS lag_k, x, y3 AS y FROM l WHERE y3 IS NOT NULL)"""
+
   // Dyadic-weight EWMA (TimeSeries.dyadicEwma): α = 1/2 smoothing of the
   // per-user daily value series, folded left-to-right over a 16-row
   // trailing frame. Halving is an exact IEEE operation, so the identical
@@ -1369,10 +1401,8 @@ object RelationalQueries extends QueryGroup {
   // pow() chain would be libm-dependent (the q_c6 lesson).
   private val qE17 = Q(
     "q_e17_dyadic_ewma",
-    """WITH d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2),
+    s"""WITH d AS (
+      |$dailySql),
       |w AS (
       |  SELECT user_id, day, daily_value,
       |         list(daily_value) OVER (PARTITION BY user_id ORDER BY day
@@ -1381,9 +1411,7 @@ object RelationalQueries extends QueryGroup {
       |SELECT user_id, day, daily_value,
       |       list_reduce(frame, (acc, x) -> (acc + x) / 2) AS ewma
       |FROM w ORDER BY user_id, day""".stripMargin) { (s, dir) =>
-    val daily = t(s, dir, "events")
-      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("daily_value"))
+    val daily = dailyValues(s, dir)
     graft.operators.TimeSeries.dyadicEwma(daily, "user_id", "day", "daily_value", 16)
       .orderBy("user_id", "day")
   }
@@ -1404,49 +1432,15 @@ object RelationalQueries extends QueryGroup {
   // stops emitting NULL on those slices.
   private val qE18 = Q(
     "q_e18_autocorrelation",
-    """WITH d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(5.0 AS DOUBLE)
-      |  FROM range(10) t(i)
-      |  UNION ALL
-      |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(i + 1 AS DOUBLE)
-      |  FROM range(2) t(i)),
-      |l AS (
-      |  SELECT user_id, daily_value AS x,
-      |         lag(daily_value, 1) OVER (PARTITION BY user_id ORDER BY day) AS y1,
-      |         lag(daily_value, 2) OVER (PARTITION BY user_id ORDER BY day) AS y2,
-      |         lag(daily_value, 3) OVER (PARTITION BY user_id ORDER BY day) AS y3
-      |  FROM d),
-      |p AS (
-      |  SELECT user_id, 1 AS lag_k, x, y1 AS y FROM l WHERE y1 IS NOT NULL
-      |  UNION ALL
-      |  SELECT user_id, 2 AS lag_k, x, y2 AS y FROM l WHERE y2 IS NOT NULL
-      |  UNION ALL
-      |  SELECT user_id, 3 AS lag_k, x, y3 AS y FROM l WHERE y3 IS NOT NULL)
+    s"""WITH d AS (
+      |$dailyWithProbesSql),
+      |$lagPairsSql
       |SELECT user_id, CAST(lag_k AS INT) AS lag_k,
       |       CAST(count(*) AS INT) AS n_pairs,
       |       CASE WHEN var_samp(x) > 0 AND var_samp(y) > 0
       |            THEN covar_samp(x, y) / sqrt(var_samp(x) * var_samp(y)) END AS autocorr
       |FROM p GROUP BY 1, 2 ORDER BY user_id, lag_k""".stripMargin) { (s, dir) =>
-    val base = t(s, dir, "events")
-      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("daily_value"))
-    val constant = s.range(10).select(
-      lit(-1L).as("user_id"),
-      date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int"))
-        .cast("timestamp").as("day"),
-      lit(5.0).as("daily_value"))
-    val singlePair = s.range(2).select(
-      lit(-2L).as("user_id"),
-      date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int"))
-        .cast("timestamp").as("day"),
-      (col("id") + 1).cast("double").as("daily_value"))
-    val daily = base.unionByName(constant).unionByName(singlePair)
+    val daily = dailyWithProbes(s, dir, includeSinglePair = true)
     graft.operators.TimeSeries
       .autocorrelation(daily, "user_id", "day", "daily_value", maxLag = 3)
       .orderBy("user_id", "lag_k")
@@ -1461,30 +1455,9 @@ object RelationalQueries extends QueryGroup {
   // the gate.
   private val qE19 = Q(
     "q_e19_dominant_lag",
-    """WITH d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(5.0 AS DOUBLE)
-      |  FROM range(10) t(i)
-      |  UNION ALL
-      |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(i + 1 AS DOUBLE)
-      |  FROM range(2) t(i)),
-      |l AS (
-      |  SELECT user_id, daily_value AS x,
-      |         lag(daily_value, 1) OVER (PARTITION BY user_id ORDER BY day) AS y1,
-      |         lag(daily_value, 2) OVER (PARTITION BY user_id ORDER BY day) AS y2,
-      |         lag(daily_value, 3) OVER (PARTITION BY user_id ORDER BY day) AS y3
-      |  FROM d),
-      |p AS (
-      |  SELECT user_id, 1 AS lag_k, x, y1 AS y FROM l WHERE y1 IS NOT NULL
-      |  UNION ALL
-      |  SELECT user_id, 2 AS lag_k, x, y2 AS y FROM l WHERE y2 IS NOT NULL
-      |  UNION ALL
-      |  SELECT user_id, 3 AS lag_k, x, y3 AS y FROM l WHERE y3 IS NOT NULL),
+    s"""WITH d AS (
+      |$dailyWithProbesSql),
+      |$lagPairsSql,
       |a AS (
       |  SELECT user_id, lag_k, count(*) AS n_pairs,
       |         CASE WHEN var_samp(x) > 0 AND var_samp(y) > 0
@@ -1498,22 +1471,9 @@ object RelationalQueries extends QueryGroup {
       |SELECT user_id, CAST(lag_k AS INT) AS best_lag,
       |       CAST(n_pairs AS INT) AS n_pairs, autocorr
       |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
-    val base = t(s, dir, "events")
-      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("daily_value"))
-    val constant = s.range(10).select(
-      lit(-1L).as("user_id"),
-      date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int"))
-        .cast("timestamp").as("day"),
-      lit(5.0).as("daily_value"))
-    val singlePair = s.range(2).select(
-      lit(-2L).as("user_id"),
-      date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int"))
-        .cast("timestamp").as("day"),
-      (col("id") + 1).cast("double").as("daily_value"))
     graft.operators.TimeSeries
       .dominantSeasonalLag(
-        base.unionByName(constant).unionByName(singlePair),
+        dailyWithProbes(s, dir, includeSinglePair = true),
         "user_id", "day", "daily_value", maxLag = 3)
       .orderBy("user_id")
   }
@@ -1527,14 +1487,9 @@ object RelationalQueries extends QueryGroup {
   // synthetic constant user is the planted probe for that).
   private val qE20 = Q(
     "q_e20_cusum_changepoint",
-    """WITH d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(5.0 AS DOUBLE)
-      |  FROM range(10) t(i)),
+    s"""WITH d AS (
+      |$dailySql
+      |$constantProbeSql),
       |s AS (
       |  SELECT user_id, day,
       |         sum(daily_value) OVER (PARTITION BY user_id ORDER BY day) AS cum,
@@ -1555,17 +1510,9 @@ object RelationalQueries extends QueryGroup {
       |SELECT user_id, day AS changepoint_at, stat AS cusum_stat,
       |       CAST(n AS INT) AS n_points
       |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
-    val base = t(s, dir, "events")
-      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("daily_value"))
-    val constant = s.range(10).select(
-      lit(-1L).as("user_id"),
-      date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int"))
-        .cast("timestamp").as("day"),
-      lit(5.0).as("daily_value"))
     graft.operators.TimeSeries
       .cusumChangepoint(
-        base.unionByName(constant), "user_id", "day", "daily_value")
+        dailyWithProbes(s, dir, includeSinglePair = false), "user_id", "day", "daily_value")
       .orderBy("user_id")
   }
 
@@ -1577,18 +1524,8 @@ object RelationalQueries extends QueryGroup {
   // zero) with r² NULL; a 2-point series fits exactly (r² = 1).
   private val qE21 = Q(
     "q_e21_trend_slope",
-    """WITH d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(5.0 AS DOUBLE)
-      |  FROM range(10) t(i)
-      |  UNION ALL
-      |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(i + 1 AS DOUBLE)
-      |  FROM range(2) t(i)),
+    s"""WITH d AS (
+      |$dailyWithProbesSql),
       |x AS (
       |  SELECT user_id,
       |         CAST(date_diff('day', DATE '2020-01-01', day) AS DOUBLE) AS x,
@@ -1617,18 +1554,8 @@ object RelationalQueries extends QueryGroup {
   // has no 7-back rows and drops out — both probes on the gate.
   private val qE22 = Q(
     "q_e22_seasonal_backtest",
-    """WITH d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(5.0 AS DOUBLE)
-      |  FROM range(10) t(i)
-      |  UNION ALL
-      |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(i + 1 AS DOUBLE)
-      |  FROM range(2) t(i)),
+    s"""WITH d AS (
+      |$dailyWithProbesSql),
       |l AS (
       |  SELECT user_id, daily_value AS y,
       |         lag(daily_value, 1) OVER (PARTITION BY user_id ORDER BY day) AS y1,
@@ -1666,14 +1593,9 @@ object RelationalQueries extends QueryGroup {
   // engines' pandas paths) and are spec-covered instead.
   private val qE23 = Q(
     "q_e23_hampel",
-    """WITH d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-3 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CASE WHEN i = 6 THEN CAST(200.0 AS DOUBLE) ELSE CAST(10.0 AS DOUBLE) END
-      |  FROM range(10) t(i)),
+    s"""WITH d AS (
+      |$dailySql
+      |$spikeProbeSql),
       |w AS (
       |  SELECT user_id, day, daily_value AS x,
       |         list(daily_value) OVER (PARTITION BY user_id ORDER BY day
@@ -1691,19 +1613,11 @@ object RelationalQueries extends QueryGroup {
       |SELECT user_id, day, x AS value, med, mad,
       |       abs(x - med) > CAST(3.0 AS DOUBLE) * CAST(1.4826 AS DOUBLE) * mad AS is_outlier
       |FROM mm WHERE med IS NOT NULL ORDER BY user_id, day""".stripMargin) { (s, dir) =>
-    val base = t(s, dir, "events")
-      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("daily_value"))
-    val spike = s.range(10).select(
-      lit(-3L).as("user_id"),
-      date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int"))
-        .cast("timestamp").as("day"),
-      when(col("id") === 6, lit(200.0)).otherwise(lit(10.0)).as("daily_value"))
     // gate cut: only full-window verdict rows — a NULL boolean column
     // normalizes differently across the two engines' pandas paths (the
     // operator's NULL-head contract is spec-covered instead)
     graft.operators.TimeSeries
-      .hampelOutliers(base.unionByName(spike), "user_id", "day", "daily_value",
+      .hampelOutliers(dailyValues(s, dir).unionByName(spikeProbe(s)), "user_id", "day", "daily_value",
         windowSize = 7, nSigmas = 3.0)
       .where(col("med").isNotNull)
       .orderBy("user_id", "day")
@@ -1723,18 +1637,8 @@ object RelationalQueries extends QueryGroup {
   // through the recursion is itself on the gate.
   private val qE24 = Q(
     "q_e24_pacf",
-    """WITH d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(5.0 AS DOUBLE)
-      |  FROM range(10) t(i)
-      |  UNION ALL
-      |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(i + 1 AS DOUBLE)
-      |  FROM range(2) t(i)),
+    s"""WITH d AS (
+      |$dailyWithProbesSql),
       |c AS (
       |  SELECT user_id, day,
       |         daily_value - avg(daily_value) OVER (PARTITION BY user_id) AS d
@@ -1785,18 +1689,8 @@ object RelationalQueries extends QueryGroup {
   // NULL must propagate through seasonal and residual identically.
   private val qE25 = Q(
     "q_e25_seasonal_decompose",
-    """WITH d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(5.0 AS DOUBLE)
-      |  FROM range(10) t(i)
-      |  UNION ALL
-      |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(i + 1 AS DOUBLE)
-      |  FROM range(2) t(i)),
+    s"""WITH d AS (
+      |$dailyWithProbesSql),
       |b AS (
       |  SELECT user_id, day, daily_value AS value,
       |         CAST((CAST(day AS DATE) - DATE '1970-01-01') % 7 AS INT) AS pos
@@ -1834,22 +1728,9 @@ object RelationalQueries extends QueryGroup {
   // outlier-immunity claim itself, oracle-checked.
   private val qE26 = Q(
     "q_e26_robust_trend",
-    """WITH d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(5.0 AS DOUBLE)
-      |  FROM range(10) t(i)
-      |  UNION ALL
-      |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(i + 1 AS DOUBLE)
-      |  FROM range(2) t(i)
-      |  UNION ALL
-      |  SELECT CAST(-3 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CASE WHEN i = 6 THEN CAST(200.0 AS DOUBLE) ELSE CAST(10.0 AS DOUBLE) END
-      |  FROM range(10) t(i)),
+    s"""WITH d AS (
+      |$dailyWithProbesSql
+      |$spikeProbeSql),
       |b AS (SELECT user_id,
       |             CAST((CAST(day AS DATE) - DATE '1970-01-01') AS DOUBLE) AS x,
       |             daily_value AS y
@@ -1869,12 +1750,7 @@ object RelationalQueries extends QueryGroup {
       |            ELSE (sl[st.n_pairs // 2] + sl[st.n_pairs // 2 + 1]) / 2 END AS theil_sen
       |FROM np LEFT JOIN st USING (user_id)
       |ORDER BY user_id""".stripMargin) { (s, dir) =>
-    val spike = s.range(10).select(
-      lit(-3L).as("user_id"),
-      date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int"))
-        .cast("timestamp").as("day"),
-      when(col("id") === 6, lit(200.0)).otherwise(lit(10.0)).as("daily_value"))
-    val corpus = dailyWithProbes(s, dir, includeSinglePair = true).unionByName(spike)
+    val corpus = dailyWithProbes(s, dir, includeSinglePair = true).unionByName(spikeProbe(s))
       .withColumn("__days",
         datediff(col("day"), lit(java.sql.Date.valueOf("1970-01-01"))))
     graft.operators.TimeSeries
@@ -1890,18 +1766,8 @@ object RelationalQueries extends QueryGroup {
   // user exercises the seed row (fitted NULL) and one full update.
   private val qE27 = Q(
     "q_e27_holt_smoothing",
-    """WITH RECURSIVE d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(5.0 AS DOUBLE)
-      |  FROM range(10) t(i)
-      |  UNION ALL
-      |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(i + 1 AS DOUBLE)
-      |  FROM range(2) t(i)),
+    s"""WITH RECURSIVE d AS (
+      |$dailyWithProbesSql),
       |s AS (
       |  SELECT user_id, day, daily_value,
       |         row_number() OVER (PARTITION BY user_id ORDER BY day) AS rn
@@ -1945,18 +1811,8 @@ object RelationalQueries extends QueryGroup {
     {
       val m0 = "(h.runsum + s.daily_value) / 7.0"
       val lNew = "((s.daily_value - h.sv[1]) + (h.level + h.trend)) / 2"
-      """WITH RECURSIVE d AS (
-        |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-        |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-        |  FROM events GROUP BY 1, 2
-        |  UNION ALL
-        |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-        |         CAST(5.0 AS DOUBLE)
-        |  FROM range(10) t(i)
-        |  UNION ALL
-        |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-        |         CAST(i + 1 AS DOUBLE)
-        |  FROM range(2) t(i)),
+      s"""WITH RECURSIVE d AS (
+        |$dailyWithProbesSql),
         |s AS (
         |  SELECT user_id, day, daily_value,
         |         row_number() OVER (PARTITION BY user_id ORDER BY day) AS rn,
@@ -2003,25 +1859,32 @@ object RelationalQueries extends QueryGroup {
       .orderBy("user_id", "day")
   }
 
-  private def dailyWithProbes(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      includeSinglePair: Boolean): org.apache.spark.sql.DataFrame = {
-    val base = t(s, dir, "events")
+  /** The `events` daily-value series: one row per (user_id, day). */
+  private def dailyValues(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events")
       .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
       .agg(sum(col("value").cast("decimal(18,2)")).cast("double").as("daily_value"))
-    val constant = s.range(10).select(
-      lit(-1L).as("user_id"),
+
+  /** A synthetic series of `n` days from 2020-01-01 for `userId`. */
+  private def probeSeries(s: SparkSession, userId: Long, n: Int, value: Column): DataFrame =
+    s.range(n).select(
+      lit(userId).as("user_id"),
       date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int"))
         .cast("timestamp").as("day"),
-      lit(5.0).as("daily_value"))
-    val singlePair = s.range(2).select(
-      lit(-2L).as("user_id"),
-      date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int"))
-        .cast("timestamp").as("day"),
-      (col("id") + 1).cast("double").as("daily_value"))
-    val out = base.unionByName(constant)
-    if (includeSinglePair) out.unionByName(singlePair) else out
+      value.as("daily_value"))
+
+  /** Probe user -3: a 200-spike on day 6 of a flat 10-day series at 10. */
+  private def spikeProbe(s: SparkSession): DataFrame =
+    probeSeries(s, -3L, 10, when(col("id") === 6, lit(200.0)).otherwise(lit(10.0)))
+
+  /** [[dailyValues]] plus probe user -1 (10 constant days) and, when
+    * `includeSinglePair`, probe user -2 (2 days, a single lag-1 pair).
+    */
+  private def dailyWithProbes(
+      s: SparkSession, dir: String, includeSinglePair: Boolean): DataFrame = {
+    val out = dailyValues(s, dir).unionByName(probeSeries(s, -1L, 10, lit(5.0)))
+    if (includeSinglePair) out.unionByName(probeSeries(s, -2L, 2, (col("id") + 1).cast("double")))
+    else out
   }
 
   // Cohort RETENTION matrix (operators.Cohort.retention): users grouped
@@ -2063,18 +1926,8 @@ object RelationalQueries extends QueryGroup {
   // exactly, the 2-day probe user -2 pins slope 1 from a single pair.
   private val qE30 = Q(
     "q_e30_theil_sen",
-    """WITH d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(5.0 AS DOUBLE)
-      |  FROM range(10) t(i)
-      |  UNION ALL
-      |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(i + 1 AS DOUBLE)
-      |  FROM range(2) t(i)),
+    s"""WITH d AS (
+      |$dailyWithProbesSql),
       |x AS (SELECT user_id, date_diff('day', DATE '1970-01-01', day) AS x,
       |             daily_value AS y
       |      FROM d),
@@ -2113,18 +1966,8 @@ object RelationalQueries extends QueryGroup {
   // short-series path; constant user −1 the all-cells-equal path.
   private val qE31 = Q(
     "q_e31_dtw_pattern",
-    """WITH RECURSIVE d AS (
-      |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS daily_value
-      |  FROM events GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT CAST(-1 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(5.0 AS DOUBLE)
-      |  FROM range(10) t(i)
-      |  UNION ALL
-      |  SELECT CAST(-2 AS BIGINT), CAST(DATE '2020-01-01' + CAST(i AS INTEGER) AS TIMESTAMP),
-      |         CAST(i + 1 AS DOUBLE)
-      |  FROM range(2) t(i)),
+    s"""WITH RECURSIVE d AS (
+      |$dailyWithProbesSql),
       |s AS (
       |  SELECT user_id, daily_value AS y,
       |         row_number() OVER (PARTITION BY user_id ORDER BY day) AS rn

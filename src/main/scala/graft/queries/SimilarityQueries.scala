@@ -16,6 +16,28 @@ import graft.RunScope.Pinning
   */
 object SimilarityQueries extends QueryGroup {
 
+  // Oracle fragment of q_v14, q_v21 and q_st15 (margin text, interpolated
+  // before stripMargin): two Lloyd rounds over `v` from the 8 smallest-id
+  // seeds, up to `d2`, every vector's distance to every final centroid.
+  private[queries] val kmeansLloydSql =
+    """seeds AS (SELECT row_number() OVER (ORDER BY id) - 1 AS c, emb
+      |          FROM (SELECT id, emb FROM v ORDER BY id LIMIT 8)),
+      |c0 AS (SELECT c, i AS p, CAST(emb[i] AS DOUBLE) AS m
+      |       FROM seeds, range(1, 65) t(i)),
+      |vd AS (SELECT id, i AS p, CAST(emb[i] AS DOUBLE) AS x
+      |       FROM v, range(1, 65) t(i)),
+      |d1 AS (SELECT vd.id, c0.c, sum((vd.x - c0.m) * (vd.x - c0.m)) AS d
+      |       FROM vd JOIN c0 ON vd.p = c0.p GROUP BY 1, 2),
+      |a1 AS (SELECT id, c FROM (
+      |         SELECT id, c, row_number() OVER (
+      |           PARTITION BY id ORDER BY round(d, 6), c) AS rn
+      |         FROM d1) WHERE rn = 1),
+      |c1 AS (SELECT a1.c, vd.p,
+      |              CAST(sum(CAST(vd.x AS DECIMAL(20,10))) AS DOUBLE) / count(*) AS m
+      |       FROM a1 JOIN vd ON a1.id = vd.id GROUP BY 1, 2),
+      |d2 AS (SELECT vd.id, c1.c, sum((vd.x - c1.m) * (vd.x - c1.m)) AS d
+      |       FROM vd JOIN c1 ON vd.p = c1.p GROUP BY 1, 2),"""
+
   /** DuckDB-side cosine identical to [[Vectors.cosine]] (also used by the
     * multimodal ANN oracle).
     */
@@ -120,8 +142,7 @@ object SimilarityQueries extends QueryGroup {
   // 0.5 across all shipped scale factors.
   private val qV5 = Q(
     "q_v5_ann_ivf_recall",
-    """SELECT vec_id AS query_id, true AS recall_ok
-      |FROM embeddings WHERE vec_id < 8 ORDER BY query_id""".stripMargin) { (s, dir) =>
+    qV3.oracle.get) { (s, dir) =>
     val emb = Tables.load(s, dir, "embeddings")
     val qs = emb.filter(col("vec_id") < 8)
     val exact = SimilaritySearch.bruteForceTopK(emb, qs, "vec_id", "embedding", k = 10)
@@ -142,11 +163,7 @@ object SimilarityQueries extends QueryGroup {
   // separately by q_v8 on planted high-cosine twins.
   private val qV6 = Q(
     "q_v6_srp_pairs",
-    s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       |       ${duckCosine("a.embedding", "b.embedding")} AS cosine
-       |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-       |WHERE ${duckCosine("a.embedding", "b.embedding")} >= 0.45
-       |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
+    qV1.oracle.get) { (s, dir) =>
     SimilaritySearch
       .srpPairs(Tables.load(s, dir, "embeddings"), "vec_id", "embedding", 0.45,
         bandBits = 2, numBands = 64)
@@ -161,8 +178,7 @@ object SimilarityQueries extends QueryGroup {
   // well above it across shipped scale factors.
   private val qV9 = Q(
     "q_v9_ann_pq_recall",
-    """SELECT vec_id AS query_id, true AS recall_ok
-      |FROM embeddings WHERE vec_id < 8 ORDER BY query_id""".stripMargin) { (s, dir) =>
+    qV3.oracle.get) { (s, dir) =>
     val emb = Tables.load(s, dir, "embeddings")
     val qs = emb.filter(col("vec_id") < 8)
     val exact = SimilaritySearch.bruteForceTopK(emb, qs, "vec_id", "embedding", k = 10)
@@ -171,6 +187,44 @@ object SimilarityQueries extends QueryGroup {
     SimilaritySearch.recallAtK(exact, approx, 10)
       .select(col("query_id"), (col("recall") >= 0.3).as("recall_ok"))
       .orderBy("query_id")
+  }
+
+  /** The q_v8/q_v12 corpus: every embedding plus a planted twin of each
+    * vec_id % 5 == 0 row (id + 1,000,000, ±2% deterministic
+    * multiplicative hash noise → cosine ≈ 0.9995).
+    */
+  private def plantedTwinCorpus(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val emb = Tables.load(s, dir, "embeddings").select("vec_id", "embedding")
+    val planted = emb.filter(col("vec_id") % 5 === 0)
+      .select(
+        (col("vec_id") + lit(1000000L)).as("vec_id"),
+        transform(col("embedding"), (x, i) =>
+          (x.cast("double") * (lit(1.0) +
+            (pmod(xxhash64(col("vec_id"), i), lit(41)).cast("double") - 20.0) / lit(1000.0)))
+            .cast("float"))
+          .as("embedding"))
+    emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+      .union(planted)
+  }
+
+  /** One row `(n_pairs, completeCol, soundCol)`: the size of `found`'s pair
+    * set and whether it misses no pair of `exact` and adds none.
+    */
+  private def pairSetAgreement(
+      found: org.apache.spark.sql.DataFrame, exact: org.apache.spark.sql.DataFrame,
+      completeCol: String, soundCol: String) = {
+    val foundSet = found.select("id_a", "id_b")
+    val exactSet = exact.select("id_a", "id_b")
+    val missing = exactSet.join(foundSet, Seq("id_a", "id_b"), "left_anti")
+      .agg(count(lit(1)).as("__m"))
+    val extra = foundSet.join(exactSet, Seq("id_a", "id_b"), "left_anti")
+      .agg(count(lit(1)).as("__e"))
+    foundSet.agg(count(lit(1)).as("__n"))
+      .crossJoin(missing).crossJoin(extra)
+      .select(
+        col("__n").cast("int").as("n_pairs"),
+        (col("__m") === 0).as(completeCol),
+        (col("__e") === 0).as(soundCol))
   }
 
   // PRODUCTION-geometry SRP gate: srpPairs at the DEFAULT (6, 24) band
@@ -191,32 +245,11 @@ object SimilarityQueries extends QueryGroup {
     """SELECT CAST(count(*) AS INT) AS n_pairs,
       |       true AS srp_complete, true AS srp_sound
       |FROM embeddings WHERE vec_id % 5 = 0""".stripMargin) { (s, dir) =>
-    val emb = Tables.load(s, dir, "embeddings").select("vec_id", "embedding")
-    val planted = emb.filter(col("vec_id") % 5 === 0)
-      .select(
-        (col("vec_id") + lit(1000000L)).as("vec_id"),
-        transform(col("embedding"), (x, i) =>
-          (x.cast("double") * (lit(1.0) +
-            (pmod(xxhash64(col("vec_id"), i), lit(41)).cast("double") - 20.0) / lit(1000.0)))
-            .cast("float"))
-          .as("embedding"))
-    val corpus = emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .union(planted)
+    val corpus = plantedTwinCorpus(s, dir)
     val srp = SimilaritySearch.srpPairs(corpus, "vec_id", "embedding", 0.8)
     val exact = SimilaritySearch.blockedCosinePairs(corpus, "vec_id", "embedding", 0.8,
       numBlocks = 8)
-    val srpSet = srp.select("id_a", "id_b")
-    val exactSet = exact.select("id_a", "id_b")
-    val missing = exactSet.join(srpSet, Seq("id_a", "id_b"), "left_anti")
-      .agg(count(lit(1)).as("__m"))
-    val extra = srpSet.join(exactSet, Seq("id_a", "id_b"), "left_anti")
-      .agg(count(lit(1)).as("__e"))
-    srpSet.agg(count(lit(1)).as("__n"))
-      .crossJoin(missing).crossJoin(extra)
-      .select(
-        col("__n").cast("int").as("n_pairs"),
-        (col("__m") === 0).as("srp_complete"),
-        (col("__e") === 0).as("srp_sound"))
+    pairSetAgreement(srp, exact, "srp_complete", "srp_sound")
   }
 
   // SemDeDup-style semantic dedup under the q_v8 planted-twin gate:
@@ -233,33 +266,12 @@ object SimilarityQueries extends QueryGroup {
     """SELECT CAST(count(*) AS INT) AS n_pairs,
       |       true AS sem_complete, true AS sem_sound
       |FROM embeddings WHERE vec_id % 5 = 0""".stripMargin) { (s, dir) =>
-    val emb = Tables.load(s, dir, "embeddings").select("vec_id", "embedding")
-    val planted = emb.filter(col("vec_id") % 5 === 0)
-      .select(
-        (col("vec_id") + lit(1000000L)).as("vec_id"),
-        transform(col("embedding"), (x, i) =>
-          (x.cast("double") * (lit(1.0) +
-            (pmod(xxhash64(col("vec_id"), i), lit(41)).cast("double") - 20.0) / lit(1000.0)))
-            .cast("float"))
-          .as("embedding"))
-    val corpus = emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .union(planted)
+    val corpus = plantedTwinCorpus(s, dir)
     val sem = SimilaritySearch.clusteredCosinePairs(corpus, "vec_id", "embedding", 0.8,
       numCells = 16, assignProbes = 2)
     val exact = SimilaritySearch.blockedCosinePairs(corpus, "vec_id", "embedding", 0.8,
       numBlocks = 8)
-    val semSet = sem.select("id_a", "id_b")
-    val exactSet = exact.select("id_a", "id_b")
-    val missing = exactSet.join(semSet, Seq("id_a", "id_b"), "left_anti")
-      .agg(count(lit(1)).as("__m"))
-    val extra = semSet.join(exactSet, Seq("id_a", "id_b"), "left_anti")
-      .agg(count(lit(1)).as("__e"))
-    semSet.agg(count(lit(1)).as("__n"))
-      .crossJoin(missing).crossJoin(extra)
-      .select(
-        col("__n").cast("int").as("n_pairs"),
-        (col("__m") === 0).as("sem_complete"),
-        (col("__e") === 0).as("sem_sound"))
+    pairSetAgreement(sem, exact, "sem_complete", "sem_sound")
   }
 
   // Per-label embedding centroids, emitted one row per (label,
@@ -298,24 +310,8 @@ object SimilarityQueries extends QueryGroup {
   // rounds as CTEs over the per-dimension exploded frame.
   private val qV14 = Q(
     "q_v14_kmeans",
-    """WITH v AS (SELECT vec_id AS id, embedding AS emb FROM embeddings),
-      |seeds AS (SELECT row_number() OVER (ORDER BY id) - 1 AS c, emb
-      |          FROM (SELECT id, emb FROM v ORDER BY id LIMIT 8)),
-      |c0 AS (SELECT c, i AS p, CAST(emb[i] AS DOUBLE) AS m
-      |       FROM seeds, range(1, 65) t(i)),
-      |vd AS (SELECT id, i AS p, CAST(emb[i] AS DOUBLE) AS x
-      |       FROM v, range(1, 65) t(i)),
-      |d1 AS (SELECT vd.id, c0.c, sum((vd.x - c0.m) * (vd.x - c0.m)) AS d
-      |       FROM vd JOIN c0 ON vd.p = c0.p GROUP BY 1, 2),
-      |a1 AS (SELECT id, c FROM (
-      |         SELECT id, c, row_number() OVER (
-      |           PARTITION BY id ORDER BY round(d, 6), c) AS rn
-      |         FROM d1) WHERE rn = 1),
-      |c1 AS (SELECT a1.c, vd.p,
-      |              CAST(sum(CAST(vd.x AS DECIMAL(20,10))) AS DOUBLE) / count(*) AS m
-      |       FROM a1 JOIN vd ON a1.id = vd.id GROUP BY 1, 2),
-      |d2 AS (SELECT vd.id, c1.c, sum((vd.x - c1.m) * (vd.x - c1.m)) AS d
-      |       FROM vd JOIN c1 ON vd.p = c1.p GROUP BY 1, 2),
+    s"""WITH v AS (SELECT vec_id AS id, embedding AS emb FROM embeddings),
+      |$kmeansLloydSql
       |a2 AS (SELECT id, c, d FROM (
       |         SELECT id, c, d, row_number() OVER (
       |           PARTITION BY id ORDER BY round(d, 6), c) AS rn
@@ -370,8 +366,7 @@ object SimilarityQueries extends QueryGroup {
   // read fails loudly rather than degrading silently.
   private val qV10 = Q(
     "q_v10_ann_ivf_persisted",
-    """SELECT vec_id AS query_id, true AS recall_ok
-      |FROM embeddings WHERE vec_id < 8 ORDER BY query_id""".stripMargin) { (s, dir) =>
+    qV3.oracle.get) { (s, dir) =>
     val emb = Tables.load(s, dir, "embeddings")
     val qs = emb.filter(col("vec_id") < 8)
     val idx = s"${sys.props("java.io.tmpdir")}/graft_ann_ivf_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
@@ -401,8 +396,7 @@ object SimilarityQueries extends QueryGroup {
   // path lands at ~0 and turns rows false.
   private val qV11 = Q(
     "q_v11_ann_int8_recall",
-    """SELECT vec_id AS query_id, true AS recall_ok
-      |FROM embeddings WHERE vec_id < 8 ORDER BY query_id""".stripMargin) { (s, dir) =>
+    qV3.oracle.get) { (s, dir) =>
     val emb = Tables.load(s, dir, "embeddings")
     val qs = emb.filter(col("vec_id") < 8)
     val exact = SimilaritySearch.bruteForceTopK(emb, qs, "vec_id", "embedding", k = 10)
@@ -679,24 +673,8 @@ object SimilarityQueries extends QueryGroup {
   // Irrational sqrt means ship rounded to 6 decimals (the q_t30 rule).
   private val qV21 = Q(
     "q_v21_cluster_quality",
-    """WITH v AS (SELECT vec_id AS id, embedding AS emb FROM embeddings),
-      |seeds AS (SELECT row_number() OVER (ORDER BY id) - 1 AS c, emb
-      |          FROM (SELECT id, emb FROM v ORDER BY id LIMIT 8)),
-      |c0 AS (SELECT c, i AS p, CAST(emb[i] AS DOUBLE) AS m
-      |       FROM seeds, range(1, 65) t(i)),
-      |vd AS (SELECT id, i AS p, CAST(emb[i] AS DOUBLE) AS x
-      |       FROM v, range(1, 65) t(i)),
-      |d1 AS (SELECT vd.id, c0.c, sum((vd.x - c0.m) * (vd.x - c0.m)) AS d
-      |       FROM vd JOIN c0 ON vd.p = c0.p GROUP BY 1, 2),
-      |a1 AS (SELECT id, c FROM (
-      |         SELECT id, c, row_number() OVER (
-      |           PARTITION BY id ORDER BY round(d, 6), c) AS rn
-      |         FROM d1) WHERE rn = 1),
-      |c1 AS (SELECT a1.c, vd.p,
-      |              CAST(sum(CAST(vd.x AS DECIMAL(20,10))) AS DOUBLE) / count(*) AS m
-      |       FROM a1 JOIN vd ON a1.id = vd.id GROUP BY 1, 2),
-      |d2 AS (SELECT vd.id, c1.c, sum((vd.x - c1.m) * (vd.x - c1.m)) AS d
-      |       FROM vd JOIN c1 ON vd.p = c1.p GROUP BY 1, 2),
+    s"""WITH v AS (SELECT vec_id AS id, embedding AS emb FROM embeddings),
+      |$kmeansLloydSql
       |a2 AS (SELECT id, c FROM (
       |         SELECT id, c, row_number() OVER (
       |           PARTITION BY id ORDER BY round(d, 6), c) AS rn
@@ -752,8 +730,7 @@ object SimilarityQueries extends QueryGroup {
   // posture), with the recall floor vs exact as the oracle row.
   private val qV22 = Q(
     "q_v22_ann_ivf_append",
-    """SELECT vec_id AS query_id, true AS recall_ok
-      |FROM embeddings WHERE vec_id < 8 ORDER BY query_id""".stripMargin) { (s, dir) =>
+    qV3.oracle.get) { (s, dir) =>
     val emb = Tables.load(s, dir, "embeddings")
     val seed = emb.filter(col("vec_id") % 4 =!= 0)
     val batch = emb.filter(col("vec_id") % 4 === 0)

@@ -12,24 +12,13 @@ object StreamingQueries extends QueryGroup {
 
   private val qSt1 = Q(
     "q_st1_stream_window_agg",
-    """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_bucket,
-      |       event_type,
-      |       CAST(count(*) AS INT) AS n,
-      |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
+    RelationalQueries.qEvents.oracle.get) { (s, dir) =>
     EventStreams.windowedAggAvailableNow(s, dir)
   }
 
   private val qSt2 = Q(
     "q_st2_stream_sessionize",
-    """SELECT user_id,
-      |       CAST(count(*) AS INT) AS n_events,
-      |       CAST(sum(CASE WHEN prev_ts IS NULL
-      |                       OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1 ELSE 0 END) AS INT) AS n_sessions
-      |FROM (SELECT user_id, ts,
-      |             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-      |      FROM events) t
-      |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
+    RelationalQueries.qSessions.oracle.get) { (s, dir) =>
     EventStreams.sessionCountsAvailableNow(s, dir)
   }
 
@@ -190,16 +179,7 @@ object StreamingQueries extends QueryGroup {
   // (cur, next, n, p) matrix. Oracle = the batch lead-window SQL.
   private val qSt10 = Q(
     "q_st10_stream_transitions",
-    """WITH seq AS (
-      |  SELECT event_type AS cur,
-      |         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next
-      |  FROM events),
-      |trans AS (SELECT cur, next, count(*) AS n FROM seq
-      |          WHERE next IS NOT NULL GROUP BY 1, 2),
-      |ctx AS (SELECT cur, sum(n) AS c FROM trans GROUP BY 1)
-      |SELECT cur, next, n, CAST(n AS DOUBLE) / c AS p
-      |FROM trans JOIN ctx USING (cur)
-      |ORDER BY cur, next""".stripMargin) { (s, dir) =>
+    RelationalQueries.qE9.oracle.get) { (s, dir) =>
     EventStreams.markovTransitionsAvailableNow(s, dir)
   }
 
@@ -209,12 +189,7 @@ object StreamingQueries extends QueryGroup {
   // any cross-batch drift breaks the hash.
   private val qSt11 = Q(
     "q_st11_stream_mv",
-    """SELECT o_custkey,
-      |       CAST(count(*) AS BIGINT) AS n_rows,
-      |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-      |FROM orders
-      |WHERE o_orderkey % 5 = 0 OR o_orderkey % 11 <> 0
-      |GROUP BY 1 ORDER BY o_custkey""".stripMargin) { (s, dir) =>
+    QualityQueries.qA12.oracle.get) { (s, dir) =>
     EventStreams.mvMaintainAvailableNow(s, dir)
   }
 
@@ -225,26 +200,7 @@ object StreamingQueries extends QueryGroup {
   // drift breaks the hash.
   private val qSt12 = Q(
     "q_st12_stream_cdc_merge",
-    """WITH changes AS (
-      |  SELECT c_custkey,
-      |         CASE WHEN c_custkey % 7 = 3 THEN c_name ELSE c_name || ' (updated)' END AS c_name,
-      |         c_nationkey,
-      |         CASE WHEN c_custkey % 7 = 3 THEN c_acctbal ELSE c_acctbal + 100 END AS c_acctbal,
-      |         c_mktsegment,
-      |         CASE WHEN c_custkey % 7 = 3 THEN 'D' ELSE 'U' END AS op
-      |  FROM customer WHERE c_custkey % 7 = 3 OR c_custkey % 10 = 0
-      |  UNION ALL
-      |  SELECT c_custkey + 1000000, 'New Customer ' || CAST(c_custkey AS VARCHAR),
-      |         c_nationkey, 0.0, 'BUILDING', 'U'
-      |  FROM customer WHERE c_custkey % 97 = 0)
-      |SELECT * FROM (
-      |  SELECT c.c_custkey, c.c_name, c.c_nationkey, c.c_acctbal, c.c_mktsegment
-      |  FROM customer c
-      |  WHERE NOT EXISTS (SELECT 1 FROM changes ch WHERE ch.c_custkey = c.c_custkey)
-      |  UNION ALL
-      |  SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-      |  FROM changes WHERE op <> 'D')
-      |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
+    PipelineQueries.qF6.oracle.get) { (s, dir) =>
     EventStreams.cdcMergeAvailableNow(s, dir)
   }
 
@@ -313,24 +269,8 @@ object StreamingQueries extends QueryGroup {
   // assignments must agree on every vector.
   private val qSt15 = Q(
     "q_st15_stream_kmeans_score",
-    """WITH v AS (SELECT vec_id AS id, embedding AS emb FROM embeddings),
-      |seeds AS (SELECT row_number() OVER (ORDER BY id) - 1 AS c, emb
-      |          FROM (SELECT id, emb FROM v ORDER BY id LIMIT 8)),
-      |c0 AS (SELECT c, i AS p, CAST(emb[i] AS DOUBLE) AS m
-      |       FROM seeds, range(1, 65) t(i)),
-      |vd AS (SELECT id, i AS p, CAST(emb[i] AS DOUBLE) AS x
-      |       FROM v, range(1, 65) t(i)),
-      |d1 AS (SELECT vd.id, c0.c, sum((vd.x - c0.m) * (vd.x - c0.m)) AS d
-      |       FROM vd JOIN c0 ON vd.p = c0.p GROUP BY 1, 2),
-      |a1 AS (SELECT id, c FROM (
-      |         SELECT id, c, row_number() OVER (
-      |           PARTITION BY id ORDER BY round(d, 6), c) AS rn
-      |         FROM d1) WHERE rn = 1),
-      |c1 AS (SELECT a1.c, vd.p,
-      |              CAST(sum(CAST(vd.x AS DECIMAL(20,10))) AS DOUBLE) / count(*) AS m
-      |       FROM a1 JOIN vd ON a1.id = vd.id GROUP BY 1, 2),
-      |d2 AS (SELECT vd.id, c1.c, sum((vd.x - c1.m) * (vd.x - c1.m)) AS d
-      |       FROM vd JOIN c1 ON vd.p = c1.p GROUP BY 1, 2),
+    s"""WITH v AS (SELECT vec_id AS id, embedding AS emb FROM embeddings),
+      |${SimilarityQueries.kmeansLloydSql}
       |a2 AS (SELECT id, c, d FROM (
       |         SELECT id, c, d, row_number() OVER (
       |           PARTITION BY id ORDER BY round(d, 6), c) AS rn
@@ -364,18 +304,7 @@ object StreamingQueries extends QueryGroup {
   // independent of landing-zone file order.
   private val qSt17 = Q(
     "q_st17_stream_components",
-    s"""WITH RECURSIVE pairs AS (${DedupQueries.pairsOracle}),
-       |edges AS (
-       |  SELECT id_a AS u, id_b AS v FROM pairs
-       |  UNION SELECT id_b, id_a FROM pairs),
-       |reach(u, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.u, r.lbl FROM edges e JOIN reach r ON e.v = r.u),
-       |comp AS (SELECT u, min(lbl) AS cluster_id FROM reach GROUP BY u)
-       |SELECT d.doc_id, CAST(coalesce(c.cluster_id, d.doc_id) AS BIGINT) AS cluster_id
-       |FROM documents d LEFT JOIN comp c ON c.u = d.doc_id
-       |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
+    DedupQueries.qD16.oracle.get) { (s, dir) =>
     // shards = 2: per-micro-batch FIXED overhead dominates this gate
     // (PERF.md: 1.7× at 10× data), so two drops — one seeding the index,
     // one exercising the fused probe+append+fold path — buy the same
@@ -433,17 +362,7 @@ object StreamingQueries extends QueryGroup {
   private val qSt20 = Q(
     "q_st20_stream_bpe_tokens",
     s"""WITH toks AS (
-       |  SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-       |  FROM documents WHERE trim(text) <> ''),
-       |words AS (SELECT w, count(*) AS wc FROM toks GROUP BY w),
-       |s0 AS (
-       |  SELECT w, wc, CAST(ps.pos AS INT) AS pos, ps.sym AS sym
-       |  FROM (SELECT w, wc, unnest(list_transform(range(len(w)),
-       |               i -> {'pos': i + 1, 'sym': w[i+1:i+1]})) AS ps
-       |        FROM words)),
-       |${TextQueries.bpeRound(1)},
-       |${TextQueries.bpeRound(2)},
-       |${TextQueries.bpeRound(3)},
+       |${TextQueries.bpeTrainSql(3)},
        |ws AS (SELECT w, count(*) AS n_syms,
        |              sum(len(sym)) AS s0len, sum(len(sym) * pos) AS s1len
        |       FROM s3 GROUP BY w),
@@ -478,18 +397,7 @@ object StreamingQueries extends QueryGroup {
   private val qSt21 = Q(
     "q_st21_stream_conformal",
     s"""WITH ${CurationQueries.qcTrainCtes},
-       |sc AS (SELECT f.doc_id, f.y,
-       |              round(1.0 / (1.0 + exp(-(${CurationQueries.qcZ("wt3")}))), 6) AS score
-       |       FROM f CROSS JOIN wt3),
-       |cal AS (SELECT CASE WHEN y = 1.0 THEN 1.0 - score ELSE score END AS r,
-       |               score AS s, y
-       |        FROM sc WHERE doc_id % 5 = 0),
-       |nk AS (SELECT CAST(count(*) AS BIGINT) AS n_cal,
-       |              CAST(ceil((count(*) + 1) * 0.9) AS BIGINT) AS k FROM cal),
-       |cum AS (SELECT r, sum(c) OVER (ORDER BY r, s, y
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm
-       |        FROM (SELECT r, s, y, count(*) AS c FROM cal GROUP BY 1, 2, 3)),
-       |q AS (SELECT min(r) AS qhat FROM cum CROSS JOIN nk WHERE cm >= nk.k)
+       |${CurationQueries.conformalThresholdSql}
        |SELECT sc.doc_id, sc.score,
        |       (q.qhat IS NULL OR 1.0 - sc.score <= q.qhat) AS in_set_1,
        |       (q.qhat IS NULL OR sc.score <= q.qhat) AS in_set_0,
@@ -709,28 +617,11 @@ object StreamingQueries extends QueryGroup {
   // the corpus.
   private val qSt30 = Q(
     "q_st30_stream_hll_distinct",
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT lang AS g,
       |         ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS hk
       |  FROM documents),
-      |reg AS (
-      |  SELECT g, hk & 511 AS bucket,
-      |         max(51 - length(ltrim(bin(hk >> 9), '0')) + 1) AS r
-      |  FROM h GROUP BY 1, 2),
-      |ag AS (
-      |  SELECT g, CAST(count(*) AS BIGINT) AS nb,
-      |         CAST(sum(1::BIGINT << CAST(52 - r AS INTEGER)) AS BIGINT) AS sp
-      |  FROM reg GROUP BY 1),
-      |est AS (
-      |  SELECT g, CAST(512 - nb AS BIGINT) AS n_zero,
-      |         CAST(sp + (512 - nb) * (1::BIGINT << 52) AS BIGINT) AS s_scaled
-      |  FROM ag),
-      |fin AS (
-      |  SELECT g, n_zero, s_scaled,
-      |         (CAST(0.7213 AS DOUBLE) / (CAST(1.0 AS DOUBLE) + CAST(1.079 AS DOUBLE) / CAST(512 AS DOUBLE)))
-      |           * CAST(512 AS DOUBLE) * CAST(512 AS DOUBLE)
-      |           * CAST(1::BIGINT << 52 AS DOUBLE) / CAST(s_scaled AS DOUBLE) AS e_raw
-      |  FROM est)
+      |${QualityQueries.hllEstimateSql}
       |SELECT g AS lang, CAST(512 AS INTEGER) AS m, n_zero, s_scaled,
       |       round(CASE WHEN e_raw <= CAST(2.5 AS DOUBLE) * CAST(512 AS DOUBLE) AND n_zero > 0
       |                  THEN CAST(512 AS DOUBLE) * ln(CAST(512 AS DOUBLE) / CAST(n_zero AS DOUBLE))

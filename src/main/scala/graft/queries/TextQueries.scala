@@ -10,6 +10,48 @@ import graft.RunScope.Pinning
 /** Text-analysis operators over the documents table. */
 object TextQueries extends QueryGroup {
 
+  // Oracle fragments, margin text that the query strings interpolate
+  // before their stripMargin. `docTokensSql` is the body of the `t` CTE:
+  // each document's tokens under the engine's tokenization.
+  private[queries] val docTokensSql =
+    """  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
+      |  FROM documents),"""
+  /** `t` plus `stats`, `tf` and `df`: q_t11's BM25 inputs for the terms
+    * data, table and join.
+    */
+  private val bm25TermsSql =
+    """  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
+      |  FROM documents),
+      |stats AS (
+      |  SELECT CAST(count(*) AS DOUBLE) AS n_docs,
+      |         CAST(sum(len(tk)) AS DOUBLE) / count(*) AS avgdl
+      |  FROM t),
+      |tf AS (
+      |  SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
+      |  FROM (SELECT doc_id, CAST(len(tk) AS DOUBLE) AS dl, unnest(tk) AS term FROM t)
+      |  WHERE term IN ('data', 'table', 'join')
+      |  GROUP BY doc_id, dl, term),
+      |df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term)"""
+  /** `t` with `lang` and `text`, plus `s`: stopword hits per language. */
+  private val langStopwordHitsSql =
+    """  SELECT doc_id, lang, text,
+      |         CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+      |              ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
+      |  FROM documents),
+      |s AS (
+      |  SELECT doc_id, lang, text,
+      |    len(list_filter(tk, x -> list_contains(['der','die','und','das','ist','ich','nicht','sie',
+      |        'mit','sich','auf','für','als','auch','es','ein','eine','zu'], x))) AS de,
+      |    len(list_filter(tk, x -> list_contains(['the','of','and','to','in','is','you','that','it',
+      |        'was','for','on','are','as','with','they','at','this','have'], x))) AS en,
+      |    len(list_filter(tk, x -> list_contains(['el','la','de','que','y','en','un','se','no','por',
+      |        'con','su','para','como','es','los','las','una','más'], x))) AS es,
+      |    len(list_filter(tk, x -> list_contains(['le','la','et','les','des','est','un','une','du',
+      |        'que','pas','pour','dans','ce','il','qui','ne','sur','se'], x))) AS fr
+      |  FROM t)"""
+
   // Token counting + shape stats. Oracle mirrors the exact tokenization
   // (split lower(trim(text)) on \s+, empty text → zero tokens — DuckDB's
   // string_split_regex('') is [''], so the empty case is guarded explicitly
@@ -69,22 +111,8 @@ object TextQueries extends QueryGroup {
   // code), CJK script check first, no evidence → 'und'.
   private val qT3 = Q(
     "q_t3_lang_id",
-    """WITH t AS (
-      |  SELECT doc_id, lang, text,
-      |         CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |              ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
-      |s AS (
-      |  SELECT doc_id, lang, text,
-      |    len(list_filter(tk, x -> list_contains(['der','die','und','das','ist','ich','nicht','sie',
-      |        'mit','sich','auf','für','als','auch','es','ein','eine','zu'], x))) AS de,
-      |    len(list_filter(tk, x -> list_contains(['the','of','and','to','in','is','you','that','it',
-      |        'was','for','on','are','as','with','they','at','this','have'], x))) AS en,
-      |    len(list_filter(tk, x -> list_contains(['el','la','de','que','y','en','un','se','no','por',
-      |        'con','su','para','como','es','los','las','una','más'], x))) AS es,
-      |    len(list_filter(tk, x -> list_contains(['le','la','et','les','des','est','un','une','du',
-      |        'que','pas','pour','dans','ce','il','qui','ne','sur','se'], x))) AS fr
-      |  FROM t)
+    raw"""WITH t AS (
+      |$langStopwordHitsSql
       |SELECT doc_id, lang AS lang_declared,
       |       CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
       |            WHEN greatest(de, en, es, fr) = 0 THEN 'und'
@@ -184,10 +212,8 @@ object TextQueries extends QueryGroup {
   // cost, no shuffle; the oracle replays the identical double math.
   private val qT9 = Q(
     "q_t9_repetition",
-    """WITH t AS (
-      |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
+    s"""WITH t AS (
+      |$docTokensSql
       |m AS (
       |  SELECT doc_id,
       |         CASE WHEN len(tk) = 0 THEN CAST(0.0 AS DOUBLE)
@@ -233,10 +259,8 @@ object TextQueries extends QueryGroup {
   // identical tie-break on the term).
   private val qT6 = Q(
     "q_t6_tfidf_topterms",
-    """WITH t AS (
-      |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
+    s"""WITH t AS (
+      |$docTokensSql
       |terms AS (SELECT doc_id, unnest(tk) AS term FROM t),
       |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2),
       |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM terms GROUP BY 1),
@@ -293,10 +317,8 @@ object TextQueries extends QueryGroup {
   // totals, and per-doc mean log-probability replayed exactly in SQL.
   private val qT8 = Q(
     "q_t8_unigram_lm_score",
-    """WITH t AS (
-      |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
+    s"""WITH t AS (
+      |$docTokensSql
       |terms AS (SELECT doc_id, unnest(tk) AS term FROM t),
       |counts AS (SELECT term, count(*) AS c FROM terms GROUP BY term),
       |totals AS (SELECT sum(c) AS tt, count(*) AS v FROM counts)
@@ -372,20 +394,8 @@ object TextQueries extends QueryGroup {
   // 6dp rounding.
   private val qT11 = Q(
     "q_t11_bm25",
-    """WITH t AS (
-      |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-      |         CAST(sum(len(tk)) AS DOUBLE) / count(*) AS avgdl
-      |  FROM t),
-      |tf AS (
-      |  SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
-      |  FROM (SELECT doc_id, CAST(len(tk) AS DOUBLE) AS dl, unnest(tk) AS term FROM t)
-      |  WHERE term IN ('data', 'table', 'join')
-      |  GROUP BY doc_id, dl, term),
-      |df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term)
+    s"""WITH t AS (
+      |$bm25TermsSql
       |SELECT tf.doc_id,
       |       CAST(count(*) AS INT) AS n_terms_matched,
       |       sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
@@ -406,10 +416,8 @@ object TextQueries extends QueryGroup {
   // zip_with is scan-side (no self-join to form pairs).
   private val qT13 = Q(
     "q_t13_bigram_lm",
-    """WITH t AS (
-      |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
+    s"""WITH t AS (
+      |$docTokensSql
       |bg AS (SELECT doc_id, unnest(tk[1:len(tk)-1]) AS w1, unnest(tk[2:len(tk)]) AS w2
       |       FROM t WHERE len(tk) >= 2),
       |cnt AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2),
@@ -431,10 +439,8 @@ object TextQueries extends QueryGroup {
   // expression is replayed verbatim).
   private val qT14 = Q(
     "q_t14_interpolated_lm",
-    """WITH t AS (
-      |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
+    s"""WITH t AS (
+      |$docTokensSql
       |bg AS (SELECT doc_id, unnest(tk[1:len(tk)-1]) AS w1, unnest(tk[2:len(tk)]) AS w2
       |       FROM t WHERE len(tk) >= 2),
       |cnt AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2),
@@ -525,10 +531,8 @@ object TextQueries extends QueryGroup {
   // q_t1; empty docs keep a zero row.
   private val qT16 = Q(
     "q_t16_token_entropy",
-    """WITH t AS (
-      |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
+    s"""WITH t AS (
+      |$docTokensSql
       |cnt AS (SELECT doc_id, unnest(tk) AS term FROM t),
       |c AS (SELECT doc_id, term, count(*) AS c FROM cnt GROUP BY 1, 2),
       |n AS (SELECT doc_id, sum(c) AS n, count(*) AS v FROM c GROUP BY 1),
@@ -602,19 +606,7 @@ object TextQueries extends QueryGroup {
     Q(
       "q_t18_rrf_hybrid",
       s"""WITH t AS (
-         |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-         |                      ELSE string_split_regex(lower(trim(text)), '\\s+') END AS tk
-         |  FROM documents),
-         |stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-         |         CAST(sum(len(tk)) AS DOUBLE) / count(*) AS avgdl
-         |  FROM t),
-         |tf AS (
-         |  SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
-         |  FROM (SELECT doc_id, CAST(len(tk) AS DOUBLE) AS dl, unnest(tk) AS term FROM t)
-         |  WHERE term IN ('data', 'table', 'join')
-         |  GROUP BY doc_id, dl, term),
-         |df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
+         |$bm25TermsSql,
          |bm AS (
          |  SELECT tf.doc_id,
          |         sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
@@ -667,26 +659,7 @@ object TextQueries extends QueryGroup {
   // answer exactly.
   private val qT20 = Q(
     "q_t20_bm25_persisted",
-    """WITH t AS (
-      |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-      |         CAST(sum(len(tk)) AS DOUBLE) / count(*) AS avgdl
-      |  FROM t),
-      |tf AS (
-      |  SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
-      |  FROM (SELECT doc_id, CAST(len(tk) AS DOUBLE) AS dl, unnest(tk) AS term FROM t)
-      |  WHERE term IN ('data', 'table', 'join')
-      |  GROUP BY doc_id, dl, term),
-      |df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term)
-      |SELECT tf.doc_id,
-      |       CAST(count(*) AS INT) AS n_terms_matched,
-      |       sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-      |           (tf * (1.2 + 1) / (tf + 1.2 * ((1 - 0.75) + 0.75 * dl / avgdl)))) AS bm25
-      |FROM tf JOIN df USING (term) CROSS JOIN stats
-      |GROUP BY tf.doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
+    qT11.oracle.get) { (s, dir) =>
     val docs = Tables.load(s, dir, "documents")
     val terms = Seq("data", "table", "join")
     val idx = RunScope.scratchDir("graft_bm25idx")
@@ -716,26 +689,7 @@ object TextQueries extends QueryGroup {
   // keeps the q_t20 directory-pruning guarantee on the appended index.
   private val qT21 = Q(
     "q_t21_bm25_append",
-    """WITH t AS (
-      |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-      |         CAST(sum(len(tk)) AS DOUBLE) / count(*) AS avgdl
-      |  FROM t),
-      |tf AS (
-      |  SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
-      |  FROM (SELECT doc_id, CAST(len(tk) AS DOUBLE) AS dl, unnest(tk) AS term FROM t)
-      |  WHERE term IN ('data', 'table', 'join')
-      |  GROUP BY doc_id, dl, term),
-      |df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term)
-      |SELECT tf.doc_id,
-      |       CAST(count(*) AS INT) AS n_terms_matched,
-      |       sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5)) *
-      |           (tf * (1.2 + 1) / (tf + 1.2 * ((1 - 0.75) + 0.75 * dl / avgdl)))) AS bm25
-      |FROM tf JOIN df USING (term) CROSS JOIN stats
-      |GROUP BY tf.doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
+    qT11.oracle.get) { (s, dir) =>
     val docs = Tables.load(s, dir, "documents")
     val terms = Seq("data", "table", "join")
     val idx = RunScope.scratchDir("graft_bm25app")
@@ -777,6 +731,22 @@ object TextQueries extends QueryGroup {
     graft.operators.TokenStats.zipfFit(
       Tables.load(s, dir, "documents"), "text", topN = 200)
   }
+
+  /** The BPE training unroll as oracle CTEs (margin text, interpolated
+    * before stripMargin): the body of `toks` (every word occurrence),
+    * `words` with their counts, `s0` (one symbol per character), then
+    * `rounds` [[bpeRound]]s.
+    */
+  private[queries] def bpeTrainSql(rounds: Int): String =
+    s"""  SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
+       |  FROM documents WHERE trim(text) <> ''),
+       |words AS (SELECT w, count(*) AS wc FROM toks GROUP BY w),
+       |s0 AS (
+       |  SELECT w, wc, CAST(ps.pos AS INT) AS pos, ps.sym AS sym
+       |  FROM (SELECT w, wc, unnest(list_transform(range(len(w)),
+       |               i -> {'pos': i + 1, 'sym': w[i+1:i+1]})) AS ps
+       |        FROM words)),
+       |${(1 to rounds).map(bpeRound).mkString(",\n")}"""
 
   /** One BPE training round as oracle CTEs (the q_v14 unroll discipline
     * brought to tokenizer training): pair-count over s{k−1} → total-order
@@ -821,17 +791,7 @@ object TextQueries extends QueryGroup {
   private val qT22 = Q(
     "q_t22_bpe_merges",
     s"""WITH toks AS (
-       |  SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-       |  FROM documents WHERE trim(text) <> ''),
-       |words AS (SELECT w, count(*) AS wc FROM toks GROUP BY w),
-       |s0 AS (
-       |  SELECT w, wc, CAST(ps.pos AS INT) AS pos, ps.sym AS sym
-       |  FROM (SELECT w, wc, unnest(list_transform(range(len(w)),
-       |               i -> {'pos': i + 1, 'sym': w[i+1:i+1]})) AS ps
-       |        FROM words)),
-       |${bpeRound(1)},
-       |${bpeRound(2)},
-       |${bpeRound(3)}
+       |${bpeTrainSql(3)}
        |SELECT CAST(1 AS INT) AS round, a AS merge_left, b AS merge_right,
        |       CAST(c AS BIGINT) AS pair_count FROM top1
        |UNION ALL SELECT 2, a, b, CAST(c AS BIGINT) FROM top2
@@ -851,17 +811,7 @@ object TextQueries extends QueryGroup {
   private val qT23 = Q(
     "q_t23_bpe_compression",
     s"""WITH toks AS (
-       |  SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-       |  FROM documents WHERE trim(text) <> ''),
-       |words AS (SELECT w, count(*) AS wc FROM toks GROUP BY w),
-       |s0 AS (
-       |  SELECT w, wc, CAST(ps.pos AS INT) AS pos, ps.sym AS sym
-       |  FROM (SELECT w, wc, unnest(list_transform(range(len(w)),
-       |               i -> {'pos': i + 1, 'sym': w[i+1:i+1]})) AS ps
-       |        FROM words)),
-       |${bpeRound(1)},
-       |${bpeRound(2)},
-       |${bpeRound(3)},
+       |${bpeTrainSql(3)},
        |pw AS (SELECT w, any_value(wc) AS wc, count(*) AS n_syms FROM s3 GROUP BY w),
        |one AS (SELECT CAST(sum(wc) AS BIGINT) AS total_words,
        |               CAST(sum(wc * len(w)) AS BIGINT) AS total_chars,
@@ -889,15 +839,7 @@ object TextQueries extends QueryGroup {
   private val qT24 = Q(
     "q_t24_bpe_batched",
     s"""WITH toks AS (
-       |  SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-       |  FROM documents WHERE trim(text) <> ''),
-       |words AS (SELECT w, count(*) AS wc FROM toks GROUP BY w),
-       |s0 AS (
-       |  SELECT w, wc, CAST(ps.pos AS INT) AS pos, ps.sym AS sym
-       |  FROM (SELECT w, wc, unnest(list_transform(range(len(w)),
-       |               i -> {'pos': i + 1, 'sym': w[i+1:i+1]})) AS ps
-       |        FROM words)),
-       |${(1 to 6).map(bpeRound).mkString(",\n")}
+       |${bpeTrainSql(6)}
        |${(1 to 6).map(k =>
             s"SELECT CAST($k AS INT) AS round, a AS merge_left, b AS merge_right, " +
               s"CAST(c AS BIGINT) AS pair_count FROM top$k")
@@ -920,22 +862,8 @@ object TextQueries extends QueryGroup {
   // two window sums over the ≤|langs|²-row cell frame.
   private val qT25 = Q(
     "q_t25_langid_confusion",
-    """WITH t AS (
-      |  SELECT doc_id, lang, text,
-      |         CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |              ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
-      |s AS (
-      |  SELECT doc_id, lang, text,
-      |    len(list_filter(tk, x -> list_contains(['der','die','und','das','ist','ich','nicht','sie',
-      |        'mit','sich','auf','für','als','auch','es','ein','eine','zu'], x))) AS de,
-      |    len(list_filter(tk, x -> list_contains(['the','of','and','to','in','is','you','that','it',
-      |        'was','for','on','are','as','with','they','at','this','have'], x))) AS en,
-      |    len(list_filter(tk, x -> list_contains(['el','la','de','que','y','en','un','se','no','por',
-      |        'con','su','para','como','es','los','las','una','más'], x))) AS es,
-      |    len(list_filter(tk, x -> list_contains(['le','la','et','les','des','est','un','une','du',
-      |        'que','pas','pour','dans','ce','il','qui','ne','sur','se'], x))) AS fr
-      |  FROM t),
+    raw"""WITH t AS (
+      |$langStopwordHitsSql,
       |p AS (
       |  SELECT lang AS lang_declared,
       |         CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
@@ -1165,7 +1093,7 @@ object TextQueries extends QueryGroup {
   // canonicalization, and the identical double association order.
   private val qT30 = Q(
     "q_t30_pmi_cooccurrence",
-    """WITH t AS (
+    raw"""WITH t AS (
       |  SELECT doc_id,
       |         CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
       |              ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
@@ -1181,17 +1109,7 @@ object TextQueries extends QueryGroup {
       |ug AS (
       |  SELECT u.tok AS tok, CAST(count(*) AS BIGINT) AS c
       |  FROM t, unnest(tk) AS u(tok) GROUP BY 1),
-      |tots AS (
-      |  SELECT (SELECT CAST(sum(c) AS BIGINT) FROM ug) AS n_tok,
-      |         (SELECT CAST(count(*) AS BIGINT) FROM pr) AS n_pairs)
-      |SELECT p.tok_a, p.tok_b, p.c_ab, a.c AS c_a, b.c AS c_b,
-      |       round(ln((CAST(p.c_ab AS DOUBLE) * t2.n_tok * t2.n_tok)
-      |                / (CAST(t2.n_pairs AS DOUBLE) * a.c * b.c)), 6) AS pmi
-      |FROM pc p
-      |JOIN ug a ON a.tok = p.tok_a
-      |JOIN ug b ON b.tok = p.tok_b
-      |CROSS JOIN tots t2
-      |ORDER BY tok_a, tok_b""".stripMargin) { (s, dir) =>
+      |${GraphQueries.pmiScoresSql}""".stripMargin) { (s, dir) =>
     graft.operators.Cooccurrence
       .pmiPairs(Tables.load(s, dir, "documents"), "text",
         window = 3, minPairCount = 5L)
@@ -1209,10 +1127,8 @@ object TextQueries extends QueryGroup {
   // isin-literal path is structurally unavailable).
   private val qT31 = Q(
     "q_t31_rocchio_prf",
-    """WITH t AS (
-      |  SELECT doc_id, CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-      |                      ELSE string_split_regex(lower(trim(text)), '\s+') END AS tk
-      |  FROM documents),
+    s"""WITH t AS (
+      |$docTokensSql
       |stats AS (
       |  SELECT CAST(count(*) AS DOUBLE) AS n_docs,
       |         CAST(sum(len(tk)) AS DOUBLE) / count(*) AS avgdl
@@ -1823,7 +1739,6 @@ object TextQueries extends QueryGroup {
     * once and the chain is linear.
     */
   private val uniMaxWordLen = 12
-  private val uniMaxPieceLen = 4
 
   private def uniBestSql(p: Int): String =
     s"""list_sort(list_filter(list_transform([1,2,3,4], l ->

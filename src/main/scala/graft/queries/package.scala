@@ -23,8 +23,6 @@ package object queries {
   object Q {
     def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
       Q(name, fn, Some(oracle))
-    def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-      Q(name, fn, None)
   }
 
   trait QueryGroup {

@@ -9,9 +9,6 @@ import org.apache.spark.sql.DataFrame
   *     path at SisConnectorService.java:756-795) — Spark's CSV writer with
   *     quoteAll is RFC-4180 output, written distributed instead of via a
   *     driver loop;
-  *   - S10: per-run entity dumps under `<dir>/<runDate>/...`
-  *     (SisConnectorService.java:163-182) — JSON lines partitioned by run
-  *     stamp so a date's runs prune to one directory listing;
   *   - S11: the plain-text run report (SisConnectorResponse.java:96-138).
   */
 object FileSinks {
@@ -21,9 +18,6 @@ object FileSinks {
       .option("header", "true")
       .option("quoteAll", "true")
       .csv(dir)
-
-  def jsonRunDump(df: DataFrame, dir: String, runDate: String, runTime: String): Unit =
-    df.write.mode("overwrite").json(s"$dir/$runDate/$runTime")
 
   final case class RunReport(
       startedAt: String,
@@ -44,8 +38,9 @@ object FileSinks {
          |""".stripMargin
   }
 
-  def writeReport(report: RunReport, dir: String, name: String): Unit = {
+  /** Writes `<dir>/<name>.report` and returns its path. */
+  def writeReport(report: RunReport, dir: String, name: String): String = {
     Files.createDirectories(Paths.get(dir))
-    Files.writeString(Paths.get(dir, s"$name.report"), report.render)
+    Files.writeString(Paths.get(dir, s"$name.report"), report.render).toString
   }
 }

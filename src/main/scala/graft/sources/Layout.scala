@@ -154,7 +154,4 @@ object Layout {
         end > i && s.substring(i + tag.length, end).contains(colName)
       }
   }
-
-  def dropTable(spark: SparkSession, table: String): Unit =
-    spark.sql(s"DROP TABLE IF EXISTS $table")
 }

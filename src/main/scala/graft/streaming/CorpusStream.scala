@@ -620,54 +620,6 @@ object CorpusStream {
     }
   }
 
-  /** Streaming TERMINAL-SHARD export — the landing-zone close of the
-    * curation pipeline (the [[graft.operators.ShardExport]] incremental
-    * posture per micro-batch): the first drop writes the shard
-    * directory + manifest, every later drop APPENDS its documents as
-    * fresh shards after the existing maximum (immutable old shards,
-    * work ∝ batch — the WebDataset drop convention). Returns the final
-    * manifest frame read back from disk; `outDir` holds the mountable
-    * artifact.
-    */
-  def shardExportAvailableNow(
-      spark: SparkSession,
-      sfDir: String,
-      outDir: String,
-      shards: Int = 2,
-      budget: Int = 2000): DataFrame = {
-    import graft.operators.ShardExport
-    var seeded = false
-    val docs = graft.Tables.load(spark, sfDir, "documents")
-    val q = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(writeLandingZone(docs, shards))
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: Long) =>
-          // seed only on the first NON-EMPTY drop: an empty first
-          // micro-batch must not write an empty manifest, or every
-          // later append would hit its empty-manifest guard and kill
-          // the stream (r16 ADVICE); empty later drops are no-ops.
-          if (!batch.isEmpty) {
-            if (!seeded) {
-              seeded = true
-              ShardExport.write(batch.toDF(), "doc_id", "text", "source",
-                budget, outDir)
-            } else {
-              ShardExport.append(batch.sparkSession, batch.toDF(), "doc_id",
-                "text", "source", budget, outDir)
-            }
-          }
-          ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(s"$outDir/_manifest")
-  }
-
   /** Streaming `.warc.gz` export — the landing zone's ARCHIVE write
     * path: each non-empty drop serializes its own captures (via `mk`:
     * batch docs → (idCol, url, date, payload) frame) into a FRESH

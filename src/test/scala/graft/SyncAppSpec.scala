@@ -99,6 +99,18 @@ class SyncAppSpec extends SparkSpec {
     assert(MemoryServer.store("syncapp_dry").size() === 0)
   }
 
+  test("the summary names the report file the run wrote under a moving clock") {
+    val (cfg, _) = writeFixture(dumps = false, store = "syncapp_clock")
+    MemoryServer.drop("syncapp_clock")
+    val (transport, tokens) = SyncApp.wire(cfg)
+    val t0 = Instant.parse("2026-02-05T00:00:00Z")
+    val calls = new java.util.concurrent.atomic.AtomicLong(0L)
+    val s = SyncApp.run(spark, cfg, transport, tokens,
+      now = () => t0.plusSeconds(calls.getAndIncrement()))
+    assert(calls.get() > 1, "the clock must be read more than once for this case to bite")
+    assert(Files.exists(Paths.get(s.reportPath)), s"missing report ${s.reportPath}")
+  }
+
   test("re-run converges: idempotent upserts, 404-tolerant deletes") {
     val (cfg, _) = writeFixture(dumps = false, store = "syncapp_rerun")
     MemoryServer.drop("syncapp_rerun")

@@ -41,7 +41,7 @@ class BestMoveCandidateSpec extends SparkSpec {
   private def viaFused(w: DataFrame, lab: DataFrame, m: Long) = {
     val (und, deg) = parts(w)
     graft.operators.Louvain
-      .weightedGainsTest(und, deg, lab, m)
+      .weightedGains(und, deg, lab, m)
       .orderBy(col("gain").desc, col("node").asc, col("c").asc)
       .select("node", "a_label", "c", "k", "ka", "d", "dca", "dcb", "gain")
       .as[(Long, Long, Long, Long, Long, Long, Long, Long, Long)]

@@ -49,22 +49,6 @@ class AnnIndexSpec extends SparkSpec {
       s"expected a dynamic partition pruning filter on the assignments scan:\n$plan")
   }
 
-  test("persisted PQ index matches the fresh fit without re-encoding") {
-    AnnIndex.writePq(emb, "vec_id", "embedding", s"$tmp/pq", m = 8, ksub = 16)
-    val qs = emb.filter(col("vec_id") < 6)
-    val fresh = SimilaritySearch.pqTopK(emb, qs, "vec_id", "embedding",
-      k = 8, m = 8, ksub = 16)
-    // corpus is passed ONLY for the exact re-rank of top candidates;
-    // ADC candidate generation runs over the persisted codes
-    val persisted = AnnIndex.pqTopKPersisted(
-      spark, s"$tmp/pq", emb, qs, "vec_id", "embedding", k = 8)
-    assert(persisted.exceptAll(fresh).isEmpty, "persisted ⊆ fresh")
-    assert(fresh.exceptAll(persisted).isEmpty, "fresh ⊆ persisted")
-    // codebooks round-trip exactly: m × ksub codewords
-    val books = AnnIndex.loadPqCodebooks(spark, s"$tmp/pq")
-    assert(books.length === 8 && books.forall(_.length === 16))
-  }
-
   test("appendIvf: seed + append == rebuild under the seed's centroids") {
     val seed = emb.filter(col("vec_id") % 4 =!= 0)
     val batch = emb.filter(col("vec_id") % 4 === 0)

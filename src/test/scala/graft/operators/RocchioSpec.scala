@@ -19,14 +19,6 @@ class RocchioSpec extends SparkSpec {
       (7L, "apple")).toDF("doc_id", "text")
   }
 
-  test("expansion terms mined from the pseudo-relevant set, originals excluded") {
-    val terms = Rocchio.expansionTerms(corpus, "doc_id", "text", Seq("apple"),
-      topR = 4, expandE = 2)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    // top-4 apple docs: 1,2,3,7 → banana 3× , cherry 2×; 'apple' excluded
-    assert(terms == Seq(("banana", 3L), ("cherry", 2L)))
-  }
-
   test("PRF reaches docs with no original term; pure-noise docs stay unmatched") {
     val out = Rocchio.prfScore(corpus, "doc_id", "text", Seq("apple"),
       topR = 4, expandE = 2)

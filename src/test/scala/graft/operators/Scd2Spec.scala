@@ -35,16 +35,6 @@ class Scd2Spec extends SparkSpec {
     assert(h(301L) === ((ts("2024-01-01 00:00:00"), None, true)))
   }
 
-  test("snapshotAt reconstructs point-in-time state, including same-instant ties") {
-    val h = Scd2.history(feed, Seq("k"), "t", "id")
-    def snap(at: String): Map[Long, String] =
-      Scd2.snapshotAt(h, Seq("k"), "id", lit(ts(at)))
-        .collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
-    assert(snap("2024-01-01 12:00:00") === Map(1L -> "a", 3L -> "new"))
-    assert(snap("2024-01-02 12:00:00") === Map(1L -> "b", 3L -> "new"))
-    assert(snap("2024-06-01 00:00:00") === Map(1L -> "c", 2L -> "x", 3L -> "new"))
-  }
-
   test("applyChanges: incremental fold equals full rebuild; late rows re-close intervals; untouched keys unchanged") {
     // batch 2 lands a LATE change for key 1 in the middle of its history
     // (2024-01-02 12:00) plus a brand-new key 4; key 2 and 3 are untouched

@@ -103,29 +103,6 @@ class ShardExportSpec extends SparkSpec {
       Seq((4L, 2L, 7L, "code:1,web:1")))
   }
 
-  test("streaming export: drops append as fresh shards, every doc exactly once") {
-    val out = Files.createTempDirectory("shards_stream").toString
-    val mani = graft.streaming.CorpusStream
-      .shardExportAvailableNow(spark, sf(), out, shards = 2, budget = 2000)
-      .as[(Long, Long, Long, String, String)].collect().toSeq.sortBy(_._1)
-    val members = spark.read.parquet(s"$out/shards")
-      .select("doc_id").as[Long].collect().toSeq
-    val allDocs = spark.read.parquet(s"${sf()}/documents.parquet")
-      .select("doc_id").as[Long].collect().toSeq
-    // exactly-once coverage across the drops
-    assert(members.sorted === allDocs.sorted)
-    // shard ids are dense from 0 and manifest totals cover every doc
-    assert(mani.map(_._1) === mani.indices.map(_.toLong))
-    assert(mani.map(_._2).sum === allDocs.size.toLong)
-    // each drop respects its own budget up to one straddling doc:
-    // shard token totals never exceed budget + max single doc
-    val maxDoc = spark.read.parquet(s"${sf()}/documents.parquet")
-      .select(graft.functions.TextAnalysis.tokenCount(
-        org.apache.spark.sql.functions.col("text")).as("tc"))
-      .agg(org.apache.spark.sql.functions.max("tc")).as[Int].collect().head
-    assert(mani.forall(_._3 <= 2000L + maxDoc))
-  }
-
   /** Hand-parse one ustar header field (NUL/space-terminated). */
   private def tarField(b: Array[Byte], off: Int, len: Int): String =
     new String(b.slice(off, off + len), "ISO-8859-1")

@@ -104,24 +104,6 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(out.groupBy("query_id").count().collect().forall(_.getLong(1) === 5))
   }
 
-  test("IVF cell histogram is balanced at sf0.1: no cell hoards the corpus") {
-    // the balance guard the 100 TB story needs: a collapsed k-means fit
-    // turns nprobe cells back into brute force. 16 cells → mean share
-    // 1/16 = 0.0625; the bound allows real skew (4× mean) but fails a
-    // degenerate fit (one cell ≈ everything).
-    val emb = Tables.load(spark, sf("sf0.1"), "embeddings")
-    val hist = SimilaritySearch
-      .ivfCellHistogram(emb, "vec_id", "embedding", numCentroids = 16)
-      .collect()
-    val total = hist.map(_.getAs[Long]("n_rows")).sum
-    assert(total === emb.count())
-    val shares = hist.map(_.getAs[Double]("share"))
-    assert(math.abs(shares.sum - 1.0) < 1e-9)
-    val maxShare = shares.max
-    assert(maxShare <= 0.25,
-      f"hot cell holds $maxShare%.3f of the corpus (mean 0.0625) — refit or split")
-  }
-
   test("cosinePairs finds symmetric threshold pairs") {
     val corpus = Seq(
       (1L, Seq(1f, 0f)), (2L, Seq(0.99f, 0.14f)), (3L, Seq(0f, 1f)))

@@ -47,8 +47,8 @@ class LayoutSkewSpec extends SparkSpec {
       // and the bucketed join returns the same rows
       assert(bucketed.count() === unbucketed.count())
     } finally {
-      Layout.dropTable(s, "b_cust")
-      Layout.dropTable(s, "b_ord")
+      s.sql("DROP TABLE IF EXISTS b_cust")
+      s.sql("DROP TABLE IF EXISTS b_ord")
     }
   }
 
