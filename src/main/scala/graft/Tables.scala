@@ -1,14 +1,30 @@
 package graft
 
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
-/** Catalog over the harness parquet tables (TESTDATA.md).
+/** Catalog over the harness parquet tables (TESTDATA.md), and the one
+  * place that reads them.
   *
-  * One parquet file per table under `sfDir`. Reads are plain
-  * `spark.read.parquet` so Catalyst's pushdown/pruning reach the scan —
+  * One parquet file per table under `sfDir`. Every read is a
+  * `spark.read.parquet` scan, so Catalyst's pushdown/pruning reach it —
   * every query should show `PushedFilters`/pruned `ReadSchema` in explain.
+  *
+  * Schema inference is a Spark job (a footer read per call), so each
+  * table's schema is inferred once per session and file state: the memo
+  * is keyed by (session, path) and holds the sorted (path, length,
+  * modification time) of every leaf file under the path with the schema
+  * inferred from them. A read whose listing matches passes that schema to
+  * `spark.read.schema(..)`: Spark still lists the files and builds the
+  * same plan, but runs no inference job. Any change to the files means a
+  * fresh inference; only the latest state per path is kept. Sessions are
+  * held weakly, and a `newSession()` clone (which may set a parquet
+  * inference conf differently) infers for itself.
   */
 object Tables {
 
@@ -36,8 +52,54 @@ object Tables {
       //    fields are reinterpreted as UTC instants, byte-identical
       //    epoch-micros to what DuckDB reads from the same file.
       //  - timestamp[us] UTC-adjusted → already TimestampType: passthrough.
-      normalizeEventTs(spark.read.parquet(path(sfDir, name)))
-    } else spark.read.parquet(path(sfDir, name))
+      normalizeEventTs(read(spark, path(sfDir, name)))
+    } else read(spark, path(sfDir, name))
+
+  /** The table's schema as its parquet file declares it (`events.ts`
+    * NOT normalized) — what a stream over the table is read with.
+    */
+  def schema(spark: SparkSession, sfDir: String, name: String): StructType =
+    read(spark, path(sfDir, name)).schema
+
+  private type FileState = Seq[(String, Long, Long)]
+
+  private val inferred =
+    new java.util.WeakHashMap[SparkSession, mutable.Map[String, (FileState, StructType)]]()
+
+  /** `spark.read.parquet(path)`, inferring the schema only when this
+    * session has not yet read the path in its current file state. An
+    * unlistable path (e.g. a missing one) is left to Spark's own read and
+    * its own error.
+    */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val state = fileState(spark, path)
+    val known = inferred.synchronized(Option(inferred.get(spark)).flatMap(_.get(path)))
+      .collect { case (seen, schema) if state.contains(seen) => schema }
+    known match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        state.foreach(s => inferred.synchronized(
+          inferred.computeIfAbsent(spark, _ => mutable.Map.empty).update(path, (s, df.schema))))
+        df
+    }
+  }
+
+  /** Sorted (path, length, modification time) of every leaf file under
+    * `path`, listed through the session's Hadoop file system so any URI
+    * Spark reads works here too; `None` when the listing fails.
+    */
+  private def fileState(spark: SparkSession, path: String): Option[FileState] =
+    try {
+      val p = new Path(path)
+      val files = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
+      val state = Vector.newBuilder[(String, Long, Long)]
+      while (files.hasNext) {
+        val f = files.next()
+        state += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(state.result().sorted)
+    } catch { case NonFatal(_) => None }
 
   /** Normalize whatever encoding `ts` arrived in (int64 nanos, NTZ, or
     * session-zone timestamp) to TimestampType. See [[load]].
@@ -49,17 +111,16 @@ object Tables {
       case _                => raw
     }
 
-  /** The same table as a file STREAM (micro-batch source): schema taken
-    * from a batch read, `pathGlobFilter` isolating the table's file in
-    * the shared sf directory. For events, the stream is read with the
-    * file's native schema and `ts` normalized per-batch exactly as in
-    * [[load]] (the µs encodings stream fine; only the legacy NANOS files
-    * could not, and those are gone from the harness data).
+  /** The same table as a file STREAM (micro-batch source): the file's
+    * [[schema]], `pathGlobFilter` isolating the table's file in the
+    * shared sf directory. For events, the stream is read with the file's
+    * native schema and `ts` normalized per-batch exactly as in [[load]]
+    * (the µs encodings stream fine; only the legacy NANOS files could
+    * not, and those are gone from the harness data).
     */
   def readStream(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val schema: StructType = spark.read.parquet(path(sfDir, name)).schema
     val raw = spark.readStream
-      .schema(schema)
+      .schema(schema(spark, sfDir, name))
       .option("pathGlobFilter", s"$name.parquet")
       .parquet(sfDir)
     if (name == "events") normalizeEventTs(raw) else raw

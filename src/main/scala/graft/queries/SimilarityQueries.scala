@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{RunScope, Tables}
 import graft.functions.Vectors
 import graft.operators.SimilaritySearch
 import graft.RunScope.Pinning
@@ -369,7 +369,7 @@ object SimilarityQueries extends QueryGroup {
     qV3.oracle.get) { (s, dir) =>
     val emb = Tables.load(s, dir, "embeddings")
     val qs = emb.filter(col("vec_id") < 8)
-    val idx = s"${sys.props("java.io.tmpdir")}/graft_ann_ivf_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val idx = RunScope.scratchDir("graft_ann_ivf")
     graft.operators.AnnIndex.writeIvf(
       emb, "vec_id", "embedding", idx, numCentroids = 16, kmeansIters = 3)
     val persisted = graft.operators.AnnIndex.ivfTopKPersisted(
@@ -735,7 +735,7 @@ object SimilarityQueries extends QueryGroup {
     val seed = emb.filter(col("vec_id") % 4 =!= 0)
     val batch = emb.filter(col("vec_id") % 4 === 0)
     val qs = emb.filter(col("vec_id") < 8)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ann_app_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val base = RunScope.scratchDir("graft_ann_app")
     graft.operators.AnnIndex.writeIvf(
       seed, "vec_id", "embedding", s"$base/grown",
       numCentroids = 16, kmeansIters = 3)

@@ -36,23 +36,6 @@ object EventStreams {
   /** 30-minute session gap, as microseconds. */
   val sessionGapUs: Long = 1800L * 1000 * 1000
 
-  /** Streaming read of the events parquet directory. `ts` has shipped as
-    * int64 NANOS, TIMESTAMP_NTZ, and plain timestamp across testdata
-    * generations; [[Tables.normalizeEventTs]] folds all three to a
-    * session-zone TimestampType so watermarks/`unix_micros` analyze.
-    */
-  def readEventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    // schema discovered from the batch reader (driver-side, tiny footer read)
-    val batchSchema = spark.read.parquet(Tables.path(sfDir, "events")).schema
-    // FileStreamSource wants a directory: stream the sf dir with a glob
-    // narrowing the listing to the events table.
-    val raw = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    Tables.normalizeEventTs(raw)
-  }
-
   /** Streaming twin of q_e1: tumbling 1-hour windows per event type with a
     * 2-hour watermark. Decimal-exact value sums (partial-aggregation-order
     * independent), projected back to the batch query's column shape.
@@ -243,7 +226,7 @@ object EventStreams {
     val s = streamSession(spark, statePartitions)
     runToTable(
       s,
-      windowedAgg(readEventStream(s, sfDir)),
+      windowedAgg(Tables.readStream(s, sfDir, "events")),
       s"stream_window_agg_${System.nanoTime()}",
       OutputMode.Complete())
       .orderBy("hour_bucket", "event_type")
@@ -272,7 +255,7 @@ object EventStreams {
       date_format(date_trunc("hour", c), "yyyy-MM-dd HH:mm:ss")
     val streamed = runToTable(
       s,
-      readEventStream(s, sfDir)
+      Tables.readStream(s, sfDir, "events")
         .groupBy(hourOf(col("ts")).as("hour_bucket"))
         .agg(hll_sketch_agg(col("user_id")).as("__sk")),
       s"stream_hll_${System.nanoTime()}",
@@ -311,7 +294,7 @@ object EventStreams {
       sfDir: String,
       statePartitions: Int = defaultStatePartitions): DataFrame = {
     val s = streamSession(spark, statePartitions)
-    val perSession = readEventStream(s, sfDir)
+    val perSession = Tables.readStream(s, sfDir, "events")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("__n"))
     runToTable(
@@ -337,7 +320,7 @@ object EventStreams {
     val s = streamSession(spark, statePartitions)
     runToTable(
       s,
-      dedupKeys(readEventStream(s, sfDir), Seq("user_id", "event_type")),
+      dedupKeys(Tables.readStream(s, sfDir, "events"), Seq("user_id", "event_type")),
       s"stream_dedup_${System.nanoTime()}",
       OutputMode.Append())
       .orderBy("user_id", "event_type")
@@ -351,7 +334,7 @@ object EventStreams {
     val s = streamSession(spark, statePartitions)
     runToTable(
       s,
-      clickAttributionJoin(readEventStream(s, sfDir)),
+      clickAttributionJoin(Tables.readStream(s, sfDir, "events")),
       s"stream_attribution_${System.nanoTime()}",
       OutputMode.Append())
       .orderBy("purchase_id", "click_id")
@@ -367,7 +350,7 @@ object EventStreams {
     val s = streamSession(spark, statePartitions)
     runToTable(
       s,
-      clickAttributionJoin(readEventStream(s, sfDir), "left_outer"),
+      clickAttributionJoin(Tables.readStream(s, sfDir, "events"), "left_outer"),
       s"stream_attribution_outer_${System.nanoTime()}",
       OutputMode.Append())
       .orderBy(col("purchase_id"), col("click_id").asc_nulls_first)
@@ -382,7 +365,7 @@ object EventStreams {
     runToTable(
       s,
       segmentTotals(
-        readEventStream(s, sfDir),
+        Tables.readStream(s, sfDir, "events"),
         graft.Tables.load(s, sfDir, "customer")),
       s"stream_segment_totals_${System.nanoTime()}",
       OutputMode.Complete())
@@ -447,7 +430,7 @@ object EventStreams {
     implicit val s: SparkSession = streamSession(spark, statePartitions)
     val trans = runToTable(
       s,
-      eventTransitions(readEventStream(s, sfDir)).toDF(),
+      eventTransitions(Tables.readStream(s, sfDir, "events")).toDF(),
       s"stream_transitions_${System.nanoTime()}",
       OutputMode.Append())
     val counts = trans.groupBy("cur", "next").agg(count(lit(1)).as("n"))
@@ -563,7 +546,7 @@ object EventStreams {
     implicit val s: SparkSession = streamSession(spark, statePartitions)
     val updates = runToTable(
       s,
-      sessionCounts(readEventStream(s, sfDir)).toDF(),
+      sessionCounts(Tables.readStream(s, sfDir, "events")).toDF(),
       s"stream_sessions_${System.nanoTime()}",
       OutputMode.Update())
     updates

@@ -97,9 +97,8 @@ object IncrementalSync {
       tokens: Http.TokenSource,
       entityPath: String,
       checkpointDir: String): StreamingQuery = {
-    val schema = Tables.load(spark, sfDir, "customer").schema
     spark.readStream
-      .schema(schema)
+      .schema(Tables.schema(spark, sfDir, "customer"))
       .parquet(updatesDir)
       .writeStream
       .trigger(Trigger.AvailableNow())

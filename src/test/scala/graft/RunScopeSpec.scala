@@ -130,7 +130,7 @@ class RunScopeSpec extends SparkSpec {
 
   test("only RunScope.scala and bridge.scala pin, free or create a temp directory") {
     val banned = Seq("localCheckpoint(", ".persist(", ".cache()", "unpersist(",
-      "freeLocalCheckpoint(", "createTempDirectory")
+      "freeLocalCheckpoint(", "createTempDirectory", "java.io.tmpdir")
     // harness code: Bench's between-query cleanup drops whatever leaked
     def harness(p: Path, text: String): String =
       if (p.getFileName.toString != "Bench.scala") text

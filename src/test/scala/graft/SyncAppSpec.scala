@@ -124,6 +124,20 @@ class SyncAppSpec extends SparkSpec {
     assert(MemoryServer.store("syncapp_rerun").size() === size1)
   }
 
+  test("a second run in one session infers no table schema again") {
+    val (cfg, _) = writeFixture(dumps = false, store = "syncapp_infer")
+    MemoryServer.drop("syncapp_infer")
+    val (transport, tokens) = SyncApp.wire(cfg)
+    // a clone has no inferred schemas yet, whatever ran before on `spark`
+    val clone = spark.newSession()
+    def inferenceJobs(at: String): Int =
+      jobSites(clone)(SyncApp.run(clone, cfg, transport, tokens, now = () => Instant.parse(at)))
+        ._2.count(_.contains("Tables.scala"))
+    val tablesHeld = Tables.all.count(t => Files.exists(Paths.get(Tables.path(sf(), t))))
+    assert(inferenceJobs("2026-02-06T00:00:00Z") === tablesHeld)
+    assert(inferenceJobs("2026-02-06T01:00:00Z") === 0)
+  }
+
   test("unknown api.base.path fails loud instead of silently dropping data") {
     val (cfg0, _) = writeFixture()
     val cfg = SyncApp.Config(cfg0.props + ("api.base.path" -> "https://real.example/api"))
