@@ -1,0 +1,36 @@
+package graft
+
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors}
+
+import scala.util.{Failure, Try}
+
+/** The engine's one way to run a run's independent Spark actions at the
+  * same time (the sync lifecycle's sinks and side writes, a landing
+  * zone's shard files). The driver submits their jobs together, so their
+  * tasks share the cores instead of waiting for each other's job waves.
+  */
+private[graft] object RunPool {
+
+  /** Runs `actions` on a pool of at most 4 threads made for this call,
+    * submitted in order, and returns only once every one has finished;
+    * then rethrows the first failure, if any. The threads are made inside
+    * the caller's run, so they inherit its Spark local properties (job
+    * group and description) and every job stays with the run. An action
+    * must not pin: [[RunScope]] scopes are per thread. Threads are named
+    * `graft-run-<k>`.
+    */
+  def runAll(actions: Seq[() => Unit]): Unit = {
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(math.max(1, math.min(4, actions.size)),
+      (r: Runnable) => { val t = new Thread(r, s"graft-run-${threads.size}"); threads.add(t); t })
+    try {
+      val pending = actions.map(a => pool.submit(new Callable[Try[Unit]] {
+        def call(): Try[Unit] = Try(a())
+      }))
+      pending.map(_.get).collectFirst { case Failure(e) => throw e }
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
+  }
+}

@@ -22,13 +22,15 @@ import graft.sources.{FileSinks, Http, MemoryServer}
   *
   *   1. obtain an API token (oauth.* — loopback or client-credentials);
   *   2. load the named-SQL registry + column maps (input.sql.dir /
-  *      input.columnmap.dir — S4/S5), compile each against the parquet
-  *      catalog, and (output.data.to.dir, SisConnectorService.java:163-182)
-  *      dump results as RFC 4180 CSV under `<output.dir>/<date>/<time>/`;
+  *      input.columnmap.dir — S4/S5) and compile each against the parquet
+  *      catalog;
   *   3. run the validate → resolve → assemble → diff → upsert/delete
   *      sync ([[SyncRun.run]]) against the configured API endpoint when
   *      tpdm.api.save=true (SisConnectorService.java:53-57: save=false
-  *      still processes and reports, it just doesn't POST);
+  *      still processes and reports, it just doesn't POST), and with
+  *      output.data.to.dir (SisConnectorService.java:163-182) dump the
+  *      named results as RFC 4180 CSV under `<output.dir>/<date>/<time>/`
+  *      at the same time as the sync's sinks;
   *   4. write the plain-text run report into output.dir (S11).
   *
   * Property keys mirror the reference's application.properties where the
@@ -102,25 +104,23 @@ object SyncApp {
     // step 1 and treats AuthenticationException as fatal)
     tokens.refresh()
 
-    // parquet catalog → temp views so user-authored .sql sees the tables
-    Tables.all.foreach { t =>
-      if (Files.exists(Paths.get(Tables.path(cfg.dataDir, t))))
-        Tables.load(spark, cfg.dataDir, t).createOrReplaceTempView(t)
-    }
+    // parquet catalog → temp views so user-authored .sql sees the tables;
+    // the sync reuses the same frames
+    val loaded = Tables.all
+      .filter(t => Files.exists(Paths.get(Tables.path(cfg.dataDir, t))))
+      .map(t => t -> Tables.load(spark, cfg.dataDir, t)).toMap
+    loaded.foreach { case (t, df) => df.createOrReplaceTempView(t) }
 
-    // registry: compile every named query; optionally dump results.
-    // Unset dirs mean "no named queries", not "scan the cwd"
+    // registry: compile every named query; optionally dump results next to
+    // the sync's sinks. Unset dirs mean "no named queries", not "scan the cwd"
     val registry =
       if (cfg.sqlDir.isEmpty) QueryRegistry(Map.empty, Map.empty)
       else QueryRegistry.load(
         Paths.get(cfg.sqlDir),
         if (cfg.mapDir.isEmpty) Paths.get(cfg.sqlDir) else Paths.get(cfg.mapDir))
     val compiled = registry.compileAll(spark)
-    if (cfg.outputDataToDir) {
-      compiled.foreach { case (name, df) =>
-        FileSinks.csv(df, s"${cfg.outputDir}/$runDate/$runTime/$name")
-      }
-    }
+    val dumps = if (!cfg.outputDataToDir) Nil else compiled.toSeq.map { case (name, df) =>
+      () => FileSinks.csv(df, s"${cfg.outputDir}/$runDate/$runTime/$name") }
 
     // sync lifecycle; save=false processes everything but POSTs nowhere
     // (the reference's saveToTPDM guard wraps only the API call)
@@ -128,15 +128,13 @@ object SyncApp {
       if (cfg.apiSave) transport
       else (req: Http.Request) => Http.Response(
         if (req.method == "DELETE") 204 else 200, "")
-    val result = SyncRun.run(
-      spark,
-      cfg.dataDir,
-      sinkTransport,
-      tokens,
+    val result = SyncRun.run(spark, cfg.dataDir, sinkTransport, tokens,
       entityPath = s"${cfg.apiBasePath}/tpdm/teacherCandidates",
       reportDir = Some(cfg.outputDir),
       quarantineDir = Some(s"${cfg.outputDir}/$runDate/$runTime/quarantine"),
-      now = now)
+      now = now,
+      loaded = loaded,
+      alongside = dumps)
     Summary(compiled.size, result, result.reportPath.get)
   }
 

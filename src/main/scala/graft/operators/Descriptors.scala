@@ -12,6 +12,11 @@ import org.apache.spark.sql.functions._
   * descriptor dimension plus `coalesce(resolved, raw_code)`. At 100 TB the
   * fact side streams through map-side hash lookups — zero shuffle, exactly
   * the plan the driver-side HashMap was approximating single-threaded.
+  *
+  * The dimension is deduplicated on ONE partition (`coalesce(1)` before
+  * `dropDuplicates`): a side small enough to broadcast is small enough for
+  * one task, and a hash shuffle to dedupe it would cost a whole extra
+  * stage (a Spark job under AQE) before the broadcast.
   */
 object Descriptors {
 
@@ -33,6 +38,7 @@ object Descriptors {
       namespacePrefix: String): DataFrame = {
     val d = dim
       .select(col(dimCode).as("__graft_code"), col(dimValue).as("__graft_value"))
+      .coalesce(1)
       .dropDuplicates("__graft_code")
     df.join(broadcast(d), df(codeCol) === col("__graft_code"), "left")
       .withColumn(outCol, uriOrPassthrough(col("__graft_value"), df(codeCol), namespacePrefix))

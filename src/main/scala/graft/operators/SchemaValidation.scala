@@ -45,10 +45,8 @@ object SchemaValidation {
   /** Adds `errors` (array of violation tags, rule order) and `is_valid`. */
   def validate(df: DataFrame, rules: Seq[FieldRule]): DataFrame = {
     require(rules.nonEmpty, "at least one rule")
-    val checks = rules.flatMap(ruleChecks)
-    df.withColumn("errors",
-        filter(array(checks: _*), e => e.isNotNull))
-      .withColumn("is_valid", size(col("errors")) === 0)
+    val errors = filter(array(rules.flatMap(ruleChecks): _*), e => e.isNotNull)
+    df.withColumns(Map("errors" -> errors, "is_valid" -> (size(errors) === 0)))
   }
 
   /** Valid / quarantine split of a [[validate]]d frame. One pass each —
@@ -61,10 +59,8 @@ object SchemaValidation {
   /** Best-effort type coercion: `try_cast` each listed column to its
     * target type — unparseable values become nulls for [[validate]]'s
     * `required` check to catch, instead of killing the job mid-scan (the
-    * ANSI-cast failure mode).
+    * ANSI-cast failure mode). One projection, however many columns.
     */
   def coerce(df: DataFrame, types: Map[String, String]): DataFrame =
-    types.foldLeft(df) { case (d, (c, t)) =>
-      d.withColumn(c, col(c).try_cast(t))
-    }
+    df.withColumns(types.map { case (c, t) => c -> col(c).try_cast(t) })
 }

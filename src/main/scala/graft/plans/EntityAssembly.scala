@@ -28,16 +28,19 @@ import graft.operators.{Descriptors, SyncDiff}
   *   - sync diff          = assembled keys vs the full customer snapshot
   *     → delete set (J4)
   *
-  * Scale notes: the two collect_list aggregations shuffle on
-  * (o_orderkey) then (custkey) — both high-cardinality, AQE-splittable;
-  * the nation dimension is broadcast; everything else is scan-side.
-  * Arrays are sorted so results are deterministic under any partitioning.
+  * Scale notes: the detail side has one shuffle, on the customer key. The
+  * pruned detail rows (lineitem joined to the candidates' orders) are
+  * repartitioned once on `o_custkey`, and both collect aggregations (per
+  * order, then per customer) run in that one stage, because a hash
+  * partitioning on `o_custkey` already clusters every grouping that
+  * includes it; the candidate rows (one per entity) meet the rollup on
+  * the same key. The key is high-cardinality and AQE-splittable; the
+  * nation dimension is broadcast; everything else is scan-side. Arrays
+  * are sorted so results are deterministic under any partitioning.
   */
 object EntityAssembly {
 
-  /** Candidate-id slice: the configurable filter the reference keeps in
-    * teacherCandidateIds.sql (P2 equality on a segment code).
-    */
+  /** The segment code that selects the candidates ([[inSegment]]). */
   val segment = "BUILDING"
 
   /** ColumnMap for the candidate projection — exercised exactly as the
@@ -51,23 +54,26 @@ object EntityAssembly {
     "accountBalance"  -> "c_acctbal",
     "unmappedField"   -> "NO_SUCH_COLUMN"))
 
-  /** Nested periods per order: A1's dedup-merge (collect_set of the period
-    * struct), sorted for determinism.
+  /** The candidate predicate over customer rows: the configurable filter
+    * the reference keeps in teacherCandidateIds.sql (P2 equality on a
+    * segment code). An assembled frame has one entity per candidate row.
     */
-  private def orderPeriods(lineitem: DataFrame): DataFrame =
+  val inSegment: Column = col("c_mktsegment") === segment
+
+  /** Addresses (orders) with their period arrays nested, rolled up to one
+    * address array per customer behind one shuffle on `o_custkey`: each
+    * order's distinct (shipdate, returnflag) pairs are A1's dedup-merge
+    * (collect_set), the per-customer array is A2 + J5; both sorted for
+    * determinism.
+    */
+  private def customerAddresses(orders: DataFrame, lineitem: DataFrame): DataFrame =
     lineitem
-      .groupBy(col("l_orderkey"))
+      .join(orders, col("l_orderkey") === col("o_orderkey"))
+      .repartition(col("o_custkey"))
+      .groupBy(col("o_custkey"), col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"))
       .agg(sort_array(collect_set(struct(
         col("l_shipdate").cast("date").as("beginDate"),
         col("l_returnflag").as("flag")))).as("periods"))
-
-  /** Addresses (orders) with their period arrays nested, then rolled up to
-    * one address array per customer: A2 + J5.
-    */
-  private def customerAddresses(orders: DataFrame, lineitem: DataFrame): DataFrame =
-    orders
-      .join(orderPeriods(lineitem), col("o_orderkey") === col("l_orderkey"))
-      .drop("l_orderkey")
       .groupBy(col("o_custkey"))
       .agg(sort_array(collect_list(struct(
         col("o_orderkey").as("addressId"),
@@ -95,42 +101,33 @@ object EntityAssembly {
       nation: DataFrame,
       orders: DataFrame,
       lineitem: DataFrame): DataFrame = {
-    val ids = customer.filter(col("c_mktsegment") === segment)
-
-    val cand = candidateMap.project(ids)
+    val ids = customer.filter(inSegment)
 
     val resolved = Descriptors.resolve(
-      cand, nation,
+      candidateMap.project(ids), nation,
       codeCol = "nationCode", dimCode = "n_nationkey", dimValue = "n_name",
       outCol = "nationDescriptor", namespacePrefix = "uri://graft/nation#")
 
-    // Semi-join-prune the detail side to the candidate slice BEFORE the
-    // collect aggregations: only ~1/5 of customers are in the segment, and
-    // Catalyst cannot push the final join below the two groupBys on its
-    // own. Without this the period/address rollups aggregate the ENTIRE
-    // fact table and the join then discards 80% of that work — the exact
-    // shape that stops scaling at 100 TB. AQE turns both semi joins into
-    // broadcasts when the slices are small; the groupBys reuse the join
-    // keys' hash partitioning, so no extra exchange appears.
+    // Semi-join-prune the orders to the candidate slice BEFORE the collect
+    // aggregations: only ~1/5 of customers are in the segment, and Catalyst
+    // cannot push the final join below the groupBys on its own. Without
+    // this the rollups aggregate the ENTIRE fact table and the join then
+    // discards 80% of that work — the exact shape that stops scaling at
+    // 100 TB. The inner join to lineitem then prunes the detail side to
+    // the surviving orders; both small slices are broadcast.
     val ordersSlice = orders.join(
       ids.select(col("c_custkey")), orders("o_custkey") === col("c_custkey"),
       "left_semi")
-    val lineitemSlice = lineitem.join(
-      ordersSlice.select(col("o_orderkey")),
-      lineitem("l_orderkey") === ordersSlice("o_orderkey"), "left_semi")
 
-    val addrs = customerAddresses(ordersSlice, lineitemSlice)
+    val addrs = customerAddresses(ordersSlice, lineitem)
 
     resolved
       .join(addrs, resolved("studentUniqueId") === addrs("o_custkey"), "left")
-      .drop("o_custkey")
-      .withColumn("addresses", coalesce(col("addresses"), array()))
-      .withColumn("studentReference",
-        struct(col("studentUniqueId"), col("fullName")))
       .select(
         col("studentUniqueId"), col("fullName"), col("segment"),
         col("nationDescriptor"), col("accountBalance"), col("unmappedField"),
-        col("studentReference"), col("addresses"))
+        struct(col("studentUniqueId"), col("fullName")).as("studentReference"),
+        coalesce(col("addresses"), array()).as("addresses"))
   }
 
   /** Entities rendered as the sink payload (reference: Gson POJO → JSON,

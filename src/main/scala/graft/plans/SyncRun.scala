@@ -2,37 +2,45 @@ package graft.plans
 
 import java.time.Instant
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, concat_ws, count, lit}
 
 import graft.RunScope
-import graft.RunScope.Pinning
 import graft.operators.{ConnectedComponents, EntityResolution, SchemaValidation, SyncDiff}
 import graft.sources.{FileSinks, Http, RestSink}
+import graft.sources.RestSink.SinkReport
 
 /** The reference's top-level sync lifecycle (SisConnectorApp →
   * SisConnectorService.handleRequest, SURVEY.md §3.1) as one composed,
-  * re-runnable operation:
+  * re-runnable operation. One stage list serves the batch run ([[run]])
+  * and the change path ([[graft.streaming.IncrementalSync.applyBatch]]):
   *
-  *   1. coerce + validate the raw source rows; quarantine violations
-  *      (the auditable form of the reference's log-and-continue at
-  *      SisConnectorService.java:147-158 — bad rows there fail their POST
-  *      one at a time and vanish into the log; here they land in a
-  *      machine-readable quarantine frame with per-row reasons, counted
-  *      in the run report);
-  *   2. assemble source entities from the VALID rows (the §3.2 pipeline,
-  *      one Spark plan);
-  *   3. diff against the target snapshot (anti-join — J4). Quarantined
-  *      keys are withheld from the delete set: a row failing validation
-  *      means "don't touch it this run", not "remove it from the target";
-  *   4. upsert every source entity, delete the orphans (distributed,
-  *      idempotent sinks);
-  *   5. render the run report from sink counters (S11/A5) + quarantine
-  *      count.
+  *   1. validate: coerce + validate the raw source rows; quarantine
+  *      violations (the auditable form of the reference's
+  *      log-and-continue at SisConnectorService.java:147-158 — bad rows
+  *      there fail their POST one at a time and vanish into the log; here
+  *      they land in a machine-readable quarantine frame with per-row
+  *      reasons, counted in the run report);
+  *   2. resolve (optional): collapse variant records of one entity;
+  *   3. assemble the entities from the VALID rows (the §3.2 pipeline, one
+  *      Spark plan) and draw the delete set ([[Diff]]): the batch run
+  *      diffs the target snapshot against the wave's candidate and
+  *      quarantined keys (a quarantined row means "don't touch it this
+  *      run", not "remove it from the target"); the change path deletes
+  *      the valid rows that left the segment;
+  *   4. sink: upsert every entity and delete the orphans (distributed,
+  *      idempotent sinks). The upsert is submitted first; the delete and
+  *      the run's side actions (the quarantine write, [[graft.SyncApp]]'s
+  *      CSV dumps) run at the same time on one small per-run pool. The
+  *      upsert and delete key sets are disjoint, so the sinks never race;
+  *   5. report from the sink counters (S11/A5) and the quarantine count,
+  *      which the quarantine write observes as it writes (an
+  *      `Observation`), so no extra job counts it.
   *
-  * Re-running after source changes gives the reference's incremental-sync
-  * behavior: upserts converge (POST-as-upsert), deletes are 404-tolerant.
-  * Wall-clock timestamps are injected so runs are reproducible in tests.
+  * Stages 1–3 only build plans; stage 4 runs them. Re-running after source
+  * changes gives the reference's incremental-sync behavior: upserts
+  * converge (POST-as-upsert), deletes are 404-tolerant. Wall-clock
+  * timestamps are injected so runs are reproducible in tests.
   */
 object SyncRun {
 
@@ -120,10 +128,7 @@ object SyncRun {
       customer, "c_custkey", cfg.nameCol, cfg.nameWeights, cfg.fieldWeights,
       cfg.maxNameDist, cfg.minScore, cfg.blockCol)
       .select(col("id_a"), col("id_b"))
-    ConnectedComponents
-      .representativesByScore(customer, "c_custkey", pairs, col("c_acctbal"))
-      .withColumn("c_custkey", col("cluster_id"))
-      .drop("cluster_id")
+    representatives(customer, pairs)
   }
 
   /** [[resolveRepresentatives]] with EM-FITTED weights — the same
@@ -138,12 +143,111 @@ object SyncRun {
       cfg.maxNameDist, cfg.minPosterior, cfg.iterations, blockCol = cfg.blockCol)
     // representativesByScore clusters eagerly (alternating star), so the
     // pair pin frees as soon as it returns
+    representatives(customer, pairs)
+  }
+
+  /** Each cluster's richest row by `c_acctbal`, keyed by the cluster id. */
+  private def representatives(customer: DataFrame, pairs: DataFrame): DataFrame =
     ConnectedComponents
       .representativesByScore(customer, "c_custkey", pairs, col("c_acctbal"))
       .withColumn("c_custkey", col("cluster_id"))
       .drop("cluster_id")
+
+  /** How a wave's delete set is drawn (stage 3). */
+  private[graft] sealed trait Diff
+
+  /** The batch run: every target key that the wave neither assembles nor
+    * quarantines, i.e. `target ⟕̸ (candidate keys ∪ quarantined keys)`. The
+    * candidate keys stand in for the assembled ones because the assembly
+    * is 1:1 with its candidates: left joins onto a deduplicated dimension
+    * and onto a per-key rollup.
+    */
+  private[graft] final case class TargetDiff(target: DataFrame) extends Diff
+
+  /** The change path: the keys of the wave's valid rows that left the
+    * segment (the incremental form of the anti-diff).
+    */
+  private[graft] case object LeftSegment extends Diff
+
+  /** A planned wave: entities to upsert, keys to delete, rows quarantined. */
+  private[graft] final case class Wave(
+      upserts: DataFrame, deletes: DataFrame, quarantine: DataFrame)
+
+  /** What the sinks did; `errors` has one line per sink that failed or
+    * had rows refused.
+    */
+  private[graft] final case class Sunk(upsert: SinkReport, delete: SinkReport, errors: Seq[String])
+
+  /** Stages 1–3 for a wave of raw customer rows: validate (quarantining
+    * violations), optionally resolve identities among the valid rows,
+    * assemble the entities, and draw the delete set by `diff`. Builds
+    * plans only; it runs no Spark job unless `resolution` clusters.
+    */
+  private[graft] def plan(
+      rows: DataFrame,
+      table: String => DataFrame,
+      diff: Diff,
+      resolution: Option[IdentityResolution] = None): Wave = {
+    val validated = SchemaValidation.validate(
+      SchemaValidation.coerce(rows, customerCoercions), customerRules)
+    val (validRows, quarantine) = SchemaValidation.split(validated)
+    // only clean rows vote on entity identity; everything downstream sees
+    // one canonical row per entity under the entity key
+    val valid = resolution match {
+      case Some(cfg: ResolutionConfig)   => resolveRepresentatives(validRows, cfg)
+      case Some(cfg: EmResolutionConfig) => resolveRepresentativesEm(validRows, cfg)
+      case None                          => validRows
+    }
+    val upserts = EntityAssembly.toJsonPayload(EntityAssembly.assembleFrom(
+      valid, table("nation"), table("orders"), table("lineitem")))
+    def keys(df: DataFrame) = df.select(col("c_custkey").as("studentUniqueId"))
+    val deletes = diff match {
+      case TargetDiff(target) =>
+        // a quarantined row is "skip this run", never an implicit delete of
+        // its target twin; without resolution, one scan yields both sets
+        val withheld =
+          if (resolution.isEmpty) validated.filter(!col("is_valid") || EntityAssembly.inSegment)
+          else valid.filter(EntityAssembly.inSegment).select("c_custkey")
+            .union(quarantine.select("c_custkey"))
+        SyncDiff.plan(keys(withheld), keys(target), Seq("studentUniqueId")).deletes
+      case LeftSegment => keys(valid.filter(!EntityAssembly.inSegment)).distinct()
+    }
+    Wave(upserts, deletes, quarantine)
   }
 
+  /** Stage 4: the upsert, the delete and the `side` actions run at the
+    * same time ([[graft.RunPool.runAll]]), the upsert submitted first.
+    * Upsert and delete keys are disjoint by construction, so the two sinks
+    * never race on a key. A sink failure, or a sink's refused rows,
+    * becomes an error line and never stops the other sink; a side
+    * action's failure is rethrown once every action has finished.
+    */
+  private[graft] def sink(
+      wave: Wave,
+      transport: Http.Transport,
+      tokens: Http.TokenSource,
+      entityPath: String,
+      side: Seq[() => Unit] = Nil): Sunk = {
+    def attempt(name: String)(write: => SinkReport) =
+      try {
+        val r = write
+        (r, Option.when(r.failed > 0)(
+          s"$name: ${r.failed} of ${r.attempted} refused: ${r.errors.mkString("; ")}"))
+      } catch { case e: Exception => (SinkReport(0, 0), Some(s"$name: ${e.getMessage}")) }
+    var up, del = (SinkReport(0, 0), Option.empty[String])
+    graft.RunPool.runAll(
+      (() => up = attempt("upsert")(
+        RestSink.upsert(wave.upserts, transport, tokens, entityPath))) +:
+      (() => del = attempt("delete")(
+        RestSink.delete(wave.deletes, "studentUniqueId", transport, tokens, entityPath))) +: side)
+    Sunk(up._1, del._1, Seq(up._2, del._2).flatten)
+  }
+
+  /** The batch lifecycle over `sfDir` (or `customerOverride`). Frames in
+    * `loaded` (table name → frame, e.g. the views [[graft.SyncApp]] made)
+    * are used instead of loading those tables again; `alongside` actions
+    * (e.g. registry CSV dumps) run next to the sinks.
+    */
   def run(
       spark: SparkSession,
       sfDir: String,
@@ -154,70 +258,32 @@ object SyncRun {
       quarantineDir: Option[String] = None,
       customerOverride: Option[DataFrame] = None,
       resolution: Option[IdentityResolution] = None,
-      now: () => Instant = () => Instant.now()): Result = RunScope.scope("SyncRun.run") {
+      now: () => Instant = () => Instant.now(),
+      loaded: Map[String, DataFrame] = Map.empty,
+      alongside: Seq[() => Unit] = Nil): Result = RunScope.scope("SyncRun.run") {
     val started = now()
+    def table(t: String) = loaded.getOrElse(t, graft.Tables.load(spark, sfDir, t))
+    val customer = table("customer")
+    val wave = plan(customerOverride.getOrElse(customer), table, TargetDiff(customer), resolution)
 
-    val rawCustomer = customerOverride.getOrElse(
-      graft.Tables.load(spark, sfDir, "customer"))
-    val validated = SchemaValidation.validate(
-      SchemaValidation.coerce(rawCustomer, customerCoercions), customerRules)
-    val (validRows, quarantine0) = SchemaValidation.split(validated)
-    // optional identity resolution BETWEEN validation and assembly: only
-    // clean rows vote on entity identity, and everything downstream
-    // (assembly, diff, sinks, report) is unchanged — it just sees one
-    // canonical row per entity under the entity key
-    val validCustomer = resolution match {
-      case Some(cfg: ResolutionConfig)   => resolveRepresentatives(validRows, cfg)
-      case Some(cfg: EmResolutionConfig) => resolveRepresentativesEm(validRows, cfg)
-      case None                          => validRows
+    // the quarantine is counted by the job that writes it: one Observation
+    // per run, read only once the write has returned, because `get` on a
+    // failed write would wait forever. With nowhere to write, a count.
+    var quarantined = 0L
+    val rows = Observation()
+    val quarantine = () => quarantineDir match {
+      case None => quarantined = wave.quarantine.count()
+      case Some(d) =>
+        wave.quarantine.observe(rows, count(lit(1)).as("n"))
+          .withColumn("errors", concat_ws(",", col("errors"))).write.mode("overwrite").json(d)
+        quarantined = rows.get("n").asInstanceOf[Long]
     }
-    // the quarantine frame is consumed three times (sink, count, delete
-    // withholding) — materialize the (small) slice once instead of
-    // re-scanning + re-validating the raw source per consumer
-    val quarantine = quarantine0.pin()
-    quarantineDir.foreach(d =>
-      quarantine.withColumn("errors", org.apache.spark.sql.functions
-        .concat_ws(",", col("errors")))
-        .write.mode("overwrite").json(d))
-    val nQuarantined = quarantine.count()
+    val done = sink(wave, transport, tokens, entityPath, quarantine +: alongside)
 
-    val source = EntityAssembly.toJsonPayload(EntityAssembly.assembleFrom(
-      validCustomer,
-      graft.Tables.load(spark, sfDir, "nation"),
-      graft.Tables.load(spark, sfDir, "orders"),
-      graft.Tables.load(spark, sfDir, "lineitem")))
-
-    // deletes = target − (assembled ∪ quarantined): a quarantined row is
-    // "skip this run", never an implicit delete of its target twin
-    val withheld = source.select("studentUniqueId").union(
-      quarantine.select(col("c_custkey").cast("bigint").as("studentUniqueId"))
-        .filter(col("studentUniqueId").isNotNull))
-    val plan = SyncDiff.plan(
-      source = withheld,
-      target = graft.Tables.load(spark, sfDir, "customer")
-        .select(col("c_custkey").as("studentUniqueId")),
-      keyCols = Seq("studentUniqueId"))
-
-    // a sink failure must still produce a report (S11 contract: counts +
-    // errors), not abort the run silently
-    val (up, upErr) =
-      try (RestSink.upsert(source, transport, tokens, entityPath), None)
-      catch { case e: Exception => (RestSink.SinkReport(0, 0), Some(s"upsert: ${e.getMessage}")) }
-    val (del, delErr) =
-      try (RestSink.delete(plan.deletes, "studentUniqueId", transport, tokens, entityPath), None)
-      catch { case e: Exception => (RestSink.SinkReport(0, 0), Some(s"delete: ${e.getMessage}")) }
-
-
-    val finished = now()
-    val report = FileSinks.RunReport(
-      startedAt = started.toString,
-      finishedAt = finished.toString,
-      upsertCount = up.succeeded,
-      deleteCount = del.succeeded,
-      errors = Seq(upErr, delErr).flatten,
-      quarantineCount = nQuarantined)
+    val report = FileSinks.RunReport(started.toString, now().toString,
+      done.upsert.succeeded, done.delete.succeeded, done.errors, quarantined)
     val reportPath = reportDir.map(d =>
       FileSinks.writeReport(report, d, started.toString.replaceAll("[:.]", "-")))
-    Result(up.succeeded, del.succeeded, nQuarantined, report, reportPath)
+    Result(done.upsert.succeeded, done.delete.succeeded, quarantined, report, reportPath)
   }
 }

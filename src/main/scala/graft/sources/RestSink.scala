@@ -1,8 +1,9 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, struct, to_json}
-import org.apache.spark.util.LongAccumulator
 
 import Http._
 
@@ -16,11 +17,23 @@ import Http._
   * throughput scales with executors instead of being a driver loop.
   * Idempotency makes task retries safe: Ed-Fi POST is upsert-by-natural-key
   * (re-POST converges), and DELETE treats 404 as success (already gone —
-  * exactly what a retried delete sees).
+  * exactly what a retried delete sees). A refused record does not stop
+  * the sink: it is counted, its partition goes on, and the report says how
+  * many rows were accepted and how many were refused.
   */
 object RestSink {
 
-  final case class SinkReport(attempted: Long, succeeded: Long)
+  /** What a sink did: rows it attempted, rows the server accepted, rows it
+    * refused, and the first few refusals (`"<METHOD> <path>: HTTP <status>"`).
+    */
+  final case class SinkReport(
+      attempted: Long,
+      succeeded: Long,
+      failed: Long = 0L,
+      errors: Seq[String] = Nil)
+
+  /** Refusals kept per sink call (and per partition) in [[SinkReport.errors]]. */
+  val MaxErrors = 5
 
   /** POST every row of `df` as a JSON document to `path`. Returns counts
     * from accumulators (the run-report plumbing, S11/A5).
@@ -29,22 +42,9 @@ object RestSink {
       df: DataFrame,
       transport: Transport,
       tokens: TokenSource,
-      path: String): SinkReport = {
-    val spark = df.sparkSession
-    val attempted = spark.sparkContext.longAccumulator("graft.upsert.attempted")
-    val succeeded = spark.sparkContext.longAccumulator("graft.upsert.succeeded")
-    val payloads = df.select(to_json(struct(df.columns.map(col): _*)).as("json"))
-    payloads.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      val authed = new Authed(transport, tokens)
-      it.foreach { row =>
-        attempted.add(1)
-        val resp = authed.call(Request("POST", path, body = row.getString(0)))
-        if (resp.status / 100 == 2) succeeded.add(1)
-        else throw new RuntimeException(s"POST $path failed: HTTP ${resp.status}")
-      }
-    }
-    SinkReport(attempted.value, succeeded.value)
-  }
+      path: String): SinkReport =
+    send(df.select(to_json(struct(df.columns.map(col): _*))), "upsert", transport, tokens,
+      body => Request("POST", path, body = body), _ / 100 == 2)
 
   /** DELETE each id in `df(idCol)`; 404 counts as success (idempotent
     * delete under task retry — the reference's delete-after-reauth path
@@ -55,19 +55,43 @@ object RestSink {
       idCol: String,
       transport: Transport,
       tokens: TokenSource,
-      path: String): SinkReport = {
-    val spark = df.sparkSession
-    val attempted = spark.sparkContext.longAccumulator("graft.delete.attempted")
-    val succeeded = spark.sparkContext.longAccumulator("graft.delete.succeeded")
-    df.select(col(idCol).cast("string")).foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+      path: String): SinkReport =
+    send(df.select(col(idCol).cast("string")), "delete", transport, tokens,
+      id => Request("DELETE", s"$path/$id"), status => status / 100 == 2 || status == 404)
+
+  /** One request per row of the single string column of `df`. A refused
+    * row is counted and logged, and the partition keeps going, as the
+    * reference logs a failed record and moves on: one bad record never
+    * hides how many others the server accepted.
+    */
+  private def send(
+      df: DataFrame,
+      name: String,
+      transport: Transport,
+      tokens: TokenSource,
+      request: String => Request,
+      accepted: Int => Boolean): SinkReport = {
+    val sc = df.sparkSession.sparkContext
+    val attempted = sc.longAccumulator(s"graft.$name.attempted")
+    val succeeded = sc.longAccumulator(s"graft.$name.succeeded")
+    val failed = sc.longAccumulator(s"graft.$name.failed")
+    val errors = sc.collectionAccumulator[String](s"graft.$name.errors")
+    df.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       val authed = new Authed(transport, tokens)
+      var refused = 0
       it.foreach { row =>
         attempted.add(1)
-        val resp = authed.call(Request("DELETE", s"$path/${row.getString(0)}"))
-        if (resp.status / 100 == 2 || resp.status == 404) succeeded.add(1)
-        else throw new RuntimeException(s"DELETE failed: HTTP ${resp.status}")
+        val req = request(row.getString(0))
+        val status = authed.call(req).status
+        if (accepted(status)) succeeded.add(1)
+        else {
+          if (refused < MaxErrors) errors.add(s"${req.method} ${req.path}: HTTP $status")
+          refused += 1
+          failed.add(1)
+        }
       }
     }
-    SinkReport(attempted.value, succeeded.value)
+    SinkReport(attempted.value, succeeded.value, failed.value,
+      errors.value.asScala.take(MaxErrors).toSeq)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.{RunScope, Tables}
+import graft.{RunPool, RunScope, Tables}
 import graft.RunScope.Pinning
 import graft.functions.TextAnalysis
 
@@ -334,32 +334,25 @@ object CorpusStream {
   private[streaming] def writeShardFiles(
       docs: DataFrame, shards: Int, dir: String): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(shards, 4))
-    try {
-      val staged = (0 until shards).map { i =>
-        pool.submit(new java.util.concurrent.Callable[java.nio.file.Path] {
-          override def call(): java.nio.file.Path = {
-            val tmp = s"$dir/.stage-$i"
-            docs.where(pmod(col("doc_id"), lit(shards)) === i)
-              .coalesce(1).write.mode("overwrite").parquet(tmp)
-            val parts = listDir(Paths.get(tmp))
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-            require(parts.length == 1,
-              s"shard $i wrote ${parts.length} part files, expected 1")
-            parts.head
-          }
-        })
-      }
-      val base = System.currentTimeMillis()
-      staged.zipWithIndex.foreach { case (fut, i) =>
-        val part = fut.get()
-        val dest = Paths.get(dir, f"shard-$i%05d.parquet")
-        Files.move(part, dest, StandardCopyOption.ATOMIC_MOVE)
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
-        deleteRecursively(Paths.get(s"$dir/.stage-$i"))
-      }
-    } finally pool.shutdown()
+    val staged = new Array[java.nio.file.Path](shards)
+    RunPool.runAll((0 until shards).map(i => () => {
+      val tmp = s"$dir/.stage-$i"
+      docs.where(pmod(col("doc_id"), lit(shards)) === i)
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      val parts = listDir(Paths.get(tmp))
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+      require(parts.length == 1,
+        s"shard $i wrote ${parts.length} part files, expected 1")
+      staged(i) = parts.head
+    }))
+    val base = System.currentTimeMillis()
+    staged.zipWithIndex.foreach { case (part, i) =>
+      val dest = Paths.get(dir, f"shard-$i%05d.parquet")
+      Files.move(part, dest, StandardCopyOption.ATOMIC_MOVE)
+      Files.setLastModifiedTime(dest,
+        java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
+      deleteRecursively(Paths.get(s"$dir/.stage-$i"))
+    }
   }
 
   private def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] = {

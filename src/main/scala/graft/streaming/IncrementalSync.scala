@@ -1,13 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Tables
-import graft.operators.SchemaValidation
-import graft.plans.{EntityAssembly, SyncRun}
-import graft.sources.{Http, RestSink}
+import graft.operators.Dedup
+import graft.plans.SyncRun
+import graft.sources.Http
 
 /** Continuous form of [[graft.plans.SyncRun]]: a STREAM of changed source
   * rows drives per-micro-batch incremental sync — the streaming twin of
@@ -36,9 +35,11 @@ object IncrementalSync {
   final case class BatchCounts(upserts: Long, deletes: Long)
 
   /** Apply one change-batch of customer rows. Exposed for testing and for
-    * callers with their own streaming driver.
+    * callers with their own streaming driver. It runs [[SyncRun]]'s stage
+    * list with the [[SyncRun.LeftSegment]] diff, so the upsert and the
+    * delete run at the same time.
     *
-    * Two invariants the naive "assemble the batch, delete the rest" form
+    * Three invariants the naive "assemble the batch, delete the rest" form
     * violates:
     *   - ONE FINAL STATE PER KEY: several changes to one key can land in a
     *     single micro-batch (a restart folds pending waves into one
@@ -51,11 +52,11 @@ object IncrementalSync {
     *     coercions and rules; an invalid row is neither upserted nor
     *     deleted this batch, as [[SyncRun.run]] withholds quarantined
     *     keys.
-    *   - CHANGE-SET-BOUND WORK: [[EntityAssembly.assembleFrom]]
-    *     semi-join-prunes the detail tables to the batch's keys (orders on
-    *     custkey, then lineitem on the surviving orderkeys) BEFORE the two
-    *     collect aggregations, so a 1-row change batch aggregates a
-    *     handful of detail rows, not the corpus.
+    *   - CHANGE-SET-BOUND WORK: [[graft.plans.EntityAssembly.assembleFrom]]
+    *     prunes the detail tables to the batch's keys (orders semi-joined
+    *     on custkey, then lineitem joined to the surviving orders) BEFORE
+    *     the two collect aggregations, so a 1-row change batch aggregates
+    *     a handful of detail rows, not the corpus.
     */
   def applyBatch(
       spark: SparkSession,
@@ -65,24 +66,14 @@ object IncrementalSync {
       tokens: Http.TokenSource,
       entityPath: String,
       versionCols: Seq[String] = Seq.empty): BatchCounts = {
-    val (valid, _) = SchemaValidation.split(SchemaValidation.validate(
-      SchemaValidation.coerce(
-        graft.operators.Dedup.lastRowWinsTotal(batch, Seq("c_custkey"), versionCols),
-        SyncRun.customerCoercions),
-      SyncRun.customerRules))
-    val entities = EntityAssembly.toJsonPayload(
-      EntityAssembly.assembleFrom(
-        valid,
-        Tables.load(spark, sfDir, "nation"),
-        Tables.load(spark, sfDir, "orders"),
-        Tables.load(spark, sfDir, "lineitem")))
-    val up = RestSink.upsert(entities, transport, tokens, entityPath)
-    val gone = valid
-      .filter(col("c_mktsegment") =!= EntityAssembly.segment)
-      .select(col("c_custkey").as("studentUniqueId"))
-      .distinct()
-    val del = RestSink.delete(gone, "studentUniqueId", transport, tokens, entityPath)
-    BatchCounts(up.succeeded, del.succeeded)
+    val wave = SyncRun.plan(
+      Dedup.lastRowWinsTotal(batch, Seq("c_custkey"), versionCols),
+      Tables.load(spark, sfDir, _), SyncRun.LeftSegment)
+    val done = SyncRun.sink(wave, transport, tokens, entityPath)
+    // a failed batch fails its stream, which replays it on restart; the
+    // sinks are idempotent, so the replay converges
+    if (done.errors.nonEmpty) throw new RuntimeException(done.errors.mkString("; "))
+    BatchCounts(done.upsert.succeeded, done.delete.succeeded)
   }
 
   /** Run the change stream from a parquet directory (file source) until

@@ -117,15 +117,23 @@ class RunScopeSpec extends SparkSpec {
   }
 
   test("SyncRun.run that throws on its quarantine write leaves no pins") {
-    val file = Files.createTempFile("graft_not_a_dir", ".txt")
-    try {
-      FakeServer.reset()
-      val (out, left) = observe(plans.SyncRun.run(
-        spark, sf(), new FakeServer.Fake, new FakeServer.Tokens, "/entities",
-        quarantineDir = Some(s"$file/quarantine")))
-      assert(out.isLeft, out)
-      assert(left.isEmpty, left)
-    } finally Files.deleteIfExists(file)
+    val file = Files.createFile(Paths.get(RunScope.scratchDir("graft_not_a_dir"), "file.txt"))
+    FakeServer.reset()
+    val t0 = System.nanoTime()
+    val (out, left) = observe(plans.SyncRun.run(
+      spark, sf(), new FakeServer.Fake, new FakeServer.Tokens, "/entities",
+      quarantineDir = Some(s"$file/quarantine")))
+    val took = (System.nanoTime() - t0) / 1e9
+    assert(out.isLeft, out)
+    assert(left.isEmpty, left)
+    // it throws once its other actions have finished (the upsert is all
+    // in the store), and not much later
+    val inSegment = Tables.load(spark, sf(), "customer")
+      .filter(plans.EntityAssembly.inSegment).count()
+    assert(FakeServer.store.size() === inSegment)
+    assert(took < 120.0, s"took $took s")
+    val alive = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-run-"))
+    assert(alive.isEmpty, alive)
   }
 
   test("only RunScope.scala and bridge.scala pin, free or create a temp directory") {

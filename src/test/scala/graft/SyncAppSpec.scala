@@ -20,7 +20,7 @@ class SyncAppSpec extends SparkSpec {
       save: Boolean = true,
       dumps: Boolean = true,
       store: String = "syncapp_spec"): (SyncApp.Config, String) = {
-    val root = Files.createTempDirectory("graft_syncapp")
+    val root = Paths.get(RunScope.scratchDir("graft_syncapp"))
     val sqlDir = Files.createDirectories(root.resolve("sql"))
     val mapDir = Files.createDirectories(root.resolve("map"))
     val outDir = Files.createDirectories(root.resolve("out"))
@@ -44,7 +44,7 @@ class SyncAppSpec extends SparkSpec {
   }
 
   test("properties parse: comments/blanks skipped, missing required key fails loud") {
-    val p = Files.createTempFile("graft_props", ".properties")
+    val p = Paths.get(RunScope.scratchDir("graft_props"), "application.properties")
     Files.writeString(p, "# comment\n\nfoo=bar=baz\n! also comment\noutput.dir=/tmp/x\n")
     val cfg = SyncApp.loadProperties(p)
     assert(cfg.props("foo") === "bar=baz") // split on FIRST '='
@@ -136,6 +136,19 @@ class SyncAppSpec extends SparkSpec {
     val tablesHeld = Tables.all.count(t => Files.exists(Paths.get(Tables.path(sf(), t))))
     assert(inferenceJobs("2026-02-06T00:00:00Z") === tablesHeld)
     assert(inferenceJobs("2026-02-06T01:00:00Z") === 0)
+  }
+
+  test("job budget: a warm SyncApp.run with a CSV dump runs 13 jobs") {
+    val (cfg, _) = writeFixture(store = "syncapp_budget")
+    MemoryServer.drop("syncapp_budget")
+    val (transport, tokens) = SyncApp.wire(cfg)
+    val clone = spark.newSession()
+    def jobs(at: String): Int =
+      jobSites(clone)(SyncApp.run(clone, cfg, transport, tokens, now = () => Instant.parse(at)))
+        ._2.size
+    jobs("2026-02-07T00:00:00Z") // warm: schemas inferred once
+    // 20 before the sync stages shared one plan and overlapped their sinks
+    assert(jobs("2026-02-07T01:00:00Z") === 13)
   }
 
   test("unknown api.base.path fails loud instead of silently dropping data") {

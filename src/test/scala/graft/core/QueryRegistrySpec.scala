@@ -1,8 +1,8 @@
 package graft.core
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 
 class QueryRegistrySpec extends SparkSpec {
 
@@ -12,8 +12,8 @@ class QueryRegistrySpec extends SparkSpec {
       .toDF("pidm", "coll_code", "name")
       .createOrReplaceTempView("spriden")
 
-    val sqlDir = Files.createTempDirectory("graft_sql")
-    val mapDir = Files.createTempDirectory("graft_map")
+    val sqlDir = Paths.get(RunScope.scratchDir("graft_sql"))
+    val mapDir = Paths.get(RunScope.scratchDir("graft_map"))
     Files.writeString(
       sqlDir.resolve("candidateIds.sql"),
       "SELECT pidm, name\nFROM spriden\nWHERE coll_code = 'ED'\nORDER BY pidm")
@@ -36,7 +36,7 @@ class QueryRegistrySpec extends SparkSpec {
   test("query without a column map compiles bare") {
     import spark.implicits._
     Seq(1, 2).toDF("x").createOrReplaceTempView("t_bare")
-    val sqlDir = Files.createTempDirectory("graft_sql2")
+    val sqlDir = Paths.get(RunScope.scratchDir("graft_sql2"))
     Files.writeString(sqlDir.resolve("bare.sql"), "SELECT x FROM t_bare")
     val reg = QueryRegistry(QueryRegistry.loadSqlDir(sqlDir), Map.empty)
     assert(reg.compile(spark, "bare").count() === 2)

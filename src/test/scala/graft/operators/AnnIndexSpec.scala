@@ -2,12 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{RunScope, SparkSpec, Tables}
 
 class AnnIndexSpec extends SparkSpec {
 
   lazy val emb = Tables.load(spark, sf(), "embeddings").cache()
-  lazy val tmp = java.nio.file.Files.createTempDirectory("graft_ann_idx").toString
+  lazy val tmp = RunScope.scratchDir("graft_ann_idx")
 
   test("persisted IVF index serves bit-identical results with no re-fit") {
     AnnIndex.writeIvf(emb, "vec_id", "embedding", s"$tmp/ivf",

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 
 class DedupIndexSpec extends SparkSpec {
 
@@ -13,7 +13,7 @@ class DedupIndexSpec extends SparkSpec {
     val full = NearDup.minHashLshPairs(docs, "doc_id", "text")
       .where(col("id_b") >= 400)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val idx = Files.createTempDirectory("dedup_idx_spec").toString
+    val idx = RunScope.scratchDir("dedup_idx_spec")
     DedupIndex.write(docs.where(col("doc_id") < 400), "doc_id", "text", idx)
     val probed = DedupIndex.probe(
       spark, idx, docs.where(col("doc_id") >= 400), "doc_id", "text")
@@ -27,7 +27,7 @@ class DedupIndexSpec extends SparkSpec {
     val seed = docs.where(col("doc_id") < 400)
     val rest = docs.where(col("doc_id") >= 400)
     // fused: one hash pass seeds the index AND yields the in-batch pairs
-    val fusedIdx = Files.createTempDirectory("dedup_idx_fused").toString
+    val fusedIdx = RunScope.scratchDir("dedup_idx_fused")
     val fusedPairs = DedupIndex.writeAndPairs(seed, "doc_id", "text", fusedIdx)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // unfused reference: pairs and index built in separate passes
@@ -36,7 +36,7 @@ class DedupIndexSpec extends SparkSpec {
     assert(fusedPairs === refPairs)
     assert(fusedPairs.nonEmpty, "the seed slice must contain planted near-dups")
     // the seeded index answers probes exactly like DedupIndex.write's
-    val refIdx = Files.createTempDirectory("dedup_idx_unfused").toString
+    val refIdx = RunScope.scratchDir("dedup_idx_unfused")
     DedupIndex.write(seed, "doc_id", "text", refIdx)
     val viaFused = DedupIndex.probe(spark, fusedIdx, rest, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -50,7 +50,7 @@ class DedupIndexSpec extends SparkSpec {
     val a = Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
     val b = Seq((2L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
     val c = Seq((3L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val idx = Files.createTempDirectory("dedup_idx_append").toString
+    val idx = RunScope.scratchDir("dedup_idx_append")
     DedupIndex.write(a, "doc_id", "text", idx)
     val first = DedupIndex.probe(spark, idx, b, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 import org.apache.spark.sql.functions.col
 
 class ShardExportSpec extends SparkSpec {
@@ -52,8 +52,8 @@ class ShardExportSpec extends SparkSpec {
   }
 
   test("write is idempotent: two runs, identical members and manifests") {
-    val d1 = Files.createTempDirectory("shards1").toString
-    val d2 = Files.createTempDirectory("shards2").toString
+    val d1 = RunScope.scratchDir("shards1")
+    val d2 = RunScope.scratchDir("shards2")
     ShardExport.write(docs, "doc_id", "text", "source", 6, d1)
     ShardExport.write(docs, "doc_id", "text", "source", 6, d2)
     def members(d: String) = spark.read.parquet(s"$d/shards")
@@ -70,7 +70,7 @@ class ShardExportSpec extends SparkSpec {
   }
 
   test("append: new docs land in fresh shards, old files untouched") {
-    val d = Files.createTempDirectory("shards3").toString
+    val d = RunScope.scratchDir("shards3")
     ShardExport.write(docs, "doc_id", "text", "source", 6, d)
     def fileState(): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -109,13 +109,13 @@ class ShardExportSpec extends SparkSpec {
       .takeWhile(c => c != '\u0000' && c != ' ')
 
   test("writeTar: decodeTarMeta round-trips every shard; members exact") {
-    val out = Files.createTempDirectory("shards_tar").toString
+    val out = RunScope.scratchDir("shards_tar")
     ShardExport.writeTar(docs, "doc_id", "text", "source", budget = 6, out)
     val mani = spark.read.parquet(s"$out/_manifest")
       .orderBy("shard_id")
       .as[(Long, Long, Long, String, String)].collect().toSeq
     // manifest PARITY with the parquet writer
-    val outP = Files.createTempDirectory("shards_parq").toString
+    val outP = RunScope.scratchDir("shards_parq")
     ShardExport.write(docs, "doc_id", "text", "source", budget = 6, outP)
     val maniP = spark.read.parquet(s"$outP/_manifest")
       .orderBy("shard_id")
@@ -165,7 +165,7 @@ class ShardExportSpec extends SparkSpec {
   }
 
   test("writeTar is byte-idempotent and clears stale shard files") {
-    val out = Files.createTempDirectory("shards_tar2").toString
+    val out = RunScope.scratchDir("shards_tar2")
     ShardExport.writeTar(docs, "doc_id", "text", "source", 6, out)
     val first = java.nio.file.Paths.get(out).toFile.listFiles()
       .filter(_.getName.endsWith(".tar")).sortBy(_.getName)

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 
 /** The [[DedupIndexSpec]] invariant replayed for exact-substring:
   * probe(index, batch) ∪ duplicateWindows(index) must equal the
@@ -37,7 +37,7 @@ class SubstringIndexSpec extends SparkSpec {
     (13L, ""))
 
   test("probe + index dups == full rebuild (cross-doc)") {
-    val idx = Files.createTempDirectory("graft_ssi").toString
+    val idx = RunScope.scratchDir("graft_ssi")
     SubstringIndex.write(oldDocs.toDF("doc_id", "text"), "doc_id", "text",
       idx, L, nBuckets = 8)
     val got =
@@ -49,7 +49,7 @@ class SubstringIndexSpec extends SparkSpec {
   }
 
   test("appended index == full rebuild; matches a fresh full write") {
-    val idx = Files.createTempDirectory("graft_ssi").toString
+    val idx = RunScope.scratchDir("graft_ssi")
     SubstringIndex.write(oldDocs.toDF("doc_id", "text"), "doc_id", "text",
       idx, L, nBuckets = 8)
     SubstringIndex.appendBatch(batch.toDF("doc_id", "text"), "doc_id", "text",
@@ -57,7 +57,7 @@ class SubstringIndexSpec extends SparkSpec {
     val appended = SubstringIndex.duplicateWindows(spark, idx)
       .as[(Long, Long)].collect().toSet
     assert(appended === bruteDup(oldDocs ++ batch, crossDoc = true))
-    val full = Files.createTempDirectory("graft_ssi").toString
+    val full = RunScope.scratchDir("graft_ssi")
     SubstringIndex.write((oldDocs ++ batch).toDF("doc_id", "text"),
       "doc_id", "text", full, L, nBuckets = 8)
     assert(SubstringIndex.duplicateWindows(spark, full)
@@ -65,7 +65,7 @@ class SubstringIndexSpec extends SparkSpec {
   }
 
   test("within-doc duplicates need crossDocOnly=false") {
-    val idx = Files.createTempDirectory("graft_ssi").toString
+    val idx = RunScope.scratchDir("graft_ssi")
     SubstringIndex.write(oldDocs.toDF("doc_id", "text"), "doc_id", "text",
       idx, L, nBuckets = 8)
     // doc 12 repeats "intern" internally; cross-doc probe must NOT flag
@@ -83,7 +83,7 @@ class SubstringIndexSpec extends SparkSpec {
   }
 
   test("probe after append: invariant holds against the grown index") {
-    val idx = Files.createTempDirectory("graft_ssi").toString
+    val idx = RunScope.scratchDir("graft_ssi")
     SubstringIndex.write(oldDocs.toDF("doc_id", "text"), "doc_id", "text",
       idx, L, nBuckets = 8)
     SubstringIndex.appendBatch(batch.toDF("doc_id", "text"), "doc_id", "text",
@@ -99,7 +99,7 @@ class SubstringIndexSpec extends SparkSpec {
   }
 
   test("batch of empty/short docs probes to nothing") {
-    val idx = Files.createTempDirectory("graft_ssi").toString
+    val idx = RunScope.scratchDir("graft_ssi")
     SubstringIndex.write(oldDocs.toDF("doc_id", "text"), "doc_id", "text",
       idx, L, nBuckets = 8)
     val empties = Seq((20L, ""), (21L, null.asInstanceOf[String]), (22L, "ab"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 import graft.functions.Hashing
 
 class TextIndexSpec extends SparkSpec {
@@ -25,7 +25,7 @@ class TextIndexSpec extends SparkSpec {
       (2L, "table of things"),
       (3L, "nothing relevant here"),
       (4L, "")).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_tidx").toString
+    val idx = RunScope.scratchDir("graft_tidx")
     TextIndex.build(docs, "doc_id", "text", idx)
     val served = TextIndex.scoreFromIndex(spark, idx, Seq("data", "table", "join"))
       .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getDouble(2))).toMap

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 
 /** Pins [[UnigramTokenizer]] against a DRIVER-SIDE reference EM — an
   * independent plain-Scala implementation of the same pinned algorithm
@@ -169,7 +169,7 @@ class UnigramTokenizerSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val df = corpus.toDF("doc_id", "text")
     val pieces = UnigramTokenizer.trainPieces(df, "text", rounds = 2)
-    val dir = java.nio.file.Files.createTempDirectory("unigram_model").toString
+    val dir = RunScope.scratchDir("unigram_model")
     UnigramTokenizer.writePieces(pieces, maxPieceLen = 4, dir)
     val (loaded, p) = UnigramTokenizer.loadPieces(spark, dir)
     assert(p === 4)

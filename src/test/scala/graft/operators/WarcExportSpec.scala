@@ -6,7 +6,7 @@ import java.util.zip.GZIPInputStream
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 
 /** [[WarcExport]] — the write path round-trips through the engine's
   * own reader AND a stock gzip decoder, shards respect the record
@@ -16,7 +16,7 @@ class WarcExportSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("warc_export").toString
+    RunScope.scratchDir("warc_export")
 
   private def captures(n: Int) = {
     // payload with the full byte range via the ISO-8859-1 bridge

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{RunScope, SparkSpec, Tables}
 
 class ZOrderSpec extends SparkSpec {
 
@@ -60,7 +60,7 @@ class ZOrderSpec extends SparkSpec {
         ZOrder.cell(col("l_partkey"), pkLo, pkHi, bits),
         ZOrder.cell(col("l_quantity"), qLo, qHi, bits)),
       bits)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zspec").toString
+    val tmp = RunScope.scratchDir("graft_zspec")
     li.withColumn("zb", z).write.mode("overwrite").partitionBy("zb").parquet(tmp)
     val all = spark.read.parquet(tmp)
     val totalFiles = all.inputFiles.length

@@ -1,15 +1,51 @@
 package graft.plans
 
 import java.time.Instant
+import java.util.concurrent.ConcurrentHashMap
 
-import graft.SparkSpec
-import graft.sources.FakeServer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+import graft.{RunScope, SparkSpec, Tables}
+import graft.operators.SchemaValidation
+import graft.sources.{FakeServer, Http, RestSink}
+
+/** Transports that wrap [[FakeServer.Fake]]; state lives here so sink
+  * tasks (same JVM in local mode) and the spec see the same sets.
+  */
+object SyncRunSpec {
+  val posted = ConcurrentHashMap.newKeySet[String]()
+  val deleted = ConcurrentHashMap.newKeySet[String]()
+  private val Id = """"studentUniqueId":(-?\d+)""".r
+
+  /** Records the id of every POST and DELETE it passes on. */
+  final class Recording extends Http.Transport {
+    private val inner = new FakeServer.Fake
+    def send(req: Http.Request): Http.Response = {
+      if (req.method == "POST") Id.findFirstMatchIn(req.body).foreach(m => posted.add(m.group(1)))
+      else deleted.add(req.path.substring(req.path.lastIndexOf('/') + 1))
+      inner.send(req)
+    }
+  }
+
+  /** Answers 422 to a POST of any id in `refused`. */
+  final class Refusing(refused: Set[String]) extends Http.Transport {
+    private val inner = new FakeServer.Fake
+    def send(req: Http.Request): Http.Response =
+      if (req.method == "POST" && Id.findFirstMatchIn(req.body).exists(m => refused(m.group(1))))
+        Http.Response(422, "")
+      else inner.send(req)
+  }
+}
 
 class SyncRunSpec extends SparkSpec {
+  import SyncRunSpec._
 
   test("full sync run: upserts in-segment entities, deletes the rest, reports counts") {
     FakeServer.reset()
-    val dir = java.nio.file.Files.createTempDirectory("graft_sync_report").toString
+    val dir = RunScope.scratchDir("graft_sync_report")
     val t0 = Instant.parse("2026-01-01T00:00:00Z")
     val result = SyncRun.run(
       spark, sf(),
@@ -47,7 +83,7 @@ class SyncRunSpec extends SparkSpec {
   test("bad rows quarantine with reasons; their keys are withheld from deletes") {
     import org.apache.spark.sql.functions._
     FakeServer.reset()
-    val qdir = java.nio.file.Files.createTempDirectory("graft_quarantine").toString
+    val qdir = RunScope.scratchDir("graft_quarantine")
     val customer = graft.Tables.load(spark, sf(), "customer")
     val keyType = customer.schema("c_custkey").dataType
     // an existing OUT-of-segment key, duplicated as a broken row: its
@@ -146,5 +182,97 @@ class SyncRunSpec extends SparkSpec {
     val second = once()
     assert(first.upserts === second.upserts)
     assert(FakeServer.store.size() === first.upserts)
+  }
+
+  /** The sf0.001 customer table with `n` segment flips each way and two
+    * rows that quarantine: a null name on an out-of-segment key and a
+    * negative nation on an in-segment key.
+    */
+  private def flippedWave(n: Int): DataFrame = {
+    val customer = Tables.load(spark, sf(), "customer")
+    def keys(segment: Column) = customer.filter(segment)
+      .orderBy("c_custkey").limit(n + 1).collect().map(_.getAs[Long]("c_custkey"))
+    val (in, out) = (keys(EntityAssembly.inSegment), keys(!EntityAssembly.inSegment))
+    customer
+      .withColumn("c_mktsegment",
+        when(col("c_custkey").isin(in.take(n): _*), lit("MACHINERY"))
+          .when(col("c_custkey").isin(out.take(n): _*), lit(EntityAssembly.segment))
+          .otherwise(col("c_mktsegment")))
+      .withColumn("c_name",
+        when(col("c_custkey") === out(n), lit(null).cast("string")).otherwise(col("c_name")))
+      .withColumn("c_nationkey",
+        when(col("c_custkey") === in(n), lit(-1L)).otherwise(col("c_nationkey")))
+  }
+
+  test("upsert and delete key sets of a wave are disjoint; the store holds every upsert") {
+    FakeServer.reset(); posted.clear(); deleted.clear()
+    val result = SyncRun.run(spark, sf(), new Recording, new FakeServer.Tokens, "/entities",
+      customerOverride = Some(flippedWave(5)))
+    assert(result.quarantined === 2)
+    assert(posted.size.toLong === result.upserts && deleted.size.toLong === result.deletes)
+    assert(posted.size > 0 && deleted.size > 0)
+    assert(posted.asScala.intersect(deleted.asScala).isEmpty)
+    assert(posted.asScala.forall(FakeServer.store.containsKey))
+  }
+
+  test("the candidate-key delete set equals the assembled-key one, with and without resolution") {
+    val customer = Tables.load(spark, sf(), "customer")
+    val wave = flippedWave(5)
+    // two variants of an in-segment customer, new keys, one edit away
+    val twin = customer.filter(EntityAssembly.inSegment).orderBy("c_custkey").limit(1)
+    val variants = twin.withColumn("c_custkey", col("c_custkey") + 100000)
+      .unionByName(twin.withColumn("c_custkey", col("c_custkey") + 100001)
+        .withColumn("c_name", concat(col("c_name"), lit("x"))))
+    val resolution = SyncRun.ResolutionConfig()
+    for ((rows, res) <- Seq(wave -> None, wave.unionByName(variants) -> Some(resolution))) {
+      // the delete set as the assembled keys drew it
+      val validated = SchemaValidation.validate(
+        SchemaValidation.coerce(rows, SyncRun.customerCoercions), SyncRun.customerRules)
+      val (valid0, quarantine) = SchemaValidation.split(validated)
+      val valid = res.fold(valid0)(SyncRun.resolveRepresentatives(valid0, _))
+      val withheld = EntityAssembly.assembleFrom(valid, Tables.load(spark, sf(), "nation"),
+          Tables.load(spark, sf(), "orders"), Tables.load(spark, sf(), "lineitem"))
+        .select("studentUniqueId")
+        .union(quarantine.select(col("c_custkey").as("studentUniqueId")))
+      val assembledKeys = customer.select(col("c_custkey").as("studentUniqueId"))
+        .join(withheld, Seq("studentUniqueId"), "left_anti")
+      val candidateKeys = SyncRun.plan(rows, Tables.load(spark, sf(), _),
+        SyncRun.TargetDiff(customer), res).deletes
+      def set(df: DataFrame) = df.collect().map(_.getLong(0)).toSet
+      assert(set(candidateKeys) === set(assembledKeys), s"resolution $res")
+    }
+  }
+
+  test("refused rows are counted, not thrown: the report's upserts equal the server's bodies") {
+    FakeServer.reset()
+    val inSegment = Tables.load(spark, sf(), "customer").filter(EntityAssembly.inSegment)
+    val refused = inSegment.orderBy("c_custkey").limit(7)
+      .collect().map(_.getAs[Long]("c_custkey").toString).toSet
+    val result = SyncRun.run(spark, sf(), new Refusing(refused), new FakeServer.Tokens,
+      "/entities")
+    val n = inSegment.count()
+    assert(result.report.upsertCount === FakeServer.store.size())
+    assert(result.upserts === n - refused.size)
+    assert(result.report.errors.exists(_.startsWith(s"upsert: ${refused.size} of $n refused")),
+      result.report.errors)
+    assert(!result.report.errors.exists(_.startsWith("delete:")), result.report.errors)
+    // the sink itself reports the refused count and the first few refusals
+    FakeServer.reset()
+    val sunk = RestSink.upsert(EntityAssembly.toJsonPayload(EntityAssembly.assemble(spark, sf())),
+      new Refusing(refused), new FakeServer.Tokens, "/entities")
+    assert(sunk.failed === refused.size && sunk.succeeded === n - refused.size)
+    assert(sunk.errors.size === RestSink.MaxErrors && sunk.errors.forall(_.endsWith("HTTP 422")))
+  }
+
+  test("the quarantine count is the same whether the write observes it or a count does") {
+    val wave = flippedWave(3)
+    def quarantined(dir: Option[String]) = {
+      FakeServer.reset()
+      SyncRun.run(spark, sf(), new FakeServer.Fake, new FakeServer.Tokens, "/entities",
+        quarantineDir = dir, customerOverride = Some(wave)).quarantined
+    }
+    val observed = quarantined(Some(RunScope.scratchDir("graft_quarantine_observed")))
+    assert(observed === 2)
+    assert(quarantined(None) === observed)
   }
 }

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 import graft.operators.SyncDiff
 import Http._
 
@@ -199,5 +199,5 @@ class ConnectorSpec extends SparkSpec {
 
 object Files {
   def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    RunScope.scratchDir(prefix)
 }

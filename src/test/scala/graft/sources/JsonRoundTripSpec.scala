@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 
 class JsonRoundTripSpec extends SparkSpec {
 
@@ -16,7 +16,7 @@ class JsonRoundTripSpec extends SparkSpec {
     val df = Seq(
       (1L, Some("a"), Seq(1, 2)),
       (2L, None, Seq.empty[Int])).toDF("id", "tag", "xs")
-    val tmp = Files.createTempDirectory("graft_json_spec").toString
+    val tmp = RunScope.scratchDir("graft_json_spec")
     df.coalesce(1).write.mode("overwrite").json(tmp)
 
     // the writer drops the null field from the line entirely
@@ -40,7 +40,7 @@ class JsonRoundTripSpec extends SparkSpec {
     import spark2.implicits._
     val df = Seq(("1995-03-17 12:34:56.789", 1L)).toDF("s", "id")
       .select(to_timestamp($"s").as("ts"), $"id")
-    val tmp = Files.createTempDirectory("graft_json_ts").toString
+    val tmp = RunScope.scratchDir("graft_json_ts")
     df.write.mode("overwrite").json(tmp)
     val back = spark.read.schema(df.schema).json(tmp)
     assert(back.head().getTimestamp(0) === df.head().getTimestamp(0))

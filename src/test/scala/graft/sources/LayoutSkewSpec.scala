@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{RunScope, SparkSpec, Tables}
 import graft.operators.Skew
 
 class LayoutSkewSpec extends SparkSpec {
@@ -79,7 +79,7 @@ class LayoutSkewSpec extends SparkSpec {
   }
 
   test("zone-map manifest skipping never loses rows and strictly prunes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zm").toString
+    val dir = RunScope.scratchDir("graft_zm")
     val li = Tables.load(spark, sf(), "lineitem").select("l_orderkey", "l_quantity")
     li.repartitionByRange(8, col("l_orderkey")).write.mode("overwrite").parquet(dir)
     val mf = Layout.statsManifest(spark, dir, Seq("l_orderkey"))
@@ -99,7 +99,7 @@ class LayoutSkewSpec extends SparkSpec {
   }
 
   test("partitioned layout prunes partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = RunScope.scratchDir("graft_part")
     val li = Tables.load(spark, sf(), "lineitem")
       .withColumn("ship_year", year(col("l_shipdate")))
     Layout.writePartitioned(li, dir, Seq("ship_year"))

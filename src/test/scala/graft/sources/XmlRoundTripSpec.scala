@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 
 /** Spark 4's NATIVE XML source (the upstreamed spark-xml): the format's
   * distinct semantics vs JSON are (a) arrays become REPEATED ELEMENTS,
@@ -24,7 +24,7 @@ class XmlRoundTripSpec extends SparkSpec {
     val df = Seq(
       (1L, Some("a"), Seq(10, 20)),
       (2L, None, Seq(30))).toDF("id", "tag", "xs")
-    val tmp = Files.createTempDirectory("graft_xml_spec").toString
+    val tmp = RunScope.scratchDir("graft_xml_spec")
     df.coalesce(1).write.mode("overwrite")
       .format("xml").option("rowTag", "row").save(tmp)
 
@@ -51,7 +51,7 @@ class XmlRoundTripSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val df = Seq((1L, Seq.empty[Int])).toDF("id", "xs")
-    val tmp = Files.createTempDirectory("graft_xml_empty").toString
+    val tmp = RunScope.scratchDir("graft_xml_empty")
     df.write.mode("overwrite").format("xml").option("rowTag", "row").save(tmp)
     val back = spark.read.schema(df.schema)
       .format("xml").option("rowTag", "row").load(tmp)
@@ -65,7 +65,7 @@ class XmlRoundTripSpec extends SparkSpec {
     val df = Seq(("123456.78", "1995-03-17", 1L)).toDF("d", "dt", "id")
       .select(
         $"d".cast("decimal(15,2)").as("d"), to_date($"dt").as("dt"), $"id")
-    val tmp = Files.createTempDirectory("graft_xml_num").toString
+    val tmp = RunScope.scratchDir("graft_xml_num")
     df.write.mode("overwrite").format("xml").option("rowTag", "row").save(tmp)
     val back = spark.read.schema(df.schema)
       .format("xml").option("rowTag", "row").load(tmp)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{RunScope, SparkSpec, Tables}
 
 class EventStreamsSpec extends SparkSpec {
 
@@ -218,7 +218,7 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("streaming run report: per-batch folds sum to the rendered RunReport totals") {
-    val reportDir = java.nio.file.Files.createTempDirectory("graft_report_spec").toString
+    val reportDir = RunScope.scratchDir("graft_report_spec")
     val perBatch = CorpusStream
       .ingestWithReportAvailableNow(spark, sf(), reportDir, shards = 3)
       .collect()

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{RunScope, SparkSpec, Tables}
 import graft.sources.FakeServer
 
 /** The change-stream sync against the in-memory fake server: two waves of
@@ -20,8 +20,8 @@ class IncrementalSyncSpec extends SparkSpec {
   test("incremental change-stream sync converges across waves") {
     FakeServer.reset()
     val customer = Tables.load(spark, sf(), "customer")
-    val dir = java.nio.file.Files.createTempDirectory("graft_updates").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = RunScope.scratchDir("graft_updates")
+    val ckpt = RunScope.scratchDir("graft_ckpt")
     val transport = new FakeServer.Fake
     val tokens = new FakeServer.Tokens
 
@@ -110,5 +110,18 @@ class IncrementalSyncSpec extends SparkSpec {
     IncrementalSync.applyBatch(spark, sf(), inFlip,
       new FakeServer.Fake, new FakeServer.Tokens, "/entities", versionCols = Seq("v"))
     assert(storeKeys.contains(key), "stale OTHER row must not delete the fresh upsert")
+  }
+
+  test("job budget: one warm applyBatch runs 9 jobs") {
+    val clone = spark.newSession()
+    val batch = Tables.load(clone, sf(), "customer").filter($"c_custkey" <= 40)
+    def jobs(): Int = {
+      FakeServer.reset()
+      jobSites(clone)(IncrementalSync.applyBatch(
+        clone, sf(), batch, new FakeServer.Fake, new FakeServer.Tokens, "/entities"))._2.size
+    }
+    jobs() // warm: schemas inferred once
+    // 12 before the sync stages shared one plan and overlapped their sinks
+    assert(jobs() === 9)
   }
 }

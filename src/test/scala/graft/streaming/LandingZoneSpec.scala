@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 
 /** The concurrent landing-zone shard writer (r18): per-shard files must
   * carry exactly the shard's rows, and arrival order — the contract
@@ -15,7 +15,7 @@ class LandingZoneSpec extends SparkSpec {
     import spark.implicits._
     val docs = (0L until 97L).map(i => (i, s"text-$i")).toDF("doc_id", "text")
     val shards = 3
-    val dir = java.nio.file.Files.createTempDirectory("landing_spec").toString
+    val dir = RunScope.scratchDir("landing_spec")
     CorpusStream.writeShardFiles(docs, shards, dir)
 
     val files = {

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{RunScope, SparkSpec}
 import graft.operators.WarcGz
 
 /** [[CorpusStream.warcExportAvailableNow]] — segment-per-drop warc.gz
@@ -16,7 +16,7 @@ class WarcStreamExportSpec extends SparkSpec {
   import spark.implicits._
 
   test("segments cover the corpus exactly once and round-trip") {
-    val out = Files.createTempDirectory("warc_stream").toString
+    val out = RunScope.scratchDir("warc_stream")
     val manifests = CorpusStream.warcExportAvailableNow(
       spark, sf(), out, shards = 2, budget = 200) { batch =>
       batch.select(col("doc_id"),
