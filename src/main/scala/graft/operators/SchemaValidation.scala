@@ -45,8 +45,13 @@ object SchemaValidation {
   /** Adds `errors` (array of violation tags, rule order) and `is_valid`. */
   def validate(df: DataFrame, rules: Seq[FieldRule]): DataFrame = {
     require(rules.nonEmpty, "at least one rule")
-    val errors = filter(array(rules.flatMap(ruleChecks): _*), e => e.isNotNull)
-    df.withColumns(Map("errors" -> errors, "is_valid" -> (size(errors) === 0)))
+    val checks = rules.flatMap(ruleChecks)
+    // is_valid reads the computed column: an expression with a lambda is
+    // not common-subexpression-eliminated, so inlining it would run every
+    // check twice per row
+    df.withColumn("errors",
+        filter(array(checks: _*), e => e.isNotNull))
+      .withColumn("is_valid", size(col("errors")) === 0)
   }
 
   /** Valid / quarantine split of a [[validate]]d frame. One pass each —

@@ -28,15 +28,25 @@ import graft.operators.{Descriptors, SyncDiff}
   *   - sync diff          = assembled keys vs the full customer snapshot
   *     → delete set (J4)
   *
-  * Scale notes: the detail side has one shuffle, on the customer key. The
-  * pruned detail rows (lineitem joined to the candidates' orders) are
-  * repartitioned once on `o_custkey`, and both collect aggregations (per
-  * order, then per customer) run in that one stage, because a hash
-  * partitioning on `o_custkey` already clusters every grouping that
-  * includes it; the candidate rows (one per entity) meet the rollup on
-  * the same key. The key is high-cardinality and AQE-splittable; the
-  * nation dimension is broadcast; everything else is scan-side. Arrays
-  * are sorted so results are deterministic under any partitioning.
+  * Scale notes: the pruned detail rows (lineitem joined to the
+  * candidates' orders) are repartitioned once on `o_custkey`, and both
+  * collect aggregations (per order, then per customer) run in that one
+  * stage, because a hash partitioning on `o_custkey` already clusters
+  * every grouping that includes it; the candidate rows (one per entity)
+  * meet the rollup on the same key. The key is high-cardinality and
+  * AQE-splittable; the nation dimension is broadcast. While the orders
+  * slice fits under the broadcast threshold, that repartition is the
+  * detail side's only shuffle. It trades rows for a stage: it moves
+  * lineitem-grain rows with no map-side partial aggregation, where a
+  * per-order rollup first would move per-order buffers, then per-order
+  * rows again on the customer key. At sf0.01 and sf0.1 (4 cores) it
+  * moved 3.5x the records of that plan but 0.74-0.86x the bytes
+  * (collect_set buffers are bulky) in one job fewer. Once the orders
+  * slice is too big to broadcast, the lineitem join also shuffles on
+  * the order key, so lineitem-grain rows cross the network twice; with
+  * broadcast joins disabled at sf0.1 both plans moved the same bytes
+  * within 2%. Above sf0.1 it is unmeasured. Arrays are sorted so results
+  * are deterministic under any partitioning.
   */
 object EntityAssembly {
 
@@ -114,7 +124,9 @@ object EntityAssembly {
     // this the rollups aggregate the ENTIRE fact table and the join then
     // discards 80% of that work — the exact shape that stops scaling at
     // 100 TB. The inner join to lineitem then prunes the detail side to
-    // the surviving orders; both small slices are broadcast.
+    // the surviving orders. The candidate keys and the orders slice are
+    // broadcast only while they fit under the broadcast threshold;
+    // beyond it each join shuffles both sides on its key.
     val ordersSlice = orders.join(
       ids.select(col("c_custkey")), orders("o_custkey") === col("c_custkey"),
       "left_semi")

@@ -188,9 +188,8 @@ object SyncRun {
       table: String => DataFrame,
       diff: Diff,
       resolution: Option[IdentityResolution] = None): Wave = {
-    val validated = SchemaValidation.validate(
-      SchemaValidation.coerce(rows, customerCoercions), customerRules)
-    val (validRows, quarantine) = SchemaValidation.split(validated)
+    val (validRows, quarantine) = SchemaValidation.split(SchemaValidation.validate(
+      SchemaValidation.coerce(rows, customerCoercions), customerRules))
     // only clean rows vote on entity identity; everything downstream sees
     // one canonical row per entity under the entity key
     val valid = resolution match {
@@ -204,12 +203,9 @@ object SyncRun {
     val deletes = diff match {
       case TargetDiff(target) =>
         // a quarantined row is "skip this run", never an implicit delete of
-        // its target twin; without resolution, one scan yields both sets
-        val withheld =
-          if (resolution.isEmpty) validated.filter(!col("is_valid") || EntityAssembly.inSegment)
-          else valid.filter(EntityAssembly.inSegment).select("c_custkey")
-            .union(quarantine.select("c_custkey"))
-        SyncDiff.plan(keys(withheld), keys(target), Seq("studentUniqueId")).deletes
+        // its target twin
+        val withheld = keys(valid.filter(EntityAssembly.inSegment)).union(keys(quarantine))
+        SyncDiff.plan(withheld, keys(target), Seq("studentUniqueId")).deletes
       case LeftSegment => keys(valid.filter(!EntityAssembly.inSegment)).distinct()
     }
     Wave(upserts, deletes, quarantine)
