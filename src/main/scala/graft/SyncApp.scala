@@ -120,7 +120,7 @@ object SyncApp {
         if (cfg.mapDir.isEmpty) Paths.get(cfg.sqlDir) else Paths.get(cfg.mapDir))
     val compiled = registry.compileAll(spark)
     val dumps = if (!cfg.outputDataToDir) Nil else compiled.toSeq.map { case (name, df) =>
-      () => FileSinks.csv(df, s"${cfg.outputDir}/$runDate/$runTime/$name") }
+      s"dump $name" -> (() => FileSinks.csv(df, s"${cfg.outputDir}/$runDate/$runTime/$name")) }
 
     // sync lifecycle; save=false processes everything but POSTs nowhere
     // (the reference's saveToTPDM guard wraps only the API call)

@@ -28,6 +28,9 @@ import graft.RunScope
   * restored afterwards. The job group is left alone: harnesses attribute
   * jobs by group id. The loop runs in a [[graft.RunScope]] named `name`,
   * which owns every pin made here.
+  *
+  * The fixed-round loops that read no signal ([[PageRank]],
+  * [[LabelPropagation]]) run on [[unrolled]] instead.
   */
 private[graft] object FixedPoint {
 
@@ -80,5 +83,27 @@ private[graft] object FixedPoint {
       sc.setJobDescription(s"$name result")
       finish.fold(state)(f => RunScope.pin(f(state)))
     } finally sc.setJobDescription(callerDescription)
+  }
+
+  /** The fixed-round form for loops that run a set number of rounds and
+    * read no convergence signal (PageRank, LabelPropagation): `rounds`
+    * applications of `step` from `init`, unrolled in the plan. Every
+    * 10th round's state is pinned eagerly — a per-round plan of joins and
+    * aggregates nested 50 deep stalls the analyzer — and the pin it
+    * supersedes is freed. Returns the last state, unpinned after a
+    * round that is not a multiple of 10.
+    */
+  def unrolled(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame = {
+    var state = init
+    var pinned: Option[DataFrame] = None
+    for (round <- 1 to rounds) {
+      state = step(state)
+      if (round % 10 == 0) {
+        state = RunScope.pin(state)
+        pinned.foreach(RunScope.free)
+        pinned = Some(state)
+      }
+    }
+    state
   }
 }

@@ -78,21 +78,13 @@ object LabelPropagation {
       .unionAll(canon.select(col("b").as("node"), col("a").as("nbr")))
       .pin()
 
-    var labels = und.select(col("node")).distinct()
+    val labels0 = und.select(col("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    var labelsCkpt: DataFrame = null
-    for (it <- 1 to iterations) {
-      labels = und
+    FixedPoint.unrolled(labels0, iterations) { labels =>
+      und
         .join(labels.select(col("node").as("nbr"), col("label")), "nbr")
         .groupBy(col("node"))
         .agg(majorityLabel(col("label").cast("bigint")).as("label"))
-      if (it % 10 == 0) {
-        val next = labels.pin()
-        if (labelsCkpt != null) RunScope.free(labelsCkpt)
-        labelsCkpt = next
-        labels = next
-      }
-    }
-    labels.select(col("node"), col("label").as("community")).pin()
+    }.select(col("node"), col("label").as("community")).pin()
   }
 }

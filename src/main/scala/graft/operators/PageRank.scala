@@ -68,12 +68,11 @@ object PageRank {
     val nn = nodes.agg(count(lit(1)).cast("double").as("n"))
     val (outW, trans) = transitions(e)
 
-    var rank = nodes.crossJoin(broadcast(nn))
+    val rank0 = nodes.crossJoin(broadcast(nn))
       .select(col("node"), (lit(1.0) / col("n")).as("rank"))
-    var rankCkpt: DataFrame = null
-    for (it <- 1 to iterations) {
+    val rank = FixedPoint.unrolled(rank0, iterations) { rank =>
       val (inSum, dangling) = inflow(trans, outW, rank)
-      rank = nodes
+      nodes
         .crossJoin(broadcast(nn))
         .join(inSum, Seq("node"), "left")
         .crossJoin(broadcast(dangling))
@@ -82,15 +81,6 @@ object PageRank {
           (lit(1 - damping) / col("n") +
             lit(damping) * (coalesce(col("in_sum"), lit(0.0)) + col("dm") / col("n")))
             .as("rank"))
-      // cut lineage every 10 rounds (the per-iteration plan nests two
-      // joins + an agg; 50 iterations of that is an analyzer stall) and
-      // free the superseded checkpoint so executor blocks don't pile up
-      if (it % 10 == 0) {
-        val next = rank.pin()
-        if (rankCkpt != null) RunScope.free(rankCkpt)
-        rankCkpt = next
-        rank = next
-      }
     }
     // pinned, so the edge frame and the last intermediate free on return
     rank.pin()
@@ -127,11 +117,9 @@ object PageRank {
       .otherwise(lit(0.0))
     val (outW, trans) = transitions(e)
 
-    var rank = nodes.select(col("node"), tele.as("rank"))
-    var rankCkpt: DataFrame = null
-    for (it <- 1 to iterations) {
+    FixedPoint.unrolled(nodes.select(col("node"), tele.as("rank")), iterations) { rank =>
       val (inSum, dangling) = inflow(trans, outW, rank)
-      rank = nodes
+      nodes
         .join(inSum, Seq("node"), "left")
         .crossJoin(broadcast(dangling))
         .select(
@@ -139,13 +127,6 @@ object PageRank {
           (lit(1 - damping) * tele +
             lit(damping) * (coalesce(col("in_sum"), lit(0.0)) + col("dm") * tele))
             .as("rank"))
-      if (it % 10 == 0) {
-        val next = rank.pin()
-        if (rankCkpt != null) RunScope.free(rankCkpt)
-        rankCkpt = next
-        rank = next
-      }
-    }
-    rank.pin()
+    }.pin()
   }
 }

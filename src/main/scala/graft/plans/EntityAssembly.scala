@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.core.ColumnMap
-import graft.operators.{Descriptors, SyncDiff}
+import graft.operators.Descriptors
 
 /** The flagship end-to-end pipeline: SURVEY.md §3.2's entity-assembly
   * dataflow (reference: SisConnectorService.java:142-160 and the
@@ -212,16 +212,4 @@ object EntityAssembly {
         col("segment"),
         col("nationDescriptor"),
         addressesCanonical(col("addresses")))).as("entity_md5"))
-
-  /** The sync plan for the assembled entities against the full customer
-    * snapshot (J4): customers outside the segment are the delete set.
-    */
-  def syncPlan(spark: SparkSession, sfDir: String): SyncDiff.SyncPlan = {
-    val target = Tables.load(spark, sfDir, "customer")
-      .select(col("c_custkey").as("studentUniqueId"))
-    SyncDiff.plan(
-      source = assemble(spark, sfDir).select("studentUniqueId"),
-      target = target,
-      keyCols = Seq("studentUniqueId"))
-  }
 }

@@ -223,7 +223,7 @@ object SyncRun {
       transport: Http.Transport,
       tokens: Http.TokenSource,
       entityPath: String,
-      side: Seq[() => Unit] = Nil): Sunk = {
+      side: Seq[(String, () => Unit)] = Nil): Sunk = {
     def attempt(name: String)(write: => SinkReport) =
       try {
         val r = write
@@ -231,10 +231,10 @@ object SyncRun {
           s"$name: ${r.failed} of ${r.attempted} refused: ${r.errors.mkString("; ")}"))
       } catch { case e: Exception => (SinkReport(0, 0), Some(s"$name: ${e.getMessage}")) }
     var up, del = (SinkReport(0, 0), Option.empty[String])
-    graft.RunPool.runAll(
-      (() => up = attempt("upsert")(
+    graft.RunPool.runAll(wave.upserts.sparkSession,
+      ("upsert", () => up = attempt("upsert")(
         RestSink.upsert(wave.upserts, transport, tokens, entityPath))) +:
-      (() => del = attempt("delete")(
+      ("delete", () => del = attempt("delete")(
         RestSink.delete(wave.deletes, "studentUniqueId", transport, tokens, entityPath))) +: side)
     Sunk(up._1, del._1, Seq(up._2, del._2).flatten)
   }
@@ -256,7 +256,7 @@ object SyncRun {
       resolution: Option[IdentityResolution] = None,
       now: () => Instant = () => Instant.now(),
       loaded: Map[String, DataFrame] = Map.empty,
-      alongside: Seq[() => Unit] = Nil): Result = RunScope.scope("SyncRun.run") {
+      alongside: Seq[(String, () => Unit)] = Nil): Result = RunScope.scope("SyncRun.run") {
     val started = now()
     def table(t: String) = loaded.getOrElse(t, graft.Tables.load(spark, sfDir, t))
     val customer = table("customer")
@@ -267,13 +267,13 @@ object SyncRun {
     // failed write would wait forever. With nowhere to write, a count.
     var quarantined = 0L
     val rows = Observation()
-    val quarantine = () => quarantineDir match {
+    val quarantine = "quarantine" -> (() => quarantineDir match {
       case None => quarantined = wave.quarantine.count()
       case Some(d) =>
         wave.quarantine.observe(rows, count(lit(1)).as("n"))
           .withColumn("errors", concat_ws(",", col("errors"))).write.mode("overwrite").json(d)
         quarantined = rows.get("n").asInstanceOf[Long]
-    }
+    })
     val done = sink(wave, transport, tokens, entityPath, quarantine +: alongside)
 
     val report = FileSinks.RunReport(started.toString, now().toString,

@@ -1091,7 +1091,7 @@ object GraphQueries extends QueryGroup {
   }
 
   // The multi-level driver's PRODUCT: the final per-node assignment
-  // (Louvain.multilevelAssignments) — the initial labels composed
+  // (Louvain.multilevelWithAssignments) — the initial labels composed
   // through every level's moves and contractions, i.e. what a user
   // feeds downstream after q_g19 graded the run. The oracle reuses the
   // identical two-level unroll and projects each original node through

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.{RunScope, Tables}
-import graft.plans.EntityAssembly
+import graft.plans.{EntityAssembly, SyncRun}
 import graft.RunScope.Pinning
 
 /** Flagship pipeline queries: the full SURVEY.md §3.2 entity assembly
@@ -129,13 +129,14 @@ object PipelineQueries extends QueryGroup {
       .orderBy("studentUniqueId")
   }
 
-  // Sync-diff delete set of the flagship pipeline.
+  // Sync-diff delete set of the flagship pipeline: the batch lifecycle's
+  // own delete rule (SyncRun.plan under TargetDiff).
   private val qF4 = Q(
     "q_f4_sync_deletes",
     """SELECT c_custkey AS studentUniqueId FROM customer
       |WHERE c_mktsegment <> 'BUILDING' ORDER BY studentUniqueId""".stripMargin) { (s, dir) =>
-    EntityAssembly.syncPlan(s, dir).deletes
-      .select("studentUniqueId")
+    val customer = Tables.load(s, dir, "customer")
+    SyncRun.plan(customer, Tables.load(s, dir, _), SyncRun.TargetDiff(customer)).deletes
       .orderBy("studentUniqueId")
   }
 

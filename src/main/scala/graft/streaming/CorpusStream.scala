@@ -335,7 +335,7 @@ object CorpusStream {
       docs: DataFrame, shards: Int, dir: String): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val staged = new Array[java.nio.file.Path](shards)
-    RunPool.runAll((0 until shards).map(i => () => {
+    RunPool.runAll(docs.sparkSession, (0 until shards).map(i => s"shard $i" -> (() => {
       val tmp = s"$dir/.stage-$i"
       docs.where(pmod(col("doc_id"), lit(shards)) === i)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -344,7 +344,7 @@ object CorpusStream {
       require(parts.length == 1,
         s"shard $i wrote ${parts.length} part files, expected 1")
       staged(i) = parts.head
-    }))
+    })))
     val base = System.currentTimeMillis()
     staged.zipWithIndex.foreach { case (part, i) =>
       val dest = Paths.get(dir, f"shard-$i%05d.parquet")

@@ -20,11 +20,21 @@ trait SparkSpec extends AnyFunSuite {
     * names, e.g. "parquet at Tables.scala:80") of every Spark job it
     * started.
     */
-  def jobSites[T](s: SparkSession)(body: => T): (T, List[String]) = {
+  def jobSites[T](s: SparkSession)(body: => T): (T, List[String]) =
+    jobsSeen(s)(_.stageInfos.map(_.name).distinct.mkString(" | "))(body)
+
+  /** Runs `body` and returns its result with the description of every
+    * Spark job it started (null for a job without one).
+    */
+  def jobDescriptions[T](s: SparkSession)(body: => T): (T, List[String]) =
+    jobsSeen(s)(e => Option(e.properties).map(_.getProperty("spark.job.description")).orNull)(body)
+
+  private def jobsSeen[T](s: SparkSession)(show: SparkListenerJobStart => String)(
+      body: => T): (T, List[String]) = {
     val seen = ArrayBuffer.empty[String]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
-        seen += e.stageInfos.map(_.name).distinct.mkString(" | ")
+        seen += show(e)
       }
     }
     bridge.waitUntilListenerBusEmpty(s)

@@ -151,6 +151,21 @@ class SyncAppSpec extends SparkSpec {
     assert(jobs("2026-02-07T01:00:00Z") === 13)
   }
 
+  test("every job of a warm SyncApp.run is named after its sink or side action") {
+    val (cfg, _) = writeFixture(store = "syncapp_names")
+    MemoryServer.drop("syncapp_names")
+    val (transport, tokens) = SyncApp.wire(cfg)
+    val clone = spark.newSession()
+    def descriptions(at: String): List[String] =
+      jobDescriptions(clone)(SyncApp.run(clone, cfg, transport, tokens,
+        now = () => Instant.parse(at)))._2
+    descriptions("2026-02-08T00:00:00Z") // warm: schemas inferred once
+    val names = descriptions("2026-02-08T01:00:00Z")
+    assert(names.size === 13)
+    // AQE stage jobs inherit the name from the action's thread too
+    assert(names.toSet === Set("upsert", "delete", "quarantine", "dump candidates"), names)
+  }
+
   test("unknown api.base.path fails loud instead of silently dropping data") {
     val (cfg0, _) = writeFixture()
     val cfg = SyncApp.Config(cfg0.props + ("api.base.path" -> "https://real.example/api"))

@@ -106,6 +106,14 @@ class FixedPointSpec extends SparkSpec {
     assert(finished.newPins.size === 1 && finished.newPins === finished.returnedPins)
   }
 
+  test("unrolled pins every 10th round and frees the pin it supersedes") {
+    val o = observe("unrolled")(FixedPoint.unrolled(spark.range(4).toDF("id"), 25)(
+      _.select((col("id") + 1).as("id"))))
+    assert(o.out.toOption.get.as[Long].collect().sorted.toSeq === (25L to 28L))
+    // round 20's pin is under the returned state; round 10's is gone
+    assert(o.newPins.size === 1 && o.newPins === o.returnedPins)
+  }
+
   // Per operator: rounds run, and the job count of the same call before
   // the operators moved onto the shared loop (an upper bound).
   private val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))

@@ -12,6 +12,17 @@ class LouvainSpec extends SparkSpec {
     (1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L))
     .toDF("a", "b")
 
+  // Four triangles A{1,2,3} B{4,5,6} C{7,8,9} D{10,11,12}; A and B bridged
+  // by three cross edges, node 3 starting misassigned to C's label.
+  private val fourTriangles = Seq(
+    (1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L), (5L, 6L),
+    (7L, 8L), (7L, 9L), (8L, 9L), (10L, 11L), (10L, 12L), (11L, 12L),
+    (3L, 4L), (2L, 5L), (1L, 6L)).toDF("a", "b")
+  private val fourAssign = Seq(
+    1L -> 10L, 2L -> 10L, 3L -> 30L, 4L -> 20L, 5L -> 20L, 6L -> 20L,
+    7L -> 30L, 8L -> 30L, 9L -> 30L, 10L -> 40L, 11L -> 40L, 12L -> 40L)
+    .toDF("node", "community")
+
   private def refine(assign: Seq[(Long, Long)]) =
     Louvain.bestMoveRefinement(
       edges, "a", "b", assign.toDF("node", "community"), "node", "community")
@@ -203,15 +214,8 @@ class LouvainSpec extends SparkSpec {
     // (no single level-1 node move is positive, but the LEVEL-2 community
     // merge is: gain = 4·15·3 − 2·9·9 = 18); node 3 starts misassigned to
     // C's label so level 1 provably applies exactly one move (gain 120)
-    val tri = Seq(
-      (1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L), (5L, 6L),
-      (7L, 8L), (7L, 9L), (8L, 9L), (10L, 11L), (10L, 12L), (11L, 12L),
-      (3L, 4L), (2L, 5L), (1L, 6L)).toDF("a", "b")
-    val assign = Seq(
-      1L -> 10L, 2L -> 10L, 3L -> 30L, 4L -> 20L, 5L -> 20L, 6L -> 20L,
-      7L -> 30L, 8L -> 30L, 9L -> 30L, 10L -> 40L, 11L -> 40L, 12L -> 40L)
     val got = Louvain.multilevel(
-      tri, "a", "b", assign.toDF("node", "community"), "node", "community",
+      fourTriangles, "a", "b", fourAssign, "node", "community",
       levels = 2, maxMovesPerLevel = 2).collect().sortBy(_.getAs[Int]("level"))
     assert(got.length === 2)
     val l1 = got(0)
@@ -236,47 +240,71 @@ class LouvainSpec extends SparkSpec {
       l2.getAs[Double]("modularity_before"))
   }
 
-  test("multilevelAssignments: composition through the level-2 merge") {
+  test("multilevelWithAssignments: composition through the level-2 merge") {
     // same 4-triangle corpus: level 1 sends node 3 home (label 10), level 2
     // merges super-node 10 into 20 (tie broken node-asc), so A∪B end at 20
-    val tri = Seq(
-      (1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L), (5L, 6L),
-      (7L, 8L), (7L, 9L), (8L, 9L), (10L, 11L), (10L, 12L), (11L, 12L),
-      (3L, 4L), (2L, 5L), (1L, 6L)).toDF("a", "b")
-    val assign = Seq(
-      1L -> 10L, 2L -> 10L, 3L -> 30L, 4L -> 20L, 5L -> 20L, 6L -> 20L,
-      7L -> 30L, 8L -> 30L, 9L -> 30L, 10L -> 40L, 11L -> 40L, 12L -> 40L)
-    val got = Louvain.multilevelAssignments(
-      tri, "a", "b", assign.toDF("node", "community"), "node", "community",
-      levels = 2, maxMovesPerLevel = 2)
+    val got = Louvain.multilevelWithAssignments(
+      fourTriangles, "a", "b", fourAssign, "node", "community",
+      levels = 2, maxMovesPerLevel = 2)._2
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = ((1L to 6L).map(_ -> 20L) ++ (7L to 9L).map(_ -> 30L) ++
       (10L to 12L).map(_ -> 40L)).toMap
     assert(got === want)
   }
 
-  test("multilevelWeighted: all-ones weights ≡ multilevel; weighted merge applied") {
+  test("a move budget above the ceiling fails before any Spark job") {
     val assign = Seq(1L -> 10L, 2L -> 10L, 3L -> 20L, 4L -> 20L, 5L -> 20L, 6L -> 20L)
-    val unw = Louvain.multilevel(
-      edges, "a", "b", assign.toDF("node", "community"), "node", "community",
-      levels = 1, maxMovesPerLevel = 2).collect()
-    val canon = edges.withColumn("weight", org.apache.spark.sql.functions.lit(1L))
-    val w = Louvain.multilevelWeighted(
-      canon, "a", "b", "weight", assign.toDF("node", "community"), "node", "community",
-      levels = 1, maxMovesPerLevel = 2).collect()
-    assert(w.map(_.toSeq).toSeq === unw.map(_.toSeq).toSeq)
-    // a contracted-shape weighted graph (self-loops + one heavy cross
-    // edge): identity labels, the merge gain 4·8·6 − 2·8·8 = 64 > 0 fires
-    val wedges = Seq((1L, 1L, 1L), (2L, 2L, 1L), (1L, 2L, 6L)).toDF("a", "b", "wt")
+      .toDF("node", "community")
+    val over = Louvain.MoveCeiling + 1
+    val (_, sweepJobs) = jobSites(spark)(intercept[IllegalArgumentException](
+      Louvain.sweepRefinement(edges, "a", "b", assign, "node", "community", maxMoves = over)))
+    assert(sweepJobs.isEmpty, sweepJobs)
+    val (_, levelJobs) = jobSites(spark)(intercept[IllegalArgumentException](
+      Louvain.multilevel(edges, "a", "b", assign, "node", "community",
+        levels = 2, maxMovesPerLevel = over)))
+    assert(levelJobs.isEmpty, levelJobs)
+  }
+
+  test("job budget: no entry point runs more jobs per call than before the shared move loop") {
+    // jobs per call (the call and a collect of its result) measured before
+    // the unweighted and weighted paths shared one core; an upper bound
+    def jobs(call: => Unit): Int = jobSites(spark)(call)._2.size
+    val one = Seq(1L -> 10L, 2L -> 10L, 3L -> 20L, 4L -> 20L, 5L -> 20L, 6L -> 20L)
+      .toDF("node", "community")
+    val optimal = Seq(1L -> 10L, 2L -> 10L, 3L -> 10L, 4L -> 20L, 5L -> 20L, 6L -> 20L)
+      .toDF("node", "community")
+    val two = Seq(1L -> 10L, 2L -> 20L, 3L -> 10L, 4L -> 20L, 5L -> 10L, 6L -> 20L)
+      .toDF("node", "community")
+    val wedges = Seq((1L, 1L, 1L), (2L, 2L, 1L), (1L, 2L, 6L)).toDF("a", "b", "weight")
     val idn = Seq(1L -> 1L, 2L -> 2L).toDF("node", "community")
-    val got = Louvain.multilevelWeighted(
-      wedges, "a", "b", "wt", idn, "node", "community",
-      levels = 1, maxMovesPerLevel = 1).collect()
-    assert(got.length === 1)
-    assert(got.head.getAs[Int]("moves_applied") === 1)
-    assert(got.head.getAs[Long]("total_weight") === 8L)
-    assert(got.head.getAs[Long]("intra_before") === 2L)
-    assert(got.head.getAs[Long]("intra_after") === 8L)
+    val budgets = Seq(
+      ("bestMoveRefinement, one move", 20, () =>
+        Louvain.bestMoveRefinement(edges, "a", "b", one, "node", "community").collect()),
+      ("bestMoveRefinement, optimal", 20, () =>
+        Louvain.bestMoveRefinement(edges, "a", "b", optimal, "node", "community").collect()),
+      ("sweepRefinement, two moves", 49, () =>
+        Louvain.sweepRefinement(edges, "a", "b", two, "node", "community", maxMoves = 5)
+          .collect()),
+      ("sweepRefinement, optimal", 29, () =>
+        Louvain.sweepRefinement(edges, "a", "b", optimal, "node", "community", maxMoves = 5)
+          .collect()),
+      ("weightedBestMoveRefinement", 24, () =>
+        Louvain.weightedBestMoveRefinement(
+          wedges, "a", "b", "weight", idn, "node", "community").collect()),
+      ("multilevel, two levels", 91, () =>
+        Louvain.multilevel(fourTriangles, "a", "b", fourAssign, "node", "community",
+          levels = 2, maxMovesPerLevel = 2).collect()),
+      ("multilevelWithAssignments, two levels", 92, () => {
+        val (stats, assign) = Louvain.multilevelWithAssignments(
+          fourTriangles, "a", "b", fourAssign, "node", "community",
+          levels = 2, maxMovesPerLevel = 2)
+        stats.collect()
+        assign.collect()
+      }))
+    budgets.foreach { case (call, parentJobs, run) =>
+      val n = jobs(run())
+      assert(n <= parentJobs, s"$call ran $n jobs, budget $parentJobs")
+    }
   }
 
   test("multilevel: integer node/label input types do not fault the argmax reads") {

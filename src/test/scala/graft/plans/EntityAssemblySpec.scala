@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class EntityAssemblySpec extends SparkSpec {
 
@@ -46,12 +46,12 @@ class EntityAssemblySpec extends SparkSpec {
   }
 
   test("sync plan partitions the snapshot: deletes = snapshot minus segment keys") {
-    val plan = EntityAssembly.syncPlan(spark, sf())
-    val customer = spark.read.parquet(s"${sf()}/customer.parquet")
+    val customer = Tables.load(spark, sf(), "customer")
+    val wave = SyncRun.plan(customer, Tables.load(spark, sf(), _), SyncRun.TargetDiff(customer))
     val total = customer.count()
-    assert(plan.upserts.count() + plan.deletes.count() === total)
+    assert(wave.upserts.count() + wave.deletes.count() === total)
     // no delete key is also upserted
-    assert(plan.deletes.join(plan.upserts, Seq("studentUniqueId"), "inner").count() === 0)
+    assert(wave.deletes.join(wave.upserts, Seq("studentUniqueId"), "inner").count() === 0)
   }
 
   test("json payload parses back to the entity key") {
